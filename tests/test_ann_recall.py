@@ -6,7 +6,11 @@ the tests pin the efficiency contract (candidate pruning) and that the
 learned quantizer beats random-subset recall on average.
 """
 
+import hashlib
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from distributed_deep_learning_with_apache_spark_spark.operators.similarity import (
     IVF_K,
@@ -15,6 +19,7 @@ from distributed_deep_learning_with_apache_spark_spark.operators.similarity impo
     TOP_K,
 )
 from distributed_deep_learning_with_apache_spark_spark.registry import load_all
+from tests.oracle import canonical_rows
 
 REG = load_all()
 
@@ -222,3 +227,150 @@ def test_ivf_pq_refined_lifts_recall_to_ivf_ceiling(spark, sf_dir):
     r_ref = recall("ann_ivf_pq_refined")
     assert r_ref >= r_adc, (r_ref, r_adc)
     assert r_ref >= 0.6, f"refined recall {r_ref:.2f} below the IVF ceiling band"
+
+
+# ---------------------------------------------------------------------------
+# Bit-identity pins for the IVF/PQ stack at sf0.001. Every digest is the
+# sha256 (first 16 hex) of tests/oracle.py::canonical_rows over the output;
+# trained artifacts (centroids, codebooks) render each double with
+# float.hex so the pin is exact, not 6-decimal. A change that moves any of
+# these (e.g. a PQ trainer re-baseline) must re-pin them explicitly.
+# ---------------------------------------------------------------------------
+PINNED_SF = "sf0.001"
+PINNED_DIGESTS = {
+    "ann_ivf_kmeans": "7fde5bf06e6707ee",
+    "ann_ivf_persisted": "7fde5bf06e6707ee",
+    "ann_ivf_append_batch": "af35682ce2bbd122",
+    "ann_ivf_delete_serve": "8db168bca2ab60f6",
+    "ann_ivf_compact_tombstones": "8db168bca2ab60f6",
+    "ann_pq_adc": "e9303c55fb28b4de",
+    "ann_ivf_pq_adc": "79dd8585781263af",
+    "ann_ivf_pq_refined": "e71d780aab711872",
+    "ann_ivf_pq_append_batch": "a66f5f875a636ba9",
+    "ivf_silhouette_gate": "64f5eaba81095110",
+    "ivf_centroids": "ac9b6c4e291b3711",
+    "ivf_assignments": "d38870f71d785e66",
+    "pq_codebooks": "9321656ec2ae38a2",
+    "pq_codes": "f675beabb2dff083",
+}
+
+
+def _digest(columns, rows):
+    body = "\n".join(canonical_rows(list(columns), [tuple(r) for r in rows]))
+    return hashlib.sha256(body.encode()).hexdigest()[:16]
+
+
+def test_ann_stack_outputs_bit_identical_to_pins(spark, sf_dir, tmp_path, monkeypatch):
+    """Every listed ANN output, plus the centroids/assignments and
+    codebooks/codes of a fresh build into a private root, hashes to its
+    pinned digest. The corpus-keyed caches are redirected under tmp_path
+    so each run exercises the build code, never a stale /tmp index."""
+    from distributed_deep_learning_with_apache_spark_spark.operators import similarity
+
+    if os.path.basename(os.path.normpath(sf_dir)) != PINNED_SF:
+        pytest.skip(f"digests are pinned at {PINNED_SF}")
+    monkeypatch.setattr(similarity, "IVF_INDEX_ROOT", str(tmp_path / "ivf_cache"))
+    monkeypatch.setattr(similarity, "PQ_CODES_ROOT", str(tmp_path / "pq_cache"))
+
+    got = {}
+    for name in (
+        "ann_ivf_kmeans",
+        "ann_ivf_persisted",
+        "ann_ivf_append_batch",
+        "ann_ivf_delete_serve",
+        "ann_ivf_compact_tombstones",
+        "ann_pq_adc",
+        "ann_ivf_pq_adc",
+        "ann_ivf_pq_refined",
+        "ann_ivf_pq_append_batch",
+        "ivf_silhouette_gate",
+    ):
+        df = REG[name].fn(spark, sf_dir)
+        got[name] = _digest(df.columns, df.collect())
+
+    root = similarity.build_ivf_index(spark, sf_dir, root=str(tmp_path / "ivf"))
+    cents = spark.read.parquet(os.path.join(root, "centroids")).collect()
+    got["ivf_centroids"] = _digest(
+        ["cell", "cv"], [(r.cell, [float.hex(x) for x in r.cv]) for r in cents]
+    )
+    assigned = spark.read.parquet(os.path.join(root, "assignments"))
+    got["ivf_assignments"] = _digest(
+        ["vec_id", "cell"], assigned.select("vec_id", "cell").collect()
+    )
+    codes_df, books = similarity.pq_encode_df(spark, sf_dir, root=str(tmp_path / "pq"))
+    got["pq_codebooks"] = _digest(
+        ["m", "k", "c"],
+        [
+            (m, k, [float.hex(float(x)) for x in c])
+            for m, book in enumerate(books)
+            for k, c in enumerate(book)
+        ],
+    )
+    got["pq_codes"] = _digest(
+        ["vec_id", "codes"], [(r.vec_id, list(r.codes)) for r in codes_df.collect()]
+    )
+    assert got == PINNED_DIGESTS, got
+
+
+def test_training_sample_is_hash_ordered_deterministic_and_whole_when_it_fits(
+    spark, sf_dir
+):
+    """The bounded training sample is a seeded hash draw over the whole id
+    range (not the vec_id prefix), is identical across calls, and is the
+    full corpus in vec_id order once the bound covers the corpus — the
+    case every fixture is in, which keeps centroids/codes bit-identical."""
+    import numpy as np
+
+    from distributed_deep_learning_with_apache_spark_spark.operators.similarity import (
+        DIM,
+        _training_sample,
+        as_double,
+    )
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import (
+        load_table,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
+    by_id = e.sort("vec_id").collect()
+    n = 50
+    a = _training_sample(e, n)
+    b = _training_sample(e, n)
+    assert a.shape == (n, DIM)
+    assert np.array_equal(a, b)
+    prefix = np.array([r.v for r in by_id[:n]])
+    assert not np.array_equal(a, prefix), "sample degenerated to the vec_id prefix"
+    full = _training_sample(e, len(by_id) + 7)
+    assert np.array_equal(full, np.array([r.v for r in by_id]))
+
+
+_BAD_VECTORS = {
+    "null": None,
+    "empty": [],
+    "short": [0.5] * 63,
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_BAD_VECTORS))
+@pytest.mark.parametrize("build", ["build_ivf_index", "pq_encode_df"])
+def test_build_paths_reject_bad_vectors_by_name(spark, sf_dir, tmp_path, build, kind):
+    """A NULL, empty or non-DIM vector in the build input raises a named
+    error (the caller's name leads the message) instead of corrupting the
+    store: a NULL/short vector's l2sq fold is NULL (zip_with pads with
+    NULL) and would otherwise sort into an arbitrary cell."""
+    from distributed_deep_learning_with_apache_spark_spark.operators import similarity
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import (
+        load_table,
+    )
+
+    good = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    bad = spark.createDataFrame(
+        [(30_000_001, _BAD_VECTORS[kind])], "vec_id long, embedding array<float>"
+    )
+    root = str(tmp_path / "store")
+    with pytest.raises(Exception, match=build):
+        getattr(similarity, build)(
+            spark, sf_dir, root=root, source=good.unionByName(bad)
+        )
+    assert not os.path.exists(root), "a rejected build must publish nothing"

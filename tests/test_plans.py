@@ -233,6 +233,14 @@ def test_pq_adc_no_cartesian_no_vector_shuffle(spark, sf_dir):
     assert "WindowGroupLimit" in plan or "Window" in plan
 
 
+def test_ivf_cell_assignment_udf_evaluates_once(spark, sf_dir):
+    """The Arrow cell-assignment UDF runs once per row: a nullable cell
+    would let the probe equi-join's inferred isnotnull(cell) filter clone
+    it into a second ArrowEvalPython node."""
+    plan = physical(REG["ann_ivf_kmeans"].fn(spark, sf_dir))
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_video_keyframe_is_shuffle_free(spark, sf_dir):
     plan = physical(REG["video_keyframe_decode"].fn(spark, sf_dir))
     assert "Exchange" not in plan

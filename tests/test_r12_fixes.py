@@ -3,9 +3,9 @@
 1. `append_ivf_index` rejects NULL/empty embeddings LOUDLY instead of
    silently mis-placing them: l2sq over a NULL array is NULL, and
    row_number over d2 ASC (NULLS FIRST) would hand the bad vector rank 1
-   in an arbitrary cell — index corruption the build path (KMeans.fit)
-   would have refused. The guard follows the repo's
-   NULL-reject-on-identity convention (bitmap_distinct_users).
+   in an arbitrary cell — index corruption. The guard (`_vectors`, which
+   the build paths `build_ivf_index`/`pq_encode_df` share) follows the
+   repo's NULL-reject-on-identity convention (bitmap_distinct_users).
 2. `stream_near_dup_incremental`'s foreachBatch is idempotent under
    micro-batch retry: a replayed batch_id neither re-appends postings
    nor duplicates its ledger row (results keyed by batch_id; guard at
@@ -57,7 +57,7 @@ def test_append_ivf_index_rejects_empty_embedding(spark, tiny_index):
 
 
 def test_append_ivf_index_valid_batch_still_appends(spark, tiny_index):
-    """The guard is NULL/empty-only: a populated batch appends cleanly and
+    """The guard rejects only bad vectors: a populated batch appends cleanly and
     its ids are retrievable from the read-back assignments."""
     import os
 
