@@ -22,10 +22,9 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..sources.catalog import load_table
 
-# Executor Python workers don't have this package on sys.path when the
-# driver runs from an arbitrary cwd, so closures shipped to executors
-# (the BPE mapInPandas kernel) must serialize module helpers BY VALUE —
-# same contract as ml/distributed.py.
+# Closures shipped to executors (the BPE mapInPandas kernel) serialize
+# module helpers BY VALUE, so executors without this package installed can
+# run them — same contract as ml/distributed.py.
 try:  # pragma: no cover - import location varies across pyspark versions
     from pyspark import cloudpickle as _cp
 except ImportError:

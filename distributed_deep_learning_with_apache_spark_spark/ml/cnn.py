@@ -36,9 +36,8 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..sources.catalog import load_table
 
-# Executor Python workers can't import this package (driver may run from
-# any cwd) — serialize this module's helpers by value (same pattern as
-# ml/distributed.py).
+# A cluster's executors need not have this package installed — serialize
+# this module's helpers by value (same pattern as ml/distributed.py).
 try:  # pragma: no cover - import location varies across pyspark versions
     from pyspark import cloudpickle as _cp
 except ImportError:

@@ -34,9 +34,9 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 
-# Executor Python workers don't have this package on sys.path (the driver
-# may run from any cwd), so closures must serialize the helpers BY VALUE,
-# not as references into this module.
+# Closures serialize this module's helpers BY VALUE, not as references into
+# the module: get_spark's local workers have the package on their path, but
+# a cluster's executors need not have it installed.
 try:  # pragma: no cover - import location varies across pyspark versions
     from pyspark import cloudpickle as _cp
 except ImportError:

@@ -15,6 +15,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Python workers start from `pyworker` (PySpark imported from its unpacked
+# tree, not pyspark.zip), so they need this package's parent on their path.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_DAEMON_MODULE = "distributed_deep_learning_with_apache_spark_spark.pyworker"
+
 
 def get_spark(app_name: str = "ddl_spark", cpus: str | None = None) -> SparkSession:
     """Build (or reuse) the tuned local SparkSession."""
@@ -39,6 +44,8 @@ def get_spark(app_name: str = "ddl_spark", cpus: str | None = None) -> SparkSess
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", _DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -21,11 +21,10 @@ codecs. Logical types (timestamp-micros) ride their underlying
 primitive, per spec.
 
 ``make_ocf_codec()`` builds the whole codec as CLOSURES so cloudpickle
-ships it to executors by value — this package is not importable from
-Spark's python workers when the driver runs from an arbitrary cwd (the
-same constraint, and the same factory pattern, as
-pngcodec.make_gray_png_decoder and the mapInPandas kernels in
-sources/binary.py).
+ships it to executors by value — a cluster's executors need not have
+this package installed (the same constraint, and the same factory
+pattern, as pngcodec.make_gray_png_decoder and the mapInPandas kernels
+in sources/binary.py).
 
 Scale notes: encode/decode are per-row pure Python, but run INSIDE
 Arrow-batched mapInPandas kernels, so the work distributes across

@@ -495,8 +495,8 @@ def video_keyframe_df(spark: SparkSession, root: str, every_k: int = KEYFRAME_EV
 
     def kernel(batches: Iterator) -> Iterator:
         # Index parse inlined (not a call into videocodec): this closure
-        # ships to executors by value, and the package is not importable
-        # from Spark's python workers when the driver runs elsewhere.
+        # ships to executors by value, and a cluster's executors need not
+        # have this package installed.
         import struct as _struct
 
         import numpy as np

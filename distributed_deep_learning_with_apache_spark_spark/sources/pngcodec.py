@@ -48,9 +48,9 @@ def encode_gray_png(pixels: list[list[int]]) -> bytes:
 
 def make_gray_png_decoder():
     """Build the decode function as a CLOSURE so cloudpickle ships it to
-    executors by value (this package is not importable from Spark's python
-    workers when the driver runs from an arbitrary cwd — same constraint as
-    the mapInPandas kernels in sources/binary.py).
+    executors by value (a cluster's executors need not have this package
+    installed — same constraint as the mapInPandas kernels in
+    sources/binary.py).
 
     The returned function decodes an 8-bit grayscale PNG to
     (width, height, flat row-major pixels), implementing all five PNG

@@ -65,8 +65,8 @@ def parse_wav(buf: bytes) -> tuple[int, list[int]]:
 def make_wav_parser():
     """Build a numpy-returning RIFF/WAVE parser as a CLOSURE so cloudpickle
     ships it to executors by value (same constraint as
-    pngcodec.make_gray_png_decoder: this package is not importable from
-    Spark's python workers when the driver runs from an arbitrary cwd).
+    pngcodec.make_gray_png_decoder: a cluster's executors need not have
+    this package installed).
 
     The single source of truth for the chunk walk used by every audio
     mapInPandas kernel in sources/binary.py — a format fix lands here once.

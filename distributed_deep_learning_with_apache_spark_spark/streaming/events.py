@@ -641,53 +641,55 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     base = tempfile.mkdtemp(prefix="sg_foreachbatch_")
-    staging = os.path.join(base, "staging")
-    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-    ev.repartition(4).write.mode("overwrite").parquet(staging)
-
-    state: dict = {"cur": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = batch_df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value")
-        )
-        if state["cur"] is not None:
-            prev = batch_df.sparkSession.read.parquet(state["cur"])
-            partial = (
-                prev.unionByName(partial)
-                .groupBy("user_id")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("total_value").alias("total_value"),
-                )
-            )
-        out = os.path.join(base, f"v{batch_id}")
-        partial.write.mode("overwrite").parquet(out)
-        state["cur"] = out
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        staging = os.path.join(base, "staging")
+        ev = load_table(spark, sf_dir, "events").select("user_id", "value")
+        ev.repartition(4).write.mode("overwrite").parquet(staging)
 
-    final = spark.read.parquet(state["cur"]).select(
-        "user_id",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.round("total_value", 2).alias("total_value"),
-    )
-    # Materialize before the temp target is removed.
-    final = spark.createDataFrame(final.collect(), final.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return final
+        state: dict = {"cur": None}
+
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            partial = batch_df.groupBy("user_id").agg(
+                F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value")
+            )
+            if state["cur"] is not None:
+                prev = batch_df.sparkSession.read.parquet(state["cur"])
+                partial = (
+                    prev.unionByName(partial)
+                    .groupBy("user_id")
+                    .agg(
+                        F.sum("n_events").alias("n_events"),
+                        F.sum("total_value").alias("total_value"),
+                    )
+                )
+            out = os.path.join(base, f"v{batch_id}")
+            partial.write.mode("overwrite").parquet(out)
+            state["cur"] = out
+
+        q = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(staging)
+            .writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+        final = spark.read.parquet(state["cur"]).select(
+            "user_id",
+            F.col("n_events").cast("long").alias("n_events"),
+            F.round("total_value", 2).alias("total_value"),
+        )
+        # Materialize before the temp target is removed.
+        final = spark.createDataFrame(final.collect(), final.schema)
+        return final
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1509,45 +1511,47 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     base = tempfile.mkdtemp(prefix="sg_ckpt_")
-    src = _os.path.join(base, "in")
-    ckpt = _os.path.join(base, "ckpt")
-    _os.makedirs(src)
-    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    half1 = e.filter(F.col("event_id") % 2 == 0)
-    half2 = e.filter(F.col("event_id") % 2 == 1)
-    half1.coalesce(1).write.mode("overwrite").parquet(_os.path.join(src, "batch1"))
+    try:
+        src = _os.path.join(base, "in")
+        ckpt = _os.path.join(base, "ckpt")
+        _os.makedirs(src)
+        e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
+        half1 = e.filter(F.col("event_id") % 2 == 0)
+        half2 = e.filter(F.col("event_id") % 2 == 1)
+        half1.coalesce(1).write.mode("overwrite").parquet(_os.path.join(src, "batch1"))
 
-    schema = e.schema
-    counts = []
-    for run, stage_dir in ((1, None), (2, _os.path.join(src, "batch2"))):
-        if stage_dir is not None:
-            half2.coalesce(1).write.mode("overwrite").parquet(stage_dir)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .groupBy()
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        name = f"sg_ckpt_sink_r{run}_{_os.getpid()}"
-        with _stream_state_partitions(spark):
-            q = (
-                stream.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
+        schema = e.schema
+        counts = []
+        for run, stage_dir in ((1, None), (2, _os.path.join(src, "batch2"))):
+            if stage_dir is not None:
+                half2.coalesce(1).write.mode("overwrite").parquet(stage_dir)
+            stream = (
+                spark.readStream.schema(schema)
+                .option("recursiveFileLookup", "true")
+                .parquet(src)
+                .groupBy()
+                .agg(F.count(F.lit(1)).alias("n"))
             )
-            try:
-                q.processAllAvailable()
-                # lastProgress.numInputRows = rows THIS run actually read from
-                # the source (run 2 must show only the new file's rows).
-                progresses = q.recentProgress
-                ingested = sum(int(p["numInputRows"]) for p in progresses)
-            finally:
-                q.stop()
-        counts.append((run, ingested))
-    shutil.rmtree(base, ignore_errors=True)
+            name = f"sg_ckpt_sink_r{run}_{_os.getpid()}"
+            with _stream_state_partitions(spark):
+                q = (
+                    stream.writeStream.outputMode("complete")
+                    .format("memory")
+                    .queryName(name)
+                    .option("checkpointLocation", ckpt)
+                    .start()
+                )
+                try:
+                    q.processAllAvailable()
+                    # lastProgress.numInputRows = rows THIS run actually read from
+                    # the source (run 2 must show only the new file's rows).
+                    progresses = q.recentProgress
+                    ingested = sum(int(p["numInputRows"]) for p in progresses)
+                finally:
+                    q.stop()
+            counts.append((run, ingested))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
     total = sum(n for _, n in counts)
     rows = [(r, n, total) for r, n in counts]
     return spark.createDataFrame(rows, "run int, rows_ingested long, total_rows long")
@@ -2485,64 +2489,66 @@ def stream_kmv_distinct_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     KMV_A, KMV_C, KMV_K, QSK_P = _KMV_A, _KMV_C, _KMV_K, _QSK_P
 
     base = tempfile.mkdtemp(prefix="sg_kmv_stream_")
-    staging = _os.path.join(base, "staging")
-    ev = load_table(spark, sf_dir, "events").select("user_id")
-    ev.repartition(4).write.mode("overwrite").parquet(staging)
-
-    state = {"cur": None}
-
-    def merge_sketch(batch_df: DataFrame, batch_id: int) -> None:
-        hashed = (
-            batch_df.select("user_id")
-            .distinct()
-            .withColumn(
-                "hkey",
-                F.pmod(F.pmod(F.col("user_id"), QSK_P) * KMV_A + KMV_C, QSK_P),
-            )
-        )
-        batch_sk = hashed.orderBy("hkey").limit(KMV_K)
-        if state["cur"] is not None:
-            prev = batch_df.sparkSession.read.parquet(state["cur"])
-            batch_sk = (
-                prev.unionByName(batch_sk).distinct().orderBy("hkey").limit(KMV_K)
-            )
-        out = _os.path.join(base, f"v{batch_id}")
-        batch_sk.write.mode("overwrite").parquet(out)
-        state["cur"] = out
-
-    q = (
-        spark.readStream.schema(spark.read.parquet(staging).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-        .writeStream.foreachBatch(merge_sketch)
-        .option("checkpointLocation", _os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        staging = _os.path.join(base, "staging")
+        ev = load_table(spark, sf_dir, "events").select("user_id")
+        ev.repartition(4).write.mode("overwrite").parquet(staging)
 
-    sk = spark.read.parquet(state["cur"])
-    kth = sk.agg(
-        F.max("hkey").alias("kth_hkey"),
-        F.count(F.lit(1)).cast("long").alias("k_eff"),
-    )
-    out = kth.select(
-        "k_eff",
-        F.when(F.col("k_eff") < KMV_K, F.col("k_eff"))
-        .otherwise(
-            F.floor(
-                (F.col("k_eff") - 1) * float(QSK_P) / F.col("kth_hkey") + 0.5
-            ).cast("long")
+        state = {"cur": None}
+
+        def merge_sketch(batch_df: DataFrame, batch_id: int) -> None:
+            hashed = (
+                batch_df.select("user_id")
+                .distinct()
+                .withColumn(
+                    "hkey",
+                    F.pmod(F.pmod(F.col("user_id"), QSK_P) * KMV_A + KMV_C, QSK_P),
+                )
+            )
+            batch_sk = hashed.orderBy("hkey").limit(KMV_K)
+            if state["cur"] is not None:
+                prev = batch_df.sparkSession.read.parquet(state["cur"])
+                batch_sk = (
+                    prev.unionByName(batch_sk).distinct().orderBy("hkey").limit(KMV_K)
+                )
+            out = _os.path.join(base, f"v{batch_id}")
+            batch_sk.write.mode("overwrite").parquet(out)
+            state["cur"] = out
+
+        q = (
+            spark.readStream.schema(spark.read.parquet(staging).schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(staging)
+            .writeStream.foreachBatch(merge_sketch)
+            .option("checkpointLocation", _os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-        .cast("long")
-        .alias("est_distinct"),
-    )
-    final = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return final
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+        sk = spark.read.parquet(state["cur"])
+        kth = sk.agg(
+            F.max("hkey").alias("kth_hkey"),
+            F.count(F.lit(1)).cast("long").alias("k_eff"),
+        )
+        out = kth.select(
+            "k_eff",
+            F.when(F.col("k_eff") < KMV_K, F.col("k_eff"))
+            .otherwise(
+                F.floor(
+                    (F.col("k_eff") - 1) * float(QSK_P) / F.col("kth_hkey") + 0.5
+                ).cast("long")
+            )
+            .cast("long")
+            .alias("est_distinct"),
+        )
+        final = spark.createDataFrame(out.collect(), out.schema)
+        return final
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3149,75 +3155,77 @@ def stream_countmin_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     base = tempfile.mkdtemp(prefix="sg_cm_stream_")
-    staging = _os.path.join(base, "staging")
-    ev = load_table(spark, sf_dir, "events").select("user_id")
-    ev.repartition(4).write.mode("overwrite").parquet(staging)
-
-    state = {"cur": None}
-
-    def merge_counters(batch_df: DataFrame, batch_id: int) -> None:
-        parts = []
-        for j, (a, c) in enumerate(_CME_ROWS):
-            parts.append(
-                batch_df.selectExpr(
-                    f"{j} AS j", f"{_cme_cell_sql('user_id', a, c)} AS cell"
-                )
-                .groupBy("j", "cell")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            )
-        batch_ctr = parts[0].unionByName(parts[1]).unionByName(parts[2])
-        if state["cur"] is not None:
-            prev = batch_df.sparkSession.read.parquet(state["cur"])
-            batch_ctr = (
-                prev.unionByName(batch_ctr)
-                .groupBy("j", "cell")
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-        out = _os.path.join(base, f"v{batch_id}")
-        batch_ctr.write.mode("overwrite").parquet(out)
-        state["cur"] = out
-
-    q = (
-        spark.readStream.schema(spark.read.parquet(staging).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-        .writeStream.foreachBatch(merge_counters)
-        .option("checkpointLocation", _os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+        staging = _os.path.join(base, "staging")
+        ev = load_table(spark, sf_dir, "events").select("user_id")
+        ev.repartition(4).write.mode("overwrite").parquet(staging)
 
-    ctr = spark.read.parquet(state["cur"])
-    watch = spark.range(CMW_WATCH).select(F.col("id").alias("user_id"))
-    probed = watch
-    for j, (a, c) in enumerate(_CME_ROWS):
-        sk = ctr.filter(F.col("j") == j).select(
-            F.col("cell").alias(f"cell{j}"), F.col("c").alias(f"c{j}")
+        state = {"cur": None}
+
+        def merge_counters(batch_df: DataFrame, batch_id: int) -> None:
+            parts = []
+            for j, (a, c) in enumerate(_CME_ROWS):
+                parts.append(
+                    batch_df.selectExpr(
+                        f"{j} AS j", f"{_cme_cell_sql('user_id', a, c)} AS cell"
+                    )
+                    .groupBy("j", "cell")
+                    .agg(F.count(F.lit(1)).cast("long").alias("c"))
+                )
+            batch_ctr = parts[0].unionByName(parts[1]).unionByName(parts[2])
+            if state["cur"] is not None:
+                prev = batch_df.sparkSession.read.parquet(state["cur"])
+                batch_ctr = (
+                    prev.unionByName(batch_ctr)
+                    .groupBy("j", "cell")
+                    .agg(F.sum("c").cast("long").alias("c"))
+                )
+            out = _os.path.join(base, f"v{batch_id}")
+            batch_ctr.write.mode("overwrite").parquet(out)
+            state["cur"] = out
+
+        q = (
+            spark.readStream.schema(spark.read.parquet(staging).schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(staging)
+            .writeStream.foreachBatch(merge_counters)
+            .option("checkpointLocation", _os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
         )
-        probed = probed.join(
-            F.broadcast(sk),
-            F.expr(_cme_cell_sql("user_id", a, c)) == F.col(f"cell{j}"),
-            "left",
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+
+        ctr = spark.read.parquet(state["cur"])
+        watch = spark.range(CMW_WATCH).select(F.col("id").alias("user_id"))
+        probed = watch
+        for j, (a, c) in enumerate(_CME_ROWS):
+            sk = ctr.filter(F.col("j") == j).select(
+                F.col("cell").alias(f"cell{j}"), F.col("c").alias(f"c{j}")
+            )
+            probed = probed.join(
+                F.broadcast(sk),
+                F.expr(_cme_cell_sql("user_id", a, c)) == F.col(f"cell{j}"),
+                "left",
+            )
+        out = probed.select(
+            "user_id",
+            F.least(
+                F.coalesce("c0", F.lit(0)),
+                F.coalesce("c1", F.lit(0)),
+                F.coalesce("c2", F.lit(0)),
+            )
+            .cast("long")
+            .alias("est_n"),
         )
-    out = probed.select(
-        "user_id",
-        F.least(
-            F.coalesce("c0", F.lit(0)),
-            F.coalesce("c1", F.lit(0)),
-            F.coalesce("c2", F.lit(0)),
-        )
-        .cast("long")
-        .alias("est_n"),
-    )
-    # Bounded ({CMW_WATCH}-row) materialization before the temp state dir
-    # is removed — the same contract as the KMV stream's k-row readout.
-    final = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return final
+        # Bounded ({CMW_WATCH}-row) materialization before the temp state dir
+        # is removed — the same contract as the KMV stream's k-row readout.
+        final = spark.createDataFrame(out.collect(), out.schema)
+        return final
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

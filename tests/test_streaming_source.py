@@ -1,7 +1,13 @@
 """Custom streaming data source: deterministic replay, exactly-once
 offset contract, and equality with the batch twin."""
 
+import os
+import tempfile
+
+import pytest
+
 from distributed_deep_learning_with_apache_spark_spark.registry import load_all
+from distributed_deep_learning_with_apache_spark_spark.streaming import events
 from distributed_deep_learning_with_apache_spark_spark.sources.catalog import load_table
 
 import pyspark.sql.functions as F
@@ -209,3 +215,23 @@ def test_checkpoint_recovery_is_exactly_once(spark, sf_dir):
     assert rows[1].rows_ingested == n_even
     assert rows[2].rows_ingested == n_odd
     assert rows[1].total_rows == n_even + n_odd
+
+
+@pytest.mark.parametrize(
+    "name, prefix",
+    [
+        ("stream_kmv_distinct_running", "sg_kmv_stream_"),
+        ("stream_countmin_running", "sg_cm_stream_"),
+        ("stream_foreachbatch_merge", "sg_foreachbatch_"),
+        ("stream_checkpoint_recovery", "sg_ckpt_"),
+    ],
+)
+def test_failed_stream_run_removes_its_temp_dir(name, prefix, tmp_path, monkeypatch, sf_dir):
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("load_table failed")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(events, "load_table", boom)
+    with pytest.raises(RuntimeError, match="load_table failed"):
+        REG[name].fn(None, sf_dir)
+    assert [d for d in os.listdir(tmp_path) if d.startswith(prefix)] == []
