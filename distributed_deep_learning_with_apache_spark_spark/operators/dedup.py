@@ -15,9 +15,21 @@ shared-shingle join self-prunes: only docs sharing a shingle meet. At
 100 TB the band join is the only one whose fan-out needs watching; with
 b bands it produces ≤ b candidates per true pair and the distinct() after
 it collapses them before the (expensive) exact-Jaccard verify.
+
+Every near-dup op runs one path: `_docs` (widened scan) →
+`_shingle_hashes` → `_postings` / `_band_postings` → `_shared_counts` /
+`_band_pairs` → verify; the persisted band store adds build, append,
+probe (`_probe_store`) and retract. Each Spark helper has a DuckDB
+fragment beside it (`_DUCK_POSTING`, `_duck_band_ctes`,
+`_DUCK_BAND_PAIRS`, ...), so an oracle reads as the same stages.
 """
 
 from __future__ import annotations
+
+import operator
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -50,6 +62,127 @@ def shingles(col="text", n: int = 3):
     for k in range(1, n):
         gram = F.zip_with(gram, F.slice(tok, k + 1, length), lambda a, b: F.concat_ws(" ", a, b))
     return F.array_distinct(gram)
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table behind `_widen_scan`: the fixture scans as one
+    split, and every shingle/token/span projection here is CPU-heavy per
+    row, so it would otherwise run single-task. The gate vanishes on
+    scans that are already wide."""
+    return _widen_scan(
+        load_table(spark, sf_dir, "documents"),
+        spark,
+        os.path.join(sf_dir, "documents.parquet"),
+    )
+
+
+def _shingle_hashes(docs: DataFrame, *carry) -> DataFrame:
+    """(doc_id, text) → (doc_id, *carry, hs, hx) for every doc with a
+    non-empty shingle set — the one shingle build of this module.
+
+    One shingle pass, two hash columns: `hs` (md5 hex, the engine-portable
+    family DuckDB mirrors) feeds the minhash band signatures; `hx`
+    (xxhash64 longs, Spark-only) feeds postings, set sizes and every
+    exact verify, which then shuffle and compare 8-byte longs instead of
+    ~25-byte word trigrams (the posting self-join's shuffle shrinks ~6×).
+    `shingles()` is array_distinct, so df counts, shared counts, set
+    sizes and intersections — hence every Jaccard and containment value —
+    equal the string-set semantics EXCEPT under a 64-bit collision: at
+    the 100 TB target (~1e11-1e12 distinct shingles) a few thousand
+    birthday collisions are expected, each able to merge two shingles'
+    posting lists (and, under a STOP_DF cap, push a rare shingle over
+    it). A standard, accepted trade (SCALE.md); the DuckDB string-side
+    oracles re-prove exact equality at test scale every drive. Docs with
+    no shingle are dropped: they have no postings, and an empty `hs`
+    would fold to the all-'￿' signature and collide in every band.
+    Callers that need fewer columns select them; the optimizer prunes the
+    unused hash.
+
+    Materialization: most callers read this table 2-4 times (posting
+    self-join sides, size lookups, verify sides). Without a barrier the
+    optimizer re-derives scan → shingles → hashes in EVERY consumer —
+    `near_dup_minhash_verified`'s executed plan had 4 FileScans and 0
+    ReusedExchange (broadcast-join sides never reuse a shuffle exchange,
+    per-consumer column pruning splits the rest), i.e. the dominant stage
+    ran 4×, and a repartition barrier alone stopped expression
+    re-inlining but not the re-derivation. Those callers take an eager
+    per-invocation localCheckpoint of the small hash-proxy table (each
+    call rebuilds it, nothing persists across runs) and decide candidates
+    and verify from it, never from the raw corpus. On a cluster the same
+    barrier is a reliable-storage checkpoint or an explicit write+read
+    (SCALE.md "Known local-vs-cluster deltas")."""
+    sh = docs.select("doc_id", *carry, shingles().alias("sh")).filter(F.size("sh") > 0)
+    return sh.select(
+        *sh.columns[:-1],
+        F.transform(F.col("sh"), F.md5).alias("hs"),
+        F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
+    )
+
+
+def _postings(sh: DataFrame) -> DataFrame:
+    """(doc_id, hx) → one (doc_id, shingle) row per shingle hash."""
+    return sh.select("doc_id", F.explode("hx").alias("shingle"))
+
+
+def _shared_counts(posting: DataFrame, cmp) -> DataFrame:
+    """(doc_a, doc_b, shared) over a posting self-join on shingle, for the
+    ordered pairs `cmp(a.doc_id, b.doc_id)` keeps (`<` symmetric, `!=`
+    directed). An equi-join: only docs sharing a shingle ever meet."""
+    a, b = posting.alias("a"), posting.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & cmp(F.col("a.doc_id"), F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def _jaccard(a: str, b: str):
+    """|A∩B| / |A∪B| over two distinct-element array columns."""
+    inter = F.size(F.array_intersect(F.col(a), F.col(b)))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
+def _verified_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """Exact Jaccard ≥ 0.5 over the full `hx` sets of each candidate pair:
+    (doc_a, doc_b) → (doc_a, doc_b, jaccard)."""
+    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("hx").alias("sha"))
+    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("hx").alias("shb"))
+    jacc = _jaccard("sha", "shb")
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jacc >= 0.5)
+        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
+    )
+
+
+_DUCK_POSTING = f"""sh AS (
+          SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
+        ),
+        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh)"""
+
+_DUCK_SHARED = f"""{_DUCK_POSTING},
+        cand AS (
+          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
+          FROM posting a JOIN posting b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+          GROUP BY a.doc_id, b.doc_id
+        )"""
+
+_DUCK_JACC = (
+    "len(list_intersect(sa.sh, sb.sh)) * 1.0"
+    " / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))"
+)
+
+_DUCK_VERIFIED_JACCARD = f"""SELECT c.doc_a, c.doc_b,
+               round({_DUCK_JACC}, 6) AS jaccard
+        FROM cand c
+        JOIN sh sa ON sa.doc_id = c.doc_a
+        JOIN sh sb ON sb.doc_id = c.doc_b
+        WHERE {_DUCK_JACC} >= 0.5"""
 
 
 # ---------------------------------------------------------------------------
@@ -109,15 +242,7 @@ def dedup_exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "near_dup_jaccard",
     oracle=f"""
-        WITH sh AS (
-          SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
-        ),
-        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        cand AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-          FROM posting a JOIN posting b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        )
+        WITH {_DUCK_SHARED}
         SELECT c.doc_a, c.doc_b,
                round(c.shared * 1.0 / (len(sa.sh) + len(sb.sh) - c.shared), 6) AS jaccard
         FROM cand c
@@ -135,47 +260,11 @@ def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a cross join: only documents sharing ≥1 shingle are compared.
     At 100 TB add a stop-shingle filter (drop shingles with huge posting
     lists) — semantics-preserving for any threshold ≥ shared/union bound.
-
-    The shingle table is built ONCE behind a widened scan and an eager
-    per-invocation localCheckpoint (r12 optimization): its three
-    consumers (posting self-join sides + the size lookup) otherwise each
-    re-derived the full scan→shingles pipeline — and the one-split local
-    scan ran it single-task. Same barrier pattern as
-    near_dup_minhash_verified; content identical, oracle unchanged.
-
-    The checkpointed table carries xxhash64 longs, not shingle strings
-    (r12 optimization session 3, guide §2.3 — narrower types): the
-    posting self-join shuffles an 8-byte long per posting instead of a
-    ~25-byte word-trigram string, and the within-bucket equi-compare is
-    a long compare. `shingles()` is array_distinct, so shared counts and
-    sizes — hence every Jaccard value — match the string-set semantics
-    EXCEPT under a 64-bit hash collision (the same argument as
-    near_dup_minhash_verified's `hx` verify). Collision bound: at the
-    100 TB target (~1e11-1e12 distinct shingles) birthday collisions are
-    expected in the low thousands, each able to merge two shingles'
-    posting lists or perturb one pair's shared count — a standard,
-    accepted trade (see SCALE.md); at test scale the DuckDB string-side
-    oracle re-proves exact equality every drive.
+    The hashed shingle table is checkpointed once for its three
+    consumers: both posting sides and the size lookup.
     """
-    import os
-
-    d = _widen_scan(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-    )
-    sh = d.select(
-        "doc_id",
-        F.transform(shingles(), lambda s: F.xxhash64(s)).alias("hx"),
-    ).localCheckpoint(eager=True)
-    posting = sh.select("doc_id", F.explode("hx").alias("shingle"))
-    a = posting.alias("a")
-    b = posting.alias("b")
-    cand = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    sh = _shingle_hashes(_docs(spark, sf_dir)).select("doc_id", "hx").localCheckpoint(eager=True)
+    cand = _shared_counts(_postings(sh), operator.lt)
     sizes = sh.select("doc_id", F.size("hx").alias("n_sh"))
     jacc = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
     return (
@@ -192,30 +281,34 @@ def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 STOP_DF = 50  # shingles appearing in more than this many docs carry no signal
 
 
+def _rare_postings(sh: DataFrame) -> DataFrame:
+    """The (doc_id, shingle) postings of shingles in at most STOP_DF docs:
+    the df count is a map-side-combinable aggregate, and each surviving
+    shingle contributes ≤ STOP_DF² candidate pairs."""
+    posting = _postings(sh)
+    rare = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
+        F.col("df") <= STOP_DF
+    )
+    return posting.join(rare.select("shingle"), "shingle")
+
+
+_DUCK_RARE = f"""rare AS (
+          SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= {STOP_DF}
+        ),
+        rp AS (SELECT p.doc_id, p.shingle FROM posting p JOIN rare r ON p.shingle = r.shingle)"""
+
+
 @register(
     "near_dup_jaccard_stopfiltered",
     oracle=f"""
-        WITH sh AS (
-          SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
-        ),
-        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        rare AS (
-          SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= {STOP_DF}
-        ),
-        rp AS (SELECT p.doc_id, p.shingle FROM posting p JOIN rare r ON p.shingle = r.shingle),
+        WITH {_DUCK_POSTING},
+        {_DUCK_RARE},
         cand AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM rp a JOIN rp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
           GROUP BY a.doc_id, b.doc_id
         )
-        SELECT c.doc_a, c.doc_b,
-               round(len(list_intersect(sa.sh, sb.sh)) * 1.0
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 6) AS jaccard
-        FROM cand c
-        JOIN sh sa ON sa.doc_id = c.doc_a
-        JOIN sh sb ON sb.doc_id = c.doc_b
-        WHERE len(list_intersect(sa.sh, sb.sh)) * 1.0
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
+        {_DUCK_VERIFIED_JACCARD}
     """,
     tags=("dedup", "ext", "scale"),
 )
@@ -232,58 +325,16 @@ def near_dup_jaccard_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs are overwhelmingly template collisions, exactly what dedup should
     not key on.
 
-    Everything downstream of the shingle build runs on xxhash64 longs
-    (r12 optimization session 3, guide §2.3): the posting df-count, the
-    rare filter, the candidate self-join AND the verify's
-    array_intersect — the verify previously intersected raw ~25-byte
-    string arrays over every candidate pair, the measured hot spot of
-    the whole op. `shingles()` is array_distinct, so df counts, shared
-    counts, set sizes and intersections are identical on hashes EXCEPT
-    under a 64-bit collision (near_dup_minhash_verified's standing `hx`
-    argument, now with the honest bound): at ~1e11-1e12 distinct
-    shingles a few thousand birthday collisions are expected, and a
-    collision here is collision-SENSITIVE in a way the plain-jaccard op
-    is not — two merged shingles' combined df can cross STOP_DF and
-    silently drop a rare shingle from candidate generation. Standard,
-    accepted approximation at scale (see SCALE.md); the DuckDB
-    string-side oracle re-proves exact equality at test scale every
-    drive.
+    Everything downstream of the shingle build runs on `hx` longs: the df
+    count, the rare filter, the candidate self-join AND the verify's
+    array_intersect (raw string arrays there were the measured hot spot
+    of the op). A hash collision is collision-SENSITIVE here in a way
+    plain Jaccard is not: two merged shingles' combined df can cross
+    STOP_DF and drop a rare shingle from candidate generation (see
+    `_shingle_hashes`).
     """
-    import os
-
-    # One widened scan + per-invocation checkpoint for the shingle table
-    # (three consumers; same barrier rationale as near_dup_jaccard).
-    d = _widen_scan(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-    )
-    sh = d.select(
-        "doc_id",
-        F.transform(shingles(), lambda s: F.xxhash64(s)).alias("hx"),
-    ).localCheckpoint(eager=True)
-    posting = sh.select("doc_id", F.explode("hx").alias("shingle"))
-    rare = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= STOP_DF
-    )
-    rp = posting.join(rare.select("shingle"), "shingle")
-    a = rp.alias("a")
-    b = rp.alias("b")
-    cand = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("hx").alias("sha"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("hx").alias("shb"))
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    jacc = inter / (F.size("sha") + F.size("shb") - inter)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jacc >= 0.5)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-    )
+    sh = _shingle_hashes(_docs(spark, sf_dir)).select("doc_id", "hx").localCheckpoint(eager=True)
+    return _verified_jaccard(_band_pairs(_rare_postings(sh), "shingle"), sh)
 
 
 # ---------------------------------------------------------------------------
@@ -293,15 +344,14 @@ N_HASHES = 8
 N_BANDS = 4  # rows-per-band = 2
 
 
-def _band_signature(sh: DataFrame) -> DataFrame:
-    """(doc_id, hs) → (doc_id, band_0..band_3): all 8 minhashes in ONE
+def _minhashes(sh: DataFrame) -> DataFrame:
+    """(doc_id, hs) → (doc_id, m struct<m0..m7>): all 8 minhashes in ONE
     fold over the digest array via an F.aggregate struct accumulator,
     instead of 8 array_min(transform(...)) passes each materializing a
-    fresh array per row. Wall-clock-neutral at sf0.1 (the stage is
-    shingle-build-bound there) but 8× fewer transient array allocations
-    per row, which is what matters under executor memory pressure at
-    scale. Values are bit-identical to the per-k form — same min over
-    the same substrings — so _duck_minhash stays the oracle."""
+    fresh array per row (8× fewer transient array allocations per row,
+    which is what matters under executor memory pressure at scale).
+    Values are bit-identical to the per-k form — same min over the same
+    substrings — so `_duck_minhash` stays the oracle."""
     init = F.struct(*[F.lit("￿").alias(f"m{k}") for k in range(N_HASHES)])
     return sh.select(
         "doc_id",
@@ -315,12 +365,46 @@ def _band_signature(sh: DataFrame) -> DataFrame:
                 ]
             ),
         ).alias("m"),
-    ).select(
+    )
+
+
+def _band_signature(sh: DataFrame) -> DataFrame:
+    """(doc_id, hs) → (doc_id, band_0..band_3): band b = md5 of minhashes
+    2b and 2b+1."""
+    return _minhashes(sh).select(
         "doc_id",
         *[
             F.md5(F.concat(F.col("m")[f"m{2 * b}"], F.col("m")[f"m{2 * b + 1}"])).alias(f"band_{b}")
             for b in range(N_BANDS)
         ],
+    )
+
+
+def _band_postings(sh: DataFrame) -> DataFrame:
+    """(doc_id, hs) → one (doc_id, band_id, band_val) posting per band."""
+    return _band_signature(sh).select(
+        "doc_id",
+        F.explode(
+            F.create_map(
+                *[x for b in range(N_BANDS) for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))]
+            )
+        ).alias("band_id", "band_val"),
+    )
+
+
+def _band_pairs(bands: DataFrame, *key: str) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a bucket: an equi-join on
+    `key` (default (band_id, band_val)), so the shuffle is keyed on the
+    bucket and work is proportional to collision density, not n²."""
+    a, b = bands.alias("a"), bands.alias("b")
+    cond = None
+    for k in key or ("band_id", "band_val"):
+        eq = F.col(f"a.{k}") == F.col(f"b.{k}")
+        cond = eq if cond is None else cond & eq
+    return (
+        a.join(b, cond & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
     )
 
 
@@ -338,21 +422,33 @@ _DUCK_BANDS = ", ".join(
     f"md5({_duck_minhash(2 * b)} || {_duck_minhash(2 * b + 1)}) AS band_{b}" for b in range(N_BANDS)
 )
 
+
+def _duck_band_ctes(side: str, where: str) -> str:
+    """`{side}sig` + `{side}bands` CTEs: the SQL twin of `_band_postings`
+    over the documents matching `where`."""
+    return f"""{side}sig AS (
+          SELECT doc_id, {_DUCK_BANDS}
+          FROM documents
+          WHERE {where}
+        ),
+        {side}bands AS (
+          SELECT doc_id, band_id, band_val FROM {side}sig
+          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
+        )"""
+
+
+_DUCK_BAND_PAIRS = """SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM bands a JOIN bands b
+            ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id"""
+
+_HAS_SHINGLES = f"len({DUCK_SHINGLES}) > 0"
+
+
 @register(
     "minhash_lsh_candidates",
     oracle=f"""
-        WITH sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE len({DUCK_SHINGLES}) > 0
-        ),
-        bands AS (
-          SELECT doc_id, band_id, band_val FROM sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        )
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+        WITH {_duck_band_ctes("", _HAS_SHINGLES)}
+        {_DUCK_BAND_PAIRS}
     """,
     tags=("dedup", "ext", "lsh"),
 )
@@ -366,43 +462,8 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the collision groups, so work is proportional to true near-dup density,
     not n².
     """
-    d = load_table(spark, sf_dir, "documents")
-    # Widened scan + eager per-invocation localCheckpoint around the
-    # shingle build (same rationale as near_dup_minhash_verified): the
-    # widen parallelizes the expensive projection beyond the scan's
-    # single split; the checkpoint is the materialization barrier — a
-    # repartition barrier alone stopped expression re-inlining but still
-    # let the two band-join sides re-derive the build (broadcast sides
-    # never reuse a shuffle exchange — r12 optimization pass).
-    sh = (
-        _widen_scan(d, spark, __import__("os").path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", shingles().alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("doc_id", F.transform(F.col("sh"), F.md5).alias("hs"))
-        .localCheckpoint(eager=True)
-    )
-
-    sig = _band_signature(sh)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                *[x for b in range(N_BANDS) for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sh = _shingle_hashes(_docs(spark, sf_dir)).select("doc_id", "hs").localCheckpoint(eager=True)
+    return _band_pairs(_band_postings(sh))
 
 
 # ---------------------------------------------------------------------------
@@ -414,28 +475,11 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH sh AS (
           SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
         ),
-        sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE len({DUCK_SHINGLES}) > 0
-        ),
-        bands AS (
-          SELECT doc_id, band_id, band_val FROM sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        ),
+        {_duck_band_ctes("", _HAS_SHINGLES)},
         cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+          {_DUCK_BAND_PAIRS}
         )
-        SELECT c.doc_a, c.doc_b,
-               round(len(list_intersect(sa.sh, sb.sh)) * 1.0
-                     / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 6) AS jaccard
-        FROM cand c
-        JOIN sh sa ON sa.doc_id = c.doc_a
-        JOIN sh sb ON sb.doc_id = c.doc_b
-        WHERE len(list_intersect(sa.sh, sb.sh)) * 1.0
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
+        {_DUCK_VERIFIED_JACCARD}
     """,
     tags=("dedup", "ext", "scale", "lsh"),
     bench=True,
@@ -448,77 +492,13 @@ def near_dup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     This composition is what runs at 100 TB: no quadratic stage anywhere —
     banding shuffles on band value, verification touches only candidate
     pairs. The exhaustive `near_dup_jaccard` query is its ground-truth
-    check at test scale.
+    check at test scale. The hashed table is checkpointed once for its
+    four consumers (bands a/b, verify a/b): `hs` feeds the bands, `hx`
+    the verify; Jaccard over distinct shingles is hash-agnostic, so the
+    oracle needs neither.
     """
-    d = load_table(spark, sf_dir, "documents")
-    # One wide exchange BEFORE the shingle+hash projection (the documents
-    # scan is one split per file, so the expensive projection would run
-    # single-task — same `_widen_scan` gate as everywhere), then an EAGER
-    # localCheckpoint of the hashed-signature table. Four consumers read
-    # it (bands a/b, verify a/b); without a materialization barrier the
-    # optimizer re-derived the full scan→shingles→md5/xxhash pipeline in
-    # EVERY consumer — the r12 optimization pass measured 4 FileScans and
-    # 0 ReusedExchange in the executed plan (broadcast-join sides can
-    # never reuse a shuffle exchange, and per-consumer column pruning
-    # splits the rest), i.e. the dominant stage ran 4×. The checkpoint is
-    # per-invocation (each call rebuilds it — nothing persists across
-    # runs) and is exactly the guide-§8 move: materialize the small
-    # hash-proxy table once, decide candidates and verify from the proxy,
-    # never recompute from the raw corpus. On a cluster the same barrier
-    # is a reliable-storage checkpoint or an explicit write+read of the
-    # signature table; the fault-tolerance delta is the localCheckpoint
-    # contract already documented in SCALE.md for the logstar loop.
-    #
-    # Two hash columns from one build: `hs` (md5 — the engine-portable
-    # signature family DuckDB mirrors) feeds the band signatures; `hx`
-    # (xxhash64 longs, Spark-only) feeds the verify joins, whose
-    # array_intersect compares 8-byte longs instead of 32-char strings and
-    # whose candidate-side shuffle shrinks ~6×. The oracle is unchanged:
-    # Jaccard over distinct shingles is hash-agnostic.
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sh = (
-        _widen_scan(d, spark, __import__("os").path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", shingles().alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.transform(F.col("sh"), F.md5).alias("hs"),
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    sig = _band_signature(sh)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                *[x for b in range(N_BANDS) for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    ba = bands.alias("a")
-    bb = bands.alias("b")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("hx").alias("sha"))
-    sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("hx").alias("shb"))
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    jacc = inter / (F.size("sha") + F.size("shb") - inter)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jacc >= 0.5)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-    )
+    sh = _shingle_hashes(_docs(spark, sf_dir)).localCheckpoint(eager=True)
+    return _verified_jaccard(_band_pairs(_band_postings(sh)), sh)
 
 
 # ---------------------------------------------------------------------------
@@ -526,17 +506,10 @@ def near_dup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Transitive-closure fixpoint over the jaccard >= 0.5 pair graph — shared by
 # both CC implementations (label propagation and large/small-star), which
-# must produce the identical (doc_id, cluster_id) labeling.
-_CC_FIXPOINT_ORACLE = f"""
-        WITH RECURSIVE sh AS (
-          SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
-        ),
-        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        cand AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-          FROM posting a JOIN posting b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        ),
+# must produce the identical (doc_id, cluster_id) labeling, and by the
+# survivor pick built on top of them.
+_DUCK_CC_REACH = f"""
+        WITH RECURSIVE {_DUCK_SHARED},
         pairs AS (
           SELECT c.doc_a, c.doc_b
           FROM cand c
@@ -554,7 +527,9 @@ _CC_FIXPOINT_ORACLE = f"""
           UNION
           SELECT e.t AS doc, reach.r
           FROM reach JOIN edges e ON e.s = reach.doc
-        )
+        )"""
+
+_CC_FIXPOINT_ORACLE = f"""{_DUCK_CC_REACH}
         SELECT doc AS doc_id, min(r) AS cluster_id FROM reach GROUP BY doc
     """
 
@@ -574,14 +549,22 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations = graph diameter, every step shuffle-partitioned, nothing
     driver-side except the convergence check). The oracle computes the
     same fixpoint with a recursive CTE.
+
+    The edge list and each round's labels are local checkpoints: lineage
+    stays one round deep, and the blocks are freed once the frame is
+    unreferenced — a persist() here pinned the last round in the
+    CacheManager for the life of the session. They are lazy: a round's
+    labels materialize inside its convergence count, so the round runs
+    no extra Spark job.
     """
     pairs = near_dup_jaccard(spark, sf_dir).filter(F.col("jaccard") >= 0.5).select(
         "doc_a", "doc_b"
     )
-    edges = pairs.union(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))).toDF(
-        "s", "t"
+    edges = (
+        pairs.union(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
+        .toDF("s", "t")
+        .localCheckpoint(eager=False)
     )
-    edges = edges.persist()
     labels = edges.select(F.col("s").alias("doc")).distinct().withColumn("label", F.col("doc"))
     while True:
         neigh = (
@@ -592,19 +575,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             labels.unionByName(neigh)
             .groupBy("doc")
             .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=False)
         )
-        new_labels = new_labels.persist()
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "doc")
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        labels.unpersist() if hasattr(labels, "unpersist") else None
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
     return labels.select(F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -753,21 +734,55 @@ def dedup_clusters_logstar(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # SimHash (16-bit, md5 bit votes — engine-portable)
 # ---------------------------------------------------------------------------
-@register(
-    "simhash_fingerprints",
-    oracle=f"""
-        WITH tok AS (
+def _simhash(docs: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, text) → (doc_id, simhash{bits}): per distinct token, the
+    first `bits` bits of its md5 vote ±1 per bit position; the
+    fingerprint sets bit b where the vote is positive. The per-token md5
+    and bit extraction is the expensive part, hence the widened `docs`.
+    Bit 63 of the 64-bit form is the sign bit: Spark's shiftleft wraps,
+    and the oracle spells that bit as its two's-complement value."""
+    tok = docs.select("doc_id", F.explode(F.array_distinct(tokens("text"))).alias("t")).select(
+        "doc_id", F.md5("t").alias("h")
+    )
+    bit = tok.select(
+        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("b"), "h"
+    ).select(
+        "doc_id",
+        "b",
+        F.expr(
+            "((instr('0123456789abcdef', substring(h, 1 + CAST(b / 4 AS INT), 1)) - 1) "
+            ">> (3 - b % 4)) & 1"
+        ).alias("bit"),
+    )
+    votes = bit.groupBy("doc_id", "b").agg(F.sum(2 * F.col("bit") - 1).alias("vote"))
+    one = "1" if bits < 32 else "CAST(1 AS BIGINT)"
+    return votes.groupBy("doc_id").agg(
+        F.sum(F.when(F.col("vote") > 0, F.expr(f"shiftleft({one}, b)")).otherwise(0)).alias(
+            f"simhash{bits}"
+        )
+    )
+
+
+def _duck_simhash_votes(bits: int) -> str:
+    """`tok`, `bits`, `votes` CTEs: the SQL twin of `_simhash`'s vote."""
+    return f"""tok AS (
           SELECT doc_id, md5(t) AS h
           FROM (SELECT doc_id, unnest(list_distinct({DUCK_TOKENS.format(col='text')})) AS t FROM documents)
         ),
         bits AS (
           SELECT doc_id, b,
                  ((strpos('0123456789abcdef', substr(h, 1 + b // 4, 1)) - 1) >> (3 - (b % 4))) & 1 AS bit
-          FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)
+          FROM tok, (SELECT unnest(generate_series(0, {bits - 1})) AS b)
         ),
         votes AS (
           SELECT doc_id, b, sum(2 * bit - 1) AS vote FROM bits GROUP BY doc_id, b
-        )
+        )"""
+
+
+@register(
+    "simhash_fingerprints",
+    oracle=f"""
+        WITH {_duck_simhash_votes(16)}
         SELECT doc_id,
                -- CAST: DuckDB integer sum() yields HUGEINT, which the
                -- driver's pandas-based hasher normalizes via float64 and
@@ -781,50 +796,17 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash: per distinct token, md5-derived bits vote ±1 per bit
     position; fingerprint sets bit b where the vote is positive.
 
-    (The production-scale variant would use 64-bit xxhash64 JVM-side; 16-bit
-    md5-nibble form keeps the hash family bit-identical in the oracle.)
+    (`simhash64_near_dup_pairs` runs the production 64-bit width; the
+    16-bit md5-nibble form is the cheaper engine-portable demo.)
     """
-    d = load_table(spark, sf_dir, "documents")
-    # Repartition the raw text first: the per-token md5 + bit extraction is
-    # the expensive part and would otherwise run on the scan's splits (one
-    # task per file here) — the exchange spreads it across all cores.
-    tok = (
-        _widen_scan(d, spark, __import__("os").path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", F.explode(F.array_distinct(tokens("text"))).alias("t"))
-        .select("doc_id", F.md5("t").alias("h"))
-    )
-    bits = tok.select(
-        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(15))).alias("b"), "h"
-    ).select(
-        "doc_id",
-        "b",
-        F.expr(
-            "((instr('0123456789abcdef', substring(h, 1 + CAST(b / 4 AS INT), 1)) - 1) "
-            ">> (3 - b % 4)) & 1"
-        ).alias("bit"),
-    )
-    votes = bits.groupBy("doc_id", "b").agg(F.sum(2 * F.col("bit") - 1).alias("vote"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("vote") > 0, F.expr("shiftleft(1, b)")).otherwise(0)).alias("simhash16")
-    )
+    return _simhash(_docs(spark, sf_dir), 16)
 
 
 # ---------------------------------------------------------------------------
 # SimHash near-dup pairs: banded hamming-distance join
 # ---------------------------------------------------------------------------
 _DUCK_SIMHASH = f"""
-        tok AS (
-          SELECT doc_id, md5(t) AS h
-          FROM (SELECT doc_id, unnest(list_distinct({DUCK_TOKENS.format(col='text')})) AS t FROM documents)
-        ),
-        bits AS (
-          SELECT doc_id, b,
-                 ((strpos('0123456789abcdef', substr(h, 1 + b // 4, 1)) - 1) >> (3 - (b % 4))) & 1 AS bit
-          FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)
-        ),
-        votes AS (
-          SELECT doc_id, b, sum(2 * bit - 1) AS vote FROM bits GROUP BY doc_id, b
-        ),
+        {_duck_simhash_votes(16)},
         fp AS (
           SELECT doc_id,
                  CAST(sum(CASE WHEN vote > 0 THEN (1 << b) ELSE 0 END) AS BIGINT) AS simhash16
@@ -838,6 +820,29 @@ SIMHASH16_TOP_K = 5  # per-doc nearest-neighbor cap: a 16-bit space saturates,
 # at sf0.1); capping to the K nearest per doc_a bounds output at K·n rows.
 
 
+def _hamming_pairs(fp: DataFrame, band_val: str) -> DataFrame:
+    """(doc_id, fingerprint) → (doc_a, doc_b, hamming ≤ HAMMING_MAX):
+    four bands, `band_val` the SQL for band `band_id` of the fingerprint;
+    candidates share any band (`_band_pairs`), verify is bit_count(xor).
+    Recall is exact by pigeonhole: ≤ 3 differing bits across 4 bands
+    leave at least one band with zero differing bits. `fp` is
+    checkpointed by the caller: it feeds bands a/b and verify a/b."""
+    col = fp.columns[1]
+    bands = fp.select(
+        "doc_id", col, F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band_id")
+    ).select("doc_id", "band_id", F.expr(band_val).alias("band_val"))
+    sa = fp.select(F.col("doc_id").alias("doc_a"), F.col(col).alias("sim_a"))
+    sb = fp.select(F.col("doc_id").alias("doc_b"), F.col(col).alias("sim_b"))
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    return (
+        _band_pairs(bands)
+        .join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(hamming <= HAMMING_MAX)
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
+    )
+
+
 @register(
     "simhash_near_dup_pairs",
     oracle=f"""
@@ -848,9 +853,7 @@ SIMHASH16_TOP_K = 5  # per-doc nearest-neighbor cap: a 16-bit space saturates,
           FROM fp, (SELECT unnest(generate_series(0, 3)) AS band_id) bb
         ),
         cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+          {_DUCK_BAND_PAIRS}
         ),
         verified AS (
           SELECT c.doc_a, c.doc_b,
@@ -876,52 +879,18 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     then keep each doc's SIMHASH16_TOP_K nearest verified neighbors
     (ordered by hamming, then doc_b — deterministic).
 
-    Recall within the cap is exact by pigeonhole: ≤ 3 differing bits
-    across 4 bands forces at least one band with zero differing bits, so
-    every qualifying pair appears in some bucket. The per-doc cap (r6)
-    bounds the EMISSION: a 16-bit fingerprint space saturates at corpus
-    scale, and the uncapped pair set grew ~quadratically with duplicate
-    density (3.85M rows at sf0.1 → ~1.4M capped). This query is the
-    engine-portable parity demo of the family; `simhash64_near_dup_pairs`
-    (64-bit, 8 bands) is the production form whose collision density —
-    hence emission — actually tracks true near-dups. Scale: shuffle keys
-    are band values; the cap is a WindowGroupLimit (partial top-k on the
-    map side), never a global sort.
+    Recall within the cap is exact by pigeonhole (`_hamming_pairs`). The
+    per-doc cap (r6) bounds the EMISSION: a 16-bit fingerprint space
+    saturates at corpus scale, and the uncapped pair set grew
+    ~quadratically with duplicate density (3.85M rows at sf0.1 → ~1.4M
+    capped). This query is the engine-portable parity demo of the family;
+    `simhash64_near_dup_pairs` (64-bit) is the production form whose
+    collision density — hence emission — actually tracks true near-dups.
+    Scale: shuffle keys are band values; the cap is a WindowGroupLimit
+    (partial top-k on the map side), never a global sort.
     """
-    # Per-invocation checkpoint: fp (doc_id, simhash16 — KB-sized) feeds
-    # four consumers (bands a/b, verify a/b); without the barrier each
-    # re-derived the full per-token md5 pipeline (r12 optimization pass).
     fp = simhash_fingerprints(spark, sf_dir).localCheckpoint(eager=True)
-    bands = fp.select(
-        "doc_id",
-        "simhash16",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band_id"),
-    ).select(
-        "doc_id",
-        "band_id",
-        F.expr("shiftright(simhash16, 4 * band_id) & 15").alias("band_val"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = fp.select(F.col("doc_id").alias("doc_a"), F.col("simhash16").alias("sim_a"))
-    sb = fp.select(F.col("doc_id").alias("doc_b"), F.col("simhash16").alias("sim_b"))
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    verified = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(hamming <= HAMMING_MAX)
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-    )
+    verified = _hamming_pairs(fp, "shiftright(simhash16, 4 * band_id) & 15")
     w = Window.partitionBy("doc_a").orderBy(F.col("hamming").asc(), F.col("doc_b").asc())
     return (
         verified.withColumn("rn", F.row_number().over(w))
@@ -935,34 +904,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_cluster_survivors",
-    oracle=f"""
-        WITH RECURSIVE sh AS (
-          SELECT doc_id, {{DUCK_SHINGLES}} AS sh FROM documents
-        ),
-        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        cand AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-          FROM posting a JOIN posting b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        ),
-        pairs AS (
-          SELECT c.doc_a, c.doc_b
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b
-          WHERE c.shared * 1.0 / (len(sa.sh) + len(sb.sh) - c.shared) >= 0.5
-        ),
-        edges AS (
-          SELECT doc_a AS s, doc_b AS t FROM pairs
-          UNION ALL SELECT doc_b, doc_a FROM pairs
-        ),
-        nodes AS (SELECT DISTINCT s AS doc FROM edges),
-        reach AS (
-          SELECT doc, doc AS r FROM nodes
-          UNION
-          SELECT e.t AS doc, reach.r
-          FROM reach JOIN edges e ON e.s = reach.doc
-        ),
+    oracle=f"""{_DUCK_CC_REACH},
         clusters AS (SELECT doc AS doc_id, min(r) AS cluster_id FROM reach GROUP BY doc),
         clustered AS (
           SELECT c.doc_id, c.cluster_id, length(d.text) AS n_chars,
@@ -980,7 +922,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(length(d.text) AS BIGINT) AS n_chars
         FROM documents d
         WHERE d.doc_id NOT IN (SELECT doc_id FROM clusters)
-    """.format(DUCK_SHINGLES=DUCK_SHINGLES),
+    """,
     doc="Quality-priority survivor per near-dup cluster (keep the longest "
     "doc, tie-break lowest id) plus all singletons — the retention step "
     "after clustering.",
@@ -1083,13 +1025,7 @@ def substring_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick the minhash verify join uses); the raw-text key here keeps the
     DuckDB oracle engine-exact at test SF.
     """
-    import os
-
-    d = _widen_scan(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-    )
+    d = _docs(spark, sf_dir)
     spans = (
         d.filter(F.length("text") >= SPAN_LEN)
         .select(
@@ -1143,10 +1079,7 @@ CONTAIN_T = 0.6  # doc_small is "contained" when this share of its shingles
 @register(
     "near_dup_containment",
     oracle=f"""
-        WITH sh AS (
-          SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
-        ),
-        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
+        WITH {_DUCK_POSTING},
         cand AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
           FROM posting a JOIN posting b ON a.shingle = b.shingle AND a.doc_id != b.doc_id
@@ -1185,35 +1118,8 @@ def near_dup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the |A| denominator as well (containment over the rare
     sub-vocabulary), restoring the bound.
     """
-    import os
-
-    # Widened scan + per-invocation checkpoint: four consumers (posting
-    # a/b, size lookups) — same barrier rationale as near_dup_jaccard.
-    # The checkpointed proxy carries xxhash64 longs, not shingle strings
-    # (r12 optimization session 3, guide §2.3): shared counts and set
-    # sizes — hence every containment score — are hash-agnostic over the
-    # array_distinct shingle sets; the string-side oracle re-proves it.
-    d = _widen_scan(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-    )
-    sh = d.select(
-        "doc_id",
-        F.transform(shingles(), lambda s: F.xxhash64(s)).alias("hx"),
-    ).localCheckpoint(eager=True)
-    posting = sh.select("doc_id", F.explode("hx").alias("shingle"))
-    a = posting.alias("a")
-    b = posting.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    sh = _shingle_hashes(_docs(spark, sf_dir)).select("doc_id", "hx").localCheckpoint(eager=True)
+    cand = _shared_counts(_postings(sh), operator.ne)
     sizes = sh.select("doc_id", F.size("hx").alias("n_sh"))
     containment = F.col("shared") / F.col("na")
     return (
@@ -1232,14 +1138,8 @@ def near_dup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "near_dup_containment_stopfiltered",
     oracle=f"""
-        WITH sh AS (
-          SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
-        ),
-        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        rare AS (
-          SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= {STOP_DF}
-        ),
-        rp AS (SELECT p.doc_id, p.shingle FROM posting p JOIN rare r ON p.shingle = r.shingle),
+        WITH {_DUCK_POSTING},
+        {_DUCK_RARE},
         rsz AS (SELECT doc_id, count(*) AS n_rare FROM rp GROUP BY doc_id),
         cand AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
@@ -1277,41 +1177,10 @@ def near_dup_containment_stopfiltered(spark: SparkSession, sf_dir: str) -> DataF
     and the denominator both use the rare-set size, so the whole operator
     reads one column family and shuffles 8-byte keys.
     """
-    import os
-
-    # Widened scan + per-invocation checkpoint (the shingle subtree feeds
-    # rare/rp/rsz and both self-join sides — same barrier rationale as
-    # near_dup_jaccard). Proxy carries xxhash64 longs (r12 session 3,
-    # guide §2.3): df counts, rare-set sizes and shared counts are
-    # hash-agnostic over array_distinct shingles; oracle unchanged.
-    d = _widen_scan(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-    )
-    sh = d.select(
-        "doc_id",
-        F.transform(shingles(), lambda s: F.xxhash64(s)).alias("hx"),
-    ).localCheckpoint(eager=True)
-    posting = sh.select("doc_id", F.explode("hx").alias("shingle"))
-    rare = (
-        posting.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= STOP_DF)
-    )
-    rp = posting.join(rare.select("shingle"), "shingle")
+    sh = _shingle_hashes(_docs(spark, sf_dir)).select("doc_id", "hx").localCheckpoint(eager=True)
+    rp = _rare_postings(sh)
     rsz = rp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_rare"))
-    a = rp.alias("a")
-    b = rp.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    cand = _shared_counts(rp, operator.ne)
     containment = F.col("shared") / F.col("na")
     return (
         cand.join(rsz.select(F.col("doc_id").alias("doc_a"), F.col("n_rare").alias("na")), "doc_a")
@@ -1346,10 +1215,7 @@ _DUCK_SKEL = f"substr(regexp_replace(text, '[^ -~]', '', 'g'), 1, {EDIT_SKEL_LEN
           SELECT doc_id, {DUCK_SHINGLES} AS sh, {_DUCK_SKEL} AS skel FROM documents
         ),
         posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
-        rare AS (
-          SELECT shingle FROM posting GROUP BY shingle HAVING count(*) <= {STOP_DF}
-        ),
-        rp AS (SELECT p.doc_id, p.shingle FROM posting p JOIN rare r ON p.shingle = r.shingle),
+        {_DUCK_RARE},
         cand AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM rp a JOIN rp b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -1419,48 +1285,20 @@ def near_dup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange), and partition count stays conf-derived — on a cluster the
     same code widens to the cluster's shuffle width.
     """
-    import os
-
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = _widen_scan(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        os.path.join(sf_dir, "documents.parquet"),
-    )
     skel = F.substring(
         F.regexp_replace(F.col("text"), "[^ -~]", ""), 1, EDIT_SKEL_LEN
     )
-    # Checkpoint the shingle+skeleton table once per invocation: posting
-    # and both verify sides otherwise each re-derived it (same barrier as
-    # the rest of the dedup family). Postings are xxhash64 longs (r12
-    # session 3, guide §2.3): df counts and shared counts — the only
-    # things the candidate stage reads — are hash-agnostic over the
-    # array_distinct shingles; the Levenshtein verify reads skeletons,
-    # untouched. String-side oracle unchanged.
-    sh = d.select(
-        "doc_id",
-        F.transform(shingles(), lambda s: F.xxhash64(s)).alias("hx"),
-        skel.alias("skel"),
-    ).localCheckpoint(eager=True)
-    posting = sh.select("doc_id", F.explode("hx").alias("shingle"))
-    rare = (
-        posting.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= STOP_DF)
+    # Postings and both verify sides read one checkpointed table; the
+    # Levenshtein verify reads the skeletons, never the shingle hashes.
+    sh = (
+        _shingle_hashes(_docs(spark, sf_dir), skel.alias("skel"))
+        .select("doc_id", "hx", "skel")
+        .localCheckpoint(eager=True)
     )
-    rp = posting.join(rare.select("shingle"), "shingle").repartition(
-        n_part, "shingle"
-    )
-    a = rp.alias("a")
-    b = rp.alias("b")
+    rp = _rare_postings(sh).repartition(n_part, "shingle")
     cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
+        _shared_counts(rp, operator.lt)
         .filter(F.col("shared") >= EDIT_MIN_SHARED)
         .select("doc_a", "doc_b")
         .repartition(n_part, "doc_a")
@@ -1512,18 +1350,7 @@ def near_dup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # [EXT r4] 64-bit SimHash: the production-width fingerprint, engine-exact
 # ---------------------------------------------------------------------------
 _DUCK_SIMHASH64 = f"""
-        tok AS (
-          SELECT doc_id, md5(t) AS h
-          FROM (SELECT doc_id, unnest(list_distinct({DUCK_TOKENS.format(col='text')})) AS t FROM documents)
-        ),
-        bits AS (
-          SELECT doc_id, b,
-                 ((strpos('0123456789abcdef', substr(h, 1 + b // 4, 1)) - 1) >> (3 - (b % 4))) & 1 AS bit
-          FROM tok, (SELECT unnest(generate_series(0, 63)) AS b)
-        ),
-        votes AS (
-          SELECT doc_id, b, sum(2 * bit - 1) AS vote FROM bits GROUP BY doc_id, b
-        ),
+        {_duck_simhash_votes(64)},
         fp AS (
           SELECT doc_id,
                  CAST(sum(CASE WHEN vote > 0 THEN
@@ -1536,38 +1363,6 @@ _DUCK_SIMHASH64 = f"""
         )"""
 
 
-def simhash64_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash from the first 16 hex chars of each token's md5 —
-    the production fingerprint width, still bit-identical across engines
-    (the 16-bit form at dedup.py::simhash_fingerprints is kept as the
-    cheaper demo; at 5k synthetic docs it emits 3.85M hamming-≤3 pairs
-    because 16 bits can't separate a low-entropy corpus — 64 bits can)."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = (
-        _widen_scan(d, spark, __import__("os").path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", F.explode(F.array_distinct(tokens("text"))).alias("t"))
-        .select("doc_id", F.md5("t").alias("h"))
-    )
-    bits = tok.select(
-        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("b"), "h"
-    ).select(
-        "doc_id",
-        "b",
-        F.expr(
-            "((instr('0123456789abcdef', substring(h, 1 + CAST(b / 4 AS INT), 1)) - 1) "
-            ">> (3 - b % 4)) & 1"
-        ).alias("bit"),
-    )
-    votes = bits.groupBy("doc_id", "b").agg(F.sum(2 * F.col("bit") - 1).alias("vote"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("vote") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), b)")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash64")
-    )
-
-
 @register(
     "simhash64_near_dup_pairs",
     oracle=f"""
@@ -1578,9 +1373,7 @@ def simhash64_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM fp, (SELECT unnest(generate_series(0, 3)) AS band_id) bb
         ),
         cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band_id = b.band_id AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+          {_DUCK_BAND_PAIRS}
         )
         SELECT c.doc_a, c.doc_b,
                bit_count(xor(sa.simhash64, sb.simhash64)) AS hamming
@@ -1598,40 +1391,14 @@ def simhash64_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall proof as the 16-bit form, but collision density drops from
     2^-4 per band to 2^-16 — at sf0.1 the 16-bit demo emits 3.85M
     verified pairs on the synthetic corpus while this form emits only
-    genuinely near-identical documents. Scale: shuffle keys are band
-    values; candidate volume tracks true-duplicate density.
+    genuinely near-identical documents. The fingerprint is still
+    bit-identical across engines (first 16 hex chars of each token's
+    md5). Scale: shuffle keys are band values; candidate volume tracks
+    true-duplicate density.
     """
-    # Same 4-consumer barrier as simhash_near_dup_pairs.
-    fp = simhash64_fingerprints(spark, sf_dir).localCheckpoint(eager=True)
-    bands = fp.select(
-        "doc_id",
-        "simhash64",
-        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band_id"),
-    ).select(
-        "doc_id",
-        "band_id",
-        F.expr("shiftrightunsigned(simhash64, 16 * band_id) & 65535").alias("band_val"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = fp.select(F.col("doc_id").alias("doc_a"), F.col("simhash64").alias("sim_a"))
-    sb = fp.select(F.col("doc_id").alias("doc_b"), F.col("simhash64").alias("sim_b"))
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(hamming <= HAMMING_MAX)
-        .select("doc_a", "doc_b", hamming.cast("long").alias("hamming"))
+    fp = _simhash(_docs(spark, sf_dir), 64).localCheckpoint(eager=True)
+    return _hamming_pairs(fp, "shiftrightunsigned(simhash64, 16 * band_id) & 65535").select(
+        "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
     )
 
 
@@ -1643,7 +1410,37 @@ def simhash64_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cycle — equality is pinned in tests/test_r6_new_ops.py).
 INC_HIST_MOD = 10
 INC_HIST_KEEP = 8  # doc_id % INC_HIST_MOD < 8 -> history; rest -> new batch
+RETRACT_MOD = 5  # tombstone set: history docs with doc_id % RETRACT_MOD == 0
 BAND_INDEX_ROOT = "/tmp/ddl_spark_band_index_v1"
+
+
+def _history(d: DataFrame) -> DataFrame:
+    return d.filter(F.col("doc_id") % INC_HIST_MOD < INC_HIST_KEEP)
+
+
+def _new_batch(d: DataFrame) -> DataFrame:
+    return d.filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP)
+
+
+def _tombstones(d: DataFrame) -> DataFrame:
+    """The retraction set: history doc ids with doc_id % RETRACT_MOD == 0."""
+    return _history(d).filter(F.col("doc_id") % RETRACT_MOD == 0).select("doc_id")
+
+
+def _write_store(sh: DataFrame, root: str, mode: str) -> None:
+    """Write (or append) the store tables for a `_shingle_hashes` frame:
+    `bands` = the LSH postings (doc_id, band_id, band_val) the probe join
+    hits, `shingles` = (doc_id, hx) for the exact-Jaccard verify."""
+    _band_postings(sh).write.mode(mode).parquet(os.path.join(root, "bands"))
+    sh.select("doc_id", "hx").write.mode(mode).parquet(os.path.join(root, "shingles"))
+
+
+def _read_store(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
+    """(band postings, shingle hashes) of the store at `root`."""
+    return (
+        spark.read.parquet(os.path.join(root, "bands")),
+        spark.read.parquet(os.path.join(root, "shingles")),
+    )
 
 
 def build_band_index(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
@@ -1661,8 +1458,6 @@ def build_band_index(spark: SparkSession, sf_dir: str, root: str | None = None) 
     store grows by appending each accepted batch's postings — history
     text is never re-scanned.
     """
-    import os
-
     from ..sources.catalog import prune_stale_cache_siblings
 
     st = os.stat(os.path.join(sf_dir, "documents.parquet"))
@@ -1674,42 +1469,18 @@ def build_band_index(spark: SparkSession, sf_dir: str, root: str | None = None) 
         return root
 
     stage = f"{root}.tmp.{os.getpid()}"
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % INC_HIST_MOD < INC_HIST_KEEP
-    )
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sh = (
-        _widen_scan(d, spark, __import__("os").path.join(sf_dir, "documents.parquet"))
-        .filter(F.col("doc_id") % INC_HIST_MOD < INC_HIST_KEEP)
-        .select("doc_id", shingles().alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.transform(F.col("sh"), F.md5).alias("hs"),
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
-        )
+        _shingle_hashes(_history(_docs(spark, sf_dir)))
         .repartition(n_part)
         .localCheckpoint(eager=True)  # shared by both writes below
     )
-    bands = _band_signature(sh).select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                *[x for b in range(N_BANDS) for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    bands.write.mode("overwrite").parquet(os.path.join(stage, "bands"))
-    sh.select("doc_id", "hx").write.mode("overwrite").parquet(
-        os.path.join(stage, "shingles")
-    )
+    _write_store(sh, stage, "overwrite")
     with open(os.path.join(stage, "_INDEX_COMPLETE"), "w") as f:
         f.write("ok")
     try:
         os.rename(stage, root)  # atomic publish (same filesystem)
     except OSError:
-        import shutil
-
         if os.path.exists(marker):  # lost the race to a complete index
             shutil.rmtree(stage, ignore_errors=True)
         else:  # stale half-built tree from a crashed run: replace it
@@ -1720,33 +1491,66 @@ def build_band_index(spark: SparkSession, sf_dir: str, root: str | None = None) 
     return root
 
 
-_DUCK_INC_JACC = (
-    "len(list_intersect(sa.sh, sb.sh)) * 1.0"
-    " / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))"
-)
+def _probe_store(
+    bsh: DataFrame, ids: DataFrame, hist_bands: DataFrame, hist_sh: DataFrame
+) -> DataFrame:
+    """The one probe of the band store: batch hashes `bsh` (a
+    `_shingle_hashes` frame) band-join the store postings for candidates,
+    exact Jaccard ≥ 0.5 over the STORED shingle hashes verifies them, and
+    every batch id in `ids` with no verified partner comes back fresh as
+    ``(doc_id, n_band_candidates)``. History is never re-shingled: the
+    probe shuffle is ∝ batch size and the verify join touches only
+    candidate history docs. A retraction overlays its tombstones on
+    `hist_bands` / `hist_sh` before the call."""
+    cand = (
+        _band_postings(bsh)
+        .alias("b")
+        .join(
+            hist_bands.alias("h"),
+            (F.col("b.band_id") == F.col("h.band_id"))
+            & (F.col("b.band_val") == F.col("h.band_val")),
+        )
+        .select(F.col("b.doc_id").alias("bid"), F.col("h.doc_id").alias("hid"))
+        .distinct()
+    )
+    sa = bsh.select(F.col("doc_id").alias("bid"), F.col("hx").alias("sha"))
+    sb = hist_sh.select(F.col("doc_id").alias("hid"), F.col("hx").alias("shb"))
+    dup = (
+        cand.join(sa, "bid")
+        .join(sb, "hid")
+        .filter(_jaccard("sha", "shb") >= 0.5)
+        .select("bid")
+        .distinct()
+    )
+    ncand = cand.groupBy("bid").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    return (
+        ids.join(dup, ids.doc_id == dup.bid, "left_anti")
+        .join(ncand, ids.doc_id == ncand.bid, "left_outer")
+        .select(
+            "doc_id",
+            F.coalesce("n", F.lit(0)).cast("long").alias("n_band_candidates"),
+        )
+    )
 
 
-@register(
-    "near_dup_incremental",
-    oracle=f"""
-        WITH hist_sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE doc_id % {INC_HIST_MOD} < {INC_HIST_KEEP} AND len({DUCK_SHINGLES}) > 0
-        ),
-        hist_bands AS (
-          SELECT doc_id, band_id, band_val FROM hist_sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        ),
-        batch_sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE doc_id % {INC_HIST_MOD} >= {INC_HIST_KEEP} AND len({DUCK_SHINGLES}) > 0
-        ),
-        batch_bands AS (
-          SELECT doc_id, band_id, band_val FROM batch_sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        ),
+def _probe_new_batch(
+    spark: SparkSession, sf_dir: str, hist_bands: DataFrame, hist_sh: DataFrame
+) -> DataFrame:
+    """`_probe_store` for the corpus's new batch, its hashes built from a
+    widened scan and spread over the session's shuffle partitions."""
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    bsh = _shingle_hashes(_new_batch(_docs(spark, sf_dir))).repartition(n_part)
+    ids = _new_batch(load_table(spark, sf_dir, "documents")).select("doc_id")
+    return _probe_store(bsh, ids, hist_bands, hist_sh)
+
+
+def _duck_probe_oracle(hist_where: str) -> str:
+    """SQL twin of `_probe_new_batch` against a store holding the history
+    docs that satisfy `hist_where`: both sides recomputed from scratch,
+    proving the store's contents equal a from-scratch evaluation."""
+    return f"""
+        WITH {_duck_band_ctes("hist_", hist_where)},
+        {_duck_band_ctes("batch_", f"doc_id % {INC_HIST_MOD} >= {INC_HIST_KEEP} AND {_HAS_SHINGLES}")},
         cand AS (
           SELECT DISTINCT b.doc_id AS bid, h.doc_id AS hid
           FROM batch_bands b JOIN hist_bands h
@@ -1758,7 +1562,7 @@ _DUCK_INC_JACC = (
           FROM cand c
           JOIN sh sa ON sa.doc_id = c.bid
           JOIN sh sb ON sb.doc_id = c.hid
-          WHERE {_DUCK_INC_JACC} >= 0.5
+          WHERE {_DUCK_JACC} >= 0.5
         ),
         ncand AS (SELECT bid, CAST(count(*) AS BIGINT) AS n FROM cand GROUP BY bid)
         SELECT d.doc_id,
@@ -1766,7 +1570,19 @@ _DUCK_INC_JACC = (
         FROM documents d LEFT JOIN ncand ON ncand.bid = d.doc_id
         WHERE d.doc_id % {INC_HIST_MOD} >= {INC_HIST_KEEP}
           AND d.doc_id NOT IN (SELECT bid FROM dup)
-    """,
+    """
+
+
+_HIST_WHERE = f"doc_id % {INC_HIST_MOD} < {INC_HIST_KEEP} AND {_HAS_SHINGLES}"
+# the retracted store: history minus the tombstones (`_tombstones`)
+_RETRACTED_PROBE_ORACLE = _duck_probe_oracle(
+    f"{_HIST_WHERE} AND NOT (doc_id % {RETRACT_MOD} = 0)"
+)
+
+
+@register(
+    "near_dup_incremental",
+    oracle=_duck_probe_oracle(_HIST_WHERE),
     doc="Continuous-ingest NEAR-dup: new batch probes the persisted MinHash band index (band equi-join), exact Jaccard verifies candidates against stored shingle hashes, fresh docs emitted — history is never re-shingled.",
     tags=("dedup", "ext", "lsh", "scale"),
 )
@@ -1786,67 +1602,8 @@ def near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides from scratch in SQL, proving the store's contents equal a
     from-scratch evaluation.
     """
-    import os
-
     root = build_band_index(spark, sf_dir)
-    hist_bands = spark.read.parquet(os.path.join(root, "bands"))
-    hist_sh = spark.read.parquet(os.path.join(root, "shingles"))
-
-    d = load_table(spark, sf_dir, "documents")
-    batch_ids = d.filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP).select(
-        "doc_id"
-    )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bsh = (
-        _widen_scan(d, spark, os.path.join(sf_dir, "documents.parquet"))
-        .filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP)
-        .select("doc_id", shingles().alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.transform(F.col("sh"), F.md5).alias("hs"),
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
-        )
-        .repartition(n_part)
-    )
-    batch_bands = _band_signature(bsh).select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                *[x for b in range(N_BANDS) for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    cand = (
-        batch_bands.alias("b")
-        .join(
-            hist_bands.alias("h"),
-            (F.col("b.band_id") == F.col("h.band_id"))
-            & (F.col("b.band_val") == F.col("h.band_val")),
-        )
-        .select(F.col("b.doc_id").alias("bid"), F.col("h.doc_id").alias("hid"))
-        .distinct()
-    )
-    sa = bsh.select(F.col("doc_id").alias("bid"), F.col("hx").alias("sha"))
-    sb = hist_sh.select(F.col("doc_id").alias("hid"), F.col("hx").alias("shb"))
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    jacc = inter / (F.size("sha") + F.size("shb") - inter)
-    dup = (
-        cand.join(sa, "bid")
-        .join(sb, "hid")
-        .filter(jacc >= 0.5)
-        .select("bid")
-        .distinct()
-    )
-    ncand = cand.groupBy("bid").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return (
-        batch_ids.join(dup, batch_ids.doc_id == dup.bid, "left_anti")
-        .join(ncand, batch_ids.doc_id == ncand.bid, "left_outer")
-        .select(
-            "doc_id",
-            F.coalesce("n", F.lit(0)).cast("long").alias("n_band_candidates"),
-        )
-    )
+    return _probe_new_batch(spark, sf_dir, *_read_store(spark, root))
 
 
 def append_band_index(spark: SparkSession, root: str, batch: DataFrame) -> None:
@@ -1858,32 +1615,9 @@ def append_band_index(spark: SparkSession, root: str, batch: DataFrame) -> None:
     docs candidates against itself at Jaccard 1.0.
 
     ``batch`` must carry (doc_id, text)."""
-    import os
-
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sh = (
-        batch.select("doc_id", shingles().alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.transform(F.col("sh"), F.md5).alias("hs"),
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
-        )
-        .repartition(min(n_part, 8))
-        .localCheckpoint(eager=True)
-    )
-    bands = _band_signature(sh).select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                *[x for b in range(N_BANDS) for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    bands.write.mode("append").parquet(os.path.join(root, "bands"))
-    sh.select("doc_id", "hx").write.mode("append").parquet(
-        os.path.join(root, "shingles")
-    )
+    sh = _shingle_hashes(batch).repartition(min(n_part, 8)).localCheckpoint(eager=True)
+    _write_store(sh, root, "append")
 
 
 @register(
@@ -1923,71 +1657,17 @@ def near_dup_index_append_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     same schedule as any append-heavy lake table
     (`lake_compact_small_files`).
     """
-    import os
-    import shutil
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
-    batch = d.filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP).select(
-        "doc_id", "text"
-    )
+    batch = _new_batch(d).select("doc_id", "text")
     work = tempfile.mkdtemp(prefix="sg_bandappend_")
     shutil.rmtree(work)  # build_band_index wants to create it atomically
     try:
         root = build_band_index(spark, sf_dir, root=work)
-        append_band_index(spark, root, _widen_scan(
-            batch, spark, os.path.join(sf_dir, "documents.parquet")
-        ).filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP).select("doc_id", "text"))
-
-        hist_bands = spark.read.parquet(os.path.join(root, "bands"))
-        hist_sh = spark.read.parquet(os.path.join(root, "shingles"))
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        bsh = (
-            _widen_scan(d, spark, os.path.join(sf_dir, "documents.parquet"))
-            .filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP)
-            .select("doc_id", shingles().alias("sh"))
-            .filter(F.size("sh") > 0)
-            .select(
-                "doc_id",
-                F.transform(F.col("sh"), F.md5).alias("hs"),
-                F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
-            )
-            .repartition(n_part)
+        append_band_index(
+            spark, root, _widen_scan(batch, spark, os.path.join(sf_dir, "documents.parquet"))
         )
-        batch_bands = _band_signature(bsh).select(
-            "doc_id",
-            F.explode(
-                F.create_map(
-                    *[
-                        x
-                        for b in range(N_BANDS)
-                        for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))
-                    ]
-                )
-            ).alias("band_id", "band_val"),
-        )
-        cand = (
-            batch_bands.alias("b")
-            .join(
-                hist_bands.alias("h"),
-                (F.col("b.band_id") == F.col("h.band_id"))
-                & (F.col("b.band_val") == F.col("h.band_val")),
-            )
-            .select(F.col("b.doc_id").alias("bid"), F.col("h.doc_id").alias("hid"))
-            .distinct()
-        )
-        sa = bsh.select(F.col("doc_id").alias("bid"), F.col("hx").alias("sha"))
-        sb = hist_sh.select(F.col("doc_id").alias("hid"), F.col("hx").alias("shb"))
-        inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-        jacc = inter / (F.size("sha") + F.size("shb") - inter)
-        dup = (
-            cand.join(sa, "bid").join(sb, "hid").filter(jacc >= 0.5).select("bid").distinct()
-        )
-        batch_ids = batch.select("doc_id")
-        fresh_after = batch_ids.join(
-            dup, batch_ids.doc_id == dup.bid, "left_anti"
-        ).count()
-        n_batch = batch_ids.count()
+        fresh_after = _probe_new_batch(spark, sf_dir, *_read_store(spark, root)).count()
+        n_batch = batch.count()
         return spark.createDataFrame(
             [(n_batch, fresh_after)], "n_batch long, n_fresh_after_append long"
         )
@@ -2009,61 +1689,8 @@ def probe_band_index(spark: SparkSession, root: str, batch: DataFrame) -> DataFr
     """Probe the persisted band store with a (doc_id, text) batch: band
     postings equi-join for candidates, exact Jaccard (>= 0.5) over the
     STORED shingle hashes to verify, returns the FRESH docs
-    ``(doc_id, n_band_candidates)`` — the `near_dup_incremental` probe
-    factored for reuse by the streaming twin (that query's executed body
-    is deliberately left inline: it holds a green driver hash row)."""
-    import os
-
-    hist_bands = spark.read.parquet(os.path.join(root, "bands"))
-    hist_sh = spark.read.parquet(os.path.join(root, "shingles"))
-    bsh = (
-        batch.select("doc_id", shingles().alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select(
-            "doc_id",
-            F.transform(F.col("sh"), F.md5).alias("hs"),
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
-        )
-    )
-    batch_bands = _band_signature(bsh).select(
-        "doc_id",
-        F.explode(
-            F.create_map(
-                *[
-                    x
-                    for b in range(N_BANDS)
-                    for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))
-                ]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    cand = (
-        batch_bands.alias("b")
-        .join(
-            hist_bands.alias("h"),
-            (F.col("b.band_id") == F.col("h.band_id"))
-            & (F.col("b.band_val") == F.col("h.band_val")),
-        )
-        .select(F.col("b.doc_id").alias("bid"), F.col("h.doc_id").alias("hid"))
-        .distinct()
-    )
-    sa = bsh.select(F.col("doc_id").alias("bid"), F.col("hx").alias("sha"))
-    sb = hist_sh.select(F.col("doc_id").alias("hid"), F.col("hx").alias("shb"))
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    jacc = inter / (F.size("sha") + F.size("shb") - inter)
-    dup = (
-        cand.join(sa, "bid").join(sb, "hid").filter(jacc >= 0.5).select("bid").distinct()
-    )
-    ncand = cand.groupBy("bid").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    ids = batch.select("doc_id")
-    return (
-        ids.join(dup, ids.doc_id == dup.bid, "left_anti")
-        .join(ncand, ids.doc_id == ncand.bid, "left_outer")
-        .select(
-            "doc_id",
-            F.coalesce("n", F.lit(0)).cast("long").alias("n_band_candidates"),
-        )
-    )
+    ``(doc_id, n_band_candidates)`` (`_probe_store`)."""
+    return _probe_store(_shingle_hashes(batch), batch.select("doc_id"), *_read_store(spark, root))
 
 
 @register(
@@ -2098,16 +1725,9 @@ def stream_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`lake_compact_small_files`). State lives in the store, not the
     stream — restart = resume from the last appended batch.
     """
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.events import _stream_state_partitions
 
-    d = load_table(spark, sf_dir, "documents")
-    batch_src = d.filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP).select(
-        "doc_id", "text"
-    )
+    batch_src = _new_batch(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
     work = tempfile.mkdtemp(prefix="sg_stream_nd_idx_")
     shutil.rmtree(work)  # build_band_index wants to create it atomically
     stage = tempfile.mkdtemp(prefix="sg_stream_nd_src_")
@@ -2186,7 +1806,7 @@ LSH_TUNE_CONFIGS = ((8, 1), (4, 2), (2, 4), (1, 8))  # (n_bands, rows_per_band)
           SELECT doc_id,
                  {", ".join(f"{_duck_minhash(k)} AS m{k}" for k in range(N_HASHES))}
           FROM documents
-          WHERE len({DUCK_SHINGLES}) > 0
+          WHERE {_HAS_SHINGLES}
         ),
         bands AS (
           {" UNION ALL ".join(
@@ -2237,30 +1857,9 @@ def lsh_band_tuning_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable, output bounded by bucket counts; NO pair join
     runs (that is the point).
     """
-    import os as _os
-
-    d = load_table(spark, sf_dir, "documents")
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sh = (
-        _widen_scan(d, spark, _os.path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", shingles().alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select("doc_id", F.transform(F.col("sh"), F.md5).alias("hs"))
-        .repartition(n_part)
-    )
-    init = F.struct(*[F.lit("￿").alias(f"m{k}") for k in range(N_HASHES)])
-    sig = sh.select(
-        "doc_id",
-        F.aggregate(
-            "hs",
-            init,
-            lambda acc, h: F.struct(
-                *[
-                    F.least(acc[f"m{k}"], F.substring(h, 2 * k + 1, 16)).alias(f"m{k}")
-                    for k in range(N_HASHES)
-                ]
-            ),
-        ).alias("m"),
+    sig = _minhashes(
+        _shingle_hashes(_docs(spark, sf_dir)).select("doc_id", "hs").repartition(n_part)
     )
     band_rows = [
         F.struct(
@@ -2296,10 +1895,7 @@ PFX_THETA_NUM, PFX_THETA_DEN = 1, 2  # Jaccard threshold 0.5, kept rational
 @register(
     "near_dup_prefix_filter_jaccard",
     oracle=f"""
-        WITH sh AS (
-          SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents
-        ),
-        posting AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
+        WITH {_DUCK_POSTING},
         cand AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM posting a JOIN posting b
@@ -2363,17 +1959,7 @@ def near_dup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFram
         .filter(F.col("rn") <= plen)
         .select("doc_id", "shingle")
     )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_pairs(prefix, "shingle")
     inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
     union = F.size("sa") + F.size("sb") - inter
     return (
@@ -2398,47 +1984,7 @@ RETRACT_MOD = 5  # tombstone set: history docs with doc_id % RETRACT_MOD == 0
 
 @register(
     "near_dup_retract_reprobe",
-    oracle=f"""
-        WITH hist_sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE doc_id % {INC_HIST_MOD} < {INC_HIST_KEEP}
-            AND len({DUCK_SHINGLES}) > 0
-            AND NOT (doc_id % {RETRACT_MOD} = 0)
-        ),
-        hist_bands AS (
-          SELECT doc_id, band_id, band_val FROM hist_sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        ),
-        batch_sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE doc_id % {INC_HIST_MOD} >= {INC_HIST_KEEP} AND len({DUCK_SHINGLES}) > 0
-        ),
-        batch_bands AS (
-          SELECT doc_id, band_id, band_val FROM batch_sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        ),
-        cand AS (
-          SELECT DISTINCT b.doc_id AS bid, h.doc_id AS hid
-          FROM batch_bands b JOIN hist_bands h
-            ON b.band_id = h.band_id AND b.band_val = h.band_val
-        ),
-        sh AS (SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents),
-        dup AS (
-          SELECT DISTINCT c.bid
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.bid
-          JOIN sh sb ON sb.doc_id = c.hid
-          WHERE {_DUCK_INC_JACC} >= 0.5
-        ),
-        ncand AS (SELECT bid, CAST(count(*) AS BIGINT) AS n FROM cand GROUP BY bid)
-        SELECT d.doc_id,
-               CAST(coalesce(ncand.n, 0) AS BIGINT) AS n_band_candidates
-        FROM documents d LEFT JOIN ncand ON ncand.bid = d.doc_id
-        WHERE d.doc_id % {INC_HIST_MOD} >= {INC_HIST_KEEP}
-          AND d.doc_id NOT IN (SELECT bid FROM dup)
-    """,
+    oracle=_RETRACTED_PROBE_ORACLE,
     doc="Right-to-be-forgotten through the near-dup store: history docs tombstoned by a deletion-vector sidecar (store files never rewritten), then the standard batch probe runs against the retracted store — docs whose only near-dup partners were deleted are RE-ADMITTED as fresh.",
     tags=("dedup", "ext", "lsh", "scale", "lifecycle"),
 )
@@ -2468,25 +2014,14 @@ def near_dup_retract_reprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the sidecar is O(|deleted|); the overlay is one broadcast
     anti join per probe side; probe shuffle stays ∝ batch size."""
-    import os
-    import shutil
-    import tempfile
-
     root = build_band_index(spark, sf_dir)  # shared corpus cache, never mutated
     side = tempfile.mkdtemp(prefix="sg_nd_tombstones_")
     try:
         d = load_table(spark, sf_dir, "documents")
         before = _walk_parquet_sizes(root)
         # the delete commit: tombstone ids as a parquet sidecar
-        (
-            d.filter(
-                (F.col("doc_id") % INC_HIST_MOD < INC_HIST_KEEP)
-                & (F.col("doc_id") % RETRACT_MOD == 0)
-            )
-            .select("doc_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(side, "tombstones"))
+        _tombstones(d).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(side, "tombstones")
         )
         after = _walk_parquet_sizes(root)
         rewritten = [p for p, sz in before.items() if after.get(p) != sz]
@@ -2495,73 +2030,11 @@ def near_dup_retract_reprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"near_dup_retract_reprobe touched store files: {rewritten[:3]} "
                 "(retraction must be sidecar-only)"
             )
-        tomb = spark.read.parquet(os.path.join(side, "tombstones"))
-
-        hist_bands = spark.read.parquet(os.path.join(root, "bands")).join(
-            F.broadcast(tomb), "doc_id", "left_anti"
+        tomb = F.broadcast(spark.read.parquet(os.path.join(side, "tombstones")))
+        hist_bands, hist_sh = (
+            t.join(tomb, "doc_id", "left_anti") for t in _read_store(spark, root)
         )
-        hist_sh = spark.read.parquet(os.path.join(root, "shingles")).join(
-            F.broadcast(tomb), "doc_id", "left_anti"
-        )
-
-        batch_ids = d.filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP).select(
-            "doc_id"
-        )
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        bsh = (
-            _widen_scan(d, spark, os.path.join(sf_dir, "documents.parquet"))
-            .filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP)
-            .select("doc_id", shingles().alias("sh"))
-            .filter(F.size("sh") > 0)
-            .select(
-                "doc_id",
-                F.transform(F.col("sh"), F.md5).alias("hs"),
-                F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("hx"),
-            )
-            .repartition(n_part)
-        )
-        batch_bands = _band_signature(bsh).select(
-            "doc_id",
-            F.explode(
-                F.create_map(
-                    *[
-                        x
-                        for b in range(N_BANDS)
-                        for x in (F.lit(f"band_{b}"), F.col(f"band_{b}"))
-                    ]
-                )
-            ).alias("band_id", "band_val"),
-        )
-        cand = (
-            batch_bands.alias("b")
-            .join(
-                hist_bands.alias("h"),
-                (F.col("b.band_id") == F.col("h.band_id"))
-                & (F.col("b.band_val") == F.col("h.band_val")),
-            )
-            .select(F.col("b.doc_id").alias("bid"), F.col("h.doc_id").alias("hid"))
-            .distinct()
-        )
-        sa = bsh.select(F.col("doc_id").alias("bid"), F.col("hx").alias("sha"))
-        sb = hist_sh.select(F.col("doc_id").alias("hid"), F.col("hx").alias("shb"))
-        inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-        jacc = inter / (F.size("sha") + F.size("shb") - inter)
-        dup = (
-            cand.join(sa, "bid")
-            .join(sb, "hid")
-            .filter(jacc >= 0.5)
-            .select("bid")
-            .distinct()
-        )
-        ncand = cand.groupBy("bid").agg(F.count(F.lit(1)).cast("long").alias("n"))
-        out = (
-            batch_ids.join(dup, batch_ids.doc_id == dup.bid, "left_anti")
-            .join(ncand, batch_ids.doc_id == ncand.bid, "left_outer")
-            .select(
-                "doc_id",
-                F.coalesce("n", F.lit(0)).cast("long").alias("n_band_candidates"),
-            )
-        )
+        out = _probe_new_batch(spark, sf_dir, hist_bands, hist_sh)
         # the sidecar dir is reclaimed in finally: materialize
         return spark.createDataFrame(out.collect(), out.schema)
     finally:
@@ -2571,58 +2044,17 @@ def near_dup_retract_reprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _walk_parquet_sizes(root: str) -> dict:
     """{path: size} for every parquet data file under root (the
     append/retract immutability gate's witness)."""
-    import glob as _g
-    import os as _o
+    import glob
 
     return {
-        p: _o.path.getsize(p)
-        for p in _g.glob(_o.path.join(root, "**", "*.parquet"), recursive=True)
+        p: os.path.getsize(p)
+        for p in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
     }
 
 
 @register(
     "near_dup_compact_tombstones",
-    oracle=f"""
-        WITH hist_sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE doc_id % {INC_HIST_MOD} < {INC_HIST_KEEP}
-            AND len({DUCK_SHINGLES}) > 0
-            AND NOT (doc_id % {RETRACT_MOD} = 0)
-        ),
-        hist_bands AS (
-          SELECT doc_id, band_id, band_val FROM hist_sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        ),
-        batch_sig AS (
-          SELECT doc_id, {_DUCK_BANDS}
-          FROM documents
-          WHERE doc_id % {INC_HIST_MOD} >= {INC_HIST_KEEP} AND len({DUCK_SHINGLES}) > 0
-        ),
-        batch_bands AS (
-          SELECT doc_id, band_id, band_val FROM batch_sig
-          UNPIVOT (band_val FOR band_id IN (band_0, band_1, band_2, band_3))
-        ),
-        cand AS (
-          SELECT DISTINCT b.doc_id AS bid, h.doc_id AS hid
-          FROM batch_bands b JOIN hist_bands h
-            ON b.band_id = h.band_id AND b.band_val = h.band_val
-        ),
-        sh AS (SELECT doc_id, {DUCK_SHINGLES} AS sh FROM documents),
-        dup AS (
-          SELECT DISTINCT c.bid
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.bid
-          JOIN sh sb ON sb.doc_id = c.hid
-          WHERE {_DUCK_INC_JACC} >= 0.5
-        ),
-        ncand AS (SELECT bid, CAST(count(*) AS BIGINT) AS n FROM cand GROUP BY bid)
-        SELECT d.doc_id,
-               CAST(coalesce(ncand.n, 0) AS BIGINT) AS n_band_candidates
-        FROM documents d LEFT JOIN ncand ON ncand.bid = d.doc_id
-        WHERE d.doc_id % {INC_HIST_MOD} >= {INC_HIST_KEEP}
-          AND d.doc_id NOT IN (SELECT bid FROM dup)
-    """,
+    oracle=_RETRACTED_PROBE_ORACLE,
     doc="Fold near-dup store tombstones into the layout: rewrite ONLY the store files containing deleted docs' rows (untouched files byte-stable), then the standard probe runs with NO overlay — and must equal the overlay probe exactly (same oracle as near_dup_retract_reprobe: compaction changes layout, never the answer).",
     tags=("dedup", "ext", "lsh", "scale", "lifecycle"),
 )
@@ -2654,23 +2086,14 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete batch touches few files of many (here the fixture store is
     32 files per table, the worst case); the probe afterwards is the
     standard ∝-batch-size plan."""
-    import os
-    import shutil
-    import tempfile
+    from urllib.parse import urlparse
 
     work = tempfile.mkdtemp(prefix="sg_nd_compact_")
     shutil.rmtree(work)  # build_band_index publishes by atomic rename
     try:
         root = build_band_index(spark, sf_dir, root=work)
         d = load_table(spark, sf_dir, "documents")
-        tomb = (
-            d.filter(
-                (F.col("doc_id") % INC_HIST_MOD < INC_HIST_KEEP)
-                & (F.col("doc_id") % RETRACT_MOD == 0)
-            )
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
+        tomb = _tombstones(d).localCheckpoint(eager=True)
         before = _walk_parquet_sizes(root)
         for sub in ("bands", "shingles"):
             path = os.path.join(root, sub)
@@ -2689,8 +2112,6 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             if not touched:
                 continue
-            from urllib.parse import urlparse
-
             local = [urlparse(t).path if t.startswith("file:") else t for t in touched]
             live = (
                 spark.read.parquet(*local)
@@ -2720,9 +2141,7 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"near_dup_compact_tombstones rewrote untouched files: "
                 f"{broken[:3]} (touched-files-only contract)"
             )
-        batch = d.filter(F.col("doc_id") % INC_HIST_MOD >= INC_HIST_KEEP).select(
-            "doc_id", "text"
-        )
+        batch = _new_batch(d).select("doc_id", "text")
         out = probe_band_index(spark, root, batch)  # NO overlay
         # the private store root is reclaimed in finally: materialize
         return spark.createDataFrame(out.collect(), out.schema)

@@ -53,6 +53,9 @@ def test_no_cartesian_in_candidate_joins(spark, sf_dir):
         "near_dup_jaccard",
         "range_join_events_after_order",
         "simhash_near_dup_pairs",
+        "minhash_lsh_candidates",
+        "simhash64_near_dup_pairs",
+        "near_dup_incremental",
     ]:
         plan = physical(REG[name].fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, name

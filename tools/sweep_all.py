@@ -3,7 +3,8 @@
 $SPARK_GRAFT_SF_DIR (default sf0.01); oracle-bearing names get the full
 DuckDB comparison (row count + schema + value hash — tests/oracle.py, the
 local mirror of the driver's t2 gate), rows-only names must return >0 rows.
-One line per query; non-zero exit on any failure.
+One line per query; non-zero exit on any failure, and on any name
+argument that matches no registered query.
 
 Used by the optimization rounds as the fast whole-registry greenness gate
 (the full pytest suite re-verifies operator internals; this verifies the
@@ -25,9 +26,14 @@ from tests.oracle import compare, duck_connect
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     only = sys.argv[1:]  # optional: query names to restrict to
+    reg = load_all()
+    unknown = [n for n in only if n not in reg]
+    if unknown:
+        # a mistyped list must not pass as "0/0 green"
+        print("unknown query names: " + " ".join(unknown), flush=True)
+        raise SystemExit(2)
     spark = get_spark("sweep_all")
     con = duck_connect(sf_dir)
-    reg = load_all()
     names = [n for n in reg if not only or n in only]
     failures = []
     t_all = time.perf_counter()
