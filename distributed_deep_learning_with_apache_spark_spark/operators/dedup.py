@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import DUCK_TOKENS, tokens
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import build_once, fork, keyed_root, load_table
 from .textpipe import _widen_scan
 
 # --- shared shingle builders (Spark + DuckDB must stay in lockstep) --------
@@ -1448,47 +1448,28 @@ def build_band_index(spark: SparkSession, sf_dir: str, root: str | None = None) 
     store, once per corpus: (a) the LSH band postings
     ``(band_id, band_val, doc_id)`` the probe join hits, and (b) the
     verify-side shingle hashes ``(doc_id, hx array<bigint>)`` so exact
-    Jaccard never re-reads or re-shingles history text. Staged into a
-    process-private dir then atomically renamed (identical crash/race
-    discipline to `build_ivf_index` / `pq_encode_df`; corpus-mtime cache
-    key, stale siblings pruned).
+    Jaccard never re-reads or re-shingles history text. Published by
+    `build_once` under a documents-keyed root (an explicit `root` builds
+    there instead).
 
     At 100 TB the postings table is bucketed by (band_id, band_val) and
     the shingle store by doc_id, so both probe joins are co-located; the
     store grows by appending each accepted batch's postings — history
     text is never re-scanned.
     """
-    from ..sources.catalog import prune_stale_cache_siblings
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    slug = sf_dir.strip("/").replace("/", "_")
-    default_root = root is None
-    root = root or os.path.join(BAND_INDEX_ROOT, f"{slug}_{st.st_mtime_ns}_{st.st_size}")
-    marker = os.path.join(root, "_INDEX_COMPLETE")
-    if os.path.exists(marker):
-        return root
+    def write(stage: str) -> None:
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        sh = (
+            _shingle_hashes(_history(_docs(spark, sf_dir)))
+            .repartition(n_part)
+            .localCheckpoint(eager=True)  # shared by both writes below
+        )
+        _write_store(sh, stage, "overwrite")
 
-    stage = f"{root}.tmp.{os.getpid()}"
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sh = (
-        _shingle_hashes(_history(_docs(spark, sf_dir)))
-        .repartition(n_part)
-        .localCheckpoint(eager=True)  # shared by both writes below
+    return build_once(
+        root or keyed_root(BAND_INDEX_ROOT, sf_dir, "documents"), "_INDEX_COMPLETE", write
     )
-    _write_store(sh, stage, "overwrite")
-    with open(os.path.join(stage, "_INDEX_COMPLETE"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, root)  # atomic publish (same filesystem)
-    except OSError:
-        if os.path.exists(marker):  # lost the race to a complete index
-            shutil.rmtree(stage, ignore_errors=True)
-        else:  # stale half-built tree from a crashed run: replace it
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(stage, root)
-    if default_root:
-        prune_stale_cache_siblings(BAND_INDEX_ROOT, slug, root)
-    return root
 
 
 def _probe_store(
@@ -1648,9 +1629,9 @@ def near_dup_index_append_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     and is suppressed; exactly the shingle-less docs remain fresh. Both
     counts are SQL-expressible, so the cycle is hash-checked.
 
-    Runs against a throwaway hardlink-free copy of the store build (same
-    corpus-keyed builder, private root) so the shared cache keeps serving
-    `near_dup_incremental` unmutated.
+    Runs against a `fork` of the cached store (hardlinked data files,
+    private root) so the shared cache keeps serving `near_dup_incremental`
+    unmutated and history is never re-shingled.
 
     Scale: the append writes ∝ batch size; the store is never compacted
     here — a production table would OPTIMIZE the postings files on the
@@ -1659,10 +1640,7 @@ def near_dup_index_append_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     batch = _new_batch(d).select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="sg_bandappend_")
-    shutil.rmtree(work)  # build_band_index wants to create it atomically
-    try:
-        root = build_band_index(spark, sf_dir, root=work)
+    with fork(build_band_index(spark, sf_dir)) as root:
         append_band_index(
             spark, root, _widen_scan(batch, spark, os.path.join(sf_dir, "documents.parquet"))
         )
@@ -1671,8 +1649,6 @@ def near_dup_index_append_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [(n_batch, fresh_after)], "n_batch long, n_fresh_after_append long"
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1710,6 +1686,8 @@ def stream_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     a batch-2 doc near-duplicating a batch-0 SURVIVOR is rejected, while
     duplicating only a batch-0 REJECT stays fresh — the semantics
     `near_dup_incremental` (one-shot probe, no growth) cannot express.
+    The growing store is a `fork` of the cached history store, so the
+    shared cache is never mutated and history is never re-shingled.
 
     The probe is materialized (eager localCheckpoint) BEFORE the append
     mutates the store — otherwise every doc would self-match at
@@ -1728,14 +1706,13 @@ def stream_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.events import _stream_state_partitions
 
     batch_src = _new_batch(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="sg_stream_nd_idx_")
-    shutil.rmtree(work)  # build_band_index wants to create it atomically
-    stage = tempfile.mkdtemp(prefix="sg_stream_nd_src_")
     # keyed by batch_id so a RETRIED micro-batch is a no-op (idempotency
     # guard below), not a duplicate ledger row + double-appended postings
     results: dict[int, tuple[int, int]] = {}
-    try:
-        root = build_band_index(spark, sf_dir, root=work)
+    with (
+        fork(build_band_index(spark, sf_dir)) as root,
+        tempfile.TemporaryDirectory(prefix="sg_stream_nd_src_") as stage,
+    ):
         for b in range(STREAM_ND_BATCHES):
             part_dir = os.path.join(stage, f"_w{b}")
             (
@@ -1786,9 +1763,6 @@ def stream_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(b, nd, nf, nd - nf) for b, (nd, nf) in sorted(results.items())],
             "batch_id long, n_docs long, n_fresh long, n_dup long",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2065,7 +2039,8 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     files that contain deleted docs' rows (band postings AND shingle
     hashes), dropping those rows, and deletes the dead originals —
     untouched files are never opened for write. Readers then stop paying
-    the per-probe anti join.
+    the per-probe anti join. The surgery runs on a `fork` of the cached
+    store, so the shared cache is never mutated or rebuilt.
 
     File-level surgery: each store table's touched-file list comes from
     the `_metadata.file_path` hidden column semi-joined with the
@@ -2088,10 +2063,7 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard ∝-batch-size plan."""
     from urllib.parse import urlparse
 
-    work = tempfile.mkdtemp(prefix="sg_nd_compact_")
-    shutil.rmtree(work)  # build_band_index publishes by atomic rename
-    try:
-        root = build_band_index(spark, sf_dir, root=work)
+    with fork(build_band_index(spark, sf_dir)) as root:
         d = load_table(spark, sf_dir, "documents")
         tomb = _tombstones(d).localCheckpoint(eager=True)
         before = _walk_parquet_sizes(root)
@@ -2143,7 +2115,5 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         batch = _new_batch(d).select("doc_id", "text")
         out = probe_band_index(spark, root, batch)  # NO overlay
-        # the private store root is reclaimed in finally: materialize
+        # the fork is reclaimed on exit: materialize
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.arrays import as_double, cosine, dot, squared_error
 from ..registry import register
-from ..sources.catalog import load_table, prune_stale_cache_siblings
+from ..sources.catalog import build_once, fork, keyed_root, load_table
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -665,48 +665,6 @@ def ann_ivf_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_INDEX_ROOT = "/tmp/ddl_spark_ivf_index_v1"
 
 
-def _build_once(sf_dir: str, cache_root: str, root: str | None, marker: str, write) -> str:
-    """Build a persisted ANN store at most once and publish it atomically;
-    shared by `build_ivf_index` and `pq_encode_df`.
-
-    The default root (root=None) lives under `cache_root`, keyed by the
-    embeddings file's identity so a regenerated fixture invalidates the
-    store (mtime-keying, same as catalog's ts-unit sniff and the lake
-    snapshot table). An existing `marker` returns the root untouched.
-    Otherwise `write(stage)` fills a process-private stage dir, which
-    gets the marker and is atomically renamed into place: a concurrent
-    process (pytest alongside the driver) must never read a half-written
-    tree. Obsolete default-root siblings are then swept (one full copy
-    per fixture generation otherwise accumulates under /tmp — round-3
-    ADVICE); a caller-chosen root has no slug siblings, and pruning
-    "siblings" of it would delete the still-valid default cache."""
-    import os
-    import shutil
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    slug = sf_dir.strip("/").replace("/", "_")
-    default_root = root is None
-    root = root or os.path.join(cache_root, f"{slug}_{st.st_mtime_ns}_{st.st_size}")
-    done = os.path.join(root, marker)
-    if os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{os.getpid()}"
-    write(stage)
-    with open(os.path.join(stage, marker), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, root)  # atomic publish (same filesystem)
-    except OSError:
-        if os.path.exists(done):  # lost the race to a complete store
-            shutil.rmtree(stage, ignore_errors=True)
-        else:  # stale half-built tree from a crashed run: replace it
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(stage, root)
-    if default_root:
-        prune_stale_cache_siblings(cache_root, slug, root)
-    return root
-
-
 def build_ivf_index(
     spark: SparkSession,
     sf_dir: str,
@@ -716,7 +674,8 @@ def build_ivf_index(
     """Materialize the IVF layout a production vector store keeps on disk:
     assignments parquet PARTITIONED BY cell (so probing nprobe cells reads
     only those directories) + the KB-sized centroid table. Built once per
-    corpus (idempotent marker, `_build_once`); amortized across every
+    corpus (`build_once` under an embeddings-keyed root; an explicit
+    `root` builds there instead); amortized across every
     subsequent query — the ann_ivf_kmeans query instead re-fits per call,
     which is the right demo shape but not the production shape.
 
@@ -766,7 +725,9 @@ def build_ivf_index(
             os.path.join(stage, "centroids", "part-00000.parquet"),
         )
 
-    return _build_once(sf_dir, IVF_INDEX_ROOT, root, "_INDEX_COMPLETE", write)
+    return build_once(
+        root or keyed_root(IVF_INDEX_ROOT, sf_dir, "embeddings"), "_INDEX_COMPLETE", write
+    )
 
 
 @register(
@@ -1008,8 +969,8 @@ def pq_encode_df(
     same caveat as the LSH family, SCALE.md delta #3; clustered real
     embeddings quantize far better).
 
-    Codes + codebooks persist under a corpus-mtime-keyed cache (same
-    contract as `build_ivf_index`): a production PQ index trains ONCE per
+    Codes + codebooks persist under a corpus-mtime-keyed cache
+    (`build_once`, as `build_ivf_index`): a production PQ index trains ONCE per
     corpus and every query serves from the stored codes — re-encoding the
     whole corpus per query call was costing more than the ADC scan itself
     (measured ~8 s of the composed IVF×PQ query at sf0.1). Training is
@@ -1045,7 +1006,9 @@ def pq_encode_df(
         with open(os.path.join(stage, "codebooks.json"), "w") as f:
             json.dump([b.tolist() for b in books], f)
 
-    root = _build_once(sf_dir, PQ_CODES_ROOT, root, "_PQ_COMPLETE", write)
+    root = build_once(
+        root or keyed_root(PQ_CODES_ROOT, sf_dir, "embeddings"), "_PQ_COMPLETE", write
+    )
     with open(os.path.join(root, "codebooks.json")) as f:
         books = [np.asarray(b) for b in json.load(f)]
     return spark.read.parquet(os.path.join(root, "codes")), books
@@ -2322,7 +2285,8 @@ def ann_ivf_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — via dynamic partition overwrite, leave every other cell's
     files untouched, then serve WITHOUT the overlay. After compaction
     the deletion-vector sidecar is empty and readers stop paying the
-    anti join.
+    anti join. Runs on a `fork` of the cached index (same full-table
+    source), so the shared store is never mutated or rebuilt.
 
     In-op gates (loud, WAP-style):
     - locality: every file in an UNTOUCHED cell byte-stable (the
@@ -2342,13 +2306,10 @@ def ann_ivf_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, compact on the lake schedule."""
     import os
     import shutil
-    import tempfile
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work = tempfile.mkdtemp(prefix="sg_ivf_compact_")
-    shutil.rmtree(work)  # build_ivf_index publishes by atomic rename
-    try:
-        root = build_ivf_index(spark, sf_dir, root=work, source=e)
+    e = load_table(spark, sf_dir, "embeddings")
+    # the cached store indexes this same full table: fork it, never rebuild
+    with fork(build_ivf_index(spark, sf_dir)) as root:
         tomb = (
             e.filter(
                 (F.col("vec_id") % ANN_RETRACT_MOD == 3)
@@ -2419,7 +2380,5 @@ def ann_ivf_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         centroids = spark.read.parquet(os.path.join(root, "centroids"))
         out = _ivf_probe_topk(compacted, centroids)
-        # the private store root is reclaimed in finally: materialize
+        # the fork is reclaimed on exit: materialize
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

@@ -905,12 +905,11 @@ WHOLETEXT_TREE_ROOT = "/tmp/ddl_spark_wholetext_tree_v1"
 
 def materialize_wholetext_tree(spark: SparkSession, sf_dir: str) -> str:
     """pos/neg .txt tree materialized from the documents fixture, cached by
-    corpus mtime (the build_ivf_index cache contract: staged write, atomic
-    rename, sibling prune). Label = doc_id parity. Each file holds TWO
-    lines — the doc text, then a ``doc:<id>`` trailer — so wholetext
-    semantics are load-bearing: a line-mode reader would emit two rows per
-    file and could reproduce neither the per-label doc count nor the
-    trailer-parsed ids.
+    corpus mtime (`build_once` under a documents-keyed root). Label =
+    doc_id parity. Each file holds TWO lines — the doc text, then a
+    ``doc:<id>`` trailer — so wholetext semantics are load-bearing: a
+    line-mode reader would emit two rows per file and could reproduce
+    neither the per-label doc count nor the trailer-parsed ids.
 
     The driver-side file loop is fixture-tree materialization (bounded:
     the documents corpus; one-time per fixture generation) — in
@@ -918,38 +917,23 @@ def materialize_wholetext_tree(spark: SparkSession, sf_dir: str) -> str:
     read path below runs; same harness-shape class as SCALE.md
     known-delta #4."""
     import os
-    import shutil
 
-    from .catalog import prune_stale_cache_siblings
+    from .catalog import build_once, keyed_root
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    slug = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join(WHOLETEXT_TREE_ROOT, f"{slug}_{st.st_mtime_ns}_{st.st_size}")
-    marker = os.path.join(root, "_TREE_COMPLETE")
-    if os.path.exists(marker):
-        return root
-    stage = f"{root}.tmp.{os.getpid()}"
-    for lab in ("pos", "neg"):
-        os.makedirs(os.path.join(stage, lab), exist_ok=True)
-    rows = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    for r in rows:
-        lab = "pos" if r.doc_id % 2 == 0 else "neg"
-        with open(
-            os.path.join(stage, lab, f"doc{r.doc_id}.txt"), "w", encoding="utf-8"
-        ) as f:
-            f.write(f"{r.text}\ndoc:{r.doc_id}")
-    with open(os.path.join(stage, "_TREE_COMPLETE"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, root)
-    except OSError:
-        if os.path.exists(marker):  # lost the race to a complete tree
-            shutil.rmtree(stage, ignore_errors=True)
-        else:  # stale half-built tree from a crashed run: replace it
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(stage, root)
-    prune_stale_cache_siblings(WHOLETEXT_TREE_ROOT, slug, root)
-    return root
+    def write(stage: str) -> None:
+        for lab in ("pos", "neg"):
+            os.makedirs(os.path.join(stage, lab))
+        rows = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+        for r in rows:
+            lab = "pos" if r.doc_id % 2 == 0 else "neg"
+            with open(
+                os.path.join(stage, lab, f"doc{r.doc_id}.txt"), "w", encoding="utf-8"
+            ) as f:
+                f.write(f"{r.text}\ndoc:{r.doc_id}")
+
+    return build_once(
+        keyed_root(WHOLETEXT_TREE_ROOT, sf_dir, "documents"), "_TREE_COMPLETE", write
+    )
 
 
 @register(

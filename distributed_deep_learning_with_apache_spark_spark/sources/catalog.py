@@ -16,6 +16,7 @@ builders can hint ``F.broadcast``.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +58,94 @@ def prune_stale_cache_siblings(base: str, prefix: str, keep: str) -> None:
             except OSError:
                 continue
         shutil.rmtree(p, ignore_errors=True)
+
+
+class _KeyedRoot(str):
+    """A cache root minted by `keyed_root`: `build_once` prunes its stale
+    siblings after publishing it."""
+
+    base: str
+    prefix: str
+
+
+def keyed_root(base: str, sf_dir: str, *tables: str) -> str:
+    """``{base}/{slug}_{mtime_ns}_{size}[…]``: the cache root of a store
+    built from ``tables`` of ``sf_dir``, one key pair per table, so a
+    regenerated fixture mints a new root (and the old one is pruned)."""
+    prefix = sf_dir.strip("/").replace("/", "_")
+    key = ""
+    for t in tables:
+        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
+        key += f"_{st.st_mtime_ns}_{st.st_size}"
+    root = _KeyedRoot(os.path.join(base, prefix + key))
+    root.base, root.prefix = base, prefix
+    return root
+
+
+def build_once(root: str, marker: str, write) -> str:
+    """Publish the store at ``root`` at most once; return the root.
+
+    An existing ``marker`` returns the root untouched. Otherwise
+    ``write(stage)`` fills an empty process-private ``<root>.tmp.<pid>``
+    dir, which gets the marker and is atomically renamed onto the root
+    (same filesystem; the local stand-in for an object store's
+    conditional PUT), so a concurrent reader never sees a half-written
+    tree. A lost race to a complete root discards the stage; a stale
+    marker-less root from a crashed run is replaced. A raising ``write``
+    leaves no stage behind. Roots from `keyed_root` then prune their
+    stale siblings; caller-chosen and fixed roots never prune."""
+    import shutil
+
+    done = os.path.join(root, marker)
+    if os.path.exists(done):
+        return str(root)
+    stage = f"{root}.tmp.{os.getpid()}"
+    shutil.rmtree(stage, ignore_errors=True)
+    os.makedirs(stage)
+    try:
+        write(stage)
+        with open(os.path.join(stage, marker), "w") as f:
+            f.write("ok")
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    try:
+        os.rename(stage, root)
+    except OSError:
+        if os.path.exists(done):  # lost the race to a complete store
+            shutil.rmtree(stage, ignore_errors=True)
+        else:  # stale half-built root from a crashed run: replace it
+            shutil.rmtree(root, ignore_errors=True)
+            os.rename(stage, root)
+    if isinstance(root, _KeyedRoot):
+        prune_stale_cache_siblings(root.base, root.prefix, root)
+    return str(root)
+
+
+@contextmanager
+def fork(root: str):
+    """Yield a private, mutable copy of the published store at ``root``;
+    the copy is removed on exit. Data files (``*.parquet``) are hardlinked
+    — no bytes copied, and deleting or replacing one in the copy never
+    touches the original — while every other file is copied, so a
+    rewritten ``_SUCCESS``, ``.crc`` or manifest can never write through
+    to the shared inode. The temp dir must share the store's filesystem."""
+    import shutil
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix="sg_fork_")
+    try:
+        for d, _subdirs, files in os.walk(root):
+            dst = os.path.join(work, os.path.relpath(d, root))
+            os.makedirs(dst, exist_ok=True)
+            for f in files:
+                copy = os.link if f.endswith(".parquet") else shutil.copyfile
+                copy(os.path.join(d, f), os.path.join(dst, f))
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .catalog import load_table, prune_stale_cache_siblings
+from .catalog import build_once, fork, keyed_root, load_table
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -737,62 +737,37 @@ def read_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
 
 
 def ensure_snapshot_table(spark: SparkSession, sf_dir: str, base: str = SNAP_ROOT) -> str:
-    """Build the three-version orders table once per sf_dir (idempotent,
-    atomic publish — same discipline as the media fixture builders):
+    """Build the three-version orders table once per fixture generation
+    (`build_once` under an orders-keyed root):
 
     - v1 append: even-keyed orders
     - v2 append: the odd-keyed rest (v1's files are REUSED, not rewritten)
     - v3 delete: copy-on-write removal of orders below SNAP_DELETE_BELOW
     - v4 update: copy-on-write 5% price uplift on 1-URGENT orders
     """
-    # Cache key includes the source file's identity: a regenerated fixture
-    # must invalidate the table (same mtime-keying discipline as
-    # catalog._events_ts_is_nanos, per round-2 ADVICE).
-    st = _os.stat(_os.path.join(sf_dir, "orders.parquet"))
-    slug = f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}"
-    root = _os.path.join(base, slug)
-    done = _os.path.join(root, ".complete")
-    if _os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{_os.getpid()}"
-    _os.makedirs(stage, exist_ok=True)
 
-    orders = load_table(spark, sf_dir, "orders")
-    f1 = _snap_write_data(orders.filter(F.col("o_orderkey") % 2 == 0), stage, "add_even")
-    _snap_commit(stage, 1, f1, "append")
-    f2 = _snap_write_data(orders.filter(F.col("o_orderkey") % 2 == 1), stage, "add_odd")
-    _snap_commit(stage, 2, f1 + f2, "append")  # append = parent files + new
-    live = spark.read.parquet(*(_os.path.join(stage, f) for f in f1 + f2)).filter(
-        F.col("o_totalprice") >= SNAP_DELETE_BELOW
-    )
-    f3 = _snap_write_data(live, stage, "delete_cheap")
-    _snap_commit(stage, 3, f3, "delete")  # copy-on-write: fresh file set
-    updated = spark.read.parquet(*(_os.path.join(stage, f) for f in f3)).withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderpriority") == "1-URGENT",
-            F.col("o_totalprice") * SNAP_UPDATE_FACTOR,
-        ).otherwise(F.col("o_totalprice")),
-    )
-    f4 = _snap_write_data(updated, stage, "update_urgent")
-    _snap_commit(stage, 4, f4, "update")  # copy-on-write: fresh file set
+    def write(stage: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        f1 = _snap_write_data(orders.filter(F.col("o_orderkey") % 2 == 0), stage, "add_even")
+        _snap_commit(stage, 1, f1, "append")
+        f2 = _snap_write_data(orders.filter(F.col("o_orderkey") % 2 == 1), stage, "add_odd")
+        _snap_commit(stage, 2, f1 + f2, "append")  # append = parent files + new
+        live = spark.read.parquet(*(_os.path.join(stage, f) for f in f1 + f2)).filter(
+            F.col("o_totalprice") >= SNAP_DELETE_BELOW
+        )
+        f3 = _snap_write_data(live, stage, "delete_cheap")
+        _snap_commit(stage, 3, f3, "delete")  # copy-on-write: fresh file set
+        updated = spark.read.parquet(*(_os.path.join(stage, f) for f in f3)).withColumn(
+            "o_totalprice",
+            F.when(
+                F.col("o_orderpriority") == "1-URGENT",
+                F.col("o_totalprice") * SNAP_UPDATE_FACTOR,
+            ).otherwise(F.col("o_totalprice")),
+        )
+        f4 = _snap_write_data(updated, stage, "update_urgent")
+        _snap_commit(stage, 4, f4, "update")  # copy-on-write: fresh file set
 
-    with open(_os.path.join(stage, ".complete"), "w") as f:
-        f.write("ok")
-    try:
-        _os.rename(stage, root)
-    except OSError:
-        import shutil
-
-        if _os.path.exists(done):
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            _os.rename(stage, root)
-    # Each regeneration mints a new slug; sweep the obsolete siblings so
-    # /tmp doesn't accumulate one full table copy per fixture generation.
-    prune_stale_cache_siblings(base, sf_dir.strip("/").replace("/", "_"), root)
-    return root
+    return build_once(keyed_root(base, sf_dir, "orders"), ".complete", write)
 
 
 @register(
@@ -925,20 +900,6 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 VACUUM_RETAIN_FROM = 3  # expire v1/v2; v3+ stay time-travelable
 
 
-def clone_snapshot_root(root: str, dst: str) -> None:
-    """Hardlink-copy a published snapshot table (manifests + data files)
-    so maintenance can run destructively without touching the shared
-    cached fixture. Hardlinks cost no data bytes; unlinking a clone file
-    never affects the original."""
-    for src in _glob.glob(_os.path.join(root, "snap_v*.json")):
-        _os.makedirs(dst, exist_ok=True)
-        _os.link(src, _os.path.join(dst, _os.path.basename(src)))
-    for src in _glob.glob(_os.path.join(root, "data", "*", "*.parquet")):
-        rel = _os.path.relpath(src, root)
-        _os.makedirs(_os.path.dirname(_os.path.join(dst, rel)), exist_ok=True)
-        _os.link(src, _os.path.join(dst, rel))
-
-
 def vacuum_snapshots(root: str, retain_from: int) -> list[str]:
     """Expire every manifest below ``retain_from``, then delete each data
     file referenced by NO retained manifest. Returns the removed
@@ -995,17 +956,11 @@ def lake_vacuum_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rule exact: a file is garbage iff no retained manifest lists it.
     At 100 TB, vacuum is metadata work followed by parallel deletes;
     tests/test_lake.py pins that retained versions stay readable, expired
-    versions are gone, and the shared fixture is untouched (hardlink
-    clone). The uplifted price is the same IEEE multiply on both engines,
-    then cent-exact integer aggregation (cdc_snapshot_diff discipline).
+    versions are gone, and the shared fixture is untouched (`fork`). The
+    uplifted price is the same IEEE multiply on both engines, then
+    cent-exact integer aggregation (cdc_snapshot_diff discipline).
     """
-    import shutil
-    import tempfile
-
-    root = ensure_snapshot_table(spark, sf_dir)
-    clone = tempfile.mkdtemp(prefix="sg_vacuum_")
-    try:
-        clone_snapshot_root(root, clone)
+    with fork(ensure_snapshot_table(spark, sf_dir)) as clone:
         vacuum_snapshots(clone, VACUUM_RETAIN_FROM)
         out = (
             read_snapshot(spark, clone, 4)
@@ -1023,8 +978,6 @@ def lake_vacuum_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(clone, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1040,51 +993,32 @@ DV_BASE_FILES = 8
 
 def ensure_dv_table(spark: SparkSession, sf_dir: str, base: str = DV_ROOT) -> str:
     """Write the immutable base files once per fixture generation and
-    publish the position-delete sidecar beside them (idempotent, atomic
-    rename, stale-sibling pruning — same discipline as the snapshot and
-    bucketed builders)."""
-    st = _os.stat(_os.path.join(sf_dir, "orders.parquet"))
-    slug = f"{sf_dir.strip('/').replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}"
-    root = _os.path.join(base, slug)
-    done = _os.path.join(root, ".complete")
-    if _os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{_os.getpid()}"
-    _os.makedirs(stage, exist_ok=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    orders.repartition(DV_BASE_FILES).write.mode("overwrite").parquet(
-        _os.path.join(stage, "base")
-    )
-    # The "DELETE" commit: scan base with file/row-position metadata,
-    # persist ONLY the positions of matching rows. Base files untouched.
-    hit = (
-        spark.read.parquet(_os.path.join(stage, "base"))
-        .filter(
-            (F.col("o_orderstatus") == DV_DELETE_STATUS)
-            & (F.col("o_totalprice") < DV_DELETE_BELOW)
-        )
-        .select(
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.row_index").alias("row_index"),
-        )
-    )
-    hit.coalesce(1).write.mode("overwrite").parquet(_os.path.join(stage, "dv"))
-    with open(_os.path.join(stage, ".complete"), "w") as f:
-        f.write("ok")
-    try:
-        _os.rename(stage, root)
-    except OSError:
-        import shutil
+    publish the position-delete sidecar beside them (`build_once` under
+    an orders-keyed root)."""
 
-        if _os.path.exists(done):
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            _os.rename(stage, root)
-    prune_stale_cache_siblings(base, sf_dir.strip("/").replace("/", "_"), root)
-    return root
+    def write(stage: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
+        orders.repartition(DV_BASE_FILES).write.mode("overwrite").parquet(
+            _os.path.join(stage, "base")
+        )
+        # The "DELETE" commit: scan base with file/row-position metadata,
+        # persist ONLY the positions of matching rows. Base files untouched.
+        hit = (
+            spark.read.parquet(_os.path.join(stage, "base"))
+            .filter(
+                (F.col("o_orderstatus") == DV_DELETE_STATUS)
+                & (F.col("o_totalprice") < DV_DELETE_BELOW)
+            )
+            .select(
+                F.col("_metadata.file_name").alias("file_name"),
+                F.col("_metadata.row_index").alias("row_index"),
+            )
+        )
+        hit.coalesce(1).write.mode("overwrite").parquet(_os.path.join(stage, "dv"))
+
+    return build_once(keyed_root(base, sf_dir, "orders"), ".complete", write)
 
 
 @register(
@@ -1154,8 +1088,7 @@ _BUCKET_DDL = {
 
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str, base: str = BUCKET_ROOT) -> str:
     """Write lineitem and orders bucketed on the join key once per fixture
-    generation (mtime-keyed slug, atomic publish, stale-sibling sweep —
-    same discipline as the snapshot table and the IVF index).
+    generation (`build_once` under an orders+lineitem-keyed root).
 
     This is the layout investment that pays on every subsequent fact-fact
     join: both sides pre-hashed into N_BUCKETS files on the key, so the
@@ -1164,47 +1097,26 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str, base: str = BUCKET_
     required at write time (bucket metadata is catalog-side); the
     temporary write-table is dropped immediately, files are external.
     """
-    st_o = _os.stat(_os.path.join(sf_dir, "orders.parquet"))
-    st_l = _os.stat(_os.path.join(sf_dir, "lineitem.parquet"))
-    slug = (
-        f"{sf_dir.strip('/').replace('/', '_')}"
-        f"_{st_o.st_mtime_ns}_{st_o.st_size}_{st_l.st_mtime_ns}_{st_l.st_size}"
-    )
-    root = _os.path.join(base, slug)
-    done = _os.path.join(root, ".complete")
-    if _os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{_os.getpid()}"
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    for df, name, key in ((li, "bk_lineitem", "l_orderkey"), (o, "bk_orders", "o_orderkey")):
-        tmp_tbl = f"{name}_w{_os.getpid()}"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(N_BUCKETS, key)
-            .sortBy(key)
-            .format("parquet")
-            .option("path", _os.path.join(stage, name))
-            .saveAsTable(tmp_tbl)
-        )
-        spark.sql(f"DROP TABLE {tmp_tbl}")  # external table: files persist
-    with open(_os.path.join(stage, ".complete"), "w") as f:
-        f.write("ok")
-    try:
-        _os.rename(stage, root)
-    except OSError:
-        import shutil
 
-        if _os.path.exists(done):
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            _os.rename(stage, root)
-    prune_stale_cache_siblings(base, sf_dir.strip("/").replace("/", "_"), root)
-    return root
+    def write(stage: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount"
+        )
+        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+        for df, name, key in ((li, "bk_lineitem", "l_orderkey"), (o, "bk_orders", "o_orderkey")):
+            tmp_tbl = f"{name}_w{_os.getpid()}"
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
+            (
+                df.write.mode("overwrite")
+                .bucketBy(N_BUCKETS, key)
+                .sortBy(key)
+                .format("parquet")
+                .option("path", _os.path.join(stage, name))
+                .saveAsTable(tmp_tbl)
+            )
+            spark.sql(f"DROP TABLE {tmp_tbl}")  # external table: files persist
+
+    return build_once(keyed_root(base, sf_dir, "orders", "lineitem"), ".complete", write)
 
 
 def register_bucketed_tables(spark: SparkSession, root: str) -> None:
@@ -1696,8 +1608,8 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     the way Delta's RESTORE and Iceberg's rollback work: the restore
     manifest simply references the old version's files — zero bytes
     rewritten, and the 'mistake' versions (v3 delete, v4 update) remain
-    readable as-of for audit. Runs on a hardlink clone so the shared
-    cached fixture is never mutated.
+    readable as-of for audit. Runs on a `fork` so the shared cached
+    fixture is never mutated.
 
     The hash check proves both directions: v5 must equal the FULL orders
     table (v2's content — the delete and update undone), while v4 must
@@ -1707,16 +1619,9 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole point of manifest-versioned tables (object-store
     conditional PUT in production).
     """
-    import json
-    import shutil
-    import tempfile
-
-    root = ensure_snapshot_table(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="sg_restore_")
-    try:
-        clone_snapshot_root(root, work)
+    with fork(ensure_snapshot_table(spark, sf_dir)) as work:
         with open(_os.path.join(work, f"snap_v{RESTORE_TO}.json")) as f:
-            target = json.load(f)
+            target = _json.load(f)
         _snap_commit(work, 5, target["files"], f"restore_to_v{RESTORE_TO}")
         out_rows = []
         for v in (5, 4):
@@ -1741,8 +1646,6 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             out_rows, "version long, n_orders long, total_price double"
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1788,13 +1691,8 @@ def lake_shallow_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: clone cost is O(manifests), not O(data) — why shallow clones
     are THE pattern for staging-environment tables over petabyte lakes.
     """
-    import shutil
-    import tempfile
-
     root = ensure_snapshot_table(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="sg_clone_")
-    try:
-        clone_snapshot_root(root, work)
+    with fork(root) as work:
         cheap = load_table(spark, sf_dir, "orders").filter(
             F.col("o_totalprice") < SNAP_DELETE_BELOW
         )
@@ -1824,8 +1722,6 @@ def lake_shallow_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame
         return spark.createDataFrame(
             rows, "side string, n_orders long, total_price double"
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -161,32 +161,17 @@ def synth_image(label: int, idx: int) -> list[list[int]]:
 
 
 def ensure_fixture_corpus(root: str = FIXTURE_DIR) -> str:
-    """Write the seeded PNG corpus once (idempotent); returns the root dir.
+    """Write the seeded PNG corpus once (`build_once`: idempotent, atomic
+    publish, so a parallel process never scans a half-written tree);
+    returns the root dir."""
+    from .catalog import build_once  # pyspark-free module: import on use
 
-    Concurrency-safe: the corpus is staged in a process-private sibling
-    directory and atomically renamed into place, so a parallel process
-    (pytest alongside the driver) can never scan a half-written tree.
-    """
-    done = os.path.join(root, ".complete")
-    if os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{os.getpid()}"
-    for label in range(N_LABELS):
-        d = os.path.join(stage, str(label))
-        os.makedirs(d, exist_ok=True)
-        for i in range(IMGS_PER_LABEL):
-            with open(os.path.join(d, f"img_{i:03d}.png"), "wb") as f:
-                f.write(encode_gray_png(synth_image(label, i)))
-    with open(os.path.join(stage, ".complete"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, root)  # atomic publish (same filesystem)
-    except OSError:
-        import shutil
+    def write(stage: str) -> None:
+        for label in range(N_LABELS):
+            d = os.path.join(stage, str(label))
+            os.makedirs(d)
+            for i in range(IMGS_PER_LABEL):
+                with open(os.path.join(d, f"img_{i:03d}.png"), "wb") as f:
+                    f.write(encode_gray_png(synth_image(label, i)))
 
-        if os.path.exists(done):  # lost the race to a complete corpus
-            shutil.rmtree(stage, ignore_errors=True)
-        else:  # stale half-written tree from a crashed run: replace it
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(stage, root)
-    return root
+    return build_once(root, ".complete", write)

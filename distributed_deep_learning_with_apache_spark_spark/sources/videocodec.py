@@ -83,28 +83,15 @@ def decode_pngv_frame(buf: bytes, frame_idx: int) -> tuple[int, int, list[int]]:
 
 
 def ensure_video_corpus(root: str = VIDEO_DIR) -> str:
-    """Write the seeded .pngv corpus once (idempotent, atomic publish)."""
-    done = os.path.join(root, ".complete")
-    if os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{os.getpid()}"
-    os.makedirs(stage, exist_ok=True)
-    for vid in range(N_VIDEOS):
-        frames = [
-            encode_gray_png(synth_frame(vid, i)) for i in range(FRAMES_PER_VIDEO)
-        ]
-        with open(os.path.join(stage, f"video_{vid:03d}.pngv"), "wb") as f:
-            f.write(encode_pngv(frames))
-    with open(os.path.join(stage, ".complete"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, root)  # atomic publish (same filesystem)
-    except OSError:
-        import shutil
+    """Write the seeded .pngv corpus once (`build_once`)."""
+    from .catalog import build_once  # pyspark-free module: import on use
 
-        if os.path.exists(done):
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(stage, root)
-    return root
+    def write(stage: str) -> None:
+        for vid in range(N_VIDEOS):
+            frames = [
+                encode_gray_png(synth_frame(vid, i)) for i in range(FRAMES_PER_VIDEO)
+            ]
+            with open(os.path.join(stage, f"video_{vid:03d}.pngv"), "wb") as f:
+                f.write(encode_pngv(frames))
+
+    return build_once(root, ".complete", write)

@@ -125,25 +125,12 @@ def synth_audio(audio_id: int) -> list[int]:
 
 
 def ensure_audio_corpus(root: str = AUDIO_DIR) -> str:
-    """Write the seeded .wav corpus once (idempotent, atomic publish)."""
-    done = os.path.join(root, ".complete")
-    if os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{os.getpid()}"
-    os.makedirs(stage, exist_ok=True)
-    for aid in range(N_AUDIO):
-        with open(os.path.join(stage, f"clip_{aid:03d}.wav"), "wb") as f:
-            f.write(encode_wav(synth_audio(aid)))
-    with open(os.path.join(stage, ".complete"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(stage, root)  # atomic publish (same filesystem)
-    except OSError:
-        import shutil
+    """Write the seeded .wav corpus once (`build_once`)."""
+    from .catalog import build_once  # pyspark-free module: import on use
 
-        if os.path.exists(done):
-            shutil.rmtree(stage, ignore_errors=True)
-        else:
-            shutil.rmtree(root, ignore_errors=True)
-            os.rename(stage, root)
-    return root
+    def write(stage: str) -> None:
+        for aid in range(N_AUDIO):
+            with open(os.path.join(stage, f"clip_{aid:03d}.wav"), "wb") as f:
+                f.write(encode_wav(synth_audio(aid)))
+
+    return build_once(root, ".complete", write)

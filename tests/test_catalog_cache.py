@@ -67,3 +67,99 @@ def test_prune_stale_cache_siblings(tmp_path):
     assert staging.exists()          # fresh concurrent stage spared
     assert other.exists()            # different prefix untouched
     assert extended.exists()         # prefix-extending fixture untouched
+
+
+def _publisher(calls):
+    """A `build_once` write callback that records its calls and writes one
+    file into the stage."""
+
+    def write(stage):
+        calls.append(stage)
+        with open(os.path.join(stage, "data.txt"), "w") as f:
+            f.write("built")
+
+    return write
+
+
+def test_build_once_publishes_once(tmp_path):
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import build_once
+
+    root = str(tmp_path / "store")
+    calls = []
+    assert build_once(root, "_DONE", _publisher(calls)) == root
+    assert (tmp_path / "store" / "_DONE").exists()
+    assert (tmp_path / "store" / "data.txt").read_text() == "built"
+    assert build_once(root, "_DONE", _publisher(calls)) == root
+    assert len(calls) == 1  # the published marker short-circuits the rebuild
+    assert sorted(os.listdir(tmp_path)) == ["store"]  # no stage left
+
+
+def test_build_once_lost_race_keeps_winner(tmp_path):
+    """A concurrent builder publishes the complete root while this one is
+    still writing: the winner stays untouched, this stage is discarded."""
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import build_once
+
+    root = tmp_path / "store"
+
+    def write(stage):
+        root.mkdir()
+        (root / "data.txt").write_text("winner")
+        (root / "_DONE").write_text("ok")
+        (tmp_path / stage / "data.txt").write_text("loser")
+
+    assert build_once(str(root), "_DONE", write) == str(root)
+    assert (root / "data.txt").read_text() == "winner"
+    assert sorted(os.listdir(tmp_path)) == ["store"]
+
+
+def test_build_once_replaces_stale_root(tmp_path):
+    """A marker-less root (a crashed build) is replaced, not served."""
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import build_once
+
+    root = tmp_path / "store"
+    root.mkdir()
+    (root / "half.txt").write_text("partial")
+    calls = []
+    build_once(str(root), "_DONE", _publisher(calls))
+    assert len(calls) == 1
+    assert sorted(os.listdir(root)) == ["_DONE", "data.txt"]
+    assert sorted(os.listdir(tmp_path)) == ["store"]
+
+
+def test_build_once_failed_write_leaves_nothing(tmp_path):
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import build_once
+
+    def write(stage):
+        with open(os.path.join(stage, "data.txt"), "w") as f:
+            f.write("partial")
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        build_once(str(tmp_path / "store"), "_DONE", write)
+    assert os.listdir(tmp_path) == []  # neither stage nor root
+
+
+def test_keyed_root_prunes_stale_generation_after_publish(tmp_path):
+    """A `keyed_root` store sweeps the previous fixture generation's copy
+    once it publishes; a caller-chosen root beside it is never pruned."""
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import (
+        build_once,
+        keyed_root,
+    )
+
+    sf = tmp_path / "data" / "sf1"
+    sf.mkdir(parents=True)
+    (sf / "orders.parquet").write_text("v1")
+    base = tmp_path / "cache"
+    old = keyed_root(str(base), str(sf), "orders")
+    build_once(old, "_DONE", _publisher([]))
+    chosen = str(base / (os.path.basename(old) + "_1_2"))  # slug-shaped, caller-chosen
+    build_once(chosen, "_DONE", _publisher([]))
+    assert os.path.exists(old) and os.path.exists(chosen)  # a caller-chosen publish prunes nothing
+    (sf / "orders.parquet").write_text("v2, regenerated")
+    new = keyed_root(str(base), str(sf), "orders")
+    assert new != old and os.path.basename(new).startswith(
+        str(sf).strip("/").replace("/", "_") + "_"
+    )
+    build_once(new, "_DONE", _publisher([]))
+    assert sorted(os.listdir(base)) == [os.path.basename(new)]

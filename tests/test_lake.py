@@ -14,9 +14,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from distributed_deep_learning_with_apache_spark_spark.sources.catalog import load_table
+from distributed_deep_learning_with_apache_spark_spark.operators.dedup import build_band_index
+from distributed_deep_learning_with_apache_spark_spark.operators.similarity import build_ivf_index
+from distributed_deep_learning_with_apache_spark_spark.sources.catalog import fork, load_table
 from distributed_deep_learning_with_apache_spark_spark.sources.lake import (
     compact,
+    ensure_snapshot_table,
     write_clustered,
     write_partitioned,
 )
@@ -249,7 +252,7 @@ def test_lake_compact_small_files_query_and_layout(spark, sf_dir, monkeypatch):
     assert out == raw
 
 
-def test_lake_vacuum_expire_mechanics(spark, sf_dir, tmp_path):
+def test_lake_vacuum_expire_mechanics(spark, sf_dir):
     """r5 VACUUM: expired versions become unreadable, retained versions
     stay bit-identical, exactly the files only-v1/v2 referenced are
     removed, and the shared cached fixture is untouched."""
@@ -257,43 +260,82 @@ def test_lake_vacuum_expire_mechanics(spark, sf_dir, tmp_path):
 
     from distributed_deep_learning_with_apache_spark_spark.sources.lake import (
         VACUUM_RETAIN_FROM,
-        clone_snapshot_root,
         ensure_snapshot_table,
         read_snapshot,
         vacuum_snapshots,
     )
 
     root = ensure_snapshot_table(spark, sf_dir)
-    clone = str(tmp_path / "clone")
-    clone_snapshot_root(root, clone)
+    with fork(root) as clone:
+        manifests = {}
+        for p in glob.glob(os.path.join(clone, "snap_v*.json")):
+            with open(p) as f:
+                m = json.load(f)
+            manifests[m["version"]] = set(m["files"])
+        live = manifests[3] | manifests[4]
+        expected_garbage = sorted((manifests[1] | manifests[2]) - live)
 
-    manifests = {}
-    for p in glob.glob(os.path.join(clone, "snap_v*.json")):
-        with open(p) as f:
-            m = json.load(f)
-        manifests[m["version"]] = set(m["files"])
-    live = manifests[3] | manifests[4]
-    expected_garbage = sorted((manifests[1] | manifests[2]) - live)
+        before_v3 = sorted(read_snapshot(spark, clone, 3).collect())
+        removed = vacuum_snapshots(clone, VACUUM_RETAIN_FROM)
+        assert removed == expected_garbage and removed, removed
 
-    before_v3 = sorted(read_snapshot(spark, clone, 3).collect())
-    removed = vacuum_snapshots(clone, VACUUM_RETAIN_FROM)
-    assert removed == expected_garbage and removed, removed
-
-    # retained versions still read, and identically
-    assert sorted(read_snapshot(spark, clone, 3).collect()) == before_v3
-    assert read_snapshot(spark, clone, 4).count() == len(before_v3)
-    # expired versions are gone (manifest deleted)
-    with pytest.raises(FileNotFoundError):
-        read_snapshot(spark, clone, 1)
-    # garbage files physically deleted, live files intact
-    for rel in expected_garbage:
-        assert not os.path.exists(os.path.join(clone, rel))
-    for rel in sorted(live):
-        assert os.path.exists(os.path.join(clone, rel))
+        # retained versions still read, and identically
+        assert sorted(read_snapshot(spark, clone, 3).collect()) == before_v3
+        assert read_snapshot(spark, clone, 4).count() == len(before_v3)
+        # expired versions are gone (manifest deleted)
+        with pytest.raises(FileNotFoundError):
+            read_snapshot(spark, clone, 1)
+        # garbage files physically deleted, live files intact
+        for rel in expected_garbage:
+            assert not os.path.exists(os.path.join(clone, rel))
+        for rel in sorted(live):
+            assert os.path.exists(os.path.join(clone, rel))
     # the shared fixture is untouched: all its files and manifests remain
     assert read_snapshot(spark, root, 1).count() > 0
     for rel in expected_garbage:
         assert os.path.exists(os.path.join(root, rel))
+
+
+def _file_digests(root):
+    """{root-relative path: (sha256, mtime_ns)} of every file under a store
+    root. The mtime catches a write through a shared inode that leaves the
+    bytes as they were (an empty `_SUCCESS` truncated and re-created)."""
+    import hashlib
+
+    out = {}
+    for d, _subdirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                digest = hashlib.sha256(fh.read()).hexdigest()
+            out[os.path.relpath(p, root)] = (digest, os.stat(p).st_mtime_ns)
+    return out
+
+
+@pytest.mark.parametrize(
+    "op, store",
+    [
+        ("lake_vacuum_expire", ensure_snapshot_table),
+        ("lake_restore_version", ensure_snapshot_table),
+        ("lake_shallow_clone_divergence", ensure_snapshot_table),
+        ("near_dup_index_append_cycle", build_band_index),
+        ("near_dup_compact_tombstones", build_band_index),
+        ("stream_near_dup_incremental", build_band_index),
+        ("ann_ivf_compact_tombstones", build_ivf_index),
+    ],
+)
+def test_fork_leaves_shared_store_byte_identical(spark, sf_dir, op, store):
+    """Every op that mutates a `fork` of a cached store (deletes, appends,
+    rewritten manifests and `_SUCCESS` files) leaves the shared store with
+    the same file list, the same bytes in every file and no file
+    rewritten."""
+    from distributed_deep_learning_with_apache_spark_spark.registry import load_all
+
+    root = store(spark, sf_dir)
+    before = _file_digests(root)
+    assert before
+    load_all()[op].fn(spark, sf_dir).collect()
+    assert _file_digests(root) == before
 
 
 def test_dpp_star_join_prunes_partitions_at_runtime(spark, sf_dir, tmp_path):

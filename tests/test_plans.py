@@ -318,3 +318,39 @@ def test_retraction_overlay_is_broadcast_anti_join(spark, sf_dir):
     plan = physical(live)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan
+
+
+# Jobs of a warm call (every cached store already built) at sf0.001 for the
+# lifecycle ops that `fork` a cached store instead of rebuilding a private
+# copy: (pinned, before the fork). The band-store build was 5 jobs of each
+# dedup op, the IVF build 3 of the compaction. The stream op counts only
+# the jobs of the calling thread: its micro-batches run in the stream's own
+# job group.
+WARM_STORE_JOBS = {
+    "near_dup_index_append_cycle": (22, 27),
+    "near_dup_compact_tombstones": (54, 59),
+    "stream_near_dup_incremental": (4, 9),
+    "ann_ivf_compact_tombstones": (28, 31),
+}
+
+
+@pytest.mark.parametrize("op", sorted(WARM_STORE_JOBS))
+def test_forked_store_ops_do_not_rebuild(spark, sf_dir, op):
+    """Noise-free gate: a warm call of each forked lifecycle op runs the
+    pinned number of Spark jobs, fewer than the private rebuild it
+    replaced (counted with setJobGroup + statusTracker)."""
+    import os
+
+    if os.path.basename(sf_dir.rstrip("/")) != "sf0.001":
+        pytest.skip("job counts are pinned at sf0.001")
+    pinned, rebuilt = WARM_STORE_JOBS[op]
+    sc = spark.sparkContext
+    REG[op].fn(spark, sf_dir).collect()  # builds any missing cached store
+    group = f"warm_store_jobs_{op}"
+    sc.setJobGroup(group, group)
+    try:
+        REG[op].fn(spark, sf_dir).collect()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == pinned < rebuilt, (op, jobs)

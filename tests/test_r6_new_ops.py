@@ -298,22 +298,18 @@ def test_restore_is_metadata_only(spark, sf_dir):
     """The restore commit must reference v2's EXACT file list (no new data
     files written) and leave v3/v4 manifests readable."""
     import json
-    import tempfile
-    import shutil
     import glob as g
 
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import fork
     from distributed_deep_learning_with_apache_spark_spark.sources.lake import (
         RESTORE_TO,
         _snap_commit,
-        clone_snapshot_root,
         ensure_snapshot_table,
         read_snapshot,
     )
 
     root = ensure_snapshot_table(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="sg_restore_test_")
-    try:
-        clone_snapshot_root(root, work)
+    with fork(root) as work:
         files_before = set(g.glob(os.path.join(work, "data", "*", "*.parquet")))
         with open(os.path.join(work, f"snap_v{RESTORE_TO}.json")) as f:
             target = json.load(f)
@@ -330,8 +326,6 @@ def test_restore_is_metadata_only(spark, sf_dir):
         a = read_snapshot(spark, work, 5).orderBy("o_orderkey").collect()
         b = read_snapshot(spark, work, RESTORE_TO).orderBy("o_orderkey").collect()
         assert a == b
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

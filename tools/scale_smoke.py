@@ -218,6 +218,7 @@ def big_png_corpus(copies: int) -> str:
     """An N×-larger PNG corpus for the image-phash scale probe: same
     deterministic generator, `copies`× images per label (idx shifts the
     glyph jitter, so hash diversity tracks the fixture's)."""
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import build_once
     from distributed_deep_learning_with_apache_spark_spark.sources.pngcodec import (
         IMGS_PER_LABEL,
         N_LABELS,
@@ -225,21 +226,15 @@ def big_png_corpus(copies: int) -> str:
         synth_image,
     )
 
-    root = f"/tmp/ddl_spark_png_scale_x{copies}"
-    done = os.path.join(root, ".complete")
-    if os.path.exists(done):
-        return root
-    stage = f"{root}.tmp.{os.getpid()}"
-    for label in range(N_LABELS):
-        d = os.path.join(stage, str(label))
-        os.makedirs(d, exist_ok=True)
-        for i in range(IMGS_PER_LABEL * copies):
-            with open(os.path.join(d, f"img_{i:04d}.png"), "wb") as f:
-                f.write(encode_gray_png(synth_image(label, i)))
-    with open(os.path.join(stage, ".complete"), "w") as f:
-        f.write("ok")
-    os.rename(stage, root)
-    return root
+    def write(stage: str) -> None:
+        for label in range(N_LABELS):
+            d = os.path.join(stage, str(label))
+            os.makedirs(d)
+            for i in range(IMGS_PER_LABEL * copies):
+                with open(os.path.join(d, f"img_{i:04d}.png"), "wb") as f:
+                    f.write(encode_gray_png(synth_image(label, i)))
+
+    return build_once(f"/tmp/ddl_spark_png_scale_x{copies}", ".complete", write)
 
 
 def phash_scale_probe(spark, copies: int) -> dict:
