@@ -12,10 +12,11 @@ Two variants close the gap:
  1. frozen conv backbone (deterministic edge/line/corner kernels) +
     MLlib MLP head — `ml_cnn_features_mlp`;
  2. FULLY TRAINED conv net (`DistributedConvClassifier`): conv3×3×K →
-    ReLU → maxpool2×2 → tanh dense → softmax, every layer trained by the
-    same synchronous parameter-averaging loop as ml/distributed.py —
-    the mechanism the reference uses for its LeNet (conv kernels learned
-    by SGD), realized Spark-first. `ml_cnn_trained_conv` trains it on the
+    ReLU → maxpool2×2 → tanh dense → softmax, every layer trained by
+    ml/distributed.py's one parameter-averaging loop (`fit_by_averaging`,
+    with this net's `minibatch_sgd` step and `_lr_at` schedule) — the
+    mechanism the reference uses for its LeNet (conv kernels learned by
+    SGD), realized Spark-first. `ml_cnn_trained_conv` trains it on the
     real decoded-PNG corpus (sources/pngcodec.py) and must beat the
     frozen-backbone baseline (tests/test_cnn.py).
 
@@ -29,12 +30,13 @@ from __future__ import annotations
 import sys
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..registry import register
 from ..sources.catalog import load_table
+from .distributed import broadcast_udf, fit_by_averaging, load_npz, minibatch_sgd, save_npz
 
 # A cluster's executors need not have this package installed — serialize
 # this module's helpers by value (same pattern as ml/distributed.py).
@@ -202,35 +204,6 @@ def _cnn_loss_grads(params, x, y_onehot):
     return loss, [gk, gbk, gw1, gb1, gw2, gb2]
 
 
-def _cnn_local_sgd(params, x, y_onehot, lr, batch_size, seed, freeze_conv=False, momentum=0.0):
-    """Minibatch SGD from the given start point (one local epoch).
-    freeze_conv skips the conv kernel/bias updates (params 0-1) — the
-    frozen-backbone baseline the trained net must beat.  momentum > 0
-    enables Nesterov momentum (the reference's updater,
-    `MnistClassification.java:101`: Nesterovs(lr, 0.9)); velocity is
-    partition-local and resets each epoch — it never crosses the
-    parameter-averaging barrier, so communication stays O(model size)."""
-    rng = np.random.default_rng(seed)
-    p = [w.copy() for w in params]
-    vel = [np.zeros_like(w) for w in params]
-    order = rng.permutation(len(x))
-    first = 2 if freeze_conv else 0
-    for start in range(0, len(x), batch_size):
-        idx = order[start : start + batch_size]
-        if momentum > 0.0:
-            # Nesterov: evaluate the gradient at the look-ahead point
-            ahead = [p[i] + momentum * vel[i] for i in range(len(p))]
-            _, grads = _cnn_loss_grads(ahead, x[idx], y_onehot[idx])
-            for i in range(first, len(p)):
-                vel[i] = momentum * vel[i] - lr * grads[i]
-                p[i] += vel[i]
-        else:
-            _, grads = _cnn_loss_grads(p, x[idx], y_onehot[idx])
-            for i in range(first, len(p)):
-                p[i] -= lr * grads[i]
-    return p
-
-
 class DistributedConvClassifier:
     """Parameter-averaging conv-net classifier — ALL layers trained,
     including the conv kernels (the reference trains its LeNet kernels:
@@ -279,12 +252,9 @@ class DistributedConvClassifier:
         return self.lr_schedule[max(steps)] if steps else self.lr
 
     def fit(self, df: DataFrame) -> "DistributedConvClassifier":
-        sc = df.sparkSession.sparkContext
-        side, n_classes = self.side, self.n_classes
-        rdd = df.select("pixels", "label").rdd.map(
-            lambda r: (np.asarray(r[0], dtype=np.float64).reshape(side, side), int(r[1]))
-        ).cache()
-        params = _cnn_init(side, self.n_kernels, self.hidden, n_classes, self.seed)
+        side, n_classes, bs, seed = self.side, self.n_classes, self.batch_size, self.seed
+        first, mom = (2 if self.freeze_conv else 0), self.momentum
+        params = _cnn_init(side, self.n_kernels, self.hidden, n_classes, seed)
         if self.freeze_conv:
             # Frozen-backbone baseline: the deterministic edge/line/corner
             # kernels of conv_featurize, unit-normalized so the fixed maps
@@ -293,52 +263,33 @@ class DistributedConvClassifier:
             k = np.asarray(KERNELS, dtype=np.float64)[: self.n_kernels]
             norms = np.linalg.norm(k.reshape(len(k), -1), axis=1)
             params[0] = k / norms[:, None, None]
-        bs, freeze, mom = self.batch_size, self.freeze_conv, self.momentum
 
-        for epoch in range(self.epochs):
-            bc = sc.broadcast(params)
-            ep_seed = self.seed + epoch
-            lr = self._lr_at(epoch)
+        def step(p0, block, lr, epoch, split):
+            x = block[0].reshape(-1, side, side)
+            y = np.zeros((len(x), n_classes))
+            y[np.arange(len(x)), block[1]] = 1.0
+            p = minibatch_sgd(
+                p0, x, y, _cnn_loss_grads, lr, bs, (seed + epoch) * 1000 + split, first, mom
+            )
+            return p, _cnn_loss_grads(p, x, y)[0]
 
-            def train_partition(split_idx, rows, _bc=bc, _seed=ep_seed, _lr=lr):
-                data = list(rows)
-                if not data:
-                    return
-                x = np.stack([d[0] for d in data])
-                y = np.zeros((len(data), n_classes))
-                y[np.arange(len(data)), [d[1] for d in data]] = 1.0
-                p = _cnn_local_sgd(
-                    _bc.value, x, y, _lr, bs, _seed * 1000 + split_idx, freeze, mom
-                )
-                loss, _ = _cnn_loss_grads(p, x, y)
-                yield (p, len(x), loss * len(x))
-
-            results = rdd.mapPartitionsWithIndex(train_partition).collect()
-            total = sum(n for _, n, _ in results)
-            params = [
-                sum(p[i] * (n / total) for p, n, _ in results) for i in range(len(params))
-            ]
-            self.loss_history.append(sum(l for _, _, l in results) / total)
-            bc.destroy()
-        rdd.unpersist()
-        self.params = params
+        rows = df.select("pixels", "label").rdd
+        self.params = fit_by_averaging(
+            self, rows, side * side, (np.float64, np.int64), params, step, self._lr_at
+        )
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
         """Distributed inference: broadcast weights, argmax logits per
         Arrow batch."""
         assert self.params is not None, "fit first"
-        from pyspark.sql import types as T
-
-        bc = df.sparkSession.sparkContext.broadcast(self.params)
         side = self.side
 
-        @F.pandas_udf(T.IntegerType())
-        def predict(pixels: pd.Series) -> pd.Series:
-            x = np.stack([np.asarray(v, dtype=np.float64).reshape(side, side) for v in pixels])
-            _, logits = _cnn_forward(bc.value, x)
-            return pd.Series(logits.argmax(axis=1).astype("int32"))
+        def argmax(p, x):
+            _, logits = _cnn_forward(p, x.reshape(-1, side, side))
+            return logits.argmax(axis=1).astype("int32")
 
+        predict = broadcast_udf(df, self.params, argmax, T.IntegerType())
         return df.withColumn("prediction", predict(F.col("pixels")))
 
     def save(self, path: str) -> None:
@@ -347,21 +298,13 @@ class DistributedConvClassifier:
         to one .npz — KB-sized, driver-side by design (model artifacts are
         metadata, not data)."""
         assert self.params is not None, "fit first"
-        meta = np.array(
-            [self.side, self.n_classes, self.n_kernels, self.hidden], dtype=np.int64
-        )
-        np.savez(
-            path,
-            meta=meta,
-            **{f"p{i}": w for i, w in enumerate(self.params)},
-        )
+        save_npz(path, [self.side, self.n_classes, self.n_kernels, self.hidden], self.params)
 
     @classmethod
     def load(cls, path: str) -> "DistributedConvClassifier":
-        with np.load(path) as z:
-            side, n_classes, n_kernels, hidden = (int(v) for v in z["meta"])
-            model = cls(side=side, n_classes=n_classes, n_kernels=n_kernels, hidden=hidden)
-            model.params = [z[f"p{i}"] for i in range(6)]
+        (side, n_classes, n_kernels, hidden), params = load_npz(path)
+        model = cls(side=side, n_classes=n_classes, n_kernels=n_kernels, hidden=hidden)
+        model.params = params
         return model
 
 

@@ -6,11 +6,17 @@ creates a SparkContext; every net trains single-JVM).
 Algorithm (the published dl4j-spark / iterative-MapReduce pattern):
   per epoch:
     1. broadcast current weights to executors
-    2. each partition runs local minibatch SGD from those weights
+    2. each partition runs a local step (minibatch SGD) from those weights
     3. driver averages the partition results weighted by sample count
 Convergence matches single-node SGD for the smooth objectives used here;
 communication is O(model size × epochs), independent of data size — the
 property that makes it viable at 100 TB (data never moves; weights do).
+
+The loop is written once, `fit_by_averaging` (one Spark job per epoch),
+and the four trainers — the MLP, autoencoder and GRU here, the conv net in
+ml/cnn.py — supply only a local step, a learning-rate schedule and an
+end-of-epoch hook. Each partition is cached once as a stacked numpy
+block; `minibatch_sgd` and `broadcast_udf` are the shared SGD and scorer.
 
 This is one of the few sanctioned RDD/mapPartitions uses in the engine
 (per-partition imperative numeric logic — SURVEY §2.11); everything else
@@ -26,11 +32,13 @@ on this trainer in tests/test_distributed_training.py.
 from __future__ import annotations
 
 import sys
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..registry import register
 
@@ -42,6 +50,133 @@ try:  # pragma: no cover - import location varies across pyspark versions
 except ImportError:
     import cloudpickle as _cp
 _cp.register_pickle_by_value(sys.modules[__name__])
+
+
+# ---------------------------------------------------------------------------
+# The one parameter-averaging loop, its block cache, SGD, scorer and .npz
+# ---------------------------------------------------------------------------
+def _stack_block(rows, who: str, width: int | None, dtypes: tuple):
+    """One partition's rows (features, *targets) → one tuple of stacked
+    arrays, column j as dtypes[j]; nothing for an empty partition. A NULL
+    feature vector, or one whose length is not `width` (the first row's
+    when None), is rejected here with a message that starts with `who`;
+    unguarded it surfaces as numpy's unnamed shape error."""
+    rows = list(rows)
+    if not rows:
+        return
+    if width is None and rows[0][0] is not None:
+        width = len(rows[0][0])
+    for r in rows:
+        if r[0] is None or len(r[0]) != width:
+            got = "NULL" if r[0] is None else f"{len(r[0])}-long"
+            raise ValueError(
+                f"{who}: {got} feature vector, expected {width} values "
+                "(filter or repair upstream)"
+            )
+    yield tuple(np.asarray(col, dtype=dt) for col, dt in zip(zip(*rows), dtypes))
+
+
+def fit_by_averaging(
+    model, rows, width, dtypes, params, step, lr_at=None, on_epoch=None
+) -> list[np.ndarray]:
+    """Synchronous parameter averaging over `rows` (an RDD of (features,
+    *targets) tuples) for `model.epochs` epochs; returns the final params
+    and leaves `model.loss_history` holding one mean loss per epoch.
+
+    Each partition becomes one cached block (`_stack_block`). Per epoch:
+    broadcast params → `step(params, block, lr, epoch, split)` → (params,
+    mean loss) per non-empty partition → collect → average weighted by
+    rows → destroy the broadcast → `on_epoch(epoch, params)`. `lr_at(epoch)`
+    defaults to the constant `model.lr`. One Spark job per epoch; an input
+    with no rows raises ValueError once the first epoch's job finds none,
+    so the check adds no job."""
+    who = f"{type(model).__name__}.fit"
+    blocks = rows.mapPartitions(lambda it: _stack_block(it, who, width, dtypes)).cache()
+    lr_at = lr_at or (lambda _: model.lr)
+    model.loss_history = []
+
+    def train(bc, lr, epoch, split, it):
+        for block in it:
+            p, loss = step(bc.value, block, lr, epoch, split)
+            yield (p, len(block[0]), loss * len(block[0]))
+
+    try:
+        for epoch in range(model.epochs):
+            bc = blocks.context.broadcast(params)
+            try:
+                job = partial(train, bc, lr_at(epoch), epoch)
+                results = blocks.mapPartitionsWithIndex(job).collect()
+            finally:
+                bc.destroy()
+            total = sum(n for _, n, _ in results)
+            if not total:
+                raise ValueError(f"{who}: no training rows")
+            params = [
+                sum(p[i] * (n / total) for p, n, _ in results)
+                for i in range(len(params))
+            ]
+            model.loss_history.append(sum(l for _, _, l in results) / total)
+            if on_epoch is not None:
+                on_epoch(epoch, params)
+    finally:
+        blocks.unpersist()
+    return params
+
+
+def minibatch_sgd(params, x, y, grads, lr, batch_size, seed, first=0, momentum=0.0):
+    """Minibatch SGD from the given start point (one local epoch) over
+    `grads(params, xb, yb) -> (loss, [grad per param])`. Params before
+    index `first` stay fixed (the conv net's frozen-backbone baseline).
+    momentum > 0 enables Nesterov momentum (the reference's updater,
+    `MnistClassification.java:101`: Nesterovs(lr, 0.9)); velocity is
+    partition-local and resets each epoch — it never crosses the
+    parameter-averaging barrier, so communication stays O(model size)."""
+    rng = np.random.default_rng(seed)
+    p = [w.copy() for w in params]
+    vel = [np.zeros_like(w) for w in params]
+    order = rng.permutation(len(x))
+    for start in range(0, len(x), batch_size):
+        idx = order[start : start + batch_size]
+        if momentum > 0.0:
+            # Nesterov: evaluate the gradient at the look-ahead point
+            ahead = [p[i] + momentum * vel[i] for i in range(len(p))]
+            _, g = grads(ahead, x[idx], y[idx])
+            for i in range(first, len(p)):
+                vel[i] = momentum * vel[i] - lr * g[i]
+                p[i] += vel[i]
+        else:
+            _, g = grads(p, x[idx], y[idx])
+            for i in range(first, len(p)):
+                p[i] -= lr * g[i]
+    return p
+
+
+def broadcast_udf(df: DataFrame, params, fn, return_type, dtype=np.float64):
+    """Arrow-vectorized pandas UDF that scores each batch as
+    `fn(weights, x)`: the weights are broadcast once, x stacks the
+    column's arrays as `dtype`."""
+    bc = df.sparkSession.sparkContext.broadcast(params)
+
+    @F.pandas_udf(return_type)
+    def score(col: pd.Series) -> pd.Series:
+        x = np.stack([np.asarray(v, dtype=dtype) for v in col])
+        return pd.Series(fn(bc.value, x))
+
+    return score
+
+
+def save_npz(path: str, meta: list[int], params: list[np.ndarray]) -> None:
+    """Weights + int hyperparams to one KB-sized .npz (driver-side by
+    design: model artifacts are metadata, not data)."""
+    weights = {f"p{i}": w for i, w in enumerate(params)}
+    np.savez(path, meta=np.array(meta, dtype=np.int64), **weights)
+
+
+def load_npz(path: str) -> tuple[list[int], list[np.ndarray]]:
+    """(meta, params) of a `save_npz` file; the param count is the file's."""
+    with np.load(path) as z:
+        n = sum(1 for k in z.files if k != "meta")
+        return [int(v) for v in z["meta"]], [z[f"p{i}"] for i in range(n)]
 
 
 def make_chapter5_dataset(spark: SparkSession, n: int = 2000) -> DataFrame:
@@ -77,34 +212,33 @@ def _forward(params: list[np.ndarray], x: np.ndarray) -> tuple[list[np.ndarray],
     return acts, h
 
 
-def _local_sgd(
-    params: list[np.ndarray],
-    x: np.ndarray,
-    y: np.ndarray,
-    lr: float,
-    batch_size: int,
-    seed: int,
-) -> list[np.ndarray]:
-    """Minibatch SGD on MSE from the given start point (one local pass)."""
-    rng = np.random.default_rng(seed)
-    p = [w.copy() for w in params]
-    order = rng.permutation(len(x))
-    n_layers = len(p) // 2
-    for start in range(0, len(x), batch_size):
-        idx = order[start : start + batch_size]
-        xb, yb = x[idx], y[idx]
-        acts, out = _forward(p, xb)
-        grad = 2.0 * (out - yb) / len(xb)  # dMSE/dout
-        for i in reversed(range(n_layers)):
-            w = p[2 * i]
-            a_prev = acts[i]
-            gw = a_prev.T @ grad
-            gb = grad.sum(axis=0)
-            if i > 0:
-                grad = (grad @ w.T) * (1.0 - acts[i] ** 2)  # tanh'
-            p[2 * i] -= lr * gw
-            p[2 * i + 1] -= lr * gb
-    return p
+def _mse_grads(params: list[np.ndarray], x: np.ndarray, y: np.ndarray):
+    """MSE loss and its gradient for every parameter (textbook backprop
+    through the tanh hidden layers)."""
+    acts, out = _forward(params, x)
+    grad = 2.0 * (out - y) / len(x)  # dMSE/dout
+    g: list = [None] * len(params)
+    for i in reversed(range(len(params) // 2)):
+        g[2 * i] = acts[i].T @ grad
+        g[2 * i + 1] = grad.sum(axis=0)
+        if i > 0:
+            grad = (grad @ params[2 * i].T) * (1.0 - acts[i] ** 2)  # tanh'
+    return float(((out - y) ** 2).mean()), g
+
+
+def _mse_step(batch_size: int, seed: int):
+    """Local step of the MLP and the autoencoder: one minibatch-SGD pass
+    on MSE, then the partition's mean loss. A block without a target
+    column (the autoencoder's) is its own target."""
+
+    def step(p0, block, lr, epoch, split):
+        x = block[0]
+        y = block[1].reshape(-1, 1) if len(block) > 1 else x
+        p = minibatch_sgd(p0, x, y, _mse_grads, lr, batch_size, (seed + epoch) * 1000 + split)
+        _, out = _forward(p, x)
+        return p, float(((out - y) ** 2).mean())
+
+    return step
 
 
 class DistributedMLPRegressor:
@@ -131,58 +265,20 @@ class DistributedMLPRegressor:
         self.loss_history: list[float] = []
 
     def fit(self, df: DataFrame) -> "DistributedMLPRegressor":
-        sc = df.sparkSession.sparkContext
-        rdd = df.select("features", "label").rdd.map(
-            lambda r: (np.asarray(r[0], dtype=np.float64), float(r[1]))
+        rows = df.select("features", "label").rdd
+        self.params = fit_by_averaging(
+            self, rows, self.layers[0], (np.float64, np.float64),
+            _init_weights(self.layers, self.seed), _mse_step(self.batch_size, self.seed),
         )
-        rdd = rdd.cache()
-        params = _init_weights(self.layers, self.seed)
-        lr, bs = self.lr, self.batch_size
-
-        for epoch in range(self.epochs):
-            bc = sc.broadcast(params)
-            ep_seed = self.seed + epoch  # same per-partition seed stream each run
-
-            def train_partition(split_idx, rows, _bc=bc, _seed=ep_seed):
-                data = list(rows)
-                if not data:
-                    return
-                x = np.stack([d[0] for d in data])
-                y = np.array([d[1] for d in data]).reshape(-1, 1)
-                p = _local_sgd(_bc.value, x, y, lr, bs, _seed * 1000 + split_idx)
-                _, out = _forward(p, x)
-                loss = float(((out - y) ** 2).mean()) * len(x)
-                yield (p, len(x), loss)
-
-            results = rdd.mapPartitionsWithIndex(train_partition).collect()
-            total = sum(n for _, n, _ in results)
-            params = [
-                sum(p[i] * (n / total) for p, n, _ in results)
-                for i in range(len(params))
-            ]
-            self.loss_history.append(sum(l for _, _, l in results) / total)
-            bc.destroy()
-        rdd.unpersist()
-        self.params = params
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
         """Distributed inference: broadcast final weights, score per batch
         via an Arrow-vectorized pandas UDF."""
         assert self.params is not None, "fit first"
-        sc = df.sparkSession.sparkContext
-        bc = sc.broadcast(self.params)
-
-        from pyspark.sql import types as T
-
-        @F.pandas_udf(T.DoubleType())
-        def predict(features: pd.Series) -> pd.Series:
-            import numpy as _np
-
-            x = _np.stack([_np.asarray(v, dtype=_np.float64) for v in features])
-            _, out = _forward(bc.value, x)
-            return pd.Series(out.ravel())
-
+        predict = broadcast_udf(
+            df, self.params, lambda p, x: _forward(p, x)[1].ravel(), T.DoubleType()
+        )
         return df.withColumn("prediction", predict(F.col("features")))
 
 
@@ -252,55 +348,20 @@ class DistributedAutoencoder:
         self.loss_history: list[float] = []
 
     def fit(self, df: DataFrame) -> "DistributedAutoencoder":
-        sc = df.sparkSession.sparkContext
-        rdd = df.select("features").rdd.map(
-            lambda r: np.asarray(r[0], dtype=np.float64)
-        ).cache()
-        params = _init_weights(self.layers, self.seed)
-        lr, bs = self.lr, self.batch_size
-
-        for epoch in range(self.epochs):
-            bc = sc.broadcast(params)
-            ep_seed = self.seed + epoch
-
-            def train_partition(split_idx, rows, _bc=bc, _seed=ep_seed):
-                data = list(rows)
-                if not data:
-                    return
-                x = np.stack(data)
-                p = _local_sgd(_bc.value, x, x, lr, bs, _seed * 1000 + split_idx)
-                _, out = _forward(p, x)
-                loss = float(((out - x) ** 2).mean()) * len(x)
-                yield (p, len(x), loss)
-
-            results = rdd.mapPartitionsWithIndex(train_partition).collect()
-            total = sum(n for _, n, _ in results)
-            params = [
-                sum(p[i] * (n / total) for p, n, _ in results)
-                for i in range(len(params))
-            ]
-            self.loss_history.append(sum(l for _, _, l in results) / total)
-            bc.destroy()
-        rdd.unpersist()
-        self.params = params
+        rows = df.select("features").rdd
+        self.params = fit_by_averaging(
+            self, rows, self.layers[0], (np.float64,),
+            _init_weights(self.layers, self.seed), _mse_step(self.batch_size, self.seed),
+        )
         return self
 
     def score(self, df: DataFrame) -> DataFrame:
         """Per-row squared reconstruction error (the reference's
         `net.score(DataSet(x,x))` per example, `:194`)."""
         assert self.params is not None, "fit first"
-        bc = df.sparkSession.sparkContext.broadcast(self.params)
-
-        from pyspark.sql import types as T
-
-        @F.pandas_udf(T.DoubleType())
-        def recon_err(features: pd.Series) -> pd.Series:
-            import numpy as _np
-
-            x = _np.stack([_np.asarray(v, dtype=_np.float64) for v in features])
-            _, out = _forward(bc.value, x)
-            return pd.Series(((out - x) ** 2).sum(axis=1))
-
+        recon_err = broadcast_udf(
+            df, self.params, lambda p, x: ((_forward(p, x)[1] - x) ** 2).sum(axis=1), T.DoubleType()
+        )
         return df.withColumn("score", recon_err(F.col("features")))
 
 
@@ -453,93 +514,71 @@ class DistributedGRUClassifier:
         self.loss_history: list[float] = []
 
     def fit(self, df: DataFrame) -> "DistributedGRUClassifier":
-        sc = df.sparkSession.sparkContext
         # Explicit partition key -> partitionBy(identity): Spark partition k
         # holds exactly the rows with part == k, so the run is deterministic
-        # regardless of upstream file splits.  Rows sort by a stable key
-        # (first ids element is irrelevant; order fixed by collecting the
-        # tuple order) so FP reduction order is reproducible.
-        rdd = (
+        # regardless of upstream file splits.  Each partition's rows sort by
+        # (part, doc_key, ...) before stacking, so FP reduction order is
+        # reproducible.
+        n_parts = self.n_parts
+        rows = (
             df.select("part", "doc_key", "ids", "label")
-            .rdd.map(lambda r: (int(r[0]), (int(r[1]), list(r[2]), float(r[3]))))
-            .partitionBy(self.n_parts, lambda k: k % self.n_parts)
-            .cache()
+            .rdd.map(lambda r: (int(r[0]), (int(r[1]), r[2], float(r[3]))))
+            .partitionBy(n_parts, lambda k: k % n_parts)
+            .mapPartitions(lambda it: ((d[1][1], d[1][2]) for d in sorted(it)))
         )
-        params = _gru_init(self.vocab_size, self.emb_dim, self.hidden, self.seed)
-        lr, wd, drop, ls = self.lr, self.weight_decay, self.word_dropout, self.local_steps
-        avg: list[np.ndarray] | None = None
-        n_avg = 0
+        seed, ls, wd, drop = self.seed, self.local_steps, self.weight_decay, self.word_dropout
 
-        for epoch in range(self.epochs):
-            bc = sc.broadcast(params)
-            base_seed = self.seed * 100000 + epoch * 100
+        def step(p0, block, lr, epoch, split):
+            ids, y = block[0], block[1].reshape(-1, 1)
+            mask_full = (ids != 0).astype(np.float64)
+            prng = np.random.default_rng(seed * 100000 + epoch * 100 + split)
+            lp = [a.copy() for a in p0]
+            loss = 0.0
+            for _ in range(ls):
+                dm = mask_full * (prng.random(mask_full.shape) >= drop)
+                loss, g = _gru_grads(lp, ids, dm, y)
+                for i in range(len(lp)):
+                    lp[i] -= lr * (g[i] + wd * lp[i])
+            return lp, loss
 
-            def train_partition(split_idx, rows, _bc=bc, _base=base_seed):
-                data = sorted(rows)  # by part key then doc_key: stable order
-                if not data:
-                    return
-                ids = np.array([d[1][1] for d in data], dtype=np.int64)
-                y = np.array([d[1][2] for d in data]).reshape(-1, 1)
-                mask_full = (ids != 0).astype(np.float64)
-                prng = np.random.default_rng(_base + split_idx)
-                lp = [a.copy() for a in _bc.value]
-                loss = 0.0
-                for _ in range(ls):
-                    dm = mask_full * (prng.random(mask_full.shape) >= drop)
-                    loss, g = _gru_grads(lp, ids, dm, y)
-                    for i in range(len(lp)):
-                        lp[i] -= lr * (g[i] + wd * lp[i])
-                yield (lp, len(ids), loss * len(ids))
+        tail: list[list[np.ndarray]] = []  # Polyak: the last tail_avg epochs' params
 
-            results = rdd.mapPartitionsWithIndex(train_partition).collect()
-            total = sum(n for _, n, _ in results)
-            params = [
-                sum(p[i] * (n / total) for p, n, _ in results)
-                for i in range(len(params))
-            ]
-            self.loss_history.append(sum(l for _, _, l in results) / total)
-            bc.destroy()
+        def keep_tail(epoch, params):
             if epoch >= self.epochs - self.tail_avg:
-                avg = params if avg is None else [a + b for a, b in zip(avg, params)]
-                n_avg += 1
-        rdd.unpersist()
-        self.params = [a / n_avg for a in avg] if avg is not None else params
+                tail.append(params)
+
+        params = fit_by_averaging(
+            self, rows, None, (np.int64, np.float64),
+            _gru_init(self.vocab_size, self.emb_dim, self.hidden, seed), step, on_epoch=keep_tail,
+        )
+        if tail:
+            params = [s / len(tail) for s in reduce(lambda a, b: [x + y for x, y in zip(a, b)], tail)]
+        self.params = params
         return self
 
     def save(self, path: str) -> None:
         """S15 parity (model persistence, like the conv net's): weights +
         hyperparams to one KB-sized .npz, driver-side by design."""
         assert self.params is not None, "fit first"
-        meta = np.array(
-            [self.vocab_size, self.emb_dim, self.hidden], dtype=np.int64
-        )
-        np.savez(path, meta=meta, **{f"p{i}": w for i, w in enumerate(self.params)})
+        save_npz(path, [self.vocab_size, self.emb_dim, self.hidden], self.params)
 
     @classmethod
     def load(cls, path: str) -> "DistributedGRUClassifier":
-        with np.load(path) as z:
-            vocab_size, emb_dim, hidden = (int(v) for v in z["meta"])
-            model = cls(vocab_size=vocab_size, emb_dim=emb_dim, hidden=hidden)
-            model.params = [z[f"p{i}"] for i in range(12)]
+        (vocab_size, emb_dim, hidden), params = load_npz(path)
+        model = cls(vocab_size=vocab_size, emb_dim=emb_dim, hidden=hidden)
+        model.params = params
         return model
 
     def transform(self, df: DataFrame) -> DataFrame:
         """Distributed inference: broadcast tail-averaged weights, score
         each Arrow batch with the same forward pass."""
         assert self.params is not None, "fit first"
-        bc = df.sparkSession.sparkContext.broadcast(self.params)
 
-        from pyspark.sql import types as T
+        def positive(p, ids):
+            logits, _, _ = _gru_forward(p, ids, (ids != 0).astype(np.float64))
+            return (logits.ravel() > 0).astype(np.float64)
 
-        @F.pandas_udf(T.DoubleType())
-        def predict(ids: pd.Series) -> pd.Series:
-            import numpy as _np
-
-            x = _np.stack([_np.asarray(v, dtype=_np.int64) for v in ids])
-            mask = (x != 0).astype(_np.float64)
-            logits, _, _ = _gru_forward(bc.value, x, mask)
-            return pd.Series((logits.ravel() > 0).astype(_np.float64))
-
+        predict = broadcast_udf(df, self.params, positive, T.DoubleType(), np.int64)
         return df.withColumn("prediction", predict(F.col("ids")))
 
 
@@ -562,7 +601,6 @@ def ml_sentiment_rnn(spark: SparkSession, sf_dir: str) -> DataFrame:
     train/test and partition assignment key on doc_id so the run is
     deterministic under any input file layout.  Training moves only the
     ~1.3k weights per epoch; sequences stay put."""
-    from ..sources.catalog import load_table  # noqa: F401  (via queries import below)
     from .queries import sequence_task_dataset
 
     T_MAX = 40
