@@ -58,9 +58,11 @@ _cp.register_pickle_by_value(sys.modules[__name__])
 def _stack_block(rows, who: str, width: int | None, dtypes: tuple):
     """One partition's rows (features, *targets) → one tuple of stacked
     arrays, column j as dtypes[j]; nothing for an empty partition. A NULL
-    feature vector, or one whose length is not `width` (the first row's
-    when None), is rejected here with a message that starts with `who`;
-    unguarded it surfaces as numpy's unnamed shape error."""
+    feature vector, one whose length is not `width` (the first row's when
+    None), or one holding a NULL element is rejected here with a message
+    that starts with `who`; unguarded they surface as numpy's unnamed
+    shape error, an int64 TypeError, or a float64 NaN that poisons every
+    partition's averaged weights."""
     rows = list(rows)
     if not rows:
         return
@@ -72,6 +74,10 @@ def _stack_block(rows, who: str, width: int | None, dtypes: tuple):
             raise ValueError(
                 f"{who}: {got} feature vector, expected {width} values "
                 "(filter or repair upstream)"
+            )
+        if None in r[0]:
+            raise ValueError(
+                f"{who}: feature vector with a NULL element (filter or repair upstream)"
             )
     yield tuple(np.asarray(col, dtype=dt) for col, dt in zip(zip(*rows), dtypes))
 

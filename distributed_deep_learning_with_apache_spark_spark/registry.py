@@ -55,25 +55,43 @@ def register(
 # The driver's correctness gate iterates ``queries()`` in dict order and
 # checks exactly 50 queries per round (CORRECTNESS_r01-r12: 50 rows each;
 # union coverage 338/338 since r12).
-# Round-13 rotation (r12 verdict #8: restore the oracle-heavy mix now
-# that every lifecycle op holds an execution row — >=46 of the 50 slots
-# produce a hash verdict): (a) r13 changed-code oracle-bearing names
-# lead (the standing re-earn rule), (b) exactly 4 rows-only slots for
-# the lifecycle ops whose layouts the r13 IVF re-baseline rebuilt, then
-# (c)/(d) the names the r12 rotation displaced — the r6 tail that sat at
-# slot 51+ plus PERF_r12's queries_dropped list (all held prior green
-# rows; displacement, not removal).
-# Rows-only names appear only under (b), where a fresh execution row is
-# the point; every (a)/(c)/(d) slot produces a hash verdict.
+# Rotation (r12 verdict #8: keep the oracle-heavy mix now that every
+# lifecycle op holds an execution row — >=46 of the 50 slots produce a
+# hash verdict): (a) the latest changed-code oracle-bearing names lead
+# (the standing re-earn rule), then (b) the r13 changed-code ones,
+# (c) exactly 4 rows-only slots for the lifecycle ops whose layouts the
+# r13 IVF re-baseline rebuilt, then (d)/(e) the names the r12 rotation
+# displaced — the r6 tail that sat at slot 51+ plus PERF_r12's
+# queries_dropped list (all held prior green rows; displacement, not
+# removal).
+# Rows-only names appear only under (c), where a fresh execution row is
+# the point; every (a)/(b)/(d)/(e) slot produces a hash verdict.
 # Regenerate this list each round from the CORRECTNESS_r* latest-row map.
 _DRIVER_PRIORITY = [
-    # --- (a) r13 OPTIMIZATION round: oracle-bearing queries whose
+    # --- (a) oracle-bearing queries whose code changed last, re-earned
+    # first: the five mergeable-state stream folds (one stage → fold →
+    # drain → publish path), the five source_*_agg round-trips and three
+    # lake ops (scratch dirs now removed on failure too) (13) ----------
+    "stream_foreachbatch_merge",
+    "stream_exactly_once_merge_restart",
+    "stream_kmv_distinct_running",
+    "stream_countmin_running",
+    "stream_bitmap_distinct_running",
+    "source_csv_orders_agg",
+    "source_json_events_agg",
+    "source_xml_events_agg",
+    "source_orc_lineitem_agg",
+    "source_avro_events_agg",
+    "lake_partition_pruned_revenue",
+    "lake_schema_evolution",
+    "lake_dynamic_partition_overwrite",
+    # --- (b) r13 OPTIMIZATION round: oracle-bearing queries whose
     # EXECUTED code changed (quantile-engine job-count cuts) — the
     # standing changed-code re-earn rule, hash-verified first (3) ----
     "quantile_two_pass_exact",
     "grouped_quantile_exact",
     "mad_price_outliers",
-    # --- (b) r13 changed rows-only: the IVF coarse-quantizer
+    # --- (c) r13 changed rows-only: the IVF coarse-quantizer
     # re-baseline (VERDICT r12 #4) rebuilt these lifecycle ops'
     # layouts; a fresh driver execution row re-earns them. The other
     # re-baselined serves (ann_ivf_kmeans/persisted/adc/refined) get
@@ -84,7 +102,7 @@ _DRIVER_PRIORITY = [
     "ann_ivf_append_batch",
     "ann_ivf_delete_serve",
     "ann_ivf_compact_tombstones",
-    # --- (c) the r6 re-confirmation tail displaced by the r12
+    # --- (d) the r6 re-confirmation tail displaced by the r12
     # rotation (sat at slot 51+ last round) (10) ---------------------
     "range_join_events_after_order",
     "row_ids_distributed",
@@ -96,9 +114,9 @@ _DRIVER_PRIORITY = [
     "token_counts",
     "tokenize_truncate",
     "zipf_fit",
-    # --- (d) displaced r12 re-confirmations: the PERF_r12
+    # --- (e) displaced r12 re-confirmations: the PERF_r12
     # queries_dropped list (driver-rotation displacement, all with
-    # prior green rows), alphabetical; first 33 fill the 50 ----------
+    # prior green rows), alphabetical; first 20 fill the 50 ----------
     "ann_matryoshka_refine",
     "ansi_safe_doc_ratios",
     "batch_observed_metrics",
@@ -119,10 +137,10 @@ _DRIVER_PRIORITY = [
     "intersect_all_order_priorities",
     "interval_month_overlap_revenue",
     "k_anonymity_violations",
+    # ==== slot 51+ from here: fronts the next rotation ==============
+    # --- r12-displaced remainder (22) -------------------------------
     "lake_compact_small_files",
     "lake_deletion_vectors",
-    "lake_dynamic_partition_overwrite",
-    "lake_schema_evolution",
     "lake_vacuum_expire",
     "lake_zorder_recluster",
     "lake_zorder_write",
@@ -132,8 +150,6 @@ _DRIVER_PRIORITY = [
     "map_in_arrow_bytes",
     "notin_nullaware_anti",
     "ntile_balance_quartiles",
-    # ==== slot 51+ from here: fronts the r14 rotation ===============
-    # --- r12-displaced remainder (11) -------------------------------
     "nullsafe_bucket_join",
     "percentile_band_segments",
     "quality_tiers",

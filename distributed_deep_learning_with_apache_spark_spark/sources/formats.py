@@ -52,28 +52,25 @@ def source_csv_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregate from the CSV copy. Proves the CSV source/sink pair is
     lossless for the relational columns; the one-shot SQL aggregate over
     the original parquet is the oracle."""
-    import shutil
     import tempfile
 
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
-    base = tempfile.mkdtemp(prefix="sg_csv_")
-    load_table(spark, sf_dir, "orders").select(*cols).write.mode("overwrite").option(
-        "header", "true"
-    ).csv(base)
+    with tempfile.TemporaryDirectory(prefix="sg_csv_", ignore_cleanup_errors=True) as base:
+        load_table(spark, sf_dir, "orders").select(*cols).write.mode("overwrite").option(
+            "header", "true"
+        ).csv(base)
 
-    out = (
-        spark.read.schema(schema_for("orders", cols))
-        .option("header", "true")
-        .csv(base)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+        out = (
+            spark.read.schema(schema_for("orders", cols))
+            .option("header", "true")
+            .csv(base)
+            .groupBy("o_orderstatus")
+            .agg(
+                F.count(F.lit(1)).alias("n_orders"),
+                F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+            )
         )
-    )
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -90,26 +87,23 @@ def source_csv_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_json_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip events through JSON-lines and aggregate from the JSON
     copy (PERMISSIVE read with explicit schema)."""
-    import shutil
     import tempfile
 
     cols = ["event_id", "event_type", "value"]
-    base = tempfile.mkdtemp(prefix="sg_json_")
-    load_table(spark, sf_dir, "events").select(*cols).write.mode("overwrite").json(base)
+    with tempfile.TemporaryDirectory(prefix="sg_json_", ignore_cleanup_errors=True) as base:
+        load_table(spark, sf_dir, "events").select(*cols).write.mode("overwrite").json(base)
 
-    out = (
-        spark.read.schema(schema_for("events", cols))
-        .option("mode", "PERMISSIVE")
-        .json(base)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
+        out = (
+            spark.read.schema(schema_for("events", cols))
+            .option("mode", "PERMISSIVE")
+            .json(base)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 2).alias("total_value"),
+            )
         )
-    )
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -136,35 +130,32 @@ def source_xml_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is FP-order-independent. The oracle aggregates the original
     parquet: the round-trip must be lossless.
     """
-    import shutil
     import tempfile
 
     cols = ["event_id", "event_type", "value"]
-    base = tempfile.mkdtemp(prefix="sg_xml_")
-    load_table(spark, sf_dir, "events").select(*cols).write.mode("overwrite").format(
-        "xml"
-    ).option("rootTag", "events").option("rowTag", "event").save(base)
+    with tempfile.TemporaryDirectory(prefix="sg_xml_", ignore_cleanup_errors=True) as base:
+        load_table(spark, sf_dir, "events").select(*cols).write.mode("overwrite").format(
+            "xml"
+        ).option("rootTag", "events").option("rowTag", "event").save(base)
 
-    out = (
-        spark.read.schema(schema_for("events", cols))
-        .format("xml")
-        .option("rowTag", "event")
-        .load(base)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            (
-                F.floor(
-                    F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long")) / 100
-                    + 0.5
-                )
-                / 100
-            ).alias("total_value"),
+        out = (
+            spark.read.schema(schema_for("events", cols))
+            .format("xml")
+            .option("rowTag", "event")
+            .load(base)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_events"),
+                (
+                    F.floor(
+                        F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long")) / 100
+                        + 0.5
+                    )
+                    / 100
+                ).alias("total_value"),
+            )
         )
-    )
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -186,28 +177,25 @@ def source_orc_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate prunes at the scan (tests/test_formats.py pins PushedFilters
     on the ORC read); the oracle aggregates the original parquet. Proves
     sink+source symmetry for the third columnar interchange format."""
-    import shutil
     import tempfile
 
     cols = ["l_orderkey", "l_returnflag", "l_quantity"]
-    base = tempfile.mkdtemp(prefix="sg_orc_")
-    load_table(spark, sf_dir, "lineitem").select(*cols).write.mode("overwrite").orc(
-        base
-    )
-
-    out = (
-        spark.read.schema(schema_for("lineitem", cols))
-        .orc(base)
-        .filter(F.col("l_quantity") > 30)
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_items"),
-            F.round(F.sum("l_quantity"), 2).alias("total_qty"),
+    with tempfile.TemporaryDirectory(prefix="sg_orc_", ignore_cleanup_errors=True) as base:
+        load_table(spark, sf_dir, "lineitem").select(*cols).write.mode("overwrite").orc(
+            base
         )
-    )
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+
+        out = (
+            spark.read.schema(schema_for("lineitem", cols))
+            .orc(base)
+            .filter(F.col("l_quantity") > 30)
+            .groupBy("l_returnflag")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_items"),
+                F.round(F.sum("l_quantity"), 2).alias("total_qty"),
+            )
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -248,7 +236,6 @@ def source_avro_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark-avro connector against the SAME files; schema and layout are
     spec-compatible."""
     import os
-    import shutil
     import tempfile
 
     import pandas as pd
@@ -271,63 +258,61 @@ def source_avro_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"name": "props", "type": "string"},
         ],
     }
-    base = tempfile.mkdtemp(prefix="sg_avro_")
+    with tempfile.TemporaryDirectory(prefix="sg_avro_", ignore_cleanup_errors=True) as base:
 
-    def write_kernel(batches):
-        from pyspark import TaskContext
+        def write_kernel(batches):
+            from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for pdf in batches:
-            rows.extend(pdf.to_dict("records"))
-        path = os.path.join(base, f"part-{pid:05d}.avro")
-        n = write_ocf(path, schema, rows, codec="deflate")
-        yield pd.DataFrame({"path": [path], "n": [n]})
+            pid = TaskContext.get().partitionId()
+            rows = []
+            for pdf in batches:
+                rows.extend(pdf.to_dict("records"))
+            path = os.path.join(base, f"part-{pid:05d}.avro")
+            n = write_ocf(path, schema, rows, codec="deflate")
+            yield pd.DataFrame({"path": [path], "n": [n]})
 
-    src = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    written = (
-        src.repartition(min(n_part, 8))
-        .mapInPandas(write_kernel, "path string, n long")
-        .collect()
-    )
-    assert sum(r.n for r in written) > 0
-
-    def read_kernel(batches):
-        for pdf in batches:
-            for blob in pdf["content"]:
-                _schema, rows = read_ocf(bytes(blob))
-                yield pd.DataFrame(
-                    rows,
-                    columns=[f["name"] for f in schema["fields"]],
-                )
-
-    decoded = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(base)
-        .select("content")
-        .mapInPandas(
-            read_kernel,
-            "event_id long, ts_us long, user_id long, event_type string, "
-            "value double, props string",
+        src = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "user_id",
+            "event_type",
+            "value",
+            "props",
         )
-    )
-    out = decoded.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("value_cents"),
-        F.min("ts_us").alias("min_ts_us"),
-        F.max("ts_us").alias("max_ts_us"),
-        F.sum(F.length("props")).alias("props_chars"),
-    )
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        written = (
+            src.repartition(min(n_part, 8))
+            .mapInPandas(write_kernel, "path string, n long")
+            .collect()
+        )
+        assert sum(r.n for r in written) > 0
+
+        def read_kernel(batches):
+            for pdf in batches:
+                for blob in pdf["content"]:
+                    _schema, rows = read_ocf(bytes(blob))
+                    yield pd.DataFrame(
+                        rows,
+                        columns=[f["name"] for f in schema["fields"]],
+                    )
+
+        decoded = (
+            spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.avro")
+            .load(base)
+            .select("content")
+            .mapInPandas(
+                read_kernel,
+                "event_id long, ts_us long, user_id long, event_type string, "
+                "value double, props string",
+            )
+        )
+        out = decoded.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("long").alias("n_events"),
+            F.countDistinct("user_id").cast("long").alias("n_users"),
+            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("value_cents"),
+            F.min("ts_us").alias("min_ts_us"),
+            F.max("ts_us").alias("max_ts_us"),
+            F.sum(F.length("props")).alias("props_chars"),
+        )
+        return spark.createDataFrame(out.collect(), out.schema)

@@ -173,30 +173,27 @@ def lake_partition_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     writer produces a layout Catalyst can prune, with the one-shot SQL
     aggregate as the oracle.
     """
-    import shutil
     import tempfile
 
-    base = tempfile.mkdtemp(prefix="sg_lake_")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus", "l_extendedprice", "l_discount"
-    )
-    write_partitioned(li, base, ["l_returnflag"])
-
-    out = (
-        spark.read.parquet(base)
-        .filter(F.col("l_returnflag") == "R")
-        .groupBy("l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            ),
+    with tempfile.TemporaryDirectory(prefix="sg_lake_", ignore_cleanup_errors=True) as base:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_returnflag", "l_linestatus", "l_extendedprice", "l_discount"
         )
-    )
-    # Materialize before the temp lake directory is removed.
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        write_partitioned(li, base, ["l_returnflag"])
+
+        out = (
+            spark.read.parquet(base)
+            .filter(F.col("l_returnflag") == "R")
+            .groupBy("l_linestatus")
+            .agg(
+                F.count(F.lit(1)).alias("n_items"),
+                F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
+                    "revenue"
+                ),
+            )
+        )
+        # Materialize before the temp lake directory is removed.
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1215,39 +1212,36 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     time; the data files are read exactly once each, column-pruned as
     usual. The aggregation output is bounded (3 channel values).
     """
-    import shutil
     import tempfile
 
-    base = tempfile.mkdtemp(prefix="sg_evo_")
-    o = load_table(spark, sf_dir, "orders")
-    gen1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
-    gen2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
-        "o_orderkey",
-        "o_totalprice",
-        F.when(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "expedited"
+    with tempfile.TemporaryDirectory(prefix="sg_evo_", ignore_cleanup_errors=True) as base:
+        o = load_table(spark, sf_dir, "orders")
+        gen1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
+        gen2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey",
+            "o_totalprice",
+            F.when(
+                F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "expedited"
+            )
+            .otherwise("standard")
+            .alias("o_channel"),
         )
-        .otherwise("standard")
-        .alias("o_channel"),
-    )
-    gen1.write.mode("overwrite").parquet(_os.path.join(base, "g=1"))
-    gen2.write.mode("overwrite").parquet(_os.path.join(base, "g=2"))
-    unified = spark.read.option("mergeSchema", "true").parquet(
-        _os.path.join(base, "g=1"), _os.path.join(base, "g=2")
-    )
-    out = (
-        unified.groupBy(
-            F.coalesce(F.col("o_channel"), F.lit("unknown")).alias("channel")
+        gen1.write.mode("overwrite").parquet(_os.path.join(base, "g=1"))
+        gen2.write.mode("overwrite").parquet(_os.path.join(base, "g=2"))
+        unified = spark.read.option("mergeSchema", "true").parquet(
+            _os.path.join(base, "g=1"), _os.path.join(base, "g=2")
         )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total"),
+        out = (
+            unified.groupBy(
+                F.coalesce(F.col("o_channel"), F.lit("unknown")).alias("channel")
+            )
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_orders"),
+                F.round(F.sum("o_totalprice"), 2).alias("total"),
+            )
         )
-    )
-    # Materialize before the temp dir is removed (bounded: 3 rows).
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        # Materialize before the temp dir is removed (bounded: 3 rows).
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 @register(
@@ -1291,49 +1285,45 @@ def lake_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     files. The final-state aggregate is the oracle-checked proof that
     exactly the touched month changed.
     """
-    import shutil
     import tempfile
 
-    base = tempfile.mkdtemp(prefix="sg_dpo_")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_totalprice",
-        F.date_trunc("month", "o_orderdate").cast("date").alias("order_month"),
-    )
-    if o.limit(1).count() == 0:
-        # Fuzz corpora include empty orders: a partitioned write of an
-        # empty frame produces no files, so the read-back would fail
-        # schema inference; the oracle emits 0 rows — match it directly.
-        shutil.rmtree(base, ignore_errors=True)
-        return spark.createDataFrame(
-            [], "order_month date, n_orders long, total double"
+    with tempfile.TemporaryDirectory(prefix="sg_dpo_", ignore_cleanup_errors=True) as base:
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_totalprice",
+            F.date_trunc("month", "o_orderdate").cast("date").alias("order_month"),
         )
-    o.write.mode("overwrite").partitionBy("order_month").parquet(base)
-
-    restated = o.filter(F.col("order_month") == F.lit("1995-03-01").cast("date")).select(
-        "o_orderkey",
-        (F.col("o_totalprice") * 0.9).alias("o_totalprice"),
-        "order_month",
-    )
-    restated.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("order_month").parquet(base)
-
-    final = spark.read.parquet(base)
-    out = final.groupBy("order_month").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        (
-            F.floor(
-                F.sum(F.floor(F.col("o_totalprice") * 10000 + 0.5).cast("long")) / 100
-                + 0.5
+        if o.limit(1).count() == 0:
+            # Fuzz corpora include empty orders: a partitioned write of an
+            # empty frame produces no files, so the read-back would fail
+            # schema inference; the oracle emits 0 rows — match it directly.
+            return spark.createDataFrame(
+                [], "order_month date, n_orders long, total double"
             )
-            / 100
-        ).alias("total"),
-    )
-    # Materialize before the temp dir is removed (bounded: one row/month).
-    out = spark.createDataFrame(out.collect(), out.schema)
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+        o.write.mode("overwrite").partitionBy("order_month").parquet(base)
+
+        restated = o.filter(F.col("order_month") == F.lit("1995-03-01").cast("date")).select(
+            "o_orderkey",
+            (F.col("o_totalprice") * 0.9).alias("o_totalprice"),
+            "order_month",
+        )
+        restated.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("order_month").parquet(base)
+
+        final = spark.read.parquet(base)
+        out = final.groupBy("order_month").agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            (
+                F.floor(
+                    F.sum(F.floor(F.col("o_totalprice") * 10000 + 0.5).cast("long")) / 100
+                    + 0.5
+                )
+                / 100
+            ).alias("total"),
+        )
+        # Materialize before the temp dir is removed (bounded: one row/month).
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------

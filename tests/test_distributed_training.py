@@ -250,7 +250,9 @@ def test_empty_input_is_a_named_error(spark, cls, schema, layers):
     assert len(sc.statusTracker().getJobIdsForGroup(f"empty_{cls.__name__}")) == 1
 
 
-@pytest.mark.parametrize("bad", [None, [0.5]], ids=["null", "short"])
+@pytest.mark.parametrize(
+    "bad", [None, [0.5], [0.5, None]], ids=["null", "short", "null_element"]
+)
 @pytest.mark.parametrize(
     "cls,schema,layers",
     [(DistributedMLPRegressor, MLP_SCHEMA, [2, 3, 1]), (DistributedAutoencoder, AE_SCHEMA, [2, 3, 2])],
@@ -264,3 +266,14 @@ def test_bad_feature_vector_names_the_trainer(spark, cls, schema, layers, bad):
     with pytest.raises(Exception) as err:
         cls(layers=layers, epochs=2).fit(df)
     assert f"{cls.__name__}.fit: " in str(err.value)
+
+
+@pytest.mark.parametrize("dtype", [np.float64, np.int64], ids=["float64", "int64"])
+def test_null_element_is_rejected_for_every_block_dtype(dtype):
+    """float64 would stack a NULL element as NaN and int64 would fail in
+    numpy without the trainer's name; both are refused by name."""
+    from distributed_deep_learning_with_apache_spark_spark.ml.distributed import _stack_block
+
+    rows = [([1, 2], 1.0), ([3, None], 0.0)]
+    with pytest.raises(ValueError, match="Trainer.fit: "):
+        list(_stack_block(iter(rows), "Trainer.fit", None, (dtype, np.float64)))

@@ -80,3 +80,39 @@ def test_json_failfast_raises(spark, mixed_json_dir):
     )
     with pytest.raises(Exception):
         spark.read.schema(schema).option("mode", "FAILFAST").json(mixed_json_dir).count()
+
+
+@pytest.mark.parametrize(
+    "module, name, prefix",
+    [
+        ("formats", "source_csv_orders_agg", "sg_csv_"),
+        ("formats", "source_json_events_agg", "sg_json_"),
+        ("formats", "source_xml_events_agg", "sg_xml_"),
+        ("formats", "source_orc_lineitem_agg", "sg_orc_"),
+        ("formats", "source_avro_events_agg", "sg_avro_"),
+        ("lake", "lake_partition_pruned_revenue", "sg_lake_"),
+        ("lake", "lake_schema_evolution", "sg_evo_"),
+        ("lake", "lake_dynamic_partition_overwrite", "sg_dpo_"),
+    ],
+)
+def test_failed_source_run_removes_its_temp_dir(
+    module, name, prefix, tmp_path, monkeypatch, sf_dir
+):
+    import importlib
+    import os
+    import tempfile
+
+    from distributed_deep_learning_with_apache_spark_spark.registry import load_all
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("load_table failed")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(
+        importlib.import_module(f"distributed_deep_learning_with_apache_spark_spark.sources.{module}"),
+        "load_table",
+        boom,
+    )
+    with pytest.raises(RuntimeError, match="load_table failed"):
+        load_all()[name].fn(None, sf_dir)
+    assert [d for d in os.listdir(tmp_path) if d.startswith(prefix)] == []

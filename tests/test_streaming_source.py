@@ -9,10 +9,45 @@ import pytest
 from distributed_deep_learning_with_apache_spark_spark.registry import load_all
 from distributed_deep_learning_with_apache_spark_spark.streaming import events
 from distributed_deep_learning_with_apache_spark_spark.sources.catalog import load_table
+from tests.oracle import compare, duck_connect
 
 import pyspark.sql.functions as F
 
 REG = load_all()
+# Every oracle-bearing stream op of streaming/events.py. The full-registry
+# parity module is a slow tier; the five mergeable-state folds share one
+# stage → fold → drain → publish path, so a slip in it moves them all.
+EVENTS_STREAM_ORACLE_QUERIES = sorted(
+    name
+    for name, q in REG.items()
+    if name.startswith("stream_")
+    and q.oracle is not None
+    and q.fn.__module__.endswith(".streaming.events")
+)
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duck_connect(sf_dir)
+    yield con
+    con.close()
+
+
+def test_stream_oracle_selection_covers_the_folds():
+    assert {
+        "stream_foreachbatch_merge",
+        "stream_exactly_once_merge_restart",
+        "stream_kmv_distinct_running",
+        "stream_countmin_running",
+        "stream_bitmap_distinct_running",
+    } <= set(EVENTS_STREAM_ORACLE_QUERIES)
+
+
+@pytest.mark.parametrize("name", EVENTS_STREAM_ORACLE_QUERIES)
+def test_stream_oracle_match(spark, sf_dir, duck, name):
+    q = REG[name]
+    ok, msg = compare(q.fn(spark, sf_dir), duck, q.oracle)
+    assert ok, f"{name}: {msg}"
 
 
 def test_stream_replay_equals_batch_twin(spark, sf_dir):
@@ -224,6 +259,8 @@ def test_checkpoint_recovery_is_exactly_once(spark, sf_dir):
         ("stream_countmin_running", "sg_cm_stream_"),
         ("stream_foreachbatch_merge", "sg_foreachbatch_"),
         ("stream_checkpoint_recovery", "sg_ckpt_"),
+        ("stream_exactly_once_merge_restart", "sg_eo_merge_"),
+        ("stream_bitmap_distinct_running", "sg_bitmap_stream_"),
     ],
 )
 def test_failed_stream_run_removes_its_temp_dir(name, prefix, tmp_path, monkeypatch, sf_dir):
