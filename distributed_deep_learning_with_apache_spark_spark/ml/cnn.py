@@ -311,29 +311,16 @@ class DistributedConvClassifier:
 def png_pixels_df(spark: SparkSession) -> DataFrame:
     """Decoded REAL pixels of the seeded PNG corpus: (path, label,
     pixels array<double>[side²] in [0,1]). binaryFile scan → by-value
-    PNG-decode closure in one Arrow hop (sources/pngcodec.py)."""
-    from ..sources.binary import read_binary_dir
-    from ..sources.pngcodec import ensure_fixture_corpus, make_gray_png_decoder
+    PNG decode (sources/pngcodec.py) in one Arrow hop."""
+    from ..sources.binary import map_png_rows
+    from ..sources.pngcodec import decode_gray_png, ensure_fixture_corpus
 
-    root = ensure_fixture_corpus()
-    decode = make_gray_png_decoder()
+    def pixels(path, label, buf):
+        _, _, px = decode_gray_png(buf)
+        yield path, label, (np.asarray(px, dtype=np.float64) / 255.0).tolist()
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"path": [], "label": [], "pixels": []}
-            for path, label, buf in zip(pdf["path"], pdf["label"], pdf["content"]):
-                _, _, px = decode(buf)
-                out["path"].append(path)
-                out["label"].append(int(label))
-                out["pixels"].append((np.asarray(px, dtype=np.float64) / 255.0).tolist())
-            yield pd.DataFrame(out)
-
-    return (
-        read_binary_dir(spark, root)
-        .select("path", F.col("label").cast("int").alias("label"), "content")
-        .mapInPandas(kernel, "path string, label int, pixels array<double>")
+    return map_png_rows(
+        spark, ensure_fixture_corpus(), "path string, label int, pixels array<double>", pixels
     )
 
 

@@ -69,9 +69,14 @@ def register(
 # Regenerate this list each round from the CORRECTNESS_r* latest-row map.
 _DRIVER_PRIORITY = [
     # --- (a) oracle-bearing queries whose code changed last, re-earned
-    # first: the five mergeable-state stream folds (one stage → fold →
-    # drain → publish path), the five source_*_agg round-trips and three
-    # lake ops (scratch dirs now removed on failure too) (13) ----------
+    # first: the binary-file kernels now on one row map and one copy of
+    # each codec (2) --------------------------------------------------
+    "multimodal_frame_sample",
+    "source_avro_events_agg",
+    # --- (a') the previous change set: the five mergeable-state stream
+    # folds (one stage → fold → drain → publish path), four source_*_agg
+    # round-trips and three lake ops (scratch dirs now removed on
+    # failure too) (12) ----------------------------------------------
     "stream_foreachbatch_merge",
     "stream_exactly_once_merge_restart",
     "stream_kmv_distinct_running",
@@ -81,7 +86,6 @@ _DRIVER_PRIORITY = [
     "source_json_events_agg",
     "source_xml_events_agg",
     "source_orc_lineitem_agg",
-    "source_avro_events_agg",
     "lake_partition_pruned_revenue",
     "lake_schema_evolution",
     "lake_dynamic_partition_overwrite",
@@ -116,7 +120,7 @@ _DRIVER_PRIORITY = [
     "zipf_fit",
     # --- (e) displaced r12 re-confirmations: the PERF_r12
     # queries_dropped list (driver-rotation displacement, all with
-    # prior green rows), alphabetical; first 20 fill the 50 ----------
+    # prior green rows), alphabetical; first 19 fill the 50 ----------
     "ann_matryoshka_refine",
     "ansi_safe_doc_ratios",
     "batch_observed_metrics",
@@ -136,9 +140,9 @@ _DRIVER_PRIORITY = [
     "incremental_agg_maintenance",
     "intersect_all_order_priorities",
     "interval_month_overlap_revenue",
-    "k_anonymity_violations",
     # ==== slot 51+ from here: fronts the next rotation ==============
-    # --- r12-displaced remainder (22) -------------------------------
+    # --- r12-displaced remainder (23) -------------------------------
+    "k_anonymity_violations",
     "lake_compact_small_files",
     "lake_deletion_vectors",
     "lake_vacuum_expire",

@@ -22,8 +22,7 @@ primitive, per spec.
 
 ``make_ocf_codec()`` builds the whole codec as CLOSURES so cloudpickle
 ships it to executors by value — a cluster's executors need not have
-this package installed (the same constraint, and the same factory
-pattern, as pngcodec.make_gray_png_decoder and the mapInPandas kernels
+this package installed (the same constraint as the mapInPandas kernels
 in sources/binary.py).
 
 Scale notes: encode/decode are per-row pure Python, but run INSIDE

@@ -13,21 +13,27 @@ Only `multimodal_decode_stub` / `sample_frames_df` keep a documented
 deterministic fake kernel — retained as the generic byte-payload shape
 whose expansion topology the DuckDB oracle can check.
 
-`read_binary_dir` is the real-world entry (spark.read.format("binaryFile"))
-for directories of images; the fixture path manufactures binary columns
-from `documents.text` so the pipeline is exercised end-to-end on shipped
-test data.
+`read_binary_dir` is the one batch file scan (spark.read.format(
+"binaryFile")) and `map_rows` the one Arrow-batch row map: every decode
+kernel is a per-row generator over them, calling the codecs in
+pngcodec / videocodec / wavcodec. The fixture path manufactures binary
+columns from `documents.text` so the pipeline is exercised end-to-end on
+shipped test data.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from .catalog import load_table
+from .pngcodec import decode_gray_png
+from .videocodec import decode_pngv_frame, parse_pngv_index
+from .wavcodec import WINDOW, parse_wav
 
 HIST_BINS = 16
 DECODE_SCHEMA = (
@@ -37,7 +43,9 @@ DECODE_SCHEMA = (
 
 def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.png") -> DataFrame:
     """S4: real binary scan — (path, modificationTime, length, content) with
-    label-from-parent-path (S6) materialized as a column.
+    label-from-parent-path (S6) materialized as a column. The package's one
+    batch binaryFile scan: `glob` picks the files (PNG, PNGV, WAV, Avro,
+    tar.gz corpora).
 
     Callers pass the corpus ROOT, not a ``root/*`` glob: on load Spark
     probes ``<path>/_spark_metadata`` (FileStreamSink detection) and a glob
@@ -52,6 +60,39 @@ def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.png") -> Data
         .load(path)
         .withColumn("label", F.regexp_extract(F.input_file_name(), r"/([^/]+)/[^/]+$", 1))
     )
+
+
+def map_rows(df: DataFrame, schema: str, rows: Callable[..., Iterator[tuple]]) -> DataFrame:
+    """The one Arrow-batch row map of every binary-file kernel: each row of
+    `df` (its columns in order) goes through `rows(*row)`, a generator of
+    output tuples in `schema` order, inside one mapInPandas stage — decode
+    and 1→N expansion stay in the input's partitions, one Arrow hop, no
+    shuffle. Batch scans and `readStream` sources map the same way.
+
+    `rows` ships to executors by value, so define it inside the builder and
+    reach codecs through pngcodec / videocodec / wavcodec (each registers
+    itself for by-value pickling); executors need not have this package
+    installed."""
+
+    def kernel(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            out = [t for row in zip(*(pdf[c] for c in pdf.columns)) for t in rows(*row)]
+            if out:  # integer column labels: Spark matches `schema` by position
+                yield pd.DataFrame(out)
+
+    return df.mapInPandas(kernel, schema)
+
+
+def map_png_rows(
+    spark: SparkSession, root: str, schema: str, rows: Callable[..., Iterator[tuple]]
+) -> DataFrame:
+    """`map_rows` over a PNG corpus root: rows are (path, label int, content)."""
+    files = read_binary_dir(spark, root).select(
+        "path", F.col("label").cast("int").alias("label"), "content"
+    )
+    return map_rows(files, schema, rows)
 
 
 def documents_as_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,29 +120,17 @@ def multimodal_decode_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit tests.  The registered query projects a driver-hashable digest
     instead (the r4 driver canonicalizer crashes on list cells).
     """
-    n_bins = HIST_BINS
 
-    def decode_stub(batches: Iterator) -> Iterator:
+    def decode_stub(doc_id, byte_len, buf):
         # STUB decode kernel (real one would be PIL/libvips/ffmpeg —
         # unavailable in this container). Deterministic fake: 'decode' =
         # n-bin byte-value histogram, normalized; fixed 28×28 'image' dims.
-        # Real Arrow batch plumbing, fake pixels.
-        import numpy as np
+        arr = np.frombuffer(buf, dtype=np.uint8)
+        hist = np.bincount(arr % HIST_BINS, minlength=HIST_BINS).astype("float32")
+        yield doc_id, byte_len, 28, 28, (hist / (hist.sum() or 1.0)).tolist()
 
-        for pdf in batches:
-            feats = []
-            for buf in pdf["content"]:
-                arr = np.frombuffer(buf, dtype=np.uint8)
-                hist = np.bincount(arr % n_bins, minlength=n_bins).astype("float32")
-                total = hist.sum() or 1.0
-                feats.append((hist / total).tolist())
-            out = pdf[["doc_id", "byte_len"]].copy()
-            out["width"] = 28
-            out["height"] = 28
-            out["features"] = feats
-            yield out
-
-    return documents_as_binary(spark, sf_dir).mapInPandas(decode_stub, DECODE_SCHEMA)
+    docs = documents_as_binary(spark, sf_dir).select("doc_id", "byte_len", "content")
+    return map_rows(docs, DECODE_SCHEMA, decode_stub)
 
 
 @register(
@@ -166,27 +195,16 @@ def sample_frames_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is embarrassingly parallel (no shuffle: expansion happens inside
     the scan's partitions, and Spark only shuffles if a later op asks).
     """
-    stride, max_frames = FRAME_STRIDE, MAX_FRAMES
 
-    def sample_frames(batches):
-        import numpy as np
-        import pandas as pd
+    def sample_frames(doc_id, buf):
+        arr = np.frombuffer(buf, dtype=np.uint8)
+        n = min(MAX_FRAMES, (len(arr) + FRAME_STRIDE - 1) // FRAME_STRIDE)
+        for i in range(n):
+            seg = arr[i * FRAME_STRIDE : (i + 1) * FRAME_STRIDE]
+            yield doc_id, i, i * FRAME_STRIDE, n, float(seg.mean())
 
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "frame_idx", "frame_off", "n_frames", "frame_mean")}
-            for doc_id, buf in zip(pdf["doc_id"], pdf["content"]):
-                arr = np.frombuffer(buf, dtype=np.uint8)
-                n = min(max_frames, (len(arr) + stride - 1) // stride)
-                for i in range(n):
-                    seg = arr[i * stride : (i + 1) * stride]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_off"].append(i * stride)
-                    out["n_frames"].append(n)
-                    out["frame_mean"].append(float(seg.mean()))
-            yield pd.DataFrame(out)
-
-    return documents_as_binary(spark, sf_dir).mapInPandas(sample_frames, FRAME_SCHEMA)
+    docs = documents_as_binary(spark, sf_dir).select("doc_id", "content")
+    return map_rows(docs, FRAME_SCHEMA, sample_frames)
 
 
 @register(
@@ -236,38 +254,18 @@ def decode_png_dir(spark: SparkSession, root: str) -> DataFrame:
     every executor. The Python stage is one Arrow hop; everything
     downstream (aggregation over the stats) stays JVM-side.
     """
-    from .pngcodec import make_gray_png_decoder
 
-    decode = make_gray_png_decoder()
+    def pixel_stats(path, label, buf):
+        w, h, px = decode_gray_png(buf)
+        arr = np.asarray(px, dtype=np.float64).reshape(h, w)
+        bright = float(arr.max())
+        ys, xs = np.nonzero(arr >= bright - 32)
+        yield (
+            path, label, w, h, float(arr.mean()), int(bright),
+            int(round(xs.mean())), int(round(ys.mean())),
+        )
 
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "path", "label", "width", "height",
-                "mean_px", "max_px", "bright_x", "bright_y",
-            )}
-            for path, label, buf in zip(pdf["path"], pdf["label"], pdf["content"]):
-                w, h, px = decode(buf)
-                arr = np.asarray(px, dtype=np.float64).reshape(h, w)
-                bright = float(arr.max())
-                ys, xs = np.nonzero(arr >= bright - 32)
-                out["path"].append(path)
-                out["label"].append(int(label))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_px"].append(float(arr.mean()))
-                out["max_px"].append(int(bright))
-                out["bright_x"].append(int(round(xs.mean())))
-                out["bright_y"].append(int(round(ys.mean())))
-            yield __import__("pandas").DataFrame(out)
-
-    return (
-        read_binary_dir(spark, root)
-        .select("path", F.col("label").cast("int").alias("label"), "content")
-        .mapInPandas(kernel, PIXEL_SCHEMA)
-    )
+    return map_png_rows(spark, root, PIXEL_SCHEMA, pixel_stats)
 
 
 @register(
@@ -310,40 +308,16 @@ def image_frame_sample_df(spark: SparkSession, root: str) -> DataFrame:
     Scale posture: expansion happens inside binaryFile scan partitions —
     no shuffle, no Python round-trips beyond the one Arrow hop; output
     row count is bounded at ceil(height/FRAME_ROWS) per image."""
-    from .pngcodec import make_gray_png_decoder
 
-    decode = make_gray_png_decoder()
-    frame_rows = FRAME_ROWS
+    def frames(path, label, buf):
+        w, h, px = decode_gray_png(buf)
+        arr = np.asarray(px, dtype=np.float64).reshape(h, w)
+        n = (h + FRAME_ROWS - 1) // FRAME_ROWS
+        for i in range(n):
+            band = arr[i * FRAME_ROWS : (i + 1) * FRAME_ROWS]
+            yield path, label, i, i * FRAME_ROWS, n, float(band.mean()), int(band.max())
 
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "path", "label", "frame_idx", "row_off",
-                "n_frames", "frame_mean", "frame_max",
-            )}
-            for path, label, buf in zip(pdf["path"], pdf["label"], pdf["content"]):
-                w, h, px = decode(buf)
-                arr = np.asarray(px, dtype=np.float64).reshape(h, w)
-                n = (h + frame_rows - 1) // frame_rows
-                for i in range(n):
-                    band = arr[i * frame_rows : (i + 1) * frame_rows]
-                    out["path"].append(path)
-                    out["label"].append(int(label))
-                    out["frame_idx"].append(i)
-                    out["row_off"].append(i * frame_rows)
-                    out["n_frames"].append(n)
-                    out["frame_mean"].append(float(band.mean()))
-                    out["frame_max"].append(int(band.max()))
-            yield pd.DataFrame(out)
-
-    return (
-        read_binary_dir(spark, root)
-        .select("path", F.col("label").cast("int").alias("label"), "content")
-        .mapInPandas(kernel, IMAGE_FRAME_SCHEMA)
-    )
+    return map_png_rows(spark, root, IMAGE_FRAME_SCHEMA, frames)
 
 
 @register(
@@ -372,34 +346,17 @@ def image_ahash_df(spark: SparkSession, root: str) -> DataFrame:
     average-hash — 7×7 grid of 4×4-pixel block means, bit i set when
     block_mean_i > image mean. The standard public perceptual-hash
     construction; jittered variants of an image land within a few bits."""
-    from .pngcodec import make_gray_png_decoder
 
-    decode = make_gray_png_decoder()
+    def ahash(path, label, buf):
+        w, h, px = decode_gray_png(buf)
+        arr = np.asarray(px, dtype=np.float64).reshape(h, w)
+        blocks = arr[: 28, : 28].reshape(7, 4, 7, 4).mean(axis=(1, 3))  # [7,7]
+        val = 0
+        for b in (blocks > arr.mean()).ravel():
+            val = (val << 1) | int(b)
+        yield path, label, val
 
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"path": [], "label": [], "ahash": []}
-            for path, label, buf in zip(pdf["path"], pdf["label"], pdf["content"]):
-                w, h, px = decode(buf)
-                arr = np.asarray(px, dtype=np.float64).reshape(h, w)
-                blocks = arr[: 28, : 28].reshape(7, 4, 7, 4).mean(axis=(1, 3))  # [7,7]
-                bits = (blocks > arr.mean()).ravel()
-                val = 0
-                for b in bits:
-                    val = (val << 1) | int(b)
-                out["path"].append(path)
-                out["label"].append(int(label))
-                out["ahash"].append(val)
-            yield pd.DataFrame(out)
-
-    return (
-        read_binary_dir(spark, root)
-        .select("path", F.col("label").cast("int").alias("label"), "content")
-        .mapInPandas(kernel, "path string, label int, ahash long")
-    )
+    return map_png_rows(spark, root, "path string, label int, ahash long", ahash)
 
 
 @register(
@@ -488,59 +445,21 @@ def video_keyframe_df(spark: SparkSession, root: str, every_k: int = KEYFRAME_EV
     I/O ∝ frames-kept, the property real containers (MP4 moov/mdat) are
     built for; decode happens inside the scan's partitions, no shuffle;
     one Arrow hop."""
-    from .pngcodec import make_gray_png_decoder
 
-    decode = make_gray_png_decoder()
-    k = every_k
+    def keyframes(path, buf):
+        n = len(parse_pngv_index(buf))
+        for i in range(0, n, every_k):
+            w, h, px = decode_pngv_frame(buf, i)
+            arr = np.asarray(px, dtype=np.float64).reshape(h, w)
+            bright = float(arr.max())
+            ys, xs = np.nonzero(arr >= bright - 32)
+            yield (
+                path, n, i, w, h, float(arr.mean()),
+                int(round(xs.mean())), int(round(ys.mean())),
+            )
 
-    def kernel(batches: Iterator) -> Iterator:
-        # Index parse inlined (not a call into videocodec): this closure
-        # ships to executors by value, and a cluster's executors need not
-        # have this package installed.
-        import struct as _struct
-
-        import numpy as np
-        import pandas as pd
-
-        def parse_index(b: bytes) -> list[tuple[int, int]]:
-            if b[:4] != b"PNGV":
-                raise ValueError("not a PNGV container")
-            (n,) = _struct.unpack(">I", b[4:8])
-            raw = _struct.unpack(f">{n + 1}I", b[8 : 8 + 4 * (n + 1)])
-            return [(raw[i], raw[i + 1] - raw[i]) for i in range(n)]
-
-        for pdf in batches:
-            out = {c: [] for c in (
-                "path", "n_frames", "frame_idx", "width", "height",
-                "mean_px", "bright_x", "bright_y",
-            )}
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                buf = bytes(buf)
-                index = parse_index(buf)
-                base = 8 + 4 * (len(index) + 1)
-                for i in range(0, len(index), k):
-                    off, length = index[i]
-                    w, h, px = decode(buf[base + off : base + off + length])
-                    arr = np.asarray(px, dtype=np.float64).reshape(h, w)
-                    bright = float(arr.max())
-                    ys, xs = np.nonzero(arr >= bright - 32)
-                    out["path"].append(path)
-                    out["n_frames"].append(len(index))
-                    out["frame_idx"].append(i)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_px"].append(float(arr.mean()))
-                    out["bright_x"].append(int(round(xs.mean())))
-                    out["bright_y"].append(int(round(ys.mean())))
-            yield pd.DataFrame(out)
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pngv")
-        .load(root)
-        .select("path", "content")
-        .mapInPandas(kernel, VIDEO_FRAME_SCHEMA)
-    )
+    files = read_binary_dir(spark, root, "*.pngv").select("path", "content")
+    return map_rows(files, VIDEO_FRAME_SCHEMA, keyframes)
 
 
 @register(
@@ -576,46 +495,20 @@ def audio_window_features_df(spark: SparkSession, root: str) -> DataFrame:
     Scale posture: identical to the image/video kernels — decode and 1→N
     expansion inside the scan's partitions, one Arrow hop, no shuffle;
     output bounded at n_samples/WINDOW rows per clip."""
-    from .wavcodec import WINDOW, make_wav_parser
 
-    win = WINDOW
-    # parse is a factory-built closure so the kernel ships it by value;
-    # executors can't import this package when the driver runs from an
-    # arbitrary cwd. Single source of truth: wavcodec.make_wav_parser.
-    parse = make_wav_parser()
+    def windows(path, buf):
+        rate, x = parse_wav(buf)
+        n_win = len(x) // WINDOW
+        for i in range(n_win):
+            seg = x[i * WINDOW : (i + 1) * WINDOW]
+            zc = int(np.count_nonzero(np.signbit(seg[:-1]) != np.signbit(seg[1:])))
+            yield (
+                path, rate, n_win, i, i * WINDOW,
+                float(np.sqrt((seg.astype(np.float64) ** 2).mean())), zc, int(np.abs(seg).max()),
+            )
 
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {c: [] for c in (
-                "path", "sample_rate", "n_windows", "window_idx",
-                "sample_off", "rms", "zero_crossings", "peak",
-            )}
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                rate, x = parse(bytes(buf))
-                n_win = len(x) // win
-                for i in range(n_win):
-                    seg = x[i * win : (i + 1) * win]
-                    zc = int(np.count_nonzero(np.signbit(seg[:-1]) != np.signbit(seg[1:])))
-                    out["path"].append(path)
-                    out["sample_rate"].append(rate)
-                    out["n_windows"].append(n_win)
-                    out["window_idx"].append(i)
-                    out["sample_off"].append(i * win)
-                    out["rms"].append(float(np.sqrt((seg.astype(np.float64) ** 2).mean())))
-                    out["zero_crossings"].append(zc)
-                    out["peak"].append(int(np.abs(seg).max()))
-            yield pd.DataFrame(out)
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(root)
-        .select("path", "content")
-        .mapInPandas(kernel, AUDIO_WINDOW_SCHEMA)
-    )
+    files = read_binary_dir(spark, root, "*.wav").select("path", "content")
+    return map_rows(files, AUDIO_WINDOW_SCHEMA, windows)
 
 
 @register(
@@ -655,57 +548,29 @@ def audio_spectrogram_df(spark: SparkSession, root: str) -> DataFrame:
     n_samples/256 rows per clip, and each FFT is O(N log N) on a
     256-sample frame, so cost is linear in corpus bytes.
     """
+    nfft = SPECTRO_NFFT
+    hann = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(nfft) / nfft)
 
-    from .wavcodec import make_wav_parser
+    def spectra(path, buf):
+        rate, x = parse_wav(buf)
+        x = x.astype(np.float64)
+        freqs = np.arange(nfft // 2 + 1) * (rate / nfft)
+        lo = freqs < 500.0
+        mid = (freqs >= 500.0) & (freqs < 1500.0)
+        hi = freqs >= 1500.0
+        for i in range(len(x) // nfft):
+            mag = np.abs(np.fft.rfft(x[i * nfft : (i + 1) * nfft] * hann))
+            power = mag * mag
+            # bin 0 is DC — never "dominant" for a zero-mean signal
+            dom = int(np.argmax(mag[1:]) + 1)
+            total = float(power.sum()) or 1.0
+            yield (
+                path, i, dom, float(freqs[dom]), float((freqs * power).sum() / total),
+                float(power[lo].sum()), float(power[mid].sum()), float(power[hi].sum()),
+            )
 
-    parse = make_wav_parser()  # ships by value inside the kernel closure
-
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        nfft = SPECTRO_NFFT
-        hann = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(nfft) / nfft)
-
-        for pdf in batches:
-            out = {c: [] for c in (
-                "path", "window_idx", "dominant_bin", "dominant_hz",
-                "spectral_centroid_hz", "e_low", "e_mid", "e_high",
-            )}
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                rate, x = parse(bytes(buf))
-                x = x.astype(np.float64)
-                n_win = len(x) // nfft
-                freqs = np.arange(nfft // 2 + 1) * (rate / nfft)
-                lo = freqs < 500.0
-                mid = (freqs >= 500.0) & (freqs < 1500.0)
-                hi = freqs >= 1500.0
-                for i in range(n_win):
-                    seg = x[i * nfft : (i + 1) * nfft] * hann
-                    mag = np.abs(np.fft.rfft(seg))
-                    power = mag * mag
-                    # bin 0 is DC — never "dominant" for a zero-mean signal
-                    dom = int(np.argmax(mag[1:]) + 1)
-                    total = float(power.sum()) or 1.0
-                    out["path"].append(path)
-                    out["window_idx"].append(i)
-                    out["dominant_bin"].append(dom)
-                    out["dominant_hz"].append(float(freqs[dom]))
-                    out["spectral_centroid_hz"].append(
-                        float((freqs * power).sum() / total)
-                    )
-                    out["e_low"].append(float(power[lo].sum()))
-                    out["e_mid"].append(float(power[mid].sum()))
-                    out["e_high"].append(float(power[hi].sum()))
-            yield pd.DataFrame(out)
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(root)
-        .select("path", "content")
-        .mapInPandas(kernel, SPECTRO_SCHEMA)
-    )
+    files = read_binary_dir(spark, root, "*.wav").select("path", "content")
+    return map_rows(files, SPECTRO_SCHEMA, spectra)
 
 
 @register(
@@ -745,44 +610,18 @@ def image_resize_pool_df(spark: SparkSession, root: str) -> DataFrame:
     scan's partitions, one Arrow hop, no shuffle; output is O(1) per
     image, not O(pixels).
     """
-    from .pngcodec import make_gray_png_decoder
 
-    decode = make_gray_png_decoder()
+    def pooled(path, label, buf):
+        w, h, px = decode_gray_png(buf)
+        arr = np.asarray(px, dtype=np.float64).reshape(h, w)
+        ph, pw = h // POOL, w // POOL
+        pool = arr[: ph * POOL, : pw * POOL].reshape(ph, POOL, pw, POOL).mean(axis=(1, 3))
+        yield (
+            path, label, w, h, pw, ph,
+            float(arr.mean()), float(pool.mean()), pool[0].astype(np.float32),
+        )
 
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "path", "label", "width", "height", "out_width", "out_height",
-                "mean_px", "mean_px_resized", "pooled_head",
-            )}
-            for path, label, buf in zip(pdf["path"], pdf["label"], pdf["content"]):
-                w, h, px = decode(buf)
-                arr = np.asarray(px, dtype=np.float64).reshape(h, w)
-                ph, pw = h // POOL, w // POOL
-                pooled = (
-                    arr[: ph * POOL, : pw * POOL]
-                    .reshape(ph, POOL, pw, POOL)
-                    .mean(axis=(1, 3))
-                )
-                out["path"].append(path)
-                out["label"].append(int(label))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["out_width"].append(pw)
-                out["out_height"].append(ph)
-                out["mean_px"].append(float(arr.mean()))
-                out["mean_px_resized"].append(float(pooled.mean()))
-                out["pooled_head"].append(pooled[0].astype(np.float32))
-            yield pd.DataFrame(out)
-
-    return (
-        read_binary_dir(spark, root)
-        .select("path", F.col("label").cast("int").alias("label"), "content")
-        .mapInPandas(kernel, RESIZE_SCHEMA)
-    )
+    return map_png_rows(spark, root, RESIZE_SCHEMA, pooled)
 
 
 @register(
@@ -833,50 +672,26 @@ def audio_resample_df(spark: SparkSession, root: str) -> DataFrame:
     Scale posture: per-clip work inside the scan partitions, one Arrow
     hop, no shuffle; output O(1) per clip.
     """
+    nfft = 512
+    hann = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(nfft) / nfft)
 
-    from .wavcodec import make_wav_parser
+    def decimated(path, buf):
+        rate, x = parse_wav(buf)
+        x = x.astype(np.float64)
+        # anti-alias: 2-tap moving average, then take every 2nd sample
+        y = ((x[:-1] + x[1:]) / 2.0)[::DECIMATE]
+        rate_out = rate // DECIMATE
+        # dominant bin of the resampled signal (Hann, skip DC)
+        seg = y[: (len(y) // nfft) * nfft].reshape(-1, nfft)
+        mag = np.abs(np.fft.rfft(seg * hann, axis=1)).sum(axis=0)
+        dom = int(np.argmax(mag[1:]) + 1)
+        yield (
+            path, rate, rate_out, len(x), len(y), float(np.sqrt((x ** 2).mean())),
+            float(np.sqrt((y ** 2).mean())), float(dom * rate_out / nfft),
+        )
 
-    parse = make_wav_parser()  # ships by value inside the kernel closure
-
-    def kernel(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "path", "rate_in", "rate_out", "n_in", "n_out",
-                "rms_in", "rms_out", "dominant_hz_out",
-            )}
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                rate, x = parse(bytes(buf))
-                x = x.astype(np.float64)
-                # anti-alias: 2-tap moving average, then take every 2nd sample
-                smooth = (x[:-1] + x[1:]) / 2.0
-                y = smooth[::DECIMATE]
-                rate_out = rate // DECIMATE
-                # dominant bin of the resampled signal (Hann, skip DC)
-                nfft = 512
-                seg = y[: (len(y) // nfft) * nfft].reshape(-1, nfft)
-                hann = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(nfft) / nfft)
-                mag = np.abs(np.fft.rfft(seg * hann, axis=1)).sum(axis=0)
-                dom = int(np.argmax(mag[1:]) + 1)
-                out["path"].append(path)
-                out["rate_in"].append(rate)
-                out["rate_out"].append(rate_out)
-                out["n_in"].append(len(x))
-                out["n_out"].append(len(y))
-                out["rms_in"].append(float(np.sqrt((x ** 2).mean())))
-                out["rms_out"].append(float(np.sqrt((y ** 2).mean())))
-                out["dominant_hz_out"].append(float(dom * rate_out / nfft))
-            yield pd.DataFrame(out)
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(root)
-        .select("path", "content")
-        .mapInPandas(kernel, RESAMPLE_SCHEMA)
-    )
+    files = read_binary_dir(spark, root, "*.wav").select("path", "content")
+    return map_rows(files, RESAMPLE_SCHEMA, decimated)
 
 
 @register(

@@ -241,9 +241,10 @@ def source_avro_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from .avrocodec import make_ocf_codec
+    from .binary import map_rows, read_binary_dir
 
     # the codec is a pair of CLOSURES (pickled by value) so executors
-    # never need this package importable — the pngcodec factory pattern
+    # never need this package importable
     write_ocf, read_ocf = make_ocf_codec()
 
     schema = {
@@ -287,25 +288,18 @@ def source_avro_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert sum(r.n for r in written) > 0
 
-        def read_kernel(batches):
-            for pdf in batches:
-                for blob in pdf["content"]:
-                    _schema, rows = read_ocf(bytes(blob))
-                    yield pd.DataFrame(
-                        rows,
-                        columns=[f["name"] for f in schema["fields"]],
-                    )
+        names = [f["name"] for f in schema["fields"]]
 
-        decoded = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.avro")
-            .load(base)
-            .select("content")
-            .mapInPandas(
-                read_kernel,
-                "event_id long, ts_us long, user_id long, event_type string, "
-                "value double, props string",
-            )
+        def records(blob):
+            _schema, recs = read_ocf(blob)
+            for rec in recs:
+                yield tuple(rec[c] for c in names)
+
+        decoded = map_rows(
+            read_binary_dir(spark, base, "*.avro").select("content"),
+            "event_id long, ts_us long, user_id long, event_type string, "
+            "value double, props string",
+            records,
         )
         out = decoded.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),

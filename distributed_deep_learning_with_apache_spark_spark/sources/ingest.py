@@ -14,12 +14,14 @@ archives fans out across executors.
 
 from __future__ import annotations
 
+import io
 import os
 import tarfile
 import urllib.request
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .binary import map_rows, read_binary_dir
 
 
 def download_if_absent(url: str, local_path: str) -> bool:
@@ -58,25 +60,11 @@ def extract_archives_distributed(
     Returns (archive, member, size) — the listing layer; a real pipeline
     would also emit member bytes or write them to object storage.
     """
-    files = (
-        spark.read.format("binaryFile").option("pathGlobFilter", glob).load(archive_dir)
-    ).select("path", "content")
+    def unpack(path, content):
+        with tarfile.open(fileobj=io.BytesIO(content), mode="r:gz") as tar:
+            for m in tar.getmembers():
+                if m.isfile():
+                    yield path, m.name, m.size
 
-    def unpack(batches: Iterator) -> Iterator:
-        import io
-        import tarfile as tf
-
-        for pdf in batches:
-            rows = {"archive": [], "member": [], "size": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                with tf.open(fileobj=io.BytesIO(content), mode="r:gz") as tar:
-                    for m in tar.getmembers():
-                        if m.isfile():
-                            rows["archive"].append(path)
-                            rows["member"].append(m.name)
-                            rows["size"].append(m.size)
-            import pandas as pd
-
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(unpack, "archive string, member string, size long")
+    files = read_binary_dir(spark, archive_dir, glob).select("path", "content")
+    return map_rows(files, "archive string, member string, size long", unpack)

@@ -10,15 +10,22 @@ scanline filters) runs inside the Arrow-batched mapInPandas kernel.  The
 pixels a query sees are bit-exact the pixels the encoder wrote — asserted
 in tests/test_png_decode.py.
 
-Only zlib/struct/os are used, so the decode closure ships to executors by
-value with zero import requirements.
+The module registers itself for by-value pickling and the decoder uses
+only zlib/struct, so every kernel that calls `decode_gray_png` ships it
+to executors with zero import requirements (executors need not have this
+package installed).
 """
 
 from __future__ import annotations
 
 import os
 import struct
+import sys
 import zlib
+
+from pyspark import cloudpickle
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -46,79 +53,62 @@ def encode_gray_png(pixels: list[list[int]]) -> bytes:
     )
 
 
-def make_gray_png_decoder():
-    """Build the decode function as a CLOSURE so cloudpickle ships it to
-    executors by value (a cluster's executors need not have this package
-    installed — same constraint as the mapInPandas kernels in
-    sources/binary.py).
-
-    The returned function decodes an 8-bit grayscale PNG to
-    (width, height, flat row-major pixels), implementing all five PNG
-    scanline filters (None/Sub/Up/Average/Paeth) so it handles any
-    conforming 8-bit grayscale file, not just this module's encoder output.
-    """
-    import struct as _struct
-    import zlib as _zlib
-
-    sig = b"\x89PNG\r\n\x1a\n"
-
-    def decode(data: bytes) -> tuple[int, int, list[int]]:
-        if bytes(data[:8]) != sig:
-            raise ValueError("not a PNG")
-        data = bytes(data)
-        pos, width, height, idat = 8, 0, 0, b""
-        while pos < len(data):
-            (length,) = _struct.unpack(">I", data[pos : pos + 4])
-            tag = data[pos + 4 : pos + 8]
-            payload = data[pos + 8 : pos + 8 + length]
-            if tag == b"IHDR":
-                width, height, depth, ctype = _struct.unpack(">IIBB", payload[:10])
-                if depth != 8 or ctype != 0:
-                    raise ValueError(f"unsupported PNG (depth={depth}, colortype={ctype})")
-            elif tag == b"IDAT":
-                idat += payload
-            elif tag == b"IEND":
-                break
-            pos += 12 + length
-        raw = _zlib.decompress(idat)
-        stride = width
-        out: list[int] = []
-        prev = [0] * stride
-        for y in range(height):
-            base = y * (stride + 1)
-            ftype = raw[base]
-            line = raw[base + 1 : base + 1 + stride]
-            cur = [0] * stride
-            for x in range(stride):
-                a = cur[x - 1] if x else 0  # left
-                b = prev[x]  # up
-                c = prev[x - 1] if x else 0  # up-left
-                v = line[x]
-                if ftype == 0:
-                    r = v
-                elif ftype == 1:
-                    r = v + a
-                elif ftype == 2:
-                    r = v + b
-                elif ftype == 3:
-                    r = v + (a + b) // 2
-                elif ftype == 4:
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                    r = v + pred
-                else:
-                    raise ValueError(f"bad filter {ftype}")
-                cur[x] = r & 0xFF
-            out.extend(cur)
-            prev = cur
-        return width, height, out
-
-    return decode
-
-
-# Driver-side convenience instance (tests, fixture verification).
-decode_gray_png = make_gray_png_decoder()
+def decode_gray_png(data: bytes) -> tuple[int, int, list[int]]:
+    """Decode an 8-bit grayscale PNG to (width, height, flat row-major
+    pixels), implementing all five PNG scanline filters (None/Sub/Up/
+    Average/Paeth) so it handles any conforming 8-bit grayscale file, not
+    just this module's encoder output. Any other depth or colour type, or a
+    filter type above 4, raises ValueError."""
+    if bytes(data[:8]) != _PNG_SIG:
+        raise ValueError("not a PNG")
+    data = bytes(data)
+    pos, width, height, idat = 8, 0, 0, b""
+    while pos < len(data):
+        (length,) = struct.unpack(">I", data[pos : pos + 4])
+        tag = data[pos + 4 : pos + 8]
+        payload = data[pos + 8 : pos + 8 + length]
+        if tag == b"IHDR":
+            width, height, depth, ctype = struct.unpack(">IIBB", payload[:10])
+            if depth != 8 or ctype != 0:
+                raise ValueError(f"unsupported PNG (depth={depth}, colortype={ctype})")
+        elif tag == b"IDAT":
+            idat += payload
+        elif tag == b"IEND":
+            break
+        pos += 12 + length
+    raw = zlib.decompress(idat)
+    stride = width
+    out: list[int] = []
+    prev = [0] * stride
+    for y in range(height):
+        base = y * (stride + 1)
+        ftype = raw[base]
+        line = raw[base + 1 : base + 1 + stride]
+        cur = [0] * stride
+        for x in range(stride):
+            a = cur[x - 1] if x else 0  # left
+            b = prev[x]  # up
+            c = prev[x - 1] if x else 0  # up-left
+            v = line[x]
+            if ftype == 0:
+                r = v
+            elif ftype == 1:
+                r = v + a
+            elif ftype == 2:
+                r = v + b
+            elif ftype == 3:
+                r = v + (a + b) // 2
+            elif ftype == 4:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+                r = v + pred
+            else:
+                raise ValueError(f"bad filter {ftype}")
+            cur[x] = r & 0xFF
+        out.extend(cur)
+        prev = cur
+    return width, height, out
 
 
 # ---------------------------------------------------------------------------

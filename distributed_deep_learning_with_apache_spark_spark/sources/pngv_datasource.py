@@ -11,10 +11,10 @@ Connector design (the part that matters at 100 TB):
 - the reader seeks via the PNGV index and decodes only what it emits —
   `frame_step` pushes keyframe sampling INTO the source, the
   connector-level analogue of predicate pushdown (I/O ∝ frames kept).
-- all decode logic is self-contained in this module; Spark pickles the
-  DataSourceReader itself to executors, so no package import is needed
-  worker-side (same constraint as every kernel in sources/binary.py —
-  enforced here by module-level pickle-by-value registration).
+- frames decode through videocodec / pngcodec, the codecs every kernel
+  in sources/binary.py uses; Spark pickles the DataSourceReader itself to
+  executors, and this module and both codecs register for by-value
+  pickling, so no package import is needed worker-side.
 
 Reference parity: packages `chapter_4/MnistClassification.java:61-63`'s
 record-reader pattern (`ImageRecordReader`) as a first-class Spark
@@ -24,10 +24,11 @@ source instead of driver-side iteration.
 from __future__ import annotations
 
 import os
-import struct
 import sys
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from .videocodec import decode_pngv_frame, parse_pngv_index
 
 try:  # pragma: no cover - import location varies across pyspark versions
     from pyspark import cloudpickle as _cp
@@ -62,70 +63,15 @@ class PngvDataSourceReader(DataSourceReader):
         return [_VideoPartition(p) for p in files]
 
     def read(self, partition):
-        # Self-contained decode: PNGV index walk + the pure-stdlib PNG
-        # decoder logic (same algorithms as pngcodec.py, pickled by value
-        # with this module).
-        import zlib
-
         with open(partition.path, "rb") as f:
             buf = f.read()
-        if buf[:4] != b"PNGV":
-            raise ValueError(f"not a PNGV container: {partition.path}")
-        (n,) = struct.unpack(">I", buf[4:8])
-        raw = struct.unpack(f">{n + 1}I", buf[8 : 8 + 4 * (n + 1)])
-        base = 8 + 4 * (n + 1)
-
-        def decode_png(data: bytes):
-            assert data[:8] == b"\x89PNG\r\n\x1a\n"
-            pos, width, height, idat = 8, 0, 0, b""
-            while pos < len(data):
-                (length,) = struct.unpack(">I", data[pos : pos + 4])
-                tag = data[pos + 4 : pos + 8]
-                payload = data[pos + 8 : pos + 8 + length]
-                if tag == b"IHDR":
-                    width, height = struct.unpack(">II", payload[:8])
-                elif tag == b"IDAT":
-                    idat += payload
-                pos += 12 + length
-            rawpx = zlib.decompress(idat)
-            stride = width + 1
-            px, prev = [], [0] * width
-            for y in range(height):
-                line = rawpx[y * stride : (y + 1) * stride]
-                ftype, cur = line[0], list(line[1:])
-                for x in range(width):
-                    a = cur[x - 1] if x else 0
-                    b = prev[x]
-                    c = prev[x - 1] if x else 0
-                    if ftype == 0:
-                        pred = 0
-                    elif ftype == 1:
-                        pred = a
-                    elif ftype == 2:
-                        pred = b
-                    elif ftype == 3:
-                        pred = (a + b) // 2
-                    else:
-                        p = a + b - c
-                        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                        pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                    cur[x] = (cur[x] + pred) & 0xFF
-                px.extend(cur)
-                prev = cur
-            return width, height, px
-
-        for i in range(0, n, self.frame_step):
-            off, end = raw[i], raw[i + 1]
-            w, h, px = decode_png(buf[base + off : base + end])
-            yield (
-                partition.path,
-                i,
-                n,
-                w,
-                h,
-                sum(px) / len(px),
-                max(px),
-            )
+        try:
+            n = len(parse_pngv_index(buf))
+            for i in range(0, n, self.frame_step):
+                w, h, px = decode_pngv_frame(buf, i)
+                yield (partition.path, i, n, w, h, sum(px) / len(px), max(px))
+        except ValueError as e:  # name the file: one task reads one video
+            raise ValueError(f"{partition.path}: {e}") from e
 
 
 class PngvDataSource(DataSource):

@@ -29,8 +29,14 @@ from __future__ import annotations
 
 import os
 import struct
+import sys
+
+from pyspark import cloudpickle
 
 from .pngcodec import decode_gray_png, encode_gray_png, _lcg
+
+# Kernels and the pngv connector call the parser by value (see pngcodec).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 VIDEO_DIR = "/tmp/ddl_spark_pngv_fixture_v1"
 N_VIDEOS = 40

@@ -21,8 +21,15 @@ from __future__ import annotations
 import math
 import os
 import struct
+import sys
+
+import numpy as np
+from pyspark import cloudpickle
 
 from .pngcodec import _lcg
+
+# Every audio kernel calls `parse_wav` by value (see pngcodec).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 AUDIO_DIR = "/tmp/ddl_spark_wav_fixture_v1"
 N_AUDIO = 60
@@ -40,9 +47,9 @@ def encode_wav(samples: list[int], rate: int = SAMPLE_RATE) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def parse_wav(buf: bytes) -> tuple[int, list[int]]:
-    """Chunk-walking parser: returns (sample_rate, samples). Tolerates
-    unknown chunks between fmt and data."""
+def parse_wav(buf: bytes) -> tuple[int, np.ndarray]:
+    """Chunk-walking parser: returns (sample_rate, samples as an int64
+    array). Tolerates unknown chunks between fmt and data."""
     if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
     pos, rate, samples = 12, None, None
@@ -55,50 +62,11 @@ def parse_wav(buf: bytes) -> tuple[int, list[int]]:
             if (audio_fmt, channels, bits) != (1, 1, 16):
                 raise ValueError("only PCM16 mono supported")
         elif tag == b"data":
-            samples = list(struct.unpack(f"<{length // 2}h", payload[: length - length % 2]))
+            samples = np.frombuffer(payload[: length - length % 2], dtype="<i2").astype(np.int64)
         pos += 8 + length + (length & 1)  # RIFF chunks pad to even
     if rate is None or samples is None:
         raise ValueError("missing fmt or data chunk")
     return rate, samples
-
-
-def make_wav_parser():
-    """Build a numpy-returning RIFF/WAVE parser as a CLOSURE so cloudpickle
-    ships it to executors by value (same constraint as
-    pngcodec.make_gray_png_decoder: a cluster's executors need not have
-    this package installed).
-
-    The single source of truth for the chunk walk used by every audio
-    mapInPandas kernel in sources/binary.py — a format fix lands here once.
-    Returns ``parse(buf) -> (sample_rate, samples: np.ndarray[int64])``.
-    """
-
-    def parse(buf: bytes):
-        import struct as _struct
-
-        import numpy as np
-
-        if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-            raise ValueError("not a RIFF/WAVE file")
-        pos, rate, samples = 12, None, None
-        while pos + 8 <= len(buf):
-            tag = buf[pos : pos + 4]
-            (length,) = _struct.unpack("<I", buf[pos + 4 : pos + 8])
-            payload = buf[pos + 8 : pos + 8 + length]
-            if tag == b"fmt ":
-                fmt, ch, rate, _, _, bits = _struct.unpack("<HHIIHH", payload[:16])
-                if (fmt, ch, bits) != (1, 1, 16):
-                    raise ValueError("only PCM16 mono supported")
-            elif tag == b"data":
-                samples = np.frombuffer(
-                    payload[: length - length % 2], dtype="<i2"
-                ).astype(np.int64)
-            pos += 8 + length + (length & 1)  # RIFF chunks pad to even
-        if rate is None or samples is None:
-            raise ValueError("missing fmt or data chunk")
-        return rate, samples
-
-    return parse
 
 
 def click_position(audio_id: int) -> int:

@@ -865,21 +865,22 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_image_decode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The continuous-ingest multimodal shape: a binaryFile STREAM (new
-    image files appear over time) → the same Arrow-batched real-PNG-decode
-    kernel as the batch path → per-label aggregation, memory sink.
+    image files appear over time) → the batch path's row map
+    (`binary.map_rows`) and PNG decoder (`pngcodec.decode_gray_png`) →
+    per-label aggregation, memory sink.
 
     One pipeline definition serves batch and streaming — the Structured
-    Streaming promise — because the decode is a mapInPandas stage with no
-    batch-only assumptions. At scale the file source discovers new files
+    Streaming promise — because the row map is a mapInPandas stage with
+    no batch-only assumptions. At scale the file source discovers new files
     incrementally (maxFilesPerTrigger bounds per-batch work) and decode
     stays scan-local; only the tiny label-count state lives in the store.
     """
+    import numpy as np
     from pyspark.sql import types as T
 
-    from ..sources.pngcodec import ensure_fixture_corpus, make_gray_png_decoder
+    from ..sources.binary import map_rows
+    from ..sources.pngcodec import decode_gray_png, ensure_fixture_corpus
 
-    root = ensure_fixture_corpus()
-    decode = make_gray_png_decoder()
     bin_schema = T.StructType(
         [
             T.StructField("path", T.StringType()),
@@ -889,25 +890,20 @@ def stream_image_decode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
+    def mean_px(path, buf):
+        _, _, px = decode_gray_png(buf)
+        yield int(path.rstrip("/").split("/")[-2]), float(np.mean(px))
 
-        for pdf in batches:
-            out = {"label": [], "mean_px": []}
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                _, _, px = decode(buf)
-                out["label"].append(int(path.rstrip("/").split("/")[-2]))
-                out["mean_px"].append(float(np.mean(px)))
-            yield pd.DataFrame(out)
-
-    stream = (
+    files = (
         spark.readStream.format("binaryFile")
         .schema(bin_schema)
         .option("pathGlobFilter", "*.png")
         .option("recursiveFileLookup", "true")
-        .load(root)
-        .mapInPandas(kernel, "label int, mean_px double")
+        .load(ensure_fixture_corpus())
+        .select("path", "content")
+    )
+    stream = (
+        map_rows(files, "label int, mean_px double", mean_px)
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_images"), F.round(F.avg("mean_px"), 4).alias("avg_px"))
     )

@@ -24,7 +24,7 @@ def test_wav_roundtrip_bit_exact():
     rate, back = parse_wav(encode_wav(samples))
     assert rate == SAMPLE_RATE
     clamped = [max(-32768, min(32767, s)) for s in samples]
-    assert back == clamped
+    assert back.tolist() == clamped
 
 
 def test_parser_tolerates_extra_chunks():
@@ -37,7 +37,7 @@ def test_parser_tolerates_extra_chunks():
     patched = wav[:12] + extra + wav[12:]
     rate, back = parse_wav(patched)
     assert rate == SAMPLE_RATE
-    assert back == samples
+    assert back.tolist() == samples
 
 
 def test_parser_rejects_non_wav():

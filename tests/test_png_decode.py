@@ -247,13 +247,12 @@ def test_resize_pool_preserves_mean_and_matches_numpy(spark, sf_dir):
     )
     from distributed_deep_learning_with_apache_spark_spark.sources.pngcodec import (
         IMG_SIZE,
+        decode_gray_png,
         ensure_fixture_corpus,
-        make_gray_png_decoder,
     )
 
     rows = image_resize_pool_df(spark, ensure_fixture_corpus()).collect()
     assert rows
-    decode = make_gray_png_decoder()
     root = ensure_fixture_corpus()
     checked = 0
     for r in rows[:10]:
@@ -261,7 +260,7 @@ def test_resize_pool_preserves_mean_and_matches_numpy(spark, sf_dir):
         assert abs(r["mean_px"] - r["mean_px_resized"]) < 1e-9
         local = r["path"].replace("file:", "")
         with open(local, "rb") as f:
-            w, h, px = decode(f.read())
+            w, h, px = decode_gray_png(f.read())
         arr = np.asarray(px, dtype=np.float64).reshape(h, w)
         ref = arr.reshape(h // 2, 2, w // 2, 2).mean(axis=(1, 3))[0]
         got = np.asarray(r["pooled_head"], dtype=np.float64)

@@ -183,25 +183,24 @@ def test_global_single_partition_window_gate(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # r10 ADVICE fixes
 # ---------------------------------------------------------------------------
-def _write_events(spark, rows):
+def _write_events(tmp_path_factory, spark, rows):
     """rows: (event_id, ts_str, user_id, event_type, value, props)."""
-    import tempfile
-
     df = spark.createDataFrame(
         rows,
         "event_id long, ts string, user_id long, event_type string, "
         "value double, props string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    d = tempfile.mkdtemp(prefix="sg_r10adv_")
+    d = str(tmp_path_factory.mktemp("sg_r10adv_"))
     df.write.mode("overwrite").parquet(d + "/events.parquet")
     return d
 
 
-def test_bitmap_negative_user_id_raises_loudly(spark):
+def test_bitmap_negative_user_id_raises_loudly(spark, tmp_path_factory):
     """ADVICE #1: a negative id would silently COLLIDE bits under Spark
     div/pmod (-1 and 31 both set word 0 bit 31 — an undercount). The
     precondition must raise, not undercount."""
     d = _write_events(
+        tmp_path_factory,
         spark,
         [
             (0, "2024-03-01 00:00:00", 5, "click", 1.0, "{}"),
@@ -212,8 +211,9 @@ def test_bitmap_negative_user_id_raises_loudly(spark):
         REG["bitmap_distinct_users"].fn(spark, d).collect()
 
 
-def test_bitmap_nonnegative_ids_still_green(spark):
+def test_bitmap_nonnegative_ids_still_green(spark, tmp_path_factory):
     d = _write_events(
+        tmp_path_factory,
         spark,
         [(i, f"2024-03-01 00:00:{i:02d}", i % 40, "click", 1.0, "{}") for i in range(60)],
     )
@@ -221,11 +221,9 @@ def test_bitmap_nonnegative_ids_still_green(spark):
     assert out == {"2024-03-01": 40}
 
 
-def _write_orders_ship(spark, rows):
+def _write_orders_ship(tmp_path_factory, spark, rows):
     """rows: (orderkey, orderdate, shipdate)."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sg_r10bd_")
+    d = str(tmp_path_factory.mktemp("sg_r10bd_"))
     o = spark.createDataFrame(
         [(k, od, 1, 100.0, "O", "1-URGENT") for k, od, _ in rows],
         "o_orderkey long, o_orderdate date, o_custkey long, "
@@ -239,13 +237,14 @@ def _write_orders_ship(spark, rows):
     return d
 
 
-def test_business_days_pre_epoch_date_raises_loudly(spark):
+def test_business_days_pre_epoch_date_raises_loudly(spark, tmp_path_factory):
     """ADVICE #2: _bd_f's closed form splits across engines on negative
     day indexes (truncating vs flooring division). A date before the
     1900-01-01 epoch must raise, not silently diverge."""
     import datetime as dt
 
     d = _write_orders_ship(
+        tmp_path_factory,
         spark,
         [(1, dt.date(1899, 12, 25), dt.date(1995, 1, 3))],
     )
@@ -253,7 +252,7 @@ def test_business_days_pre_epoch_date_raises_loudly(spark):
         REG["business_days_to_ship"].fn(spark, d).collect()
 
 
-def test_business_days_epoch_change_is_invariant(spark):
+def test_business_days_epoch_change_is_invariant(spark, tmp_path_factory):
     """The 1970-01-05 -> 1900-01-01 epoch move (both Mondays) must not
     change any output: f(hi) - f(lo) depends only on weekday alignment.
     Pin a hand-computed case: Mon 1995-01-02 .. Mon 1995-01-09 spans 6
@@ -263,6 +262,7 @@ def test_business_days_epoch_change_is_invariant(spark):
     import datetime as dt
 
     d = _write_orders_ship(
+        tmp_path_factory,
         spark,
         [(1, dt.date(1995, 1, 2), dt.date(1995, 1, 9))],
     )
@@ -336,13 +336,12 @@ def test_ntile_frontiers_empty_and_bad_k(spark):
 # sites raise loudly on negative revenue (Spark `div` truncates, SQL `//`
 # floors — negative quotients silently split the engines)
 # ---------------------------------------------------------------------------
-def _write_tpch_min(spark, order_rows):
+def _write_tpch_min(tmp_path_factory, spark, order_rows):
     """orders + 1-line lineitem + customer/nation minimal fixture.
     order_rows: (orderkey, custkey, totalprice)."""
     import datetime as dt
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="sg_r10neg_")
+    d = str(tmp_path_factory.mktemp("sg_r10neg_"))
     o = spark.createDataFrame(
         [
             (k, c, float(p), dt.datetime(1995, 1, 2), "O", "1-URGENT")
@@ -369,19 +368,19 @@ def _write_tpch_min(spark, order_rows):
     return d
 
 
-def test_allocation_negative_revenue_raises_loudly(spark):
-    d = _write_tpch_min(spark, [(1, 1, 100.0), (2, 2, -50.0)])
+def test_allocation_negative_revenue_raises_loudly(spark, tmp_path_factory):
+    d = _write_tpch_min(tmp_path_factory, spark, [(1, 1, 100.0), (2, 2, -50.0)])
     with pytest.raises(ValueError, match="non-negative"):
         REG["allocation_largest_remainder"].fn(spark, d)
 
 
-def test_allocation_all_zero_weights_raises_loudly(spark):
-    d = _write_tpch_min(spark, [(1, 1, 0.0), (2, 2, 0.0)])
+def test_allocation_all_zero_weights_raises_loudly(spark, tmp_path_factory):
+    d = _write_tpch_min(tmp_path_factory, spark, [(1, 1, 0.0), (2, 2, 0.0)])
     with pytest.raises(ValueError, match="all weights are zero"):
         REG["allocation_largest_remainder"].fn(spark, d)
 
 
-def test_interval_proration_negative_revenue_raises_loudly(spark):
-    d = _write_tpch_min(spark, [(1, 1, -100.0)])
+def test_interval_proration_negative_revenue_raises_loudly(spark, tmp_path_factory):
+    d = _write_tpch_min(tmp_path_factory, spark, [(1, 1, -100.0)])
     with pytest.raises(Exception, match="non-negative cents"):
         REG["interval_month_overlap_revenue"].fn(spark, d).collect()

@@ -18,7 +18,6 @@
 """
 
 import datetime as dt
-import tempfile
 
 import duckdb
 import pytest
@@ -85,8 +84,8 @@ def test_ntile_frontiers_hostile_shapes_match_engine(spark, rows, asc, k):
 # ---------------------------------------------------------------------------
 # Forced-skew corpora through the REGISTERED query paths (hash-checked)
 # ---------------------------------------------------------------------------
-def _docs_dir(spark, texts):
-    d = tempfile.mkdtemp(prefix="sg_r11tiers_")
+def _docs_dir(tmp_path_factory, spark, texts):
+    d = str(tmp_path_factory.mktemp("sg_r11tiers_"))
     spark.createDataFrame(
         [(i, t, "en", f"src{i % 2}", len(t)) for i, t in enumerate(texts)],
         "doc_id long, text string, lang string, source string, n_chars long",
@@ -95,7 +94,7 @@ def _docs_dir(spark, texts):
 
 
 def test_quality_tiers_giant_tie_block_takes_fallback_and_matches_oracle(
-    spark, monkeypatch
+    spark, tmp_path_factory, monkeypatch
 ):
     """40 identical documents (one tie block holding ~90% of the corpus)
     + a handful of distinct lengths, with the task threshold tuned down
@@ -103,7 +102,7 @@ def test_quality_tiers_giant_tie_block_takes_fallback_and_matches_oracle(
     result still hash-matches DuckDB's ntile."""
     monkeypatch.setattr(ranks, "TIE_BLOCK_TASK_ROWS", 8)
     texts = ["spark hash join scan"] * 40 + ["a" * (i + 1) for i in range(4)]
-    d = _docs_dir(spark, texts)
+    d = _docs_dir(tmp_path_factory, spark, texts)
     before = ranks._fallback_block_probes
     con = duckdb.connect()
     con.execute(
@@ -118,8 +117,8 @@ def test_quality_tiers_giant_tie_block_takes_fallback_and_matches_oracle(
     assert ranks._fallback_block_probes > before, "fallback not taken in quality_tiers"
 
 
-def _orders_dir(spark, orders_rows):
-    d = tempfile.mkdtemp(prefix="sg_r11rfm_")
+def _orders_dir(tmp_path_factory, spark, orders_rows):
+    d = str(tmp_path_factory.mktemp("sg_r11rfm_"))
     spark.createDataFrame(
         orders_rows,
         "o_orderkey long, o_custkey long, o_orderstatus string, "
@@ -130,7 +129,7 @@ def _orders_dir(spark, orders_rows):
     return d
 
 
-def test_rfm_fully_tied_axes_take_fallback_and_match_oracle(spark, monkeypatch):
+def test_rfm_fully_tied_axes_take_fallback_and_match_oracle(spark, tmp_path_factory, monkeypatch):
     """Every customer has ONE order, the SAME price, the SAME date: all
     three RFM axes are one giant tie block each, so every quartile edge
     falls strictly inside a block — the worst case for the probe. With
@@ -140,7 +139,7 @@ def test_rfm_fully_tied_axes_take_fallback_and_match_oracle(spark, monkeypatch):
     rows = [
         (i, i, "O", 1000.0, dt.date(1995, 3, 15), "1-URGENT") for i in range(30)
     ]
-    d = _orders_dir(spark, rows)
+    d = _orders_dir(tmp_path_factory, spark, rows)
     before = ranks._fallback_block_probes
     con = duckdb.connect()
     con.execute(
@@ -179,8 +178,8 @@ def test_rfm_and_tiers_default_threshold_fixture_parity(spark, sf_dir):
 # NULL-pass-through guards (ADVICE #3): NULL propagates like SQL, only a
 # definitely-violating value raises.
 # ---------------------------------------------------------------------------
-def _orders_lineitem_dir(spark, orders_rows, lineitem_rows):
-    d = tempfile.mkdtemp(prefix="sg_r11null_")
+def _orders_lineitem_dir(tmp_path_factory, spark, orders_rows, lineitem_rows):
+    d = str(tmp_path_factory.mktemp("sg_r11null_"))
     spark.createDataFrame(
         orders_rows,
         "o_orderkey long, o_custkey long, o_orderstatus string, "
@@ -196,13 +195,13 @@ def _orders_lineitem_dir(spark, orders_rows, lineitem_rows):
     return d
 
 
-def test_interval_overlap_null_totalprice_propagates_not_raises(spark):
+def test_interval_overlap_null_totalprice_propagates_not_raises(spark, tmp_path_factory):
     rows_o = [
         (1, 1, "O", None, dt.date(1995, 1, 10), "1-URGENT"),
         (2, 1, "O", 150.0, dt.date(1995, 2, 10), "1-URGENT"),
     ]
     rows_l = [(1, dt.date(1995, 3, 5)), (2, dt.date(1995, 4, 5))]
-    d = _orders_lineitem_dir(spark, rows_o, rows_l)
+    d = _orders_lineitem_dir(tmp_path_factory, spark, rows_o, rows_l)
     con = duckdb.connect()
     for t in ("orders", "lineitem"):
         con.execute(
@@ -218,21 +217,21 @@ def test_interval_overlap_null_totalprice_propagates_not_raises(spark):
         con.close()
 
 
-def test_interval_overlap_negative_totalprice_still_raises(spark):
+def test_interval_overlap_negative_totalprice_still_raises(spark, tmp_path_factory):
     rows_o = [(1, 1, "O", -5.0, dt.date(1995, 1, 10), "1-URGENT")]
     rows_l = [(1, dt.date(1995, 3, 5))]
-    d = _orders_lineitem_dir(spark, rows_o, rows_l)
+    d = _orders_lineitem_dir(tmp_path_factory, spark, rows_o, rows_l)
     with pytest.raises(Exception, match="negative order revenue"):
         REG["interval_month_overlap_revenue"].fn(spark, d).collect()
 
 
-def test_business_days_null_shipdate_propagates_not_raises(spark):
+def test_business_days_null_shipdate_propagates_not_raises(spark, tmp_path_factory):
     rows_o = [
         (1, 1, "O", 100.0, dt.date(1995, 1, 10), "1-URGENT"),
         (2, 1, "O", 100.0, dt.date(1995, 2, 10), "1-URGENT"),
     ]
     rows_l = [(1, None), (2, dt.date(1995, 2, 20))]
-    d = _orders_lineitem_dir(spark, rows_o, rows_l)
+    d = _orders_lineitem_dir(tmp_path_factory, spark, rows_o, rows_l)
     out = REG["business_days_to_ship"].fn(spark, d)
     out.collect()  # must NOT raise on the NULL ship date
     con = duckdb.connect()
@@ -248,9 +247,9 @@ def test_business_days_null_shipdate_propagates_not_raises(spark):
         con.close()
 
 
-def test_business_days_pre_epoch_still_raises(spark):
+def test_business_days_pre_epoch_still_raises(spark, tmp_path_factory):
     rows_o = [(1, 1, "O", 100.0, dt.date(1899, 12, 25), "1-URGENT")]
     rows_l = [(1, dt.date(1995, 1, 3))]
-    d = _orders_lineitem_dir(spark, rows_o, rows_l)
+    d = _orders_lineitem_dir(tmp_path_factory, spark, rows_o, rows_l)
     with pytest.raises(Exception, match="precedes BD_EPOCH"):
         REG["business_days_to_ship"].fn(spark, d).collect()

@@ -296,7 +296,7 @@ def test_perplexity_flags_out_of_distribution_doc(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # PrefixSpan
 # ---------------------------------------------------------------------------
-def test_prefixspan_order_sensitivity(spark, sf_dir):
+def test_prefixspan_order_sensitivity(spark, sf_dir, tmp_path):
     """The reason this op exists: <a,b> and <b,a> are DIFFERENT patterns
     with independent supports. Verify both directions are counted
     correctly on a hand-built corpus where only one direction occurs."""
@@ -310,9 +310,7 @@ def test_prefixspan_order_sensitivity(spark, sf_dir):
         [(eid, f"2024-03-01 00:00:{eid:02d}", uid, t, 1.0, "{}") for eid, uid, t in rows],
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="sg_pspan_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(d + "/events.parquet")
     out = {
         (r["pat_a"], r["pat_b"]): r["n_users"]
@@ -403,11 +401,9 @@ def test_join_mv_maintenance_exercises_moves(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Terminator sessionization
 # ---------------------------------------------------------------------------
-def test_terminator_splits_within_gap(spark):
+def test_terminator_splits_within_gap(spark, tmp_path):
     """The semantics session_window cannot express: a purchase ENDS the
     session even when the next event arrives within the gap."""
-    import tempfile
-
     rows = [
         (0, "2024-03-01 10:00:00", 1, "view"),
         (1, "2024-03-01 10:05:00", 1, "purchase"),  # terminator
@@ -418,7 +414,7 @@ def test_terminator_splits_within_gap(spark):
         [(e, ts, u, t, 1.0, "{}") for e, ts, u, t in rows],
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    d = tempfile.mkdtemp(prefix="sg_term_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(d + "/events.parquet")
     out = sorted(
         (r["session_seq"], r["n_events"], r["converted"])
@@ -613,12 +609,11 @@ def test_kcore_converged_and_degrees_hold(spark, sf_dir):
     assert all(r["core_degree"] >= KCORE_K for r in rows)
 
 
-def test_ab_z_statistic_on_split_conversion(spark):
+def test_ab_z_statistic_on_split_conversion(spark, tmp_path):
     """Exercise the z arithmetic on a corpus where conversion is PARTIAL
     (the fixtures convert 100% of users, so their z is NULL by design):
     hand-computed pooled two-proportion z must match to the 1e-4 quantum."""
     import math
-    import tempfile
 
     rows = []
     eid = 0
@@ -631,7 +626,7 @@ def test_ab_z_statistic_on_split_conversion(spark):
         [(e, f"2024-03-01 00:{e//60:02d}:{e%60:02d}", u, t, 1.0, "{}") for e, u, t in rows],
         "event_id long, ts string, user_id long, event_type string, value double, props string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    d = tempfile.mkdtemp(prefix="sg_ab_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(d + "/events.parquet")
     out = REG["ab_test_lift_ztest"].fn(spark, d).first()
     na, ca, nb, cb = out["na"], out["ca"], out["nb"], out["cb"]
@@ -648,13 +643,12 @@ def test_ab_z_statistic_on_split_conversion(spark):
 # ---------------------------------------------------------------------------
 # Seasonal residual alerts
 # ---------------------------------------------------------------------------
-def test_residual_alerts_flag_injected_spike(spark):
+def test_residual_alerts_flag_injected_spike(spark, tmp_path):
     """A synthetic flat weekly series with one spiked day: the spike (and
     only days perturbed by its moving-average window) may flag; the spike
     itself MUST flag — the robust bar can't be poisoned by its own
     outlier the way a stddev bar is."""
     import datetime as dt
-    import tempfile
 
     rows = []
     base = dt.datetime(1995, 1, 2)  # a Monday
@@ -672,7 +666,7 @@ def test_residual_alerts_flag_injected_spike(spark):
         "o_orderkey long, o_custkey long, o_orderstatus string, "
         "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
-    d = tempfile.mkdtemp(prefix="sg_sra_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(d + "/orders.parquet")
     out = {
         r["day"].isoformat(): r
@@ -710,16 +704,14 @@ def test_residual_alerts_agree_with_decomposition(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Code detection
 # ---------------------------------------------------------------------------
-def test_code_detection_routes_code_vs_prose(spark):
-    import tempfile
-
+def test_code_detection_routes_code_vs_prose(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     prose = "the quick brown fox jumps over the lazy dog and runs away home"
     code = "def f(x):\n    return {k: v*2 for k, v in x.items() if v != 0}"
     docs = [(0, prose, "en", "web", len(prose)), (1, code, "en", "web", len(code))]
-    d = tempfile.mkdtemp(prefix="sg_code_")
+    d = str(tmp_path)
     pq.write_table(
         pa.table(
             {

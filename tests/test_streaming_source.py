@@ -272,3 +272,33 @@ def test_failed_stream_run_removes_its_temp_dir(name, prefix, tmp_path, monkeypa
     with pytest.raises(RuntimeError, match="load_table failed"):
         REG[name].fn(None, sf_dir)
     assert [d for d in os.listdir(tmp_path) if d.startswith(prefix)] == []
+
+
+def test_kmv_stream_fold_merges_every_batch(spark, tmp_path):
+    """1,024 distinct users, one event each, staged round-robin into four
+    disjoint batches: the streamed sketch must equal the KMV computed in
+    Python over all 1,024 users. A fold that kept only the last batch's
+    bottom-k would hold the right k but a quarter of the users."""
+    import math
+
+    from distributed_deep_learning_with_apache_spark_spark.operators.incremental import (
+        KMV_A,
+        KMV_C,
+        KMV_K,
+        QSK_P,
+    )
+
+    n = 1024
+    df = spark.createDataFrame(
+        [(u, f"2024-03-01 00:{u // 60 % 60:02d}:{u % 60:02d}", u, "view", 1.0, "{}") for u in range(n)],
+        "event_id long, ts string, user_id long, event_type string, value double, props string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+
+    kept = sorted(((u % QSK_P) * KMV_A + KMV_C) % QSK_P for u in range(n))[:KMV_K]
+    k_eff = len(kept)
+    est = k_eff if k_eff < KMV_K else math.floor((k_eff - 1) * float(QSK_P) / kept[-1] + 0.5)
+    assert k_eff == KMV_K and est != KMV_K
+
+    row = REG["stream_kmv_distinct_running"].fn(spark, str(tmp_path)).first()
+    assert (row["k_eff"], row["est_distinct"]) == (k_eff, est)
