@@ -546,16 +546,13 @@ def quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and engine-portable.
 
     Scale (r10 rewrite, frontier form): the tier used to be a global
-    ntile window — a single-partition sort of the WHOLE corpus, the
-    last data-proportional global-order window in the repo. Now
-    `ntile_frontiers` finds the three tier edges from a per-value count
-    aggregate (word counts — a SMALL integer domain, ideal per-value
-    collapse) + a distributed prefix-sum over that value table + (when
-    an edge falls inside a tie block) one distributed rank pass over
-    the block's doc_ids; tier assignment is then a scan-stage predicate
-    against broadcast literals (`ntile_score_expr`) — no per-row rank,
-    no window, bit-identical to the oracle's ntile (same ANSI
-    fat-bucket contract, same total order).
+    ntile window — a single-partition sort of the WHOLE corpus. Now
+    `ranks.ntile_frontiers` finds the three tier edges from one prefix
+    sum over the per-value word counts (a SMALL integer domain; see the
+    ranks module docstring); tier assignment is then a scan-stage
+    predicate against broadcast literals (`ntile_score_expr`) — no
+    per-row rank, no window, bit-identical to the oracle's ntile (same
+    ANSI fat-bucket contract, same total order).
     """
     from .ranks import ntile_frontiers, ntile_score_expr
 

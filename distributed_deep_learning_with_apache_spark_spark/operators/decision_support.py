@@ -999,17 +999,11 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (r10 rewrite, frontier form): the per-customer rollup is one
     map-side-combinable hash agg, checkpointed ONCE; the three quartile
     scores — formerly three global-ORDER ntile windows, i.e. three
-    single-partition sorts of the customer dimension, the exact
-    serialization the r9 gini/decile rewrite eliminated — now come from
-    `ntile_frontiers`: per-axis, a slim per-value count aggregate, a
-    distributed prefix-sum over the VALUE domain, a <=3-row boundary
-    probe, and (only when a quartile edge falls inside a tie block) one
-    distributed rank pass over that block. Scoring is then a single
+    single-partition sorts of the customer dimension — come from
+    `ranks.ntile_frontiers` (one prefix sum over each axis's VALUE
+    domain; see the ranks module docstring). Scoring is then a single
     scan with nine broadcast-literal comparisons (`ntile_score_expr`) —
-    no per-row rank is ever materialized, no join-back, no window. The
-    first r10 cut ranked every row (three full-width checkpointed range
-    sorts; 2.49x wall at 30x); the frontier form is the docstring's
-    promised '"quartile frontiers ... broadcast range lookups"' design.
+    no per-row rank is ever materialized, no join-back, no window.
     Output is bit-identical to the oracle's ntile (same ANSI fat-bucket
     contract, same total orders).
     """
@@ -1534,58 +1528,30 @@ def bootstrap_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # via the rank-weighted-sum identity.
 # ---------------------------------------------------------------------------
 GINI_SCALE = 1_000_000
-_PREFIX_PARTS = 32
 
 
-def _value_prefix_counts(spark: SparkSession, per_cust: DataFrame):
-    """Distributed prefix-sum over a BIGINT value column named ``cents``:
-    returns ``(cum_df, n, total)`` where ``cum_df`` has one row per
-    DISTINCT value with its multiplicity ``c`` and the GLOBAL inclusive
-    cumulative count ``cum`` (number of rows with value <= cents), plus
-    the exact row count ``n`` and value-weighted total ``total`` as
-    Python ints (arbitrary precision — they feed loud overflow guards).
+def _customer_cents_cum(spark: SparkSession, sf_dir: str):
+    """Per-customer revenue cents as one row per DISTINCT value: its
+    multiplicity ``c`` and the global inclusive cumulative count ``cum``
+    (customers with cents <= this value), from ``ranks.prefix_sum``.
+    Returns ``(cum_df, n, total)``; the customer count ``n`` and the
+    revenue total ``total`` are exact Python ints (they feed loud
+    overflow guards)."""
+    from .ranks import prefix_sum
 
-    This is the parallel replacement for a global-order rank window (a
-    single-partition pass in Spark, the serialization the 30x scale
-    curves measured): range-repartition the per-value counts so ascending
-    partition ids hold ascending value ranges, freeze the partition
-    assignment with an eager localCheckpoint (both consumers — the
-    offsets collect and the returned plan — must agree on pid, the
-    topk.py:460 discipline), reduce each range to one (count, weighted
-    sum) subtotal, collect those <= 32 rows, and broadcast the
-    running offsets back so every partition completes its cumulative
-    counts locally. All data-proportional passes are partition-parallel;
-    the serial state is the 32-row offset table.
-    """
-    pv = per_cust.groupBy("cents").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
+    o = load_table(spark, sf_dir, "orders")
+    per_cust = o.groupBy("o_custkey").agg(
+        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"))
+        .cast("long")
+        .alias("cents")
     )
-    pv = (
-        pv.repartitionByRange(_PREFIX_PARTS, "cents")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin pid: both consumers must agree
-    )
-    stats = pv.groupBy("pid").agg(
-        F.sum("c").cast("long").alias("pc"),
-        # decimal(38,0): the weighted subtotal stays EXACT past int64, so
-        # a pathological value domain reaches the Python overflow guards
-        # (exact big-int arithmetic) instead of overflowing mid-aggregate.
-        F.sum(F.col("cents").cast("decimal(38,0)") * F.col("c")).alias("ps"),
-    ).collect()  # bounded: one row per range partition (<= _PREFIX_PARTS)
-    run, total = 0, 0
-    offsets = []
-    for row in sorted(stats, key=lambda r: r["pid"]):
-        offsets.append((row["pid"], run))
-        run += row["pc"]
-        total += int(row["ps"])
-    offsets_df = spark.createDataFrame(offsets or [], "pid int, off long")
-    wloc = Window.partitionBy("pid").orderBy("cents")
-    cum = pv.join(F.broadcast(offsets_df), "pid").select(
-        "cents",
-        "c",
-        (F.col("off") + F.sum("c").over(wloc)).cast("long").alias("cum"),
-    )
-    return cum, run, total
+    pv = per_cust.groupBy("cents").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    # decimal(38,0): the revenue total stays EXACT past int64, so a
+    # pathological value domain reaches the Python overflow guards
+    # instead of overflowing mid-aggregate.
+    ps = F.sum(F.col("cents").cast("decimal(38,0)") * F.col("c"))
+    cum, (n, total) = prefix_sum(pv, [("cents", True)], "c", "cum", extra=(ps,))
+    return cum, n, total
 
 
 @register(
@@ -1641,24 +1607,12 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     internals under 2^62 and the decimal budget under 10^37; each output
     is one floor-quantized division of exactly-represented integers.
 
-    Scale (r9 rewrite): NO global-order window anywhere. The r8 cut
-    ranked the customer dimension through a single-partition rank window
-    — the serialization the 30x curve measured on decile_lift_table
-    (2.97x wall for 3x data). Now the global cumulative counts come from
-    a distributed prefix-sum: range-repartition the per-value counts,
-    aggregate per-range subtotals (<= #partitions rows) to the driver,
-    and broadcast the range offsets back so each partition finishes its
-    cumulative sums locally and in parallel (`_value_prefix_counts`).
-    Every pass is partition-parallel; the only serial state is the
-    32-row offset table.
+    Scale (r9 rewrite): NO global-order window anywhere (the r8 cut
+    ranked the customer dimension through a single-partition rank
+    window). The global cumulative counts come from the distributed
+    prefix sum of `ranks.prefix_sum` (see its module docstring).
     """
-    o = load_table(spark, sf_dir, "orders")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
-    cum, n, total = _value_prefix_counts(spark, per_cust)
+    cum, n, total = _customer_cents_cum(spark, sf_dir)
     # Loud, engine-agnostic overflow guards in exact Python integers,
     # checked BEFORE either engine aggregates (the PCA overflow-budget
     # discipline). Two budgets: every BIGINT intermediate below is
@@ -1966,20 +1920,13 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (r9 rewrite): NO global-order window — the r8 ntile cut was a
     single-partition pass over the whole customer dimension and the 30x
     curve measured it (2.97x wall for 3x data). Now the per-value
-    cumulative counts come from the distributed prefix-sum
-    (`_value_prefix_counts`: range-repartition + 32-row offset
-    broadcast), the 10 decile rank blocks are computed in closed form on
+    cumulative counts come from `ranks.prefix_sum` (see its module
+    docstring), the 10 decile rank blocks are computed in closed form on
     the driver from n alone, and one broadcast cross-join of the
     per-value rows against that 10-row spine yields every per-decile and
     cumulative sum in a single partition-parallel aggregate.
     """
-    o = load_table(spark, sf_dir, "orders")
-    per_cust = o.groupBy("o_custkey").agg(
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
-    cum, n, total = _value_prefix_counts(spark, per_cust)
+    cum, n, total = _customer_cents_cum(spark, sf_dir)
     # Loud engine-agnostic overflow guard (gini's discipline): every
     # BIGINT sum below is bounded by total_cents, and F.lit(total) must
     # itself fit int64.
@@ -2746,9 +2693,8 @@ def haar_wavelet_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # [EXT r9b] ABC / Pareto classification of parts by revenue — "which 20%
-# of the catalog is 80% of the business", via the distributed prefix-sum
-# (NO global-order window; the gini/range_partition_boundaries machinery
-# extended from cumulative counts to cumulative value sums).
+# of the catalog is 80% of the business", via the distributed prefix sum
+# weighted by revenue (NO global-order window).
 # ---------------------------------------------------------------------------
 ABC_A_PCT = 80
 ABC_B_PCT = 95
@@ -2785,7 +2731,7 @@ ABC_B_PCT = 95
                  AS revenue_share
         FROM classed GROUP BY abc_class
     """,
-    doc=f"ABC inventory classification: parts ranked by descending revenue, class A = the head covering {ABC_A_PCT}% of cumulative revenue, B to {ABC_B_PCT}%, C the tail — cumulative sums via the distributed prefix-sum (range-repartition + 32-row offset broadcast), classification as pure integer comparisons.",
+    doc=f"ABC inventory classification: parts ranked by descending revenue, class A = the head covering {ABC_A_PCT}% of cumulative revenue, B to {ABC_B_PCT}%, C the tail — cumulative sums via the distributed prefix sum (ranks.prefix_sum), classification as pure integer comparisons.",
     tags=("relational", "statistics", "ext", "scale"),
 )
 def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2797,39 +2743,22 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boundary part lands identically on both engines.
 
     Scale: per-part cents is one map-side-combinable fact aggregate.
-    The global cumulative sum NEVER runs a global-order window (the
-    serialization the 30x curves measured): `_value_prefix_counts`'s
-    machinery extended to weighted sums — range-repartition the per-value
-    rows on DESCENDING cents, reduce each range to one (count, sum)
-    subtotal, broadcast the <=32-row running-offset table back, finish
-    cumulative sums partition-locally, and resolve ties (same cents,
-    different part) with a rank window PARTITIONED BY cents (tie blocks,
+    The global cumulative revenue over DESCENDING cents never runs a
+    global-order window: it is a `ranks.prefix_sum` over the per-value
+    rows (see its module docstring), and ties (same cents, different
+    part) resolve with a rank window PARTITIONED BY cents (tie blocks,
     never the dimension). Output is 3 rows at any scale.
     """
+    from .ranks import prefix_sum
+
     li = load_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.sum(F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long"))
         .cast("long")
         .alias("cents")
     )
-    pv = per_part.groupBy("cents").agg(
-        F.count(F.lit(1)).cast("long").alias("c"),
-        F.sum("cents").cast("long").alias("s"),
-    )
-    pv = (
-        pv.withColumn("v", -F.col("cents"))  # ascending v == descending cents
-        .repartitionByRange(_PREFIX_PARTS, "v")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin pid (the gini discipline)
-    )
-    stats = pv.groupBy("pid").agg(
-        F.sum("s").cast("long").alias("ps"),
-    ).collect()  # bounded: <= _PREFIX_PARTS rows
-    run, offsets = 0, []
-    for row in sorted(stats, key=lambda r: r["pid"]):
-        offsets.append((row["pid"], run))
-        run += int(row["ps"])
-    total = run
+    pv = per_part.groupBy("cents").agg(F.sum("cents").cast("long").alias("s"))
+    cum, (total,) = prefix_sum(pv, [("cents", False)], "s", "cum")
     # the classification predicates compute cum*100 and total*95 in
     # BIGINT, so the loud bound is 2^63/100 (~9.2e16), NOT 2^62 — the
     # looser guard would let a ~4000x corpus reach a mid-query ANSI
@@ -2839,14 +2768,9 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"total revenue cents {total} exceeds 2^63/100 (the cum*100 "
             "classification predicate's BIGINT budget); pre-scale cents"
         )
-    offsets_df = spark.createDataFrame(offsets or [], "pid int, off long")
-    wloc = Window.partitionBy("pid").orderBy("v")
-    cum_val = pv.join(F.broadcast(offsets_df), "pid").select(
-        "cents",
-        # inclusive cumulative revenue of all value blocks STRICTLY ABOVE
-        # this cents value (exclusive of the block itself):
-        (F.col("off") + F.sum("s").over(wloc) - F.col("s")).alias("cum_excl"),
-    )
+    # cumulative revenue of all value blocks STRICTLY ABOVE this cents
+    # value (exclusive of the block itself)
+    cum_val = cum.select("cents", (F.col("cum") - F.col("s")).alias("cum_excl"))
     wtie = Window.partitionBy("cents").orderBy("l_partkey")
     per_key = (
         per_part.join(cum_val, "cents")

@@ -1,24 +1,29 @@
-"""Distributed global row ranks — the parallel replacement for
-``row_number()/ntile() OVER (ORDER BY ...)`` global-order windows.
+"""Order statistics without a global sort: one distributed prefix sum.
 
-A global-ORDER window compiles to an ``Exchange SinglePartition`` + one
-sort on one task: correct, but a serialization that grows with the row
-set (the r9 30x curves measured 2.97x wall for 3x data on exactly this
-shape). ``global_row_ranks`` produces the identical 1-based global rank
-with every data-proportional pass partition-parallel:
+A global-ORDER window (``row_number()/ntile()/sum() OVER (ORDER BY ...)``)
+compiles to an ``Exchange SinglePartition`` + one sort on one task:
+correct, but a serialization that grows with the row set (the r9 30x
+curves measured 2.97x wall for 3x data on exactly this shape).
+``prefix_sum`` produces the identical running sum with every
+data-proportional pass partition-parallel:
 
 1. ``repartitionByRange`` on the order spec, so ascending partition ids
-   hold ascending key ranges (ties impossible when the spec ends in a
-   unique tiebreak column — the callers' contract);
-2. pin the partition assignment with an eager ``localCheckpoint`` —
-   BOTH consumers (the per-partition counts collect and the returned
-   plan) must see the same pid, the topk.py:460 / decision_support
-   ``_value_prefix_counts`` discipline;
-3. count rows per partition, collect those <= ``num_parts`` rows, and
-   prefix-sum them on the driver (the only serial state: a 32-row
-   offset table);
-4. broadcast the offsets back; each partition finishes its ranks
-   locally with a pid-local ``row_number`` window.
+   hold ascending key ranges (equal keys never straddle a boundary), and
+   pin the partition id with one eager ``localCheckpoint`` — BOTH
+   consumers (the subtotal collect and the returned plan) must see the
+   same pid;
+2. one aggregate collects the per-partition subtotals (<= ``RANK_PARTS``
+   rows); caller totals ride the same collect (``extra``);
+3. the driver prefix-sums the subtotals into per-partition offsets and
+   passes them back as a literal ``create_map`` — the only serial state
+   is that <= 32-entry map;
+4. each partition finishes its running sums locally with a pid-local
+   window, plus its offset.
+
+Every order-statistics op runs on it: ``global_row_ranks`` (weight 1;
+``row_ids_distributed``), ``ntile_frontiers`` (per-value counts;
+``customer_rfm_segments``, ``quality_tiers``), and the gini / decile-lift
+/ ABC-Pareto ops of ``decision_support`` (per-value counts or revenue).
 
 ``ntile_from_rank`` then turns a global rank into the exact
 ``ntile(k)`` bucket in closed form (first ``n mod k`` buckets hold
@@ -29,7 +34,7 @@ Fault tolerance (the 100 TB deployment note): the partition-id pin is
 an eager ``localCheckpoint``, which stores blocks on executors WITHOUT
 lineage — on a real cluster, losing an executor after the checkpoint
 invalidates its blocks and FAILS THE JOB LOUDLY (it can never produce a
-silently wrong rank, because both consumers read the same materialized
+silently wrong sum, because both consumers read the same materialized
 blocks or none). The recovery story is job restart, the same contract
 as any non-replicated cache; a deployment that needs to survive
 executor loss mid-query swaps ``localCheckpoint`` for a reliable
@@ -39,8 +44,8 @@ Null contract: the order/value columns must be NON-NULL. SQL engines
 disagree on NULL placement (NULLS FIRST vs LAST defaults differ), and a
 NULL value collapses the frontier comparisons (`ntile_score_expr`'s
 ``>``/``=`` yield NULL → tile 1 regardless of direction), so
-``ntile_frontiers`` raises on any NULL in ``value_col`` — detected for
-free inside the per-value stats aggregate. Callers null-filter or
+``ntile_frontiers`` raises on any NULL in ``value_col`` — counted for
+free in the prefix sum's subtotal collect. Callers null-filter or
 coalesce first (tokens() is null-safe; the RFM axes are
 aggregate-derived, never NULL).
 """
@@ -50,10 +55,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-RANK_PARTS = 32
+RANK_PARTS = 32  # range partitions — one per core locally, thousands on a cluster
 
 # A tie block whose row count exceeds this routes through a per-block
-# `global_row_ranks` pass (three small distributed jobs) instead of the
+# `global_row_ranks` pass (a few small distributed jobs) instead of the
 # batched single-window probe: the window partitions BY VALUE, so one
 # pathological value holding a constant fraction of the corpus would
 # serialize its probe into one task. 4M (value, tiebreak) pairs ≈ 64 MB
@@ -66,52 +71,66 @@ TIE_BLOCK_TASK_ROWS = 4_000_000
 _fallback_block_probes = 0
 
 
+def prefix_sum(
+    df: DataFrame,
+    order_spec: list[tuple[str, bool]],
+    weight: str | Column,
+    out: str,
+    extra: tuple[Column, ...] = (),
+) -> tuple[DataFrame, tuple[int, ...]]:
+    """Append ``out`` = ``sum(weight) OVER (ORDER BY order_spec)`` (the
+    default RANGE frame: tied rows share one sum) to every row of ``df``
+    without a single-partition sort — the module docstring's four steps.
+    ``order_spec`` is [(column, ascending), ...]; ``extra`` holds
+    additive aggregates (sums, counts) that ride the same subtotal
+    collect, their per-partition values summed into exact totals.
+
+    Returns ``(frame, (total, *extra_totals))`` with exact Python ints:
+    they feed closed-form ntile math and loud overflow guards.
+    """
+    sort_cols = [
+        F.col(c).asc() if asc else F.col(c).desc() for c, asc in order_spec
+    ]
+    w = F.col(weight) if isinstance(weight, str) else weight
+    pdf = (
+        df.repartitionByRange(RANK_PARTS, *sort_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)  # pin pid: both consumers must agree
+    )
+    stats = sorted(
+        pdf.groupBy("__pid")
+        .agg(F.sum(w).cast("long"), *extra)
+        .collect()
+    )  # bounded: one row per range partition (<= RANK_PARTS)
+    run, offsets = 0, []
+    for row in stats:
+        offsets += [F.lit(row[0]), F.lit(run).cast("long")]
+        run += int(row[1])
+    totals = (run,) + tuple(
+        sum(int(row[2 + i]) for row in stats) for i in range(len(extra))
+    )
+    off = F.lit(0)
+    if offsets:
+        off = F.element_at(F.create_map(*offsets), F.col("__pid"))
+    wloc = Window.partitionBy("__pid").orderBy(*sort_cols)
+    summed = pdf.withColumn(out, (off + F.sum(w).over(wloc)).cast("long"))
+    return summed.drop("__pid"), totals
+
+
 def global_row_ranks(
     spark: SparkSession,
     df: DataFrame,
     order_spec: list[tuple[str, bool]],
     rank_col: str = "rnk",
-    num_parts: int = RANK_PARTS,
 ) -> tuple[DataFrame, int]:
     """Append the 1-based GLOBAL rank of every row under the total order
     ``order_spec`` ([(column, ascending), ...] — must end in a unique
-    tiebreak column so the order is total) without a single-partition
-    sort. Returns ``(df_with_rank, n_rows)``; ``n_rows`` is an exact
-    Python int (it feeds closed-form ntile math and overflow guards).
-
-    Order columns should be NON-NULL (callers' contract): Spark's range
-    partitioner and row_number place NULLs consistently with each other,
-    but cross-engine NULL ordering differs — see the module docstring.
+    tiebreak column so the order is total): a ``prefix_sum`` of weight 1.
+    Returns ``(df_with_rank, n_rows)``; ``n_rows`` is an exact Python
+    int. Order columns should be NON-NULL (module docstring).
     """
-    sort_cols = [
-        F.col(c).asc() if asc else F.col(c).desc() for c, asc in order_spec
-    ]
-    pdf = (
-        df.repartitionByRange(num_parts, *sort_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin pid: both consumers must agree
-    )
-    stats = (
-        pdf.groupBy("__pid")
-        .agg(F.count(F.lit(1)).cast("long").alias("pc"))
-        .collect()
-    )  # bounded: one row per range partition (<= num_parts)
-    run = 0
-    offsets = []
-    for row in sorted(stats, key=lambda r: r["__pid"]):
-        offsets.append((row["__pid"], run))
-        run += int(row["pc"])
-    offsets_df = spark.createDataFrame(offsets or [], "__pid int, __off long")
-    wloc = Window.partitionBy("__pid").orderBy(*sort_cols)
-    ranked = (
-        pdf.join(F.broadcast(offsets_df), "__pid")
-        .withColumn(
-            rank_col,
-            (F.col("__off") + F.row_number().over(wloc)).cast("long"),
-        )
-        .drop("__pid", "__off")
-    )
-    return ranked, run
+    ranked, (n,) = prefix_sum(df, order_spec, F.lit(1), rank_col)
+    return ranked, n
 
 
 def ntile_frontiers(
@@ -121,7 +140,6 @@ def ntile_frontiers(
     asc: bool,
     tiebreak_col: str,
     k: int,
-    num_parts: int = RANK_PARTS,
     tie_block_task_rows: int | None = None,
 ) -> tuple[int, list[tuple]]:
     """Exact ``ntile(k)`` FRONTIERS of ``df`` under the total order
@@ -130,8 +148,7 @@ def ntile_frontiers(
 
     1. one map-side-combinable per-value count aggregate (the value
        domain, usually far smaller than the row set);
-    2. a distributed prefix-sum over that SLIM table (range-repartition,
-       pinned pids, <= num_parts-row offset collect);
+    2. a ``prefix_sum`` of the counts over that SLIM table;
     3. a <= k-1-row boundary probe (broadcast nested-loop against the
        cumulative counts);
     4. only when a boundary falls strictly INSIDE a tie block, one
@@ -158,50 +175,25 @@ def ntile_frontiers(
         # resolved at CALL time so tests (and deployments) can retune the
         # module constant and see it through the registered query paths
         tie_block_task_rows = TIE_BLOCK_TASK_ROWS
-    vorder = F.col(value_col).asc() if asc else F.col(value_col).desc()
     pv = df.groupBy(value_col).agg(
         F.count(F.lit(1)).cast("long").alias("__c")
     )
-    pv = (
-        pv.repartitionByRange(num_parts, vorder)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin pid: both consumers must agree
+    cum, (n, n_null) = prefix_sum(
+        pv,
+        [(value_col, asc)],
+        "__c",
+        "__cum",
+        # NULL detection rides the subtotal collect — zero extra jobs
+        extra=(F.sum(F.when(F.col(value_col).isNull(), F.col("__c")).otherwise(0)),),
     )
-    stats = (
-        pv.groupBy("__pid")
-        .agg(
-            F.sum("__c").cast("long").alias("pc"),
-            # NULL detection rides the same aggregate — zero extra jobs
-            F.sum(
-                F.when(F.col(value_col).isNull(), F.col("__c")).otherwise(F.lit(0))
-            )
-            .cast("long")
-            .alias("nullc"),
-        )
-        .collect()
-    )
-    n_null = sum(int(r["nullc"]) for r in stats)
     if n_null:
         raise ValueError(
             f"ntile_frontiers: {value_col} holds {n_null} NULL row(s); the "
             "frontier comparisons cannot order NULLs — filter or coalesce "
             "them first (module docstring: null contract)"
         )
-    run = 0
-    offsets = []
-    for row in sorted(stats, key=lambda r: r["__pid"]):
-        offsets.append((row["__pid"], run))
-        run += int(row["pc"])
-    n = run
     if n == 0:
         return 0, []
-    offsets_df = spark.createDataFrame(offsets, "__pid int, __off long")
-    wloc = Window.partitionBy("__pid").orderBy(vorder)
-    cum = pv.join(F.broadcast(offsets_df), "__pid").select(
-        value_col,
-        "__c",
-        (F.col("__off") + F.sum("__c").over(wloc)).cast("long").alias("__cum"),
-    )
     q, r = divmod(n, k)
     # one boundary per tile edge t = 1..k-1 (duplicates legitimate when
     # n < k: equal frontiers are counted once per edge by the scorer)
@@ -235,7 +227,7 @@ def ntile_frontiers(
     # block larger than `tie_block_task_rows` (a pathological value
     # holding a constant fraction of the corpus would serialize its one
     # probe window into one task) routes through a per-block
-    # `global_row_ranks` pass instead — same answer, three small
+    # `global_row_ranks` pass instead — same answer, a few small
     # distributed jobs for that block (automatic skew fallback, r11).
     need = {}
     thresholds: dict[tuple, object] = {}
@@ -249,8 +241,7 @@ def ntile_frontiers(
                 value_col, tiebreak_col
             )
             ranked, n_blk = global_row_ranks(
-                spark, block, [(tiebreak_col, True)], rank_col="__r",
-                num_parts=num_parts,
+                spark, block, [(tiebreak_col, True)], rank_col="__r"
             )
             if n_blk != c:
                 raise RuntimeError(

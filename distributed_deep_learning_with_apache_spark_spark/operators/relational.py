@@ -974,9 +974,6 @@ def bloom_semijoin_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # [EXT r5] Dense global row ids WITHOUT a single-reducer sort
 # ---------------------------------------------------------------------------
-ROWID_PARTS = 32  # range partitions — one per core locally, thousands on a cluster
-
-
 @register(
     "row_ids_distributed",
     oracle="""
@@ -984,67 +981,29 @@ ROWID_PARTS = 32  # range partitions — one per core locally, thousands on a cl
                CAST(row_number() OVER (ORDER BY o_orderkey) AS BIGINT) AS row_id
         FROM orders
     """,
-    doc="Dense 1..N row ids in key order with no SinglePartition sort: range partition, per-partition counts, offset map, local row_number.",
+    doc="Dense 1..N row ids in key order with no SinglePartition sort: a distributed prefix sum of weight 1 (ranks.global_row_ranks).",
     tags=("relational", "ext", "scale"),
 )
 def row_ids_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``row_number() OVER (ORDER BY key)`` — the naive form funnels the
     ENTIRE table through one reducer (Catalyst plans a SinglePartition
     exchange for an un-partitioned window), the classic scale cliff when
-    assigning training-example ids at 100 TB. The distributed form:
-
-    1. ``repartitionByRange(key)`` — N-way range exchange; partition i
-       holds a contiguous key interval, so partition order == key order
-       (equal keys can't straddle a range boundary).
-    2. per-partition row counts — a 32-row aggregate.
-    3. prefix-sum offsets over that bounded table, shipped back as a
-       literal CASE map (≤ ROWID_PARTS entries — driver-side metadata the
-       same way PQ codebooks are, never the data).
-    4. ``row_number() OVER (PARTITION BY pid ORDER BY key)`` + offset —
-       every partition numbers independently in parallel.
+    assigning training-example ids at 100 TB. The distributed form is
+    `ranks.global_row_ranks` (a prefix sum of weight 1; see the ranks
+    module docstring): every pass is partition-parallel and the only
+    serial state is a <= 32-entry offset map.
 
     The executed plan must contain NO SinglePartition exchange
     (tests/test_r5_new_ops.py gates it); the oracle is the naive global
     form, so the hash check proves the two are identical. Requires a
-    unique key (o_orderkey here) — ties across a boundary can't happen,
-    ties within a window would make ids nondeterministic.
+    unique key (o_orderkey here) — ties within the order would make ids
+    nondeterministic.
     """
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    ranged = orders.repartitionByRange(ROWID_PARTS, "o_orderkey").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    ranged = ranged.persist()
-    counts = sorted(
-        (r["pid"], r["cnt"])
-        for r in ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid, cnt in counts:
-        offsets[pid] = acc
-        acc += cnt
-    if not offsets:
-        ranged.unpersist()
-        return spark.createDataFrame([], "o_orderkey long, row_id long")
-    off_expr = F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-        F.col("pid"),
-    )
-    from pyspark.sql import Window
+    from .ranks import global_row_ranks
 
-    local = Window.partitionBy("pid").orderBy("o_orderkey")
-    out = ranged.select(
-        "o_orderkey",
-        (F.row_number().over(local) + off_expr).cast("long").alias("row_id"),
-    )
-    # Materialize while `ranged` is still cached, then release it.
-    # localCheckpoint (not persist): checkpoint blocks are freed by the
-    # ContextCleaner once the frame is unreferenced, whereas an unmatched
-    # persist() pins an InMemoryRelation in the CacheManager for the life
-    # of the session — a leak across a 240-query driver sweep.
-    out = out.localCheckpoint(eager=True)
-    ranged.unpersist()
-    return out
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
+    ranked, _n = global_row_ranks(spark, orders, [("o_orderkey", True)], "row_id")
+    return ranked
 
 
 # ---------------------------------------------------------------------------

@@ -7,8 +7,6 @@ standard relational set-op family the oracle harness can exercise.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -325,18 +323,11 @@ def segment_nation_rollcall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # histogram narrowing (the classic distributed exact-median algorithm).
 # ---------------------------------------------------------------------------
 QT_TARGETS = (0.5, 0.9, 0.99)
-# Histogram resolution per narrowing pass. Resolved order statistics are
-# EXACT regardless of bin count — bins only trade pass count against
-# per-pass shuffle rows. r13 A/B at sf0.1 (same process, warm, min-of-3,
-# two interleaved rounds): 4096 bins LOST locally (global 2.3-3.4 s ->
-# 4.0-4.2 s, grouped 3.7-4.9 s -> 6.0-7.7 s; the wider partial-aggregate
-# output dominates when the scan is cheap), so the local default stays
-# 256. At 100 TB the trade inverts — 1.6e13 rows narrow below QT_COLLECT
-# in 3 passes at 4096 bins vs 4 at 256, saving one full corpus scan for
-# ~16x more (still KB-per-task) shuffle rows — so production sets
-# SPARK_GRAFT_QT_BINS=4096 (env-parameterised, guide §2.2/§1.2; local
-# default unchanged keeps the bench comparable).
-QT_BINS = int(os.environ.get("SPARK_GRAFT_QT_BINS", "256"))
+# Histogram bins per narrowing pass: resolved order statistics are exact
+# at any bin count. 4096 bins would save one full scan only at 100 TB
+# (1.6e13 rows narrow below QT_COLLECT in 3 passes instead of 4); locally
+# its wider partial aggregates lost (r13 A/B at sf0.1).
+QT_BINS = 256
 QT_COLLECT = 4096  # candidate count below which we collect and index
 
 
@@ -442,45 +433,26 @@ def exact_order_statistics(
         gmin, gmax = minmax
     else:
         gmin, gmax = li.agg(F.min("v"), F.max("v")).first()
-    # Per order-statistic narrowing state: candidate values live in
-    # [lo, hi] (inclusive, actual values), `off` rows of the global sort
-    # order precede the candidate set, `cnt` candidates remain.
     state = {
-        k: {"lo": float(gmin), "hi": float(gmax), "off": 0, "cnt": int(n)}
+        k: {"k": k, "lo": float(gmin), "hi": float(gmax), "off": 0, "cnt": int(n)}
         for k in need
     }
-    resolved: dict[int, float] = {}
-    passes = 0
-    for _pass in range(64):  # hard bound; loop exits in 2-4 passes
-        live, small = {}, {}
-        for k, s in state.items():
-            if k in resolved:
-                continue
-            if s["lo"] == s["hi"]:
-                resolved[k] = s["lo"]
-            elif s["cnt"] <= QT_COLLECT:
-                small[k] = s
-            else:
-                live[k] = s
-        if small:
-            # ONE batched scan gathers ALL small candidate sets (r13,
-            # guide §2.4 — the per-rank collect was a full scan PER
-            # order statistic, up to 6 scans for 3 quantiles; the
-            # grouped engine already batched this). The union-of-
-            # intervals filter returns exactly the rows each per-rank
-            # between() would have; per-rank membership is re-applied
-            # driver-side over <= len(small) x QT_COLLECT values, so
-            # every resolved value is identical to the per-rank form.
-            cond = None
-            for lo, hi in sorted({(s["lo"], s["hi"]) for s in small.values()}):
-                c = F.col("v").between(lo, hi)
-                cond = c if cond is None else (cond | c)
-            got = [r.v for r in li.filter(cond).collect()]
-            for k, s in small.items():
-                vals = sorted(v for v in got if s["lo"] <= v <= s["hi"])
-                resolved[k] = float(vals[k - s["off"]])
-        if not live:
-            break
+
+    def small_pass(small: dict) -> list:
+        # ONE batched scan gathers ALL small candidate sets (r13, guide
+        # §2.4): the union-of-intervals filter returns exactly the rows
+        # each per-rank between() would have; per-rank membership is
+        # re-applied driver-side over <= len(small) x QT_COLLECT values.
+        cond = None
+        for lo, hi in sorted({(s["lo"], s["hi"]) for s in small.values()}):
+            c = F.col("v").between(lo, hi)
+            cond = c if cond is None else (cond | c)
+        got = [r.v for r in li.filter(cond).collect()]
+        return [
+            (k, v) for k, s in small.items() for v in got if s["lo"] <= v <= s["hi"]
+        ]
+
+    def hist_pass(live: dict) -> list:
         structs = []
         for k, s in sorted(live.items()):
             w = (s["hi"] - s["lo"]) / QT_BINS
@@ -499,7 +471,6 @@ def exact_order_statistics(
                     ),
                 )
             )
-        passes += 1
         hist = (
             li.select(F.explode(F.array(*structs)).alias("s"))
             .filter(F.col("s").isNotNull())
@@ -511,11 +482,44 @@ def exact_order_statistics(
             )
             .collect()
         )
-        by_k: dict[int, list] = {}
-        for r in hist:
-            by_k.setdefault(r.kid, []).append(r)
-        for k, rows in by_k.items():
-            s, rel, cum = state[k], k - state[k]["off"], 0
+        return [(r.kid, r) for r in hist]
+
+    return _narrow(state, small_pass, hist_pass)
+
+
+def _narrow(state: dict, small_pass, hist_pass) -> tuple[dict, int]:
+    """The driver-side narrowing loop both engines share. Each ``state``
+    entry is one order statistic: its 0-based rank ``k``, the candidate
+    value interval ``[lo, hi]`` (inclusive, actual values), the ``off``
+    rows of its population's sort order that precede the candidates, and
+    the ``cnt`` candidates left. Each round sorts every statistic into
+    resolved (``lo == hi``), small (``cnt <= QT_COLLECT``: one Spark pass,
+    ``small_pass``, collects its candidates as (key, value) pairs to be
+    indexed) or live; ``hist_pass`` histograms the live ones in one Spark
+    pass as (key, row with bin/cnt/mn/mx) pairs, and each statistic walks
+    its sorted bins to the one holding its rank, which becomes its new
+    state. Returns ``({key: value}, histogram passes)``."""
+    resolved: dict = {}
+    for passes in range(64):  # hard bound; loop exits in 2-4 passes
+        live, small = {}, {}
+        for key, s in state.items():
+            if key in resolved:
+                continue
+            if s["lo"] == s["hi"]:
+                resolved[key] = s["lo"]
+            elif s["cnt"] <= QT_COLLECT:
+                small[key] = s
+            else:
+                live[key] = s
+        if small:
+            got = _by_key(small_pass(small))
+            for key, s in small.items():
+                resolved[key] = float(sorted(got[key])[s["k"] - s["off"]])
+        if not live:
+            return resolved, passes
+        for key, rows in _by_key(hist_pass(live)).items():
+            s, cum = state[key], 0
+            rel = s["k"] - s["off"]
             for r in sorted(rows, key=lambda r: r.bin):
                 if rel < cum + r.cnt:
                     s["off"] += cum
@@ -524,10 +528,15 @@ def exact_order_statistics(
                     break
                 cum += r.cnt
             else:  # pragma: no cover - counts always cover the rank
-                raise AssertionError(f"rank {k} not found in histogram")
-    else:  # pragma: no cover
-        raise AssertionError("quantile narrowing did not converge")
-    return resolved, passes
+                raise AssertionError(f"rank {key} not found in histogram")
+    raise AssertionError("quantile narrowing did not converge")  # pragma: no cover
+
+
+def _by_key(pairs) -> dict:
+    out: dict = {}
+    for key, x in pairs:
+        out.setdefault(key, []).append(x)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -571,42 +580,22 @@ def exact_grouped_order_statistics(
             continue
         mn, mx, n = gstats[g]
         for k in ranks:
-            state[(g, k)] = {"lo": mn, "hi": mx, "off": 0, "cnt": n}
-    resolved: dict = {}
-    passes = 0
-    for _pass in range(64):
-        live, small = {}, {}
-        for key, s in state.items():
-            if key in resolved:
-                continue
-            if s["lo"] == s["hi"]:
-                resolved[key] = s["lo"]
-            elif s["cnt"] <= QT_COLLECT:
-                small[key] = s
-            else:
-                live[key] = s
-        if small:
-            # One batched pass gathers ALL small candidate sets (bounded:
-            # <= len(small) x QT_COLLECT rows).
-            srows = [
-                (g, float(k), s["lo"], s["hi"]) for (g, k), s in small.items()
-            ]
-            sdf = spark.createDataFrame(srows, "g string, k double, lo double, hi double")
-            got = (
-                df.join(F.broadcast(sdf), "g")
-                .filter(F.col("v").between(F.col("lo"), F.col("hi")))
-                .select("g", "k", "v")
-                .collect()
-            )
-            vals: dict = {}
-            for r in got:
-                vals.setdefault((r.g, int(r.k)), []).append(r.v)
-            for key, s in small.items():
-                vs = sorted(vals[key])
-                resolved[key] = float(vs[key[1] - s["off"]])
-        if not live:
-            break
-        passes += 1
+            state[(g, k)] = {"k": k, "lo": mn, "hi": mx, "off": 0, "cnt": n}
+
+    def small_pass(small: dict) -> list:
+        # One batched pass gathers ALL small candidate sets (bounded:
+        # <= len(small) x QT_COLLECT rows).
+        srows = [(g, float(k), s["lo"], s["hi"]) for (g, k), s in small.items()]
+        sdf = spark.createDataFrame(srows, "g string, k double, lo double, hi double")
+        got = (
+            df.join(F.broadcast(sdf), "g")
+            .filter(F.col("v").between(F.col("lo"), F.col("hi")))
+            .select("g", "k", "v")
+            .collect()
+        )
+        return [((r.g, int(r.k)), r.v) for r in got]
+
+    def hist_pass(live: dict) -> list:
         lrows = [
             (g, float(k), s["lo"], s["hi"], (s["hi"] - s["lo"]) / QT_BINS)
             for (g, k), s in live.items()
@@ -637,24 +626,9 @@ def exact_grouped_order_statistics(
             )
             .collect()
         )
-        by_key: dict = {}
-        for r in hist:
-            by_key.setdefault((r.g, int(r.k)), []).append(r)
-        for key, rows in by_key.items():
-            s = state[key]
-            rel, cum = key[1] - s["off"], 0
-            for r in sorted(rows, key=lambda r: r.bin):
-                if rel < cum + r.cnt:
-                    s["off"] += cum
-                    s["cnt"] = int(r.cnt)
-                    s["lo"], s["hi"] = float(r.mn), float(r.mx)
-                    break
-                cum += r.cnt
-            else:  # pragma: no cover - counts always cover the rank
-                raise AssertionError(f"rank {key} not found in histogram")
-    else:  # pragma: no cover
-        raise AssertionError("grouped quantile narrowing did not converge")
-    return resolved, passes
+        return [((r.g, int(r.k)), r) for r in hist]
+
+    return _narrow(state, small_pass, hist_pass)
 
 
 @register(

@@ -58,25 +58,34 @@ def register(
 # Rotation (r12 verdict #8: keep the oracle-heavy mix now that every
 # lifecycle op holds an execution row — >=46 of the 50 slots produce a
 # hash verdict): (a) the latest changed-code oracle-bearing names lead
-# (the standing re-earn rule), then (b) the r13 changed-code ones,
+# (the standing re-earn rule), then (a') the previous change sets,
 # (c) exactly 4 rows-only slots for the lifecycle ops whose layouts the
 # r13 IVF re-baseline rebuilt, then (d)/(e) the names the r12 rotation
 # displaced — the r6 tail that sat at slot 51+ plus PERF_r12's
 # queries_dropped list (all held prior green rows; displacement, not
 # removal).
 # Rows-only names appear only under (c), where a fresh execution row is
-# the point; every (a)/(b)/(d)/(e) slot produces a hash verdict.
+# the point; every (a)/(a')/(d)/(e) slot produces a hash verdict.
 # Regenerate this list each round from the CORRECTNESS_r* latest-row map.
 _DRIVER_PRIORITY = [
     # --- (a) oracle-bearing queries whose code changed last, re-earned
-    # first: the binary-file kernels now on one row map and one copy of
-    # each codec (2) --------------------------------------------------
+    # first: the order-statistics ops now on one distributed prefix sum
+    # (ranks.prefix_sum) and one quantile narrowing loop (9) ----------
+    "row_ids_distributed",
+    "gini_revenue_concentration",
+    "decile_lift_table",
+    "abc_pareto_classification",
+    "customer_rfm_segments",
+    "quality_tiers",
+    "quantile_two_pass_exact",
+    "grouped_quantile_exact",
+    "mad_price_outliers",
+    # --- (a') the previous two change sets: the binary-file kernels on
+    # one row map, the five mergeable-state stream folds (one stage →
+    # fold → drain → publish path), four source_*_agg round-trips and
+    # three lake ops (14) -------------------------------------------
     "multimodal_frame_sample",
     "source_avro_events_agg",
-    # --- (a') the previous change set: the five mergeable-state stream
-    # folds (one stage → fold → drain → publish path), four source_*_agg
-    # round-trips and three lake ops (scratch dirs now removed on
-    # failure too) (12) ----------------------------------------------
     "stream_foreachbatch_merge",
     "stream_exactly_once_merge_restart",
     "stream_kmv_distinct_running",
@@ -89,12 +98,6 @@ _DRIVER_PRIORITY = [
     "lake_partition_pruned_revenue",
     "lake_schema_evolution",
     "lake_dynamic_partition_overwrite",
-    # --- (b) r13 OPTIMIZATION round: oracle-bearing queries whose
-    # EXECUTED code changed (quantile-engine job-count cuts) — the
-    # standing changed-code re-earn rule, hash-verified first (3) ----
-    "quantile_two_pass_exact",
-    "grouped_quantile_exact",
-    "mad_price_outliers",
     # --- (c) r13 changed rows-only: the IVF coarse-quantizer
     # re-baseline (VERDICT r12 #4) rebuilt these lifecycle ops'
     # layouts; a fresh driver execution row re-earns them. The other
@@ -107,9 +110,8 @@ _DRIVER_PRIORITY = [
     "ann_ivf_delete_serve",
     "ann_ivf_compact_tombstones",
     # --- (d) the r6 re-confirmation tail displaced by the r12
-    # rotation (sat at slot 51+ last round) (10) ---------------------
+    # rotation (sat at slot 51+ last round) (9) ----------------------
     "range_join_events_after_order",
-    "row_ids_distributed",
     "shortest_paths_bfs",
     "sink_custom_writer_roundtrip",
     "sql_pipe_syntax",
@@ -120,7 +122,7 @@ _DRIVER_PRIORITY = [
     "zipf_fit",
     # --- (e) displaced r12 re-confirmations: the PERF_r12
     # queries_dropped list (driver-rotation displacement, all with
-    # prior green rows), alphabetical; first 19 fill the 50 ----------
+    # prior green rows), alphabetical; first 14 fill the 50 ----------
     "ann_matryoshka_refine",
     "ansi_safe_doc_ratios",
     "batch_observed_metrics",
@@ -129,19 +131,18 @@ _DRIVER_PRIORITY = [
     "business_days_to_ship",
     "cdc_snapshot_diff",
     "collated_token_counts",
-    "customer_rfm_segments",
     "distinct_multi_two_phase",
     "events_ohlc_hourly",
     "events_retention_cohorts",
     "except_all_order_priorities",
     "global_agg_stats",
     "grouped_apply_in_arrow",
+    # ==== slot 51+ from here: fronts the next rotation ==============
+    # --- r12-displaced remainder (26) -------------------------------
     "heavy_hitters_sketch_verified",
     "incremental_agg_maintenance",
     "intersect_all_order_priorities",
     "interval_month_overlap_revenue",
-    # ==== slot 51+ from here: fronts the next rotation ==============
-    # --- r12-displaced remainder (23) -------------------------------
     "k_anonymity_violations",
     "lake_compact_small_files",
     "lake_deletion_vectors",
@@ -156,7 +157,6 @@ _DRIVER_PRIORITY = [
     "ntile_balance_quartiles",
     "nullsafe_bucket_join",
     "percentile_band_segments",
-    "quality_tiers",
     "recursive_calendar_daily",
     "salted_join_quantity_tier",
     "segment_nation_rollcall",
