@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 
 SEED = 42
 
@@ -337,7 +337,7 @@ def ml_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         (float(pm[lr.regParam]), float(m))
         for pm, m in zip(grid, model.validationMetrics)
     ]
-    return spark.createDataFrame(rows, "regParam double, rmse double").select(
+    return local_frame(spark, rows, "regParam double, rmse double").select(
         "regParam", F.round("rmse", 6).alias("rmse")
     )
 
@@ -380,7 +380,7 @@ def ml_cross_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (float(pm[lr.regParam]), float(m)) for pm, m in zip(grid, model.avgMetrics)
     ]
-    return spark.createDataFrame(rows, "regParam double, avg_rmse double").select(
+    return local_frame(spark, rows, "regParam double, avg_rmse double").select(
         "regParam", F.round("avg_rmse", 6).alias("avg_rmse")
     )
 
@@ -557,7 +557,7 @@ def ml_fpgrowth_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_baskets = items.select("l_orderkey").distinct().count()
     if n_baskets == 0:
         # partition-pruned-to-nothing case: no baskets -> no itemsets
-        return spark.createDataFrame([], "item_a bigint, item_b bigint, freq bigint")
+        return local_frame(spark, [], "item_a bigint, item_b bigint, freq bigint")
     min_count = _fp_min_count(n_baskets)
     # Apriori prefilter: keep only items that individually clear the bar.
     freq_items = (
@@ -579,7 +579,7 @@ def ml_fpgrowth_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # freq, so the counts themselves are unaffected.)
     n_trimmed = baskets.count()
     if n_trimmed == 0:
-        return spark.createDataFrame([], "item_a bigint, item_b bigint, freq bigint")
+        return local_frame(spark, [], "item_a bigint, item_b bigint, freq bigint")
     fp = FPGrowth(
         itemsCol="items",
         # ceil(minSupport * n) == min_count: nudge below the exact
@@ -723,7 +723,8 @@ def ml_gbt_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = model.transform(test)
     r2 = RegressionEvaluator(metricName="r2").evaluate(pred)
     rmse = RegressionEvaluator(metricName="rmse").evaluate(pred)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(train.count()),
@@ -808,9 +809,7 @@ def ml_crossval_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (float(g[lr.regParam]), float(round(m, 4)), bool(g[lr.regParam] == best_reg))
         for g, m in zip(grid, model.avgMetrics)
     ]
-    return spark.createDataFrame(
-        rows, "reg_param double, avg_rmse double, is_best boolean"
-    )
+    return local_frame(spark, rows, "reg_param double, avg_rmse double, is_best boolean")
 
 
 # ---------------------------------------------------------------------------
@@ -876,14 +875,14 @@ def ml_prefixspan_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     n_users = e.select("user_id").distinct().count()
     if n_users == 0:
-        return spark.createDataFrame([], "pat_a string, pat_b string, n_users long")
+        return local_frame(spark, [], "pat_a string, pat_b string, n_users long")
     min_count = max(3, -(-n_users * PSPAN_MIN_FRAC // 1))  # ceil
     if min_count > n_users:
         # The absolute floor (3 users) is unreachable on this corpus: no
         # pattern can qualify, and PrefixSpan rejects minSupport > 1
         # (fuzz-found on a 1-user series) — same contract as the oracle's
         # n_users >= greatest(3, ...) returning zero rows.
-        return spark.createDataFrame([], "pat_a string, pat_b string, n_users long")
+        return local_frame(spark, [], "pat_a string, pat_b string, n_users long")
     seqs = (
         e.select(
             "user_id", F.struct("ts", "event_id", "event_type").alias("ev")
@@ -1097,7 +1096,7 @@ def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("say").cast("long").alias("gay"),
         F.sum("sby").cast("long").alias("gby"),
     )
-    grid = spark.createDataFrame([(g,) for g in RIDGE_GRID], "lam double")
+    grid = local_frame(spark, [(g,) for g in RIDGE_GRID], "lam double")
     tr = (
         fm.crossJoin(F.broadcast(tot))
         .crossJoin(F.broadcast(grid))

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 
 
 def _r2(c):
@@ -1939,7 +1939,8 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranks (B[d-1], B[d]] with B[d] = d*(n//10) + min(d, n%10).
     base, rem = divmod(n, 10)
     bounds = [d * base + min(d, rem) for d in range(11)]
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(d, bounds[d - 1], bounds[d]) for d in range(1, 11)],
         "decile int, lo long, hi long",
     )
@@ -2474,7 +2475,7 @@ def autocorr_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("cents").cast("long").alias("mx"),
     ).collect()[0]  # bounded: one row
     if not mrow["n"]:  # empty series: no lags, no moments (fuzz corpus)
-        return spark.createDataFrame([], "lag long, n_pairs long, acf double")
+        return local_frame(spark, [], "lag long, n_pairs long, acf double")
     n_days, s_cents, max_cents = int(mrow["n"]), int(mrow["s"]), int(mrow["mx"])
     # Loud exact-integer guard (the gini/PCA discipline): every centered
     # deviation satisfies |n*x_t - S| <= n*max_x + S (the DATA's max, not
@@ -2873,7 +2874,8 @@ def allocation_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     trow = per_nation.agg(F.sum("cents"), F.min("cents")).collect()[0]  # bounded
     if trow[0] is None:  # no orders at all (fuzz corpus): nothing to split
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "n_name string, cents long, floor_units long, extra long, "
             "alloc_units long",

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import DUCK_TOKENS, tokens
 from ..registry import register
-from ..sources.catalog import build_once, fork, keyed_root, load_table
+from ..sources.catalog import build_once, fork, keyed_root, load_table, local_frame
 from .textpipe import _widen_scan
 
 # --- shared shingle builders (Spark + DuckDB must stay in lockstep) --------
@@ -641,9 +641,7 @@ def connected_components_logstar(pairs: DataFrame) -> tuple[DataFrame, int]:
         .localCheckpoint(eager=True)
     )
     if e.limit(1).count() == 0:
-        empty = pairs.sparkSession.createDataFrame(
-            [], "doc_id long, cluster_id long"
-        )
+        empty = local_frame(pairs.sparkSession, [], "doc_id long, cluster_id long")
         return empty, 0
 
     def _converged(prev: DataFrame, prev_n: int, nxt: DataFrame, nxt_n: int) -> bool:
@@ -1427,6 +1425,15 @@ def _tombstones(d: DataFrame) -> DataFrame:
     return _history(d).filter(F.col("doc_id") % RETRACT_MOD == 0).select("doc_id")
 
 
+# The band store's tables and the retraction sidecar, read back with the
+# schema they were written with: an inferring read runs one schema job.
+STORE_SCHEMAS = {
+    "bands": "doc_id bigint, band_id string, band_val string",
+    "shingles": "doc_id bigint, hx array<bigint>",
+    "tombstones": "doc_id bigint",
+}
+
+
 def _write_store(sh: DataFrame, root: str, mode: str) -> None:
     """Write (or append) the store tables for a `_shingle_hashes` frame:
     `bands` = the LSH postings (doc_id, band_id, band_val) the probe join
@@ -1435,12 +1442,15 @@ def _write_store(sh: DataFrame, root: str, mode: str) -> None:
     sh.select("doc_id", "hx").write.mode(mode).parquet(os.path.join(root, "shingles"))
 
 
+def _read_table(spark: SparkSession, table: str, *paths: str) -> DataFrame:
+    """`paths` (a store table's dir or some of its files) read with the
+    schema of `table`."""
+    return spark.read.schema(STORE_SCHEMAS[table]).parquet(*paths)
+
+
 def _read_store(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
     """(band postings, shingle hashes) of the store at `root`."""
-    return (
-        spark.read.parquet(os.path.join(root, "bands")),
-        spark.read.parquet(os.path.join(root, "shingles")),
-    )
+    return tuple(_read_table(spark, t, os.path.join(root, t)) for t in ("bands", "shingles"))
 
 
 def build_band_index(spark: SparkSession, sf_dir: str, root: str | None = None) -> str:
@@ -1646,8 +1656,8 @@ def near_dup_index_append_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         fresh_after = _probe_new_batch(spark, sf_dir, *_read_store(spark, root)).count()
         n_batch = batch.count()
-        return spark.createDataFrame(
-            [(n_batch, fresh_after)], "n_batch long, n_fresh_after_append long"
+        return local_frame(
+            spark, [(n_batch, fresh_after)], "n_batch long, n_fresh_after_append long"
         )
 
 
@@ -1759,7 +1769,8 @@ def stream_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 q.processAllAvailable()
             finally:
                 q.stop()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(b, nd, nf, nd - nf) for b, (nd, nf) in sorted(results.items())],
             "batch_id long, n_docs long, n_fresh long, n_dup long",
         )
@@ -2004,13 +2015,13 @@ def near_dup_retract_reprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"near_dup_retract_reprobe touched store files: {rewritten[:3]} "
                 "(retraction must be sidecar-only)"
             )
-        tomb = F.broadcast(spark.read.parquet(os.path.join(side, "tombstones")))
+        tomb = F.broadcast(_read_table(spark, "tombstones", os.path.join(side, "tombstones")))
         hist_bands, hist_sh = (
             t.join(tomb, "doc_id", "left_anti") for t in _read_store(spark, root)
         )
         out = _probe_new_batch(spark, sf_dir, hist_bands, hist_sh)
         # the sidecar dir is reclaimed in finally: materialize
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(side, ignore_errors=True)
 
@@ -2069,7 +2080,7 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
         before = _walk_parquet_sizes(root)
         for sub in ("bands", "shingles"):
             path = os.path.join(root, sub)
-            full = spark.read.parquet(path)
+            full = _read_table(spark, sub, path)
             n_before = full.count()
             n_dead = full.join(F.broadcast(tomb), "doc_id", "left_semi").count()
             touched = [
@@ -2086,14 +2097,14 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             local = [urlparse(t).path if t.startswith("file:") else t for t in touched]
             live = (
-                spark.read.parquet(*local)
+                _read_table(spark, sub, *local)
                 .join(F.broadcast(tomb), "doc_id", "left_anti")
                 .localCheckpoint(eager=True)  # materialize BEFORE mutating
             )
             live.write.mode("append").parquet(path)
             for t in local:
                 os.remove(t)
-            back = spark.read.parquet(path)
+            back = _read_table(spark, sub, path)
             n_after = back.count()
             still_dead = back.join(F.broadcast(tomb), "doc_id", "left_semi").count()
             if still_dead != 0 or n_after != n_before - n_dead:
@@ -2116,4 +2127,4 @@ def near_dup_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = _new_batch(d).select("doc_id", "text")
         out = probe_band_index(spark, root, batch)  # NO overlay
         # the fork is reclaimed on exit: materialize
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 
 PR_ITERS = 10
 PR_DAMPING = 0.85
@@ -52,7 +52,7 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS, damping: float = PR_DAMPIN
     )
     n = nodes.count()
     if n == 0:
-        return spark.createDataFrame([], "node string, rank double")
+        return local_frame(spark, [], "node string, rank double")
     # Degree is static: attach it to the edge list once, outside the loop.
     ed = (
         e.join(out_deg, "src")
@@ -126,7 +126,7 @@ def pagerank_fixedpoint(
     )
     n = nodes.count()
     if n == 0:
-        return spark.createDataFrame([], "node string, rank long")
+        return local_frame(spark, [], "node string, rank long")
     ed = e.join(out_deg, "src").select("src", "dst", "deg").localCheckpoint(eager=True)
     ranks = nodes.select("node", F.lit(scale // n).cast("long").alias("rank"))
     base = (PR_D_DEN - PR_D_NUM) * scale // (PR_D_DEN * n)
@@ -421,7 +421,7 @@ def shortest_paths_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     if edges.limit(1).count() == 0:
-        return spark.createDataFrame([], "part long, dist long")
+        return local_frame(spark, [], "part long, dist long")
     sym = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=True)

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 
 
 @register(
@@ -397,7 +397,8 @@ def batch_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li.count()  # the action the metrics ride on (bounded: one pass, no collect)
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["n_rows"], m["price_cents"], m["min_qty"], m["max_qty"])],
         "n_rows long, price_cents long, min_qty double, max_qty double",
     )

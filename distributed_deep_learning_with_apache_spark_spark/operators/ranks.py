@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.catalog import literal_rows
+
 RANK_PARTS = 32  # range partitions — one per core locally, thousands on a cluster
 
 # A tie block whose row count exceeds this routes through a per-block
@@ -149,8 +151,8 @@ def ntile_frontiers(
     1. one map-side-combinable per-value count aggregate (the value
        domain, usually far smaller than the row set);
     2. a ``prefix_sum`` of the counts over that SLIM table;
-    3. a <= k-1-row boundary probe (broadcast nested-loop against the
-       cumulative counts);
+    3. a <= k-1-row boundary probe (literal rows against the cumulative
+       counts: no broadcast job);
     4. only when a boundary falls strictly INSIDE a tie block, one
        distributed rank pass over that single block to find the
        tiebreak threshold (at most k-1 such passes).
@@ -197,15 +199,10 @@ def ntile_frontiers(
     q, r = divmod(n, k)
     # one boundary per tile edge t = 1..k-1 (duplicates legitimate when
     # n < k: equal frontiers are counted once per edge by the scorer)
-    bdf = spark.createDataFrame(
-        [(t, t * q + min(t, r)) for t in range(1, k)], "t int, b long"
-    )
+    bounds = literal_rows([(t, t * q + min(t, r)) for t in range(1, k)], "t int, b long")
     hits = (
-        cum.join(
-            F.broadcast(bdf),
-            (F.col("__cum") >= F.col("b"))
-            & (F.col("__cum") - F.col("__c") < F.col("b")),
-        )
+        cum.select("*", F.inline(bounds))
+        .filter((F.col("__cum") >= F.col("b")) & (F.col("__cum") - F.col("__c") < F.col("b")))
         .select(
             "t",
             value_col,
@@ -258,9 +255,8 @@ def ntile_frontiers(
         else:
             need[(v_t, j)] = None
     if need:
-        probes = spark.createDataFrame(
-            [(v, j) for v, j in need],
-            f"__pv {df.schema[value_col].dataType.simpleString()}, __pj long",
+        probes = literal_rows(
+            list(need), f"__pv {df.schema[value_col].dataType.simpleString()}, __pj long"
         )
         wblk = Window.partitionBy(value_col).orderBy(F.col(tiebreak_col).asc())
         blocks = df.filter(
@@ -268,11 +264,8 @@ def ntile_frontiers(
         ).select(value_col, tiebreak_col)
         found = (
             blocks.withColumn("__r", F.row_number().over(wblk))
-            .join(
-                F.broadcast(probes),
-                (F.col(value_col) == F.col("__pv"))
-                & (F.col("__r") == F.col("__pj")),
-            )
+            .select("*", F.inline(probes))
+            .filter((F.col(value_col) == F.col("__pv")) & (F.col("__r") == F.col("__pj")))
             .select("__pv", "__pj", tiebreak_col)
             .collect()
         )

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.arrays import as_double, cosine, dot, squared_error
 from ..registry import register
-from ..sources.catalog import build_once, fork, keyed_root, load_table
+from ..sources.catalog import build_once, fork, keyed_root, load_table, local_frame
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
@@ -556,7 +556,8 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _assign_cells(spark, e, cent).select("vec_id", "v", "cell")
     # Centroids are model metadata (k×dim doubles) — a broadcastable tiny dim
     # table, NOT a data-dependent collect.
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
         "cell int, cv array<double>",
     )
@@ -664,6 +665,21 @@ def ann_ivf_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 IVF_INDEX_ROOT = "/tmp/ddl_spark_ivf_index_v1"
 
+# The persisted IVF store's layouts (`cell` is the assignments' partition
+# column). Reading a table back with the schema it was written with runs
+# no schema-inference job.
+IVF_SCHEMAS = {
+    "assignments": "vec_id bigint, v array<double>, cell int",
+    "centroids": "cell int, cv array<double>",
+}
+
+
+def read_ivf(spark: SparkSession, root: str, table: str) -> DataFrame:
+    """One table of the IVF store at `root`, read with its schema."""
+    import os
+
+    return spark.read.schema(IVF_SCHEMAS[table]).parquet(os.path.join(root, table))
+
 
 def build_ivf_index(
     spark: SparkSession,
@@ -708,9 +724,7 @@ def build_ivf_index(
         # The centroid table is KB-sized driver-resident metadata; writing it
         # through a Spark job cost 0.7-2.4 s of pure scheduling per build
         # (r13; guide §2.6 — same driver-side pyarrow pattern as the r12
-        # stream sentinel staging). Schema parity with the old Spark write:
-        # cell int32, cv list<double> — consumers spark.read.parquet it
-        # unchanged.
+        # stream sentinel staging). Its layout is IVF_SCHEMAS["centroids"].
         os.makedirs(os.path.join(stage, "centroids"), exist_ok=True)
         pq_.write_table(
             pa.table(
@@ -744,11 +758,9 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     index directories are read at all. This is the at-scale I/O shape:
     index build amortized, per-query work ∝ probed cells, scan skips the
     rest of the corpus on disk, not just in memory."""
-    import os
-
     root = build_ivf_index(spark, sf_dir)
-    assigned = spark.read.parquet(os.path.join(root, "assignments"))
-    centroids = spark.read.parquet(os.path.join(root, "centroids"))
+    assigned = read_ivf(spark, root, "assignments")
+    centroids = read_ivf(spark, root, "centroids")
     return _ivf_probe_topk(assigned, centroids)
 
 
@@ -786,7 +798,7 @@ def append_ivf_index(spark: SparkSession, root: str, batch: DataFrame) -> None:
     arbitrary cell — silent index corruption."""
     import os
 
-    centroids = spark.read.parquet(os.path.join(root, "centroids"))
+    centroids = read_ivf(spark, root, "centroids")
     w = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cell").asc())
     assigned = (
         _vectors(batch, "append_ivf_index")
@@ -833,7 +845,6 @@ def ann_ivf_append_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids; the 14 s full rebuild (`ann_ivf_pq_build`) drops out of
     the steady-state ingest path entirely.
     """
-    import os
     import shutil
     import tempfile
 
@@ -854,7 +865,7 @@ def ann_ivf_append_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"ann_ivf_append_batch rewrote existing index files: "
                 f"{rewritten[:3]} (append-only contract)"
             )
-        assigned = spark.read.parquet(os.path.join(root, "assignments"))
+        assigned = read_ivf(spark, root, "assignments")
         n_batch = batch.count()
         n_found = assigned.join(
             batch.select("vec_id"), "vec_id", "left_semi"
@@ -864,10 +875,10 @@ def ann_ivf_append_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"ann_ivf_append_batch lost vectors: {n_found} of {n_batch} "
                 "appended ids present in the grown index"
             )
-        centroids = spark.read.parquet(os.path.join(root, "centroids"))
+        centroids = read_ivf(spark, root, "centroids")
         out = _ivf_probe_topk(assigned, centroids)
         # the private index root is reclaimed in finally: materialize
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -919,6 +930,7 @@ def _pq_train_codebooks(e: DataFrame, seed: int = 42, iters: int = 12):
 
 
 PQ_CODES_ROOT = "/tmp/ddl_spark_pq_codes_v1"
+PQ_CODES_SCHEMA = "vec_id bigint, codes array<smallint>"  # the code store's layout
 
 
 def _pq_encode_with_books(spark: SparkSession, e: DataFrame, books) -> DataFrame:
@@ -1011,7 +1023,7 @@ def pq_encode_df(
     )
     with open(os.path.join(root, "codebooks.json")) as f:
         books = [np.asarray(b) for b in json.load(f)]
-    return spark.read.parquet(os.path.join(root, "codes")), books
+    return spark.read.schema(PQ_CODES_SCHEMA).parquet(os.path.join(root, "codes")), books
 
 
 def append_pq_codes(spark: SparkSession, root: str, batch: DataFrame) -> None:
@@ -1085,7 +1097,6 @@ def ann_ivf_pq_append_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     store. This is the steady-state ingest path of a production vector
     store — rebuild (`ann_ivf_pq_build`) drops to a maintenance-schedule
     repair, exactly like compaction."""
-    import os
     import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
@@ -1131,7 +1142,7 @@ def ann_ivf_pq_append_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{rewritten[:3]} (append-only contract)"
             )
         codes_df, _books = pq_encode_df(spark, sf_dir, root=pq_work)
-        assignments = spark.read.parquet(os.path.join(ivf_root, "assignments"))
+        assignments = read_ivf(spark, ivf_root, "assignments")
         # The three completeness counts (batch size + the two read-back
         # semi-joins) are independent scans; overlap them the same way.
         with ThreadPoolExecutor(max_workers=3) as pool:
@@ -1157,7 +1168,7 @@ def ann_ivf_pq_append_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ivf_pq_adc_scored(spark, sf_dir, ivf_root=ivf_root, pq_root=pq_work)
         )
         # the private store roots are reclaimed in finally: materialize
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(ivf_work, ignore_errors=True)
         shutil.rmtree(pq_work, ignore_errors=True)
@@ -1474,23 +1485,24 @@ def _ivf_pq_adc_scored(
 
     import numpy as np
 
+    import pyarrow.parquet as pq_
+
     root = ivf_root or build_ivf_index(spark, sf_dir)
-    assigned = spark.read.parquet(os.path.join(root, "assignments")).select(
-        "vec_id", "cell"
-    )
-    centroids = spark.read.parquet(os.path.join(root, "centroids"))
+    assigned = read_ivf(spark, root, "assignments").select("vec_id", "cell")
     codes_df, books = pq_encode_df(spark, sf_dir, root=pq_root)
     indexed = assigned.join(codes_df, "vec_id")  # build-time co-location
 
     queries, luts = _adc_luts(spark, sf_dir, books)
-    cents = {int(r["cell"]): np.asarray(r["cv"]) for r in centroids.collect()}
+    # The centroid table is KB-sized: read it on the driver, no Spark job.
+    cent = pq_.read_table(os.path.join(root, "centroids")).to_pydict()
+    cents = {int(c): np.asarray(v) for c, v in zip(cent["cell"], cent["cv"])}
     # Driver-side probe pick: K centroids are KB-sized and global.
     probe_rows = []
     for qid, qv in queries.items():
         d2 = sorted((float(((qv - cv) ** 2).sum()), c) for c, cv in cents.items())
         for _, c in d2[:IVF_NPROBE]:
             probe_rows.append((qid, c))
-    probes = spark.createDataFrame(probe_rows, "query_id long, qcell int")
+    probes = local_frame(spark, probe_rows, "query_id long, qcell int")
     bc = spark.sparkContext.broadcast(luts)
 
     import pandas as pd
@@ -1695,15 +1707,13 @@ def ivf_silhouette_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as the index build itself; both run on the PERSISTED
     assignments, never re-fitting.
     """
-    import os
-
     from pyspark.ml.evaluation import ClusteringEvaluator
     from pyspark.ml.functions import array_to_vector
 
     root = build_ivf_index(spark, sf_dir)
     assigned = (
-        spark.read.parquet(os.path.join(root, "assignments"))
-        .select("vec_id", "v", F.col("cell").cast("int").alias("cell"))
+        read_ivf(spark, root, "assignments")
+        .select("vec_id", "v", "cell")
         .withColumn("features", array_to_vector("v"))
     )
     n = assigned.count()
@@ -1715,7 +1725,8 @@ def ivf_silhouette_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell", F.pmod(F.xxhash64("vec_id"), F.lit(IVF_K)).cast("int")
     )
     sil_random = ev.evaluate(rand)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 float(round(sil_kmeans, 6)),
@@ -2261,14 +2272,14 @@ def ann_ivf_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"ann_ivf_delete_serve touched index files: {rewritten[:3]} "
                 "(deletion must be sidecar-only)"
             )
-        tomb = spark.read.parquet(os.path.join(side, "tombstones"))
+        tomb = spark.read.schema("vec_id bigint").parquet(os.path.join(side, "tombstones"))
 
-        assigned = spark.read.parquet(os.path.join(root, "assignments"))
+        assigned = read_ivf(spark, root, "assignments")
         live = assigned.join(F.broadcast(tomb), "vec_id", "left_anti")
-        centroids = spark.read.parquet(os.path.join(root, "centroids"))
+        centroids = read_ivf(spark, root, "centroids")
         out = _ivf_probe_topk(live, centroids)
         # the sidecar dir is reclaimed in finally: materialize
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(side, ignore_errors=True)
 
@@ -2319,7 +2330,7 @@ def ann_ivf_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         n_tomb = tomb.count()
-        assigned = spark.read.parquet(os.path.join(root, "assignments"))
+        assigned = read_ivf(spark, root, "assignments")
         n_before = assigned.count()
         touched = sorted(
             r.cell
@@ -2370,7 +2381,7 @@ def ann_ivf_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"ann_ivf_compact_tombstones rewrote untouched-cell files: "
                 f"{broken[:3]} (touched-cells-only contract)"
             )
-        compacted = spark.read.parquet(os.path.join(root, "assignments"))
+        compacted = read_ivf(spark, root, "assignments")
         n_after = compacted.count()
         n_dead = compacted.join(F.broadcast(tomb), "vec_id", "left_semi").count()
         if n_dead != 0 or n_after != n_before - n_tomb:
@@ -2378,7 +2389,7 @@ def ann_ivf_compact_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"ann_ivf_compact_tombstones fold incomplete: {n_dead} dead "
                 f"rows, {n_after} of expected {n_before - n_tomb}"
             )
-        centroids = spark.read.parquet(os.path.join(root, "centroids"))
+        centroids = read_ivf(spark, root, "centroids")
         out = _ivf_probe_topk(compacted, centroids)
         # the fork is reclaimed on exit: materialize
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -471,9 +471,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in grp.groupBy("pid").agg(F.max("gmax").alias("mx")).collect()
     )
     if not pmax:
-        return spark.createDataFrame(
-            [], "p_partkey long, p_retailprice double, p_size long"
-        )
+        return local_frame(spark, [], "p_partkey long, p_retailprice double, p_size long")
     # "No cheaper partition" is represented by ABSENCE from the map (and
     # "no cheaper row in this partition" by prev_max staying NULL), not a
     # -1 sentinel: with a sentinel, any domain where the measure can reach

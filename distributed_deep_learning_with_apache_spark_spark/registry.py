@@ -59,8 +59,8 @@ def register(
 # lifecycle op holds an execution row — >=46 of the 50 slots produce a
 # hash verdict): (a) the latest changed-code oracle-bearing names lead
 # (the standing re-earn rule), then (a') the previous change sets,
-# (c) exactly 4 rows-only slots for the lifecycle ops whose layouts the
-# r13 IVF re-baseline rebuilt, then (d)/(e) the names the r12 rotation
+# (c) exactly 4 rows-only slots for the IVF lifecycle ops whose code
+# changed last, then (d)/(e) the names the r12 rotation
 # displaced — the r6 tail that sat at slot 51+ plus PERF_r12's
 # queries_dropped list (all held prior green rows; displacement, not
 # removal).
@@ -69,51 +69,59 @@ def register(
 # Regenerate this list each round from the CORRECTNESS_r* latest-row map.
 _DRIVER_PRIORITY = [
     # --- (a) oracle-bearing queries whose code changed last, re-earned
-    # first: the order-statistics ops now on one distributed prefix sum
-    # (ranks.prefix_sum) and one quantile narrowing loop (9) ----------
-    "row_ids_distributed",
-    "gini_revenue_concentration",
-    "decile_lift_table",
-    "abc_pareto_classification",
+    # first: driver-built frames became local frames, driver-held state
+    # literal rows, store reads carry their schema and the five stream
+    # folds run one aggregate per micro-batch (30) ------------------
     "customer_rfm_segments",
     "quality_tiers",
     "quantile_two_pass_exact",
     "grouped_quantile_exact",
     "mad_price_outliers",
-    # --- (a') the previous two change sets: the binary-file kernels on
-    # one row map, the five mergeable-state stream folds (one stage →
-    # fold → drain → publish path), four source_*_agg round-trips and
-    # three lake ops (14) -------------------------------------------
-    "multimodal_frame_sample",
-    "source_avro_events_agg",
     "stream_foreachbatch_merge",
     "stream_exactly_once_merge_restart",
     "stream_kmv_distinct_running",
     "stream_countmin_running",
     "stream_bitmap_distinct_running",
+    "source_avro_events_agg",
     "source_csv_orders_agg",
     "source_json_events_agg",
     "source_xml_events_agg",
     "source_orc_lineitem_agg",
+    "sink_custom_writer_roundtrip",
+    "batch_observed_metrics",
     "lake_partition_pruned_revenue",
     "lake_schema_evolution",
     "lake_dynamic_partition_overwrite",
-    # --- (c) r13 changed rows-only: the IVF coarse-quantizer
-    # re-baseline (VERDICT r12 #4) rebuilt these lifecycle ops'
-    # layouts; a fresh driver execution row re-earns them. The other
-    # re-baselined serves (ann_ivf_kmeans/persisted/adc/refined) get
-    # execution rows from the BENCH headline/tier-2 set, keeping the
-    # rows-only slot spend at 4 (VERDICT r12 #5/#8: >=46 of 50 slots
-    # oracle-bearing) (4) --------------------------------------------
+    "lake_compact_small_files",
+    "lake_vacuum_expire",
+    "lake_dpp_star_join",
+    "lake_wap_publish",
+    "lake_restore_version",
+    "lake_shallow_clone_divergence",
+    "near_dup_incremental",
+    "near_dup_index_append_cycle",
+    "near_dup_retract_reprobe",
+    "near_dup_compact_tombstones",
+    # --- (a') the rest of the previous change set: the order-statistics
+    # ops on one prefix sum, and the binary-file row map (5) ---------
+    "row_ids_distributed",
+    "gini_revenue_concentration",
+    "decile_lift_table",
+    "abc_pareto_classification",
+    "multimodal_frame_sample",
+    # --- (c) changed rows-only: the IVF lifecycle ops, whose store
+    # reads now carry their schema; a fresh driver execution row
+    # re-earns them. The other changed rows-only serves get execution
+    # rows from the BENCH headline/tier-2 set, keeping the rows-only
+    # slot spend at 4 (>=46 of 50 slots oracle-bearing) (4) ----------
     "ann_ivf_pq_append_batch",
     "ann_ivf_append_batch",
     "ann_ivf_delete_serve",
     "ann_ivf_compact_tombstones",
     # --- (d) the r6 re-confirmation tail displaced by the r12
-    # rotation (sat at slot 51+ last round) (9) ----------------------
+    # rotation (8) ---------------------------------------------------
     "range_join_events_after_order",
     "shortest_paths_bfs",
-    "sink_custom_writer_roundtrip",
     "sql_pipe_syntax",
     "text_quality",
     "tfidf_top_terms",
@@ -122,11 +130,12 @@ _DRIVER_PRIORITY = [
     "zipf_fit",
     # --- (e) displaced r12 re-confirmations: the PERF_r12
     # queries_dropped list (driver-rotation displacement, all with
-    # prior green rows), alphabetical; first 14 fill the 50 ----------
+    # prior green rows), alphabetical; the first 3 fill the 50 -------
     "ann_matryoshka_refine",
     "ansi_safe_doc_ratios",
-    "batch_observed_metrics",
     "bloom_semijoin_pruned",
+    # ==== slot 51+ from here: fronts the next rotation ==============
+    # --- r12-displaced remainder (34) -------------------------------
     "bucketed_join_revenue",
     "business_days_to_ship",
     "cdc_snapshot_diff",
@@ -137,16 +146,12 @@ _DRIVER_PRIORITY = [
     "except_all_order_priorities",
     "global_agg_stats",
     "grouped_apply_in_arrow",
-    # ==== slot 51+ from here: fronts the next rotation ==============
-    # --- r12-displaced remainder (26) -------------------------------
     "heavy_hitters_sketch_verified",
     "incremental_agg_maintenance",
     "intersect_all_order_priorities",
     "interval_month_overlap_revenue",
     "k_anonymity_violations",
-    "lake_compact_small_files",
     "lake_deletion_vectors",
-    "lake_vacuum_expire",
     "lake_zorder_recluster",
     "lake_zorder_write",
     "lateral_top3_orders",

@@ -169,7 +169,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from ..registry import register  # noqa: E402
-from .catalog import load_table  # noqa: E402
+from .catalog import load_table, local_frame  # noqa: E402
 
 
 @register(
@@ -216,6 +216,6 @@ def sink_custom_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("l_quantity"), 2).alias("total_qty"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 def prune_stale_cache_siblings(base: str, prefix: str, keep: str) -> None:
@@ -148,6 +148,68 @@ def fork(root: str):
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _arrow_value(dt: T.DataType):
+    """The per-value conversion pyarrow needs for a Spark type, or None
+    when the value passes as is: Rows become dicts, maps become key/value
+    pairs, and a naive timestamp is read as local time (as Spark reads
+    it), recursively."""
+    if isinstance(dt, T.StructType):
+        subs = [(f.name, _arrow_value(f.dataType)) for f in dt.fields]
+        return lambda v: None if v is None else {
+            n: (c(x) if c else x) for (n, c), x in zip(subs, v)
+        }
+    if isinstance(dt, T.ArrayType):
+        c = _arrow_value(dt.elementType)
+        return c and (lambda v: None if v is None else [c(x) for x in v])
+    if isinstance(dt, T.MapType):
+        kc = _arrow_value(dt.keyType) or (lambda x: x)
+        vc = _arrow_value(dt.valueType) or (lambda x: x)
+        return lambda v: None if v is None else [(kc(k), vc(x)) for k, x in v.items()]
+    if isinstance(dt, T.TimestampType):
+        return lambda v: v.astimezone() if v is not None and v.tzinfo is None else v
+    return None
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (Rows or tuples, in
+    ``schema`` order; ``schema`` a StructType or a DDL string).
+
+    It is built from an Arrow table, so the plan holds a LocalRelation:
+    reading it runs no Spark job, where ``createDataFrame(<list>)``
+    parallelizes the rows and runs one job of defaultParallelism tasks
+    per read. The rows stay in the driver, as they already were."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = []
+    for i, f in enumerate(schema.fields):
+        conv = _arrow_value(f.dataType)
+        vals = [r[i] for r in rows]
+        cols.append(pa.array([conv(v) for v in vals] if conv else vals, type=arrow.field(i).type))
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
+def literal_rows(rows, schema) -> Column:
+    """A few driver-held ``rows`` as one literal ``array<struct>`` column
+    (``schema`` as for `local_frame`), for ``F.inline``. Joining a local
+    frame broadcasts it, and that broadcast runs one Spark job; rows
+    carried in the plan run none, at a plan size that grows with them."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    fields = schema.fields
+    return F.array(
+        *[
+            F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for f, v in zip(fields, r)])
+            for r in rows
+        ]
+    ).cast(T.ArrayType(T.StructType(fields)))
+
 
 # Tables small enough to broadcast in joins at full 100 TB scale
 # (dimensions grow ~linearly with SF in TPC-H but stay << fact tables;

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .catalog import TABLE_SCHEMAS, load_table
+from .catalog import TABLE_SCHEMAS, load_table, local_frame
 
 
 def schema_for(table: str, cols: list[str]):
@@ -70,7 +70,7 @@ def source_csv_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("o_totalprice"), 2).alias("total_price"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -103,7 +103,7 @@ def source_json_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("value"), 2).alias("total_value"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -155,7 +155,7 @@ def source_xml_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("total_value"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -195,7 +195,7 @@ def source_orc_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum("l_quantity"), 2).alias("total_qty"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -309,4 +309,4 @@ def source_avro_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts_us").alias("max_ts_us"),
             F.sum(F.length("props")).alias("props_chars"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)

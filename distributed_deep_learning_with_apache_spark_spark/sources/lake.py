@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .catalog import build_once, fork, keyed_root, load_table
+from .catalog import build_once, fork, keyed_root, load_table, local_frame
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -146,7 +146,7 @@ def lake_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # Materialize before the temp lake directory is removed.
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -193,7 +193,7 @@ def lake_partition_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
         # Materialize before the temp lake directory is removed.
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -974,7 +974,7 @@ def lake_vacuum_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("total_price"),
             )
         )
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1241,7 +1241,7 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # Materialize before the temp dir is removed (bounded: 3 rows).
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -1297,9 +1297,7 @@ def lake_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             # Fuzz corpora include empty orders: a partitioned write of an
             # empty frame produces no files, so the read-back would fail
             # schema inference; the oracle emits 0 rows — match it directly.
-            return spark.createDataFrame(
-                [], "order_month date, n_orders long, total double"
-            )
+            return local_frame(spark, [], "order_month date, n_orders long, total double")
         o.write.mode("overwrite").partitionBy("order_month").parquet(base)
 
         restated = o.filter(F.col("order_month") == F.lit("1995-03-01").cast("date")).select(
@@ -1323,7 +1321,7 @@ def lake_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             ).alias("total"),
         )
         # Materialize before the temp dir is removed (bounded: one row/month).
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1436,13 +1434,11 @@ def lake_dpp_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")
         if li.limit(1).count() == 0:
             # Fuzz corpora include empty lineitem: nothing to write or prune.
-            return spark.createDataFrame(
-                [], "month_key int, n_items long, revenue double"
-            )
+            return local_frame(spark, [], "month_key int, n_items long, revenue double")
         out = _dpp_star_frames(spark, sf_dir, base)
         # Materialize before the temp lake directory is removed (bounded:
         # one row per month in the quarter).
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -1526,9 +1522,7 @@ def lake_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Empty table (fuzz corpora): nothing to publish, a zero-file
         # manifest would make the final read unscannable — match the
         # oracle's 0-row aggregate directly.
-        return spark.createDataFrame(
-            [], "l_returnflag string, n_items long, total_qty double"
-        )
+        return local_frame(spark, [], "l_returnflag string, n_items long, total_qty double")
     root = tempfile.mkdtemp(prefix="sg_wap_")
     try:
         base = li.filter(F.col("l_linenumber") <= WAP_SPLIT_LINE)
@@ -1561,7 +1555,7 @@ def lake_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_qty"),
         )
         # Materialize before the temp root is removed (bounded: one row/flag).
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -1633,9 +1627,7 @@ def lake_restore_version(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .first()
             )
             out_rows.append((v, agg["n_orders"], agg["total_price"]))
-        return spark.createDataFrame(
-            out_rows, "version long, n_orders long, total_price double"
-        )
+        return local_frame(spark, out_rows, "version long, n_orders long, total_price double")
 
 
 # ---------------------------------------------------------------------------
@@ -1709,9 +1701,7 @@ def lake_shallow_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame
             agg(read_snapshot(spark, work, 5), "clone_v5"),
             agg(read_snapshot(spark, root, 4), "original_v4"),
         ]
-        return spark.createDataFrame(
-            rows, "side string, n_orders long, total_price double"
-        )
+        return local_frame(spark, rows, "side string, n_orders long, total_price double")
 
 
 # ---------------------------------------------------------------------------
@@ -1759,9 +1749,7 @@ def lake_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         m2 = _json.load(f)["files"]
     delta = [f for f in m2 if f not in m1]
     if not delta:
-        return spark.createDataFrame(
-            [], "o_orderpriority string, n_orders long, price_cents long"
-        )
+        return local_frame(spark, [], "o_orderpriority string, n_orders long, price_cents long")
     df = spark.read.parquet(*(_os.path.join(root, f) for f in delta))
     return df.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),

@@ -29,9 +29,10 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..registry import register
-from ..sources.catalog import TABLE_SCHEMAS, load_table
+from ..sources.catalog import TABLE_SCHEMAS, load_table, local_frame
 
 SESSION_GAP_MIN = 30
 
@@ -382,7 +383,7 @@ def _run_to_memory(stream_df: DataFrame, spark: SparkSession, name: str, mode: s
             q.stop()
     # Materialize before the in-memory sink table goes away.
     out = spark.table(name)
-    return spark.createDataFrame(out.collect(), out.schema)
+    return local_frame(spark, out.collect(), out.schema)
 
 
 @register(
@@ -612,8 +613,8 @@ def stream_model_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Mergeable-state sinks: stage → fold → drain → publish. Each op keeps one
-# state (sums, a sketch, counters, bitmap words) that a per-batch partial
-# merges into associatively; stream_rate_limited_backfill reuses the
+# state (sums, a sketch, counters, bitmap words) that each batch's rows
+# merge into associatively; stream_rate_limited_backfill reuses the
 # staging and the drain. `base` is the op's scratch dir.
 # ---------------------------------------------------------------------------
 def _stage(df: DataFrame, n_files: int, base: str) -> DataFrame:
@@ -637,27 +638,43 @@ def _pointer(base: str) -> dict:
         return {"cur": None, "committed": []}
 
 
-def _fold(base: str, partial, merge):
-    """The foreachBatch body: `partial(batch_df)` aggregates the batch,
-    `merge(prev ∪ partial)` re-aggregates it with the previous state, and
-    the result goes to a new `v{batch_id}` dir. Replacing POINTER.json
-    ({cur, committed}) is the atomic commit (write-new-then-swap-pointer;
-    on a lakehouse, `MERGE INTO` with a txn id). A redelivered batch id is
-    already committed and is skipped, so any batch may be replayed. The
-    body returns whether it committed."""
+def _read_state(spark: SparkSession, meta: dict) -> DataFrame:
+    """The committed state, read with the schema `_fold` recorded for it."""
+    schema = T.StructType.fromJson(meta["schema"])
+    return spark.read.schema(schema).parquet(meta["cur"])
+
+
+def _fold(base: str, rows, merge):
+    """The foreachBatch body: `rows(batch_df)` projects the batch onto the
+    state's columns, `merge` aggregates them together with the previous
+    state (`merge(prev ∪ rows)`; `merge(rows)` on the first batch) — one
+    aggregate per batch — and the result goes to a new `v{batch_id}`
+    dir. Replacing POINTER.json ({cur, schema, committed}) is the atomic
+    commit (write-new-then-swap-pointer; on a lakehouse, `MERGE INTO`
+    with a txn id). A redelivered batch id is already committed and is
+    skipped, so any batch may be replayed. The body returns whether it
+    committed."""
     pointer = os.path.join(base, "POINTER.json")
 
     def fold(batch_df: DataFrame, batch_id: int) -> bool:
         meta = _pointer(base)
         if batch_id in meta["committed"]:
             return False
-        state = partial(batch_df)
+        new = rows(batch_df)
         if meta["cur"] is not None:
-            state = merge(batch_df.sparkSession.read.parquet(meta["cur"]).unionByName(state))
+            new = _read_state(batch_df.sparkSession, meta).unionByName(new)
+        state = merge(new)
         out = os.path.join(base, f"v{batch_id}")
         state.write.mode("overwrite").parquet(out)
         with open(pointer + ".tmp", "w") as fh:
-            json.dump({"cur": out, "committed": meta["committed"] + [batch_id]}, fh)
+            json.dump(
+                {
+                    "cur": out,
+                    "schema": state.schema.jsonValue(),
+                    "committed": meta["committed"] + [batch_id],
+                },
+                fh,
+            )
         os.replace(pointer + ".tmp", pointer)
         return True
 
@@ -685,9 +702,10 @@ def _publish(spark: SparkSession, base: str, prefix: str) -> DataFrame:
     DataFrame returned earlier stays readable after a later call."""
     publish = tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}_")
     atexit.register(shutil.rmtree, publish, ignore_errors=True)
+    meta = _pointer(base)
     state = os.path.join(publish, "state")
-    os.replace(_pointer(base)["cur"], state)
-    return spark.read.parquet(state)
+    os.replace(meta["cur"], state)
+    return _read_state(spark, {**meta, "cur": state})
 
 
 @register(
@@ -709,10 +727,11 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference's closest artifact is the resettable batch iterator
     (`Word2VecTransformingIterator.java:161-173`); this is its genuinely
     streaming realization. Events are staged as 4 files, so the query
-    runs 4 micro-batches; each computes a partial (user_id, count, sum)
+    runs 4 micro-batches; `_fold` feeds each batch's (user_id, 1, value)
+    rows and the target's rows through one (user_id, count, sum)
     aggregate — map-side combinable, one shuffle per batch over only that
-    batch's rows, which is what keeps this viable on an unbounded
-    firehose — and `_fold` merges it into the target. Counts and sums are
+    batch's rows and the keyed target, which is what keeps this viable on
+    an unbounded firehose. Counts and sums are
     additive, so the final table is independent of how rows split across
     batches — which is exactly what makes it oracle-checkable: the end
     state must equal the one-shot batch aggregate.
@@ -721,8 +740,10 @@ def stream_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = load_table(spark, sf_dir, "events").select("user_id", "value")
         fold = _fold(
             base,
-            lambda b: b.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value")
+            lambda b: b.select(
+                "user_id",
+                F.lit(1).cast("long").alias("n_events"),
+                F.col("value").alias("total_value"),
             ),
             lambda u: u.groupBy("user_id").agg(
                 F.sum("n_events").alias("n_events"), F.sum("total_value").alias("total_value")
@@ -1438,8 +1459,9 @@ def stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         done.wait(timeout=30)
     finally:
         spark.streams.removeListener(listener)
-    return spark.createDataFrame(
-        rows or [(0, 0, 0, 0)][:0],
+    return local_frame(
+        spark,
+        rows,
         "batch_id long, n_rows long, n_purchases long, n_users long",
     )
 
@@ -1595,7 +1617,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
     total = sum(n for _, n in counts)
     rows = [(r, n, total) for r, n in counts]
-    return spark.createDataFrame(rows, "run int, rows_ingested long, total_rows long")
+    return local_frame(spark, rows, "run int, rows_ingested long, total_rows long")
 
 
 # ---------------------------------------------------------------------------
@@ -2258,7 +2280,8 @@ def stream_rate_limited_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_files = len([f for f in staged if f.endswith(".parquet")])
         batches: list[int] = []
         _drain(source, lambda df, _batch_id: batches.append(df.count()), base)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(batches), n_files, sum(batches), max(batches, default=0))],
         "n_batches long, n_files long, total_rows long, max_batch_rows long",
     )
@@ -2293,9 +2316,9 @@ def stream_exactly_once_merge_restart(spark: SparkSession, sf_dir: str) -> DataF
     Mechanics (the Delta/Iceberg `txnAppId`/`txnVersion` pattern, built on
     parquet + a ledger file — `_fold`'s pointer):
     - events staged as 6 files → 6 real micro-batches;
-    - each batch MERGEs its partial (user_id, count, cents) aggregate into
-      a new versioned target dir, then atomically publishes pointer +
-      committed-batch-id ledger (os.replace);
+    - each batch MERGEs its (user_id, 1, cents) rows with the target in
+      one aggregate into a new versioned target dir, then atomically
+      publishes pointer + committed-batch-id ledger (os.replace);
     - a fault is INJECTED after the 3rd commit of run 1: the foreachBatch
       body raises, the query dies mid-stream, the checkpoint has NOT
       recorded that epoch;
@@ -2313,8 +2336,8 @@ def stream_exactly_once_merge_restart(spark: SparkSession, sf_dir: str) -> DataF
     FP accumulation order.
 
     Scale: per-batch work is one map-side-combinable aggregate over that
-    batch + a merge join against the keyed target (∝ keys touched, the
-    incremental_agg_maintenance shape); the ledger is O(batches) bytes.
+    batch's rows and the keyed target (the incremental_agg_maintenance
+    shape); the ledger is O(batches) bytes.
     Reference ancestry: the epoch/reset training loop
     (PredictCommentsUsingRNNAndWord2Vec.java:82-85) re-reads its corpus
     per epoch; this is the restartable exactly-once form of that loop.
@@ -2327,9 +2350,10 @@ def stream_exactly_once_merge_restart(spark: SparkSession, sf_dir: str) -> DataF
         )
         fold = _fold(
             base,
-            lambda b: b.groupBy("user_id").agg(
-                F.count(F.lit(1)).cast("long").alias("n_events"),
-                F.sum("cents").cast("long").alias("total_value_cents"),
+            lambda b: b.select(
+                "user_id",
+                F.lit(1).cast("long").alias("n_events"),
+                F.col("cents").alias("total_value_cents"),
             ),
             lambda u: u.groupBy("user_id").agg(
                 F.sum("n_events").cast("long").alias("n_events"),
@@ -2412,29 +2436,26 @@ from ..operators.incremental import QSK_P as _QSK_P
 def stream_kmv_distinct_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming face of `kmv_user_overlap_sketch`: a live dashboard's
     distinct-user counter that never stores the user set. Each micro-batch
-    computes its own bottom-k (deduped user hashes), unions it with the
-    persisted sketch state, re-truncates to k — the KMV merge, which is
+    unions its user hashes with the persisted sketch state, dedups and
+    re-truncates to k — the KMV merge, which is
     ASSOCIATIVE and idempotent, so the final state is independent of how
     rows split across batches and equals the batch-computed sketch
     (hash-checked by the oracle; contrast the HLL rollup, whose binary
     sketches are engine-private and rows-only).
 
     State is O(k) rows in a versioned parquet dir (the same poor-man's
-    ACID pointer as the merge sinks); per-batch work is the batch's dedup
-    aggregate + a k-row union. An unbounded firehose costs each batch
-    only its own scan.
+    ACID pointer as the merge sinks); per-batch work is one dedup
+    aggregate over the batch's hashes and the k-row state. An unbounded
+    firehose costs each batch only its own scan.
     """
     with tempfile.TemporaryDirectory(prefix="sg_kmv_stream_", ignore_cleanup_errors=True) as base:
         ev = load_table(spark, sf_dir, "events").select("user_id")
         fold = _fold(
             base,
-            lambda b: b.select("user_id")
-            .distinct()
-            .withColumn(
-                "hkey", F.pmod(F.pmod(F.col("user_id"), _QSK_P) * _KMV_A + _KMV_C, _QSK_P)
-            )
-            .orderBy("hkey")
-            .limit(_KMV_K),
+            lambda b: b.select(
+                "user_id",
+                F.pmod(F.pmod(F.col("user_id"), _QSK_P) * _KMV_A + _KMV_C, _QSK_P).alias("hkey"),
+            ),
             lambda u: u.distinct().orderBy("hkey").limit(_KMV_K),
         )
         _drain(_stage(ev, 4, base), fold, base)
@@ -3037,10 +3058,11 @@ CMW_WATCH = 10  # monitored key ids: user_id 0..9
 def stream_countmin_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming face of `countmin_estimate_profile`: a monitoring
     dashboard watching a FIXED set of account ids over an unbounded
-    stream, with CONSTANT state — each micro-batch aggregates its own
-    3x{_CME_W}-cell counters and cell-wise SUMS them into the persisted
-    state; because counter merge is associative and integer, the final
-    state is independent of the batch split and hash-equals the
+    stream, with CONSTANT state — each micro-batch's events count 1 in
+    one cell of each of the 3 sketch rows, SUMMED cell-wise together with
+    the persisted 3x{_CME_W} state in one aggregate; because counter
+    merge is associative and integer, the final state is independent of
+    the batch split and hash-equals the
     batch-computed sketch (the mergeable-sketch contract that made
     stream_kmv_distinct_running oracle-checkable).
 
@@ -3051,17 +3073,21 @@ def stream_countmin_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells' collision noise (>= 0, one-sided — CM's contract).
 
     State: at most 3x{_CME_W} integer rows in a versioned parquet dir;
-    per-batch work is the batch's own aggregate + a bounded merge.
+    per-batch work is one aggregate over the batch's cell counts and the
+    bounded state.
     """
 
     def counters(batch_df: DataFrame) -> DataFrame:
-        parts = [
-            batch_df.selectExpr(f"{j} AS j", f"{_cme_cell_sql('user_id', a, c)} AS cell")
-            .groupBy("j", "cell")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        """One (j, cell, c=1) row per event and sketch row."""
+        cells = [
+            F.struct(
+                F.lit(j).alias("j"),
+                F.expr(_cme_cell_sql("user_id", a, c)).alias("cell"),
+                F.lit(1).cast("long").alias("c"),
+            )
             for j, (a, c) in enumerate(_CME_ROWS)
         ]
-        return parts[0].unionByName(parts[1]).unionByName(parts[2])
+        return batch_df.select(F.inline(F.array(*cells)))
 
     with tempfile.TemporaryDirectory(prefix="sg_cm_stream_", ignore_cleanup_errors=True) as base:
         ev = load_table(spark, sf_dir, "events").select("user_id")
@@ -3356,46 +3382,43 @@ from ..operators.incremental import BITMAP_WORD_BITS as _BM_BITS  # noqa: E402
 def stream_bitmap_distinct_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming face of `bitmap_distinct_users`: a dashboard's
     daily-active-users counter over an unbounded stream with BOUNDED,
-    mergeable state. Each micro-batch aggregates its own presence words
-    and bit_ORs them into the persisted (day, word_idx) state — the
-    merge is associative (any batch split yields the same state) and
+    mergeable state. Each micro-batch's presence bits are bit_ORed
+    together with the persisted (day, word_idx) state in one aggregate —
+    the merge is associative (any batch split yields the same state) and
     idempotent (an at-least-once redelivery ORs bits that are already
     set), which is strictly stronger than the count-min/KMV merge
     contract: this streaming counter is EXACT and redelivery-proof, so
     its oracle is a plain COUNT(DISTINCT).
 
     State: |days| x |id domain|/32 BIGINT words in a versioned parquet
-    dir, constant in the event count; per-batch work is the batch's own
-    hash aggregate plus a state-sized merge.
+    dir, constant in the event count; per-batch work is one hash
+    aggregate over the batch's bits and the state.
     """
 
     def words(batch_df: DataFrame) -> DataFrame:
-        return (
-            batch_df.select(
-                F.to_date("ts").alias("day"),
-                # integer div, never FP; loud non-negative guard — a
-                # negative id silently collides bits (see
-                # bitmap_distinct_users, r9 ADVICE #1). NULL user_id also
-                # raises — intentional NULL-reject on an identity column
-                # (r10 ADVICE), mirroring the batch twin.
-                F.when(
-                    F.assert_true(
-                        F.col("user_id") >= 0,
-                        F.lit(
-                            "stream_bitmap_distinct_running: negative "
-                            "user_id — presence bitmaps need non-negative "
-                            "ids (remap or offset upstream)"
-                        ),
-                    ).isNull(),
-                    F.expr(f"user_id div {_BM_BITS}"),
-                ).alias("word_idx"),
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), "
-                    f"CAST(pmod(user_id, {_BM_BITS}) AS INT))"
-                ).alias("mask"),
-            )
-            .groupBy("day", "word_idx")
-            .agg(F.bit_or("mask").alias("word"))
+        """One (day, word_idx, word) row per event: its presence bit."""
+        return batch_df.select(
+            F.to_date("ts").alias("day"),
+            # integer div, never FP; loud non-negative guard — a
+            # negative id silently collides bits (see
+            # bitmap_distinct_users, r9 ADVICE #1). NULL user_id also
+            # raises — intentional NULL-reject on an identity column
+            # (r10 ADVICE), mirroring the batch twin.
+            F.when(
+                F.assert_true(
+                    F.col("user_id") >= 0,
+                    F.lit(
+                        "stream_bitmap_distinct_running: negative "
+                        "user_id — presence bitmaps need non-negative "
+                        "ids (remap or offset upstream)"
+                    ),
+                ).isNull(),
+                F.expr(f"user_id div {_BM_BITS}"),
+            ).alias("word_idx"),
+            F.expr(
+                f"shiftleft(CAST(1 AS BIGINT), "
+                f"CAST(pmod(user_id, {_BM_BITS}) AS INT))"
+            ).alias("word"),
         )
 
     with tempfile.TemporaryDirectory(prefix="sg_bitmap_stream_", ignore_cleanup_errors=True) as base:

@@ -163,3 +163,66 @@ def test_keyed_root_prunes_stale_generation_after_publish(tmp_path):
     )
     build_once(new, "_DONE", _publisher([]))
     assert sorted(os.listdir(base)) == [os.path.basename(new)]
+
+
+# A nested schema with a NULL at every level: struct, map, array holding
+# NULL, decimal, date, timestamp and a NULL int.
+NESTED_DDL = (
+    "i int, l long, s string, d double, dec decimal(12,2), dt date, ts timestamp, "
+    "a array<int>, m map<string,double>, st struct<x: long, y: array<string>, z: timestamp>, "
+    "b binary, bo boolean"
+)
+
+
+def _nested_rows():
+    import datetime
+    import decimal
+
+    from pyspark.sql import Row
+
+    return [
+        (
+            1, 2, "a", 1.5, decimal.Decimal("3.25"), datetime.date(2020, 1, 2),
+            datetime.datetime(2020, 1, 2, 3, 4, 5, 6), [1, None, 3], {"k": 1.0, "n": None},
+            Row(x=1, y=["p", None], z=datetime.datetime(2021, 5, 5)), b"\x00\x01", True,
+        ),
+        (None,) * 12,
+        (
+            3, 4, "", -0.0, decimal.Decimal("-1.00"), datetime.date(1970, 1, 1),
+            datetime.datetime(1999, 12, 31, 23, 59, 59), [], {}, (None, None, None), b"", False,
+        ),
+    ]
+
+
+def test_local_frame_equals_create_data_frame(spark):
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import local_frame
+
+    want = spark.createDataFrame(_nested_rows(), NESTED_DDL)
+    got = local_frame(spark, _nested_rows(), NESTED_DDL)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_local_frame_accepts_rows_tuples_ddl_and_empty(spark):
+    from pyspark.sql import types as T
+
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import local_frame
+
+    struct = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.StringType())])
+    rows = local_frame(spark, [(1, "a"), (2, None)], struct).collect()  # tuples, StructType
+    again = local_frame(spark, rows, "k long, v string")  # Rows, DDL string
+    assert again.schema == struct and again.collect() == rows
+    empty = local_frame(spark, [], "k long, v string")
+    assert empty.schema == struct and empty.collect() == []
+
+
+def test_local_frame_collect_runs_no_job(spark):
+    """A LocalRelation: reading it runs no Spark job, where a parallelized
+    list runs one per read."""
+    from distributed_deep_learning_with_apache_spark_spark.sources.catalog import local_frame
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    df = local_frame(spark, _nested_rows(), NESTED_DDL)
+    first = sched.numTotalJobs()
+    assert len(df.collect()) == 3
+    assert sched.numTotalJobs() - first == 0

@@ -5,6 +5,8 @@ top-k compiling to TakeOrderedAndProject, no cartesian products in the
 candidate-join pipelines, and column pruning in ReadSchema.
 """
 
+import os
+
 import pytest
 
 from distributed_deep_learning_with_apache_spark_spark.registry import load_all
@@ -325,12 +327,13 @@ def test_retraction_overlay_is_broadcast_anti_join(spark, sf_dir):
 # copy: (pinned, before the fork). The band-store build was 5 jobs of each
 # dedup op, the IVF build 3 of the compaction. The stream op counts only
 # the jobs of the calling thread: its micro-batches run in the stream's own
-# job group.
+# job group. The pins were 22/54/4/28 until store reads carried their
+# schema and the readouts became local frames.
 WARM_STORE_JOBS = {
-    "near_dup_index_append_cycle": (22, 27),
-    "near_dup_compact_tombstones": (54, 59),
-    "stream_near_dup_incremental": (4, 9),
-    "ann_ivf_compact_tombstones": (28, 31),
+    "near_dup_index_append_cycle": (19, 27),
+    "near_dup_compact_tombstones": (45, 59),
+    "stream_near_dup_incremental": (3, 9),
+    "ann_ivf_compact_tombstones": (24, 31),
 }
 
 
@@ -354,3 +357,98 @@ def test_forked_store_ops_do_not_rebuild(spark, sf_dir, op):
     finally:
         sc._jsc.clearJobGroup()
     assert jobs == pinned < rebuilt, (op, jobs)
+
+
+
+# Jobs of a warm call at sf0.001, counted as a job-id window (so jobs of
+# the stream's own thread count too): (pinned, before driver rows became
+# local frames, store reads carried their schema and each fold ran one
+# aggregate per micro-batch).
+WARM_WINDOW_JOBS = {
+    "stream_foreachbatch_merge": (11, 18),
+    "stream_exactly_once_merge_restart": (15, 26),
+    "stream_kmv_distinct_running": (12, 19),
+    "stream_countmin_running": (14, 29),
+    "stream_bitmap_distinct_running": (12, 19),
+    "ann_ivf_persisted": (5, 7),
+    "_ivf_pq_adc_scored": (4, 8),
+}
+
+
+@pytest.mark.parametrize("op", sorted(WARM_WINDOW_JOBS))
+def test_warm_window_job_count(spark, sf_dir, op):
+    """Noise-free gate: a warm call runs the pinned number of Spark jobs,
+    no more than before."""
+    from distributed_deep_learning_with_apache_spark_spark.operators import similarity
+
+    if os.path.basename(sf_dir.rstrip("/")) != "sf0.001":
+        pytest.skip("job counts are pinned at sf0.001")
+    fn = getattr(similarity, op) if op.startswith("_") else REG[op].fn
+    pinned, before = WARM_WINDOW_JOBS[op]
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    fn(spark, sf_dir).collect()
+    first = sched.numTotalJobs()
+    fn(spark, sf_dir).collect()
+    jobs = sched.numTotalJobs() - first
+    assert jobs == pinned <= before, (op, jobs)
+
+# ---------------------------------------------------------------------------
+# Static guards over the package sources: driver-built frames and reads of
+# engine-written stores run no Spark job of their own.
+# ---------------------------------------------------------------------------
+PACKAGE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "distributed_deep_learning_with_apache_spark_spark",
+)
+
+# Modules allowed `read.parquet(` without `.schema(`, each with its reason.
+INFERRING_READS = {
+    "sources/lake.py": "snapshot, version and file-list reads span schema evolution",
+    "sources/arrow_writer_sink.py": "reads back the file list a sink's manifest names",
+}
+
+
+def _package_sources():
+    for d, _subdirs, files in os.walk(PACKAGE):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(d, f)
+                with open(path) as fh:
+                    yield os.path.relpath(path, PACKAGE), fh.read()
+
+
+def test_create_data_frame_only_inside_local_frame():
+    """`spark.createDataFrame(<list>)` parallelizes its rows: every read
+    runs one job. Driver rows go through `catalog.local_frame` instead."""
+    import ast
+    import re
+
+    hits = []
+    for rel, src in _package_sources():
+        allowed = range(0)
+        if rel == "sources/catalog.py":
+            fn = next(
+                n for n in ast.parse(src).body
+                if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+            )
+            allowed = range(fn.lineno, fn.end_lineno + 1)
+        for m in re.finditer(r"createDataFrame\(", src):
+            line = src.count("\n", 0, m.start()) + 1
+            if line not in allowed:
+                hits.append(f"{rel}:{line}")
+    assert hits == []
+
+
+def test_parquet_reads_carry_their_schema():
+    """An inferring `read.parquet(` runs a schema job per call; reads of
+    engine-written stores name the schema they were written with."""
+    import re
+
+    hits = [
+        f"{rel}:{src.count(chr(10), 0, m.start()) + 1}"
+        for rel, src in _package_sources()
+        if rel not in INFERRING_READS
+        for m in re.finditer(r"\.read\s*\.parquet\(", src)
+    ]
+    assert hits == []
+    assert all(reason for reason in INFERRING_READS.values())

@@ -302,3 +302,22 @@ def test_kmv_stream_fold_merges_every_batch(spark, tmp_path):
 
     row = REG["stream_kmv_distinct_running"].fn(spark, str(tmp_path)).first()
     assert (row["k_eff"], row["est_distinct"]) == (k_eff, est)
+
+
+def test_fold_merges_overlapping_batches_and_skips_a_redelivery(spark, tmp_path):
+    """`_fold` on two batches that share keys gives the one-shot merge of
+    their union, and a redelivered batch id is skipped, not re-applied."""
+    base = str(tmp_path)
+    fold = events._fold(
+        base,
+        lambda b: b.select("k", F.lit(1).cast("long").alias("n"), F.col("v").alias("s")),
+        lambda u: u.groupBy("k").agg(F.sum("n").alias("n"), F.sum("s").alias("s")),
+    )
+    b0 = spark.createDataFrame([(1, 10), (2, 20), (1, 5)], "k long, v long")
+    b1 = spark.createDataFrame([(2, 1), (3, 7)], "k long, v long")
+    assert fold(b0, 0) and fold(b1, 1)
+    assert not fold(b1, 1)  # redelivery: already committed
+    assert events._pointer(base)["committed"] == [0, 1]
+    state = events._publish(spark, base, "sg_fold_test_")
+    assert state.schema.simpleString() == "struct<k:bigint,n:bigint,s:bigint>"
+    assert sorted(tuple(r) for r in state.collect()) == [(1, 2, 15), (2, 2, 21), (3, 1, 7)]
