@@ -9,10 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..registry import register
-from ..sources.catalog import literal_rows, load_table, local_frame
+from ..sources.catalog import load_table, local_frame
 
 
 @register(
@@ -330,10 +329,6 @@ QT_TARGETS = (0.5, 0.9, 0.99)
 # its wider partial aggregates lost (r13 A/B at sf0.1).
 QT_BINS = 256
 QT_COLLECT = 4096  # candidate count below which we collect and index
-# Per-group state rows up to this many ride a pass's plan as literals (no
-# broadcast job); a larger state is broadcast, so plans stay bounded in
-# group count.
-QT_INLINE_STATES = 4096
 
 
 @register(
@@ -546,30 +541,9 @@ def _by_key(pairs) -> dict:
 
 # ---------------------------------------------------------------------------
 # [EXT r5] Grouped exact quantiles: the narrowing engine generalized to
-# per-group order statistics with a STATE JOIN by group (a literal map
-# for a small state, a broadcast beyond it).
+# per-group order statistics with a BROADCAST STATE JOIN (scales in group
+# count where a literal per-state expression list cannot).
 # ---------------------------------------------------------------------------
-def _join_state(df: DataFrame, rows: list, schema: str) -> DataFrame:
-    """``df`` inner-joined on ``g`` with the driver-held ``rows`` (``g``
-    first in ``schema``), columns as the join gives them: ``df``'s, then
-    the rest of ``schema``'s. Up to QT_INLINE_STATES rows ride the plan as
-    a literal map g -> rows that each scanned row inlines, so the pass
-    runs no broadcast job; more rows go through a broadcast frame, which
-    keeps the plan bounded at any group count. A NULL ``g`` matches
-    nothing, as in the join."""
-    if len(rows) > QT_INLINE_STATES:
-        return df.join(F.broadcast(local_frame(df.sparkSession, rows, schema)), "g")
-    rest = T.StructType(T._parse_datatype_string(schema).fields[1:])
-    by_g: dict = {}
-    for g, *r in rows:
-        if g is not None:
-            by_g.setdefault(g, []).append(r)
-    state = F.create_map(
-        *[x for g, rs in by_g.items() for x in (F.lit(g), literal_rows(rs, rest))]
-    ).cast(T.MapType(df.schema["g"].dataType, T.ArrayType(rest)))
-    return df.select("*", F.inline(state[F.col("g")]))
-
-
 def exact_grouped_order_statistics(
     df: DataFrame, needs: dict, gstats: dict | None = None
 ) -> tuple[dict, int]:
@@ -577,22 +551,22 @@ def exact_grouped_order_statistics(
     by joint histogram narrowing; ``needs`` maps group -> set of 0-based
     ranks. Returns ``({(g, rank) -> value}, passes)``.
 
-    The per-pass narrowing state is joined onto the scan by group
-    (`_join_state`) — (g, rank, lo, hi) rows, one per unresolved
-    statistic: up to QT_INLINE_STATES rows as a literal map in the plan
-    (no broadcast job), beyond that as a broadcast frame, so the plan
-    stays bounded whether there are 3 groups or 3 million. Each pass is
-    that join, one (g, rank, bin) partial-aggregate whose shuffle is
-    bounded by live_states x QT_BINS rows, and a driver-side narrowing
-    step over that bounded histogram. Per-group convergence is the same
+    Unlike the global engine (`exact_order_statistics`), the per-pass
+    narrowing state here is a DATAFRAME joined broadcast onto the scan —
+    (g, rank, lo, hi) rows, one per unresolved statistic — so the plan is
+    IDENTICAL whether there are 3 groups or 3 million: one broadcast hash
+    join, one (g, rank, bin) partial-aggregate whose shuffle is bounded
+    by live_states x QT_BINS rows, and a driver-side narrowing step over
+    that bounded histogram. Per-group convergence is the same
     O(log_BINS n_g); groups resolve independently and drop out of the
-    state as they finish.
+    broadcast state as they finish.
 
     ``gstats`` (r13): callers that already hold the per-group
     (min, max, count) triples — e.g. from the fused aggregate that gave
     them their group counts — pass them here to skip the engine's own
     stats scan (guide §2.4; the values are the same the scan produces).
     """
+    spark = df.sparkSession
     if gstats is None:
         gstats = {
             r.g: (float(r.mn), float(r.mx), int(r.n))
@@ -612,8 +586,9 @@ def exact_grouped_order_statistics(
         # One batched pass gathers ALL small candidate sets (bounded:
         # <= len(small) x QT_COLLECT rows).
         srows = [(g, float(k), s["lo"], s["hi"]) for (g, k), s in small.items()]
+        sdf = local_frame(spark, srows, "g string, k double, lo double, hi double")
         got = (
-            _join_state(df, srows, "g string, k double, lo double, hi double")
+            df.join(F.broadcast(sdf), "g")
             .filter(F.col("v").between(F.col("lo"), F.col("hi")))
             .select("g", "k", "v")
             .collect()
@@ -625,8 +600,11 @@ def exact_grouped_order_statistics(
             (g, float(k), s["lo"], s["hi"], (s["hi"] - s["lo"]) / QT_BINS)
             for (g, k), s in live.items()
         ]
+        ldf = local_frame(
+            spark, lrows, "g string, k double, lo double, hi double, w double"
+        )
         hist = (
-            _join_state(df, lrows, "g string, k double, lo double, hi double, w double")
+            df.join(F.broadcast(ldf), "g")
             .filter(F.col("v").between(F.col("lo"), F.col("hi")))
             .select(
                 "g",
@@ -684,7 +662,7 @@ def exact_grouped_order_statistics(
                  AS value
         FROM vv
     """,
-    doc="Exact per-group quantiles with no per-group sort: broadcast-state histogram narrowing, plan bounded in group count.",
+    doc="Exact per-group quantiles with no per-group sort: broadcast-state histogram narrowing, plan invariant in group count.",
     tags=("agg", "quantile", "ext", "scale"),
 )
 def grouped_quantile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,8 +901,8 @@ def mad_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     on identical doubles.
 
     Scale: BOTH medians resolve through the histogram-narrowing engine
-    (`exact_grouped_order_statistics` — state join, bounded
-    per-pass shuffle, plan bounded in group count): the median from a
+    (`exact_grouped_order_statistics` — broadcast-state join, bounded
+    per-pass shuffle, plan invariant in group count): the median from a
     narrowing over v, the MAD from a second narrowing over |x−med|. No
     per-group sort anywhere — the window formulation (the oracle) was
     measured 6.6× at 10× data because each group's sort runs on ONE
@@ -958,16 +936,20 @@ def mad_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med_vals, _ = exact_grouped_order_statistics(
         li, {g: {k} for g, k in ranks.items()}, gstats=gstats
     )
-    meds = [(g, med_vals[(g, k)]) for g, k in ranks.items()]
-    d = _join_state(li, meds, "g string, med double").select(
+    meds = local_frame(
+        spark, [(g, med_vals[(g, k)]) for g, k in ranks.items()], "g string, med double"
+    )
+    d = li.join(F.broadcast(meds), "g").select(
         "g", "v", "med", F.abs(F.col("v") - F.col("med")).alias("dev")
     )
     mad_vals, _ = exact_grouped_order_statistics(
         d.select("g", F.col("dev").alias("v")), {g: {k} for g, k in ranks.items()}
     )
-    mads = [(g, mad_vals[(g, k)]) for g, k in ranks.items()]
+    mads = local_frame(
+        spark, [(g, mad_vals[(g, k)]) for g, k in ranks.items()], "g string, mad double"
+    )
     return (
-        _join_state(d, mads, "g string, mad double")
+        d.join(F.broadcast(mads), "g")
         .groupBy("g")
         .agg(
             F.min("med").alias("med"),

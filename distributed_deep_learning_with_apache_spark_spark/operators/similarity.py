@@ -665,17 +665,20 @@ def ann_ivf_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 IVF_INDEX_ROOT = "/tmp/ddl_spark_ivf_index_v1"
 
-# The persisted IVF store's layouts (`cell` is the assignments' partition
-# column). Reading a table back with the schema it was written with runs
-# no schema-inference job.
+# The layouts of the ANN stores (`cell` is the assignments' partition
+# column): the IVF index's two tables, the PQ code store and the delete
+# sidecar's tombstones. Reading a table back with the schema it was
+# written with runs no schema-inference job.
 IVF_SCHEMAS = {
     "assignments": "vec_id bigint, v array<double>, cell int",
     "centroids": "cell int, cv array<double>",
+    "codes": "vec_id bigint, codes array<smallint>",
+    "tombstones": "vec_id bigint",
 }
 
 
 def read_ivf(spark: SparkSession, root: str, table: str) -> DataFrame:
-    """One table of the IVF store at `root`, read with its schema."""
+    """One table of the ANN store at `root`, read with its schema."""
     import os
 
     return spark.read.schema(IVF_SCHEMAS[table]).parquet(os.path.join(root, table))
@@ -930,7 +933,6 @@ def _pq_train_codebooks(e: DataFrame, seed: int = 42, iters: int = 12):
 
 
 PQ_CODES_ROOT = "/tmp/ddl_spark_pq_codes_v1"
-PQ_CODES_SCHEMA = "vec_id bigint, codes array<smallint>"  # the code store's layout
 
 
 def _pq_encode_with_books(spark: SparkSession, e: DataFrame, books) -> DataFrame:
@@ -1023,7 +1025,7 @@ def pq_encode_df(
     )
     with open(os.path.join(root, "codebooks.json")) as f:
         books = [np.asarray(b) for b in json.load(f)]
-    return spark.read.schema(PQ_CODES_SCHEMA).parquet(os.path.join(root, "codes")), books
+    return read_ivf(spark, root, "codes"), books
 
 
 def append_pq_codes(spark: SparkSession, root: str, batch: DataFrame) -> None:
@@ -2272,7 +2274,7 @@ def ann_ivf_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"ann_ivf_delete_serve touched index files: {rewritten[:3]} "
                 "(deletion must be sidecar-only)"
             )
-        tomb = spark.read.schema("vec_id bigint").parquet(os.path.join(side, "tombstones"))
+        tomb = read_ivf(spark, side, "tombstones")
 
         assigned = read_ivf(spark, root, "assignments")
         live = assigned.join(F.broadcast(tomb), "vec_id", "left_anti")

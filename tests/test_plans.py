@@ -392,6 +392,7 @@ def test_warm_window_job_count(spark, sf_dir, op):
     jobs = sched.numTotalJobs() - first
     assert jobs == pinned <= before, (op, jobs)
 
+
 # ---------------------------------------------------------------------------
 # Static guards over the package sources: driver-built frames and reads of
 # engine-written stores run no Spark job of their own.

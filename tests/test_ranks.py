@@ -23,8 +23,8 @@ REG = load_all()
 
 # Jobs of a warm call (build + collect, every thread's jobs) at sf0.001:
 # (pinned, before the shared prefix sum and narrowing loop). The RFM,
-# quality-tier and three quantile pins fell again (39/15/6/5/14) once
-# driver-held state rode the plan as literal rows and the results became
+# quality-tier and two quantile pins fell again (39/15/6/5) once the
+# ntile probes rode the plan as literal rows and the results became
 # local frames.
 WARM_JOBS = {
     "row_ids_distributed": (7, 8),
@@ -34,8 +34,8 @@ WARM_JOBS = {
     "customer_rfm_segments": (34, 42),
     "quality_tiers": (13, 16),
     "quantile_two_pass_exact": (5, 6),
-    "grouped_quantile_exact": (3, 5),
-    "mad_price_outliers": (8, 14),
+    "grouped_quantile_exact": (4, 5),
+    "mad_price_outliers": (14, 14),
 }
 RANK_ORACLE_QUERIES = sorted(WARM_JOBS)
 
@@ -106,26 +106,3 @@ def test_prefix_sum_empty_input(spark):
     summed, totals = prefix_sum(df, [("v", False), ("uid", True)], "w", "cum", extra=(F.sum("w"),))
     assert totals == (0, 0)
     assert summed.count() == 0
-
-
-def test_join_state_literal_and_broadcast_routes_agree(spark, monkeypatch):
-    """The grouped narrowing engine's state join gives the same rows and
-    columns whether the state rides the plan as a literal map or is
-    broadcast as a frame; a NULL group matches nothing on either route."""
-    from distributed_deep_learning_with_apache_spark_spark.operators import setops
-
-    df = spark.createDataFrame([("A", 1.0), ("A", 5.0), ("B", 2.0), (None, 3.0)], "g string, v double")
-    rows = [("A", 0.0, 0.0, 2.0), ("A", 1.0, 4.0, 9.0), ("B", 0.0, 0.0, 1.0), (None, 0.0, 0.0, 9.0)]
-    schema = "g string, k double, lo double, hi double"
-    inlined = setops._join_state(df, rows, schema)
-    monkeypatch.setattr(setops, "QT_INLINE_STATES", 0)
-    broadcast = setops._join_state(df, rows, schema)
-    assert inlined.columns == broadcast.columns == ["g", "v", "k", "lo", "hi"]
-    want = [
-        ("A", 1.0, 0.0, 0.0, 2.0),
-        ("A", 1.0, 1.0, 4.0, 9.0),
-        ("A", 5.0, 0.0, 0.0, 2.0),
-        ("A", 5.0, 1.0, 4.0, 9.0),
-        ("B", 2.0, 0.0, 0.0, 1.0),
-    ]
-    assert sorted(map(tuple, inlined.collect())) == sorted(map(tuple, broadcast.collect())) == want
